@@ -26,15 +26,18 @@ Spark realization (scale-first):
   IDs depend only on the global sort order, not on partition
   boundaries).
 
-In addition to the per-graph HDT section IDs we assign every distinct
-term string a **global uid** (one ID space across sections and graphs).
+In addition to the per-graph HDT section IDs every distinct term
+string gets a **global uid** (one ID space across sections and graphs).
 Triples are encoded with uids so that BGP joins on shared variables are
 plain integer equi-joins even across positions and graphs; the
 per-section sec_ids exist for HDT parity, stats and ordering.  This is a
 deliberate deviation from HDT's in-file layout (we don't write HDT
-bytes; triple-set equivalence is the contract — SURVEY.md §0).  The
-build pipeline derives uids and sec_ids from ONE shared global index
-(:func:`build_dict_and_uids`) — uids are unique and deterministic but
+bytes; triple-set equivalence is the contract — SURVEY.md §0).
+
+There is one construction path, :func:`build_dict_and_uids`: uids and
+sec_ids come from ONE shared global index, for a fresh build and for a
+store append alike (the append passes the store's uid table, so
+existing terms keep their uids).  Uids are unique and stable but
 intentionally not dense.
 """
 
@@ -42,7 +45,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 SECTION_ORDER = {"so": 0, "s": 1, "o": 2, "p": 3}
 
@@ -156,23 +158,6 @@ def position_flags(triples_raw: DataFrame) -> DataFrame:
     )
 
 
-def build_term_uids(triples_raw: DataFrame, flags: DataFrame | None = None) -> DataFrame:
-    """Global term→uid table: every distinct term string (any position,
-    any graph) gets one dense long uid, ordered lexicographically.
-
-    Schema: term: string, uid: long (uid is 1-based).
-
-    Standalone path (unit tests, ``add_graph`` appends).  The build
-    pipeline uses :func:`build_dict_and_uids`, which derives the uids
-    from the dictionary's own sorted layout in a single index pass.
-    """
-    if flags is None:
-        flags = position_flags(triples_raw)
-    all_terms = flags.select("term").distinct()
-    with_idx = zip_with_index(all_terms, ["term"], id_col="idx")
-    return with_idx.select("term", (F.col("idx") + 1).alias("uid"))
-
-
 def _sections(flags: DataFrame) -> DataFrame:
     """flags → (graph, term, section, sec_ord) four-section rows."""
     spo = flags.where((F.col("is_s") == 1) | (F.col("is_o") == 1)).select(
@@ -222,22 +207,29 @@ def build_dict_and_uids(
     flags: DataFrame,
     handles: list | None = None,
     flags_persisted: bool = False,
+    base_uids: DataFrame | None = None,
+    max_uid: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """ONE global index pass yields BOTH dictionary sec_ids and term uids.
 
     The (graph, sec_ord, term) range-sorted layout gives the HDT
-    per-section dense sec_ids directly; the global term uid is defined
-    as ``1 + min(idx)`` over the term's dict rows — unique and
-    deterministic (it is a pure function of the sorted layout), though
-    not dense (a term present in several graphs/sections keeps only its
+    per-section dense sec_ids directly.  A term's uid is
+    ``max_uid + 1 + min(idx)`` over its dict rows — unique and
+    deterministic (a pure function of the sorted layout), though not
+    dense (a term present in several graphs/sections keeps only its
     first slot).  Density was never required: triples join on uid
-    equality, HDT parity lives in the per-section sec_ids.  This halves
-    the round-1 build cost of TWO zip_with_index passes (each a persist
-    + boundary-sampling pass + offsets collect) — the serial driver
-    work that capped scaling efficiency (BENCH/BASELINE.md).
+    equality, HDT parity lives in the per-section sec_ids.
 
-    Returns (dict_df, term_uids); both derive lazily from one persisted
-    indexed frame (appended to ``handles`` for caller unpersist).
+    ``base_uids`` is a store's current (term, uid) table and
+    ``max_uid`` its largest uid (the caller looks it up once and reuses
+    it to select the new terms, ``uid > max_uid``): a term already in
+    ``base_uids`` keeps its uid, so the store's encoded triples stay
+    valid, and every new term's uid is above ``max_uid``.  Without it (a
+    fresh build, ``max_uid`` 0) the uids start at 1.
+
+    Returns (dict_df, term_uids), both covering exactly the terms of
+    ``flags``; both derive lazily from one persisted indexed frame
+    (appended to ``handles`` for caller unpersist).
     """
     sections = _sections(flags)
     indexed = zip_with_index(
@@ -247,30 +239,17 @@ def build_dict_and_uids(
         persist_input=not flags_persisted,
         handles=handles,
     )
-    term_uids = indexed.groupBy("term").agg((F.min("idx") + 1).cast("long").alias("uid"))
+    first = indexed.groupBy("term").agg(F.min("idx").alias("idx"))
+    fresh = (F.lit(max_uid) + 1 + F.col("idx")).cast("long")
+    if base_uids is None:
+        term_uids = first.select("term", fresh.alias("uid"))
+    else:
+        term_uids = first.join(base_uids, "term", "left").select(
+            "term", F.coalesce(F.col("uid"), fresh).alias("uid")
+        )
     dict_df = (
         _rank_sections(indexed)
         .join(term_uids, "term")
         .select("graph", "term", "section", "sec_id", "uid")
     )
     return dict_df, term_uids
-
-
-def build_dictionary(
-    triples_raw: DataFrame,
-    term_uids: DataFrame,
-    flags: DataFrame | None = None,
-    handles: list | None = None,
-) -> DataFrame:
-    """Per-graph four-section dictionary against caller-supplied uids.
-
-    Schema: graph, term, section ∈ {so,s,o,p}, sec_id (HDT ID within the
-    section's ID space, 1-based, see module docstring), uid (global).
-    """
-    if flags is None:
-        flags = position_flags(triples_raw)
-    indexed = zip_with_index(
-        _sections(flags), ["graph", "sec_ord", "term"], id_col="idx", handles=handles
-    )
-    dict_df = _rank_sections(indexed)
-    return dict_df.join(term_uids, "term").select("graph", "term", "section", "sec_id", "uid")

@@ -2,9 +2,10 @@
 
 The reference's hdt crate encodes NT triples against the dictionary and
 stores them SPO-sorted as bitmap/CSR adjacency lists
-(tests/resources/apple.hdt header: ``triplesOrder "SPO"``).  Spark
-equivalent: three equi-joins against the term-uid table, then a range
-shuffle on (graph, s_id) with in-partition (s_id, p_id, o_id) sort —
+(tests/resources/apple.hdt header: ``triplesOrder "SPO"``), as a set.
+Spark equivalent: three equi-joins against the term-uid table, then a
+planned range shuffle on (graph, s_id) that also drops duplicate rows,
+with in-partition (s_id, p_id, o_id) sort —
 sorted parquet files + min/max row-group stats play the role of the
 bitmap index (subject-bound patterns skip files, SURVEY.md §4 P1).
 
@@ -138,58 +139,35 @@ def planned_sort_spo(
     boundaries: list[tuple[str, int]],
     num_partitions: int,
 ) -> DataFrame:
-    """SPO layout via a PLANNED range partition: pid = #boundaries ≤
-    (graph, s_id) (lexicographic struct compares, codegen'd), mapped
-    through the magic-int table so ``repartition(n, magic)`` routes
-    each pid to its own shuffle partition.  Semantically equivalent to
-    ``sort_spo`` (same per-partition sort, graph-clustered files);
-    only the partition boundaries differ, and stage checksums are
-    order-insensitive by design."""
-    if not boundaries:
-        # degenerate plan (tiny/empty input): the sampled range
-        # exchange is cheap at this size — just use it
-        return sort_spo(triples_enc, num_partitions)
+    """The DISTINCT encoded triples in SPO layout, via a PLANNED range
+    partition: pid = #boundaries ≤ (graph, s_id) (lexicographic struct
+    compares, codegen'd), mapped through the magic-int table so
+    ``repartition(n, magic)`` routes each pid to its own shuffle
+    partition, then sorted (graph, s_id, p_id, o_id) per partition.
+
+    Duplicates are removed here, once, in uid space (RDF set semantics:
+    HDT holds a set of triples).  ``__route`` is a function of
+    (graph, s_id), so the route hash partitioning already clusters
+    equal rows and the distinct adds no second exchange.  With no
+    boundaries (tiny or empty input) every row routes to one
+    partition."""
     magic = _magic_partition_ints(num_partitions)
     key = F.struct(F.col("graph"), F.col("s_id"))
-    pid = sum(
-        (
-            key
-            >= F.struct(
-                F.lit(g).alias("graph"), F.lit(s).cast("long").alias("s_id")
-            )
-        ).cast("int")
+    bounds = [
+        F.struct(F.lit(g).alias("graph"), F.lit(s).cast("long").alias("s_id"))
         for g, s in boundaries
-    )
+    ]
+    pid = sum(((key >= b).cast("int") for b in bounds), F.lit(0))
     magic_arr = F.array(*[F.lit(m) for m in magic])
     routed = triples_enc.withColumn(
         "__route", F.element_at(magic_arr, pid + F.lit(1))
     )
     return (
         routed.repartition(num_partitions, "__route")
+        .dropDuplicates(["__route", "graph", "s_id", "p_id", "o_id"])
         .drop("__route")
         .sortWithinPartitions("graph", "s_id", "p_id", "o_id")
     )
-
-
-def sort_spo(triples_enc: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Range-partition + sort triples into SPO order (per graph)."""
-    spark = triples_enc.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return triples_enc.repartitionByRange(
-        num_partitions, "graph", "s_id", "p_id", "o_id"
-    ).sortWithinPartitions("graph", "s_id", "p_id", "o_id")
-
-
-def write_triples(triples_enc: DataFrame, path: str) -> None:
-    """Materialize SPO-sorted triples, partitioned by graph.
-
-    Partition column ``graph`` ≈ the reference's one-HDT-per-graph
-    layout (src/sparql.rs:40-48); graph-filtered queries prune
-    partitions before any IO (the reference's "filter before loading"
-    optimization, src/sparql.rs:86-99, is free here).
-    """
-    sort_spo(triples_enc).write.mode("overwrite").partitionBy("graph").parquet(path)
 
 
 def decode_triples(triples_enc: DataFrame, term_uids: DataFrame) -> DataFrame:

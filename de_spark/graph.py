@@ -21,7 +21,7 @@ class KnowledgeGraph:
     dict_df: DataFrame    # graph, term, section, sec_id, uid
     triples: DataFrame    # graph, s_id, p_id, o_id
     stats: DataFrame      # graph, triples, properties, distinct_subjects, distinct_objects
-    pred_stats: DataFrame | None = None  # p_id, n — BGP selectivity stats
+    pred_stats: DataFrame | None = None  # graph, p_id, n — BGP selectivity stats
 
     # -- loading ------------------------------------------------------------
 
@@ -42,7 +42,8 @@ class KnowledgeGraph:
 
     def predicate_cardinalities(self, pred_terms: list[str]) -> dict[str, int]:
         """Triple counts for constant predicate terms (plan-time driver
-        lookup over the tiny pred_stats table; {} when stats absent)."""
+        lookup over the tiny pred_stats table, one row per graph and
+        predicate, summed here; {} when stats absent)."""
         if self.pred_stats is None or not pred_terms:
             return {}
         uids = self.term_uids.where(F.col("term").isin(pred_terms)).select("term", "uid")
@@ -51,7 +52,10 @@ class KnowledgeGraph:
             .select("term", "n")
             .collect()
         )
-        return {r["term"]: int(r["n"] or 0) for r in rows}
+        cards: dict[str, int] = {}
+        for r in rows:
+            cards[r["term"]] = cards.get(r["term"], 0) + int(r["n"] or 0)
+        return cards
 
     # -- physical access path (F1/F2) ----------------------------------------
 

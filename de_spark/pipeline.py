@@ -1,13 +1,22 @@
-"""Checkpointed end-to-end build: the ``de create`` equivalent.
+"""Checkpointed end-to-end build: the ``de create`` equivalent, and the
+one build path of the store (``store.add_graph`` is this build into a
+staging dir plus a publish).
 
 Stages (each a checkpoint, per north_rule resumability):
 
   1. extract      — source rows → triples_raw strings
   2. term_uids    — global term→uid assignment   ┐ one shared index pass,
   3. dict         — four-section dictionary      ┘ written concurrently
-  4. triples      — uid-encoded, SPO-sorted, graph-partitioned
+  4. triples      — uid-encoded, distinct, SPO-sorted, graph-partitioned
   5. stats        — VOID header stats            ┐ derived from dict+enc,
-  6. pred_stats   — predicate degree stats       ┘ written concurrently
+  6. pred_stats   — per-graph predicate counts   ┘ written concurrently
+
+Set semantics: the stored triples are the distinct input triples (HDT
+holds a set).  Duplicates are dropped once, in uid space, inside the
+SPO layout shuffle; VOID and the manifests count the written rows, so
+they count distinct triples too.  Uids are unique and stable but not
+dense: building on top of a store's uid table keeps every existing uid
+and puts new ones above its max.
 
 Each stage writes parquet plus a ``_manifest.json`` with row count,
 wall-clock, schema and an order-insensitive content fingerprint
@@ -17,27 +26,19 @@ killed job resumes by skipping stages whose manifest already exists
 table itself (one row per graph with its triple count) — the resume /
 repair unit is the graph partition.
 
-Driver-serial cost is the scaling-efficiency enemy (north_rule ≥0.8
-from N to 4N): every action pays Catalyst planning + codegen on one
-core.  This build therefore (a) computes dict sec_ids AND term uids
-from ONE zip_with_index pass (round 1 ran two, each with a persist +
-boundary-sampling job + offsets collect), (b) derives VOID + predicate
-stats from COLUMN-PRUNED scans of the just-written dict/triples
-parquet (the scans touch only `graph` + `p_id`, sub-second at sf1.0;
-fully distributed — r6's in-flight variant collected per-(graph,p_id)
-counts to the driver, which is O(#repos) driver memory at scale), and
-(c) overlaps independent stage writes (uids ∥ dict ∥ triples — the
-encode joins read the LIVE uid frame off the shared index cache, not
-the uids parquet — and stats ∥ pred_stats) on driver threads so
-planning and the per-stage straggler tail of one action hide under
-execution of the others; only the 4N leg has idle cores to reclaim,
-so the overlap directly widens N→4N scaling efficiency.  Wide
-single-JVM local mode (local[N>16]) falls back to uids ∥ dict then
-triples — measured allocation-contention exception, see build().
-r7: the triples stage no longer persists the encode output for the
-range-sampling pass — with shuffled-hash encode joins (session.py)
-re-running the joins once is cheaper than materializing + re-reading
-a fact-table-sized cache (73.8s → 29.6s at sf1.0 local[32]).
+Driver-serial cost dominates at these sizes: every action pays
+Catalyst planning + codegen on one core.  This build therefore (a)
+computes dict sec_ids AND term uids from ONE zip_with_index pass, (b)
+derives VOID + predicate stats from COLUMN-PRUNED scans of the
+just-written dict/triples parquet (the scans touch only `graph` +
+`p_id`; fully distributed, never O(#graphs) on the driver), and (c)
+overlaps independent stage writes (uids ∥ dict ∥ triples — the encode
+joins read the LIVE uid frame off the shared index cache, not the uids
+parquet — and stats ∥ pred_stats) on driver threads so planning and
+the per-stage straggler tail of one action hide under execution of the
+others.  The triples stage does not persist the encode output: its
+partition boundaries come from a raw-sample probe of the uid cache
+(``plan_spo_partitions``), not from a pass over the encoded rows.
 
 Iceberg note: the target deployment materializes these as partitioned
 Iceberg tables (snapshot semantics = the reference's immutable HDT +
@@ -104,7 +105,6 @@ def _write_stage(
     name: str,
     resume: bool,
     partition_by: list[str] | None = None,
-    sort: bool = False,
 ) -> StageResult:
     if _stage_done(stage_dir, resume):
         with open(_manifest_path(stage_dir)) as f:
@@ -122,15 +122,8 @@ def _write_stage(
         # serializing ahead of them (r7: the eager variant lengthened
         # the 4-core critical path by the whole planning prefix)
         df = df()
-    # sort_spo range-shuffles, whose boundary-sampling pass re-runs the
-    # encode joins once.  r6 persisted the encode output to avoid that
-    # re-run; with shuffled-hash encode joins the re-run is CHEAPER
-    # than materializing + re-reading a fact-table-sized cache
-    # (measured at sf1.0 local[32]: persist+sort+write 73.8s vs
-    # nopersist 29.6s, r7 profile) and holds no executor storage.
-    out = sort_spo(df) if sort else df
     obs = Observation(f"lineage_{name}")
-    out = out.observe(obs, *_lineage_exprs(out))
+    out = df.observe(obs, *_lineage_exprs(df))
     writer = out.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -162,8 +155,6 @@ def _parallel_stages(jobs: list[tuple]) -> list[StageResult]:
     scheduler interleaves their tasks; Catalyst planning of one action
     overlaps execution of the other (the py4j calls release the GIL).
     """
-    if len(jobs) == 1:
-        return [_write_stage(*jobs[0])]
     with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
         futs = [pool.submit(_write_stage, *j) for j in jobs]
         return [f.result() for f in futs]
@@ -175,6 +166,21 @@ def build(
     resume: bool = False,
 ) -> tuple[KnowledgeGraph, list[StageResult]]:
     """Materialize a KnowledgeGraph from string triples (``de create``)."""
+    stages = build_stages(triples_raw, out_dir, resume)
+    return KnowledgeGraph.load(triples_raw.sparkSession, out_dir), stages
+
+
+def build_stages(
+    triples_raw: DataFrame,
+    out_dir: str,
+    resume: bool = False,
+    base_uids: DataFrame | None = None,
+) -> list[StageResult]:
+    """Write the six build stages of ``triples_raw`` under ``out_dir``.
+
+    ``base_uids`` is an existing store's (term, uid) table: terms in it
+    keep their uid, and the ``term_uids`` stage then holds only the new
+    terms — exactly the rows a store append publishes."""
     spark = triples_raw.sparkSession
     results: list[StageResult] = []
     os.makedirs(out_dir, exist_ok=True)
@@ -187,130 +193,63 @@ def build(
     dict_dir = f"{out_dir}/dict"
     triples_dir = f"{out_dir}/triples"
     handles: list[DataFrame] = []
-    flags = None
-    need_index = not (_stage_done(uids_dir, resume) and _stage_done(dict_dir, resume))
-    need_triples = not _stage_done(triples_dir, resume)
-    if not need_index:
-        # skip the eager index pass entirely on resume
-        results.append(_write_stage(None, uids_dir, "term_uids", resume))
-        results.append(_write_stage(None, dict_dir, "dict", resume))
-        if need_triples:
-            # lineage from the checkpointed uids parquet (resume path)
-            uids = spark.read.parquet(uids_dir)
-            nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-            bounds = plan_spo_partitions(raw, uids, results[0].rows, nparts)
-            results.append(
-                _write_stage(
-                    planned_sort_spo(encode_triples(raw, uids, None), bounds, nparts),
-                    triples_dir,
-                    "triples",
-                    resume,
-                    partition_by=["graph"],
-                )
-            )
-        else:
-            results.append(_write_stage(None, triples_dir, "triples", resume))
-    else:
+    new_uids = dict_df = triples_df = None
+    if not all(_stage_done(d, resume) for d in (uids_dir, dict_dir, triples_dir)):
+        max_uid = 0
+        if base_uids is not None:
+            max_uid = base_uids.agg(F.max("uid")).first()[0] or 0
         # one term-universe shuffle (position flags) feeds the single
         # shared index pass that yields BOTH dict sec_ids and term uids
         flags = position_flags(raw).persist()
         handles.append(flags)
-        dict_df, uids_df = build_dict_and_uids(flags, handles=handles, flags_persisted=True)
+        dict_df, uids_df = build_dict_and_uids(
+            flags, handles=handles, flags_persisted=True, base_uids=base_uids, max_uid=max_uid
+        )
         # the uid table is read four times downstream (its own write,
         # the dict join, the s- and o-encode joins): persist so the
         # groupBy(term) agg over the index cache runs once
         uids_df = uids_df.persist()
         handles.append(uids_df)
-        jobs = [
-            (uids_df, uids_dir, "term_uids", resume),
-            (dict_df, dict_dir, "dict", resume),
-        ]
-        # Overlap policy: encode against the LIVE uid frame (identical
-        # content to the parquet being written — uid assignment is a
-        # pure function of the sorted index) so the triples stage
-        # needn't wait for the uids write: all three writes run
-        # concurrently on driver threads over the one persisted index
-        # frame.  Sequencing these (r5 shape: uids+dict, then read uids
-        # parquet, then triples) leaves idle tail cores per stage that
-        # only the high-parallelism leg could have used, so the overlap
-        # directly buys N→4N scaling efficiency (interleaved A/B at
-        # sf1.0 local[4]: 225.7s vs 243.2s, BENCH/ab_r6_overlap.log).
-        # EXCEPTION — wide single-JVM local mode: this dev box measures
-        # an allocation pathology above ~12 threads in ONE JVM
-        # (BENCH/BASELINE.md machine-ceiling table), and three
-        # concurrent jobs amplify it (local[32] sf0.1 interleaved mins:
-        # 36-42s sequential vs 47s overlapped).  Executors on a real
-        # cluster are separate JVMs, so the fallback applies only to
-        # local[N>16]; cluster masters always overlap.
-        # DE_SPARK_OVERLAP_WRITES: auto (default — gate on wide local),
-        # always, never.  The two paths are result-identical (pinned by
-        # test_pipeline::test_overlap_paths_equivalent); the knob exists
-        # for operators and for that test.
-        mode = os.environ.get("DE_SPARK_OVERLAP_WRITES", "auto")
-        master = spark.sparkContext.master
-        # ADVICE r6: the single-JVM allocation pathology the fallback
-        # exists for applies to local[N] only — local-cluster[...] runs
-        # separate executor JVMs, so it overlaps like a real cluster.
-        single_jvm = master == "local" or master.startswith("local[")
-        wide_local = (
-            mode == "never"
-            or (
-                mode != "always"
-                and single_jvm
-                and spark.sparkContext.defaultParallelism > 16
-            )
+        new_uids = uids_df if base_uids is None else uids_df.where(F.col("uid") > max_uid)
+        # planned range partition: boundaries come from a seeded
+        # raw-sample broadcast-probed against the uid cache, never from
+        # a pass over the encoded rows.  Deferred via a callable so the
+        # planning jobs run on the triples stage's own thread,
+        # overlapped with the uids/dict writes.
+        p_vocab = flags.where(F.col("is_p") == 1).select("term").distinct()
+        nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        n_raw = results[0].rows
+
+        def triples_df(raw=raw, uids=uids_df, pv=p_vocab):
+            bounds = plan_spo_partitions(raw, uids, n_raw, nparts)
+            return planned_sort_spo(encode_triples(raw, uids, pv), bounds, nparts)
+
+    # uids ∥ dict ∥ triples: the encode reads the LIVE uid frame
+    # (identical content to the parquet being written — uid assignment
+    # is a pure function of the sorted index), so all three writes run
+    # concurrently over the one persisted index frame.  A stage whose
+    # manifest exists on resume is skipped without evaluating its frame.
+    results.extend(
+        _parallel_stages(
+            [
+                (new_uids, uids_dir, "term_uids", resume),
+                (dict_df, dict_dir, "dict", resume),
+                (triples_df, triples_dir, "triples", resume, ["graph"]),
+            ]
         )
-        if need_triples:
-            p_vocab = flags.where(F.col("is_p") == 1).select("term").distinct()
-            # planned range partition (r7): repartitionByRange's
-            # boundary-sampling pass re-ran the FULL encode joins
-            # (~10-12s of the 29s triples stage at sf1.0); boundaries
-            # now come from a seeded raw-sample broadcast-probed
-            # against the uid cache (~2s, and it warms the uids cache
-            # every downstream consumer reads anyway).  Deferred via a
-            # callable so the planning jobs run on the triples stage's
-            # own thread, overlapped with the uids/dict writes.
-            nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-            n_raw = results[0].rows
-
-            def _triples_df(raw=raw, uids=uids_df, pv=p_vocab):
-                bounds = plan_spo_partitions(raw, uids, n_raw, nparts)
-                return planned_sort_spo(encode_triples(raw, uids, pv), bounds, nparts)
-
-            triples_job = (
-                _triples_df,
-                triples_dir,
-                "triples",
-                resume,
-                ["graph"],
-            )
-            if not wide_local:
-                jobs.append(triples_job)
-        st = _parallel_stages(jobs)
-        results.extend(st)
-        if need_triples and wide_local:
-            results.append(_write_stage(*triples_job))
-        elif not need_triples:
-            results.append(_write_stage(None, triples_dir, "triples", resume))
+    )
 
     # stats (VOID) ∥ pred_stats (BGP selectivity stats, SURVEY.md §4 P7)
     # — always derived from the WRITTEN dict + triples parquet.  The
     # triple/predicate counts scan only the `graph` partition value and
-    # the dictionary-encoded `p_id` column (column pruning makes this a
-    # sub-second scan even at sf1.0: 0.66s measured for the full
-    # groupBy(graph, p_id) over 36M rows), and the distinct counts are
-    # sums over the dict table.  This replaces r6's in-flight path that
-    # `.collect()`ed per-(graph, p_id) counts to the driver — graph =
-    # one named graph per repository, so that collect grew O(#repos)
-    # and became a driver-memory bottleneck at 100× scale (VERDICT r6
-    # item 4).  The distributed aggregation never moves per-graph rows
-    # through the driver.
+    # the dictionary-encoded `p_id` column, and the distinct counts are
+    # sums over the dict table; the aggregation is distributed and never
+    # moves per-graph rows through the driver.
     stats_dir = f"{out_dir}/stats"
     pred_dir = f"{out_dir}/pred_stats"
     enc = spark.read.parquet(triples_dir)
-    dict_read = spark.read.parquet(dict_dir)
-    stats_df = void_stats_from_dict(dict_read, enc)
-    pred_df = enc.groupBy("p_id").agg(F.count("*").alias("n"))
+    stats_df = void_stats_from_dict(spark.read.parquet(dict_dir), enc)
+    pred_df = enc.groupBy("graph", "p_id").agg(F.count("*").alias("n"))
     results.extend(
         _parallel_stages(
             [
@@ -321,5 +260,4 @@ def build(
     )
     for h in handles:
         h.unpersist()
-
-    return KnowledgeGraph.load(spark, out_dir), results
+    return results

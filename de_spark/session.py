@@ -16,6 +16,19 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """A quarter of physical RAM (at most 48g): a fixed 48g heap lets a
+    local-mode JVM outgrow a small machine's memory and be killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(48 * 1024, int(line.split()[1]) // 4096)}m"
+    except OSError:  # no procfs: keep the cluster-sized default
+        pass
+    return "48g"
+
+
 def get_spark(
     app_name: str = "de_spark",
     cpus: int | None = None,
@@ -39,7 +52,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         # shuffle/spill dir: tmpfs by default when available — local-mode
         # shuffles otherwise serialize on one disk and cap thread scaling
         .config(

@@ -3,8 +3,9 @@
 The reference writes VOID counts into every HDT header and ``de view``
 prints them (src/view.rs:52-55; concrete golden from
 tests/resources/apple.hdt: triples=9, properties=7, distinctSubjects=2,
-distinctObjects=9).  Exact countDistinct is used — these are parity
-stats, not progress metrics (SURVEY.md §2.4 A1).
+distinctObjects=9).  The counts are exact — parity stats, not progress
+metrics (SURVEY.md §2.4 A1) — and derived from the built tables, so they
+count distinct triples and terms.
 """
 
 from __future__ import annotations
@@ -13,28 +14,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def void_stats(triples_raw: DataFrame) -> DataFrame:
-    """Per-graph VOID stats over string triples.
-
-    Schema: graph, triples, properties, distinct_subjects,
-    distinct_objects (all long).
-    """
-    return triples_raw.groupBy("graph").agg(
-        F.count("*").alias("triples"),
-        F.countDistinct("p").alias("properties"),
-        F.countDistinct("s").alias("distinct_subjects"),
-        F.countDistinct("o").alias("distinct_objects"),
-    )
-
-
 def void_stats_from_dict(dict_df: DataFrame, triples_enc: DataFrame) -> DataFrame:
     """VOID stats derived from the four-section dictionary — the
     distinct-counts are free (the dictionary IS the distinct term set
     per position: subjects = so+s sections, objects = so+o, properties
     = p), so the only fact-table pass is a plain per-graph count with
-    map-side combine.  Replaces three exact countDistinct shuffles of
-    the triples table (round-1 ``void_stats_encoded`` path) with a
-    groupBy over the much smaller dict.
+    map-side combine over the (already distinct) encoded triples.
     """
     sec_counts = dict_df.groupBy("graph").agg(
         F.sum(F.when(F.col("section") == "p", 1).otherwise(0)).cast("long").alias("properties"),
@@ -48,16 +33,4 @@ def void_stats_from_dict(dict_df: DataFrame, triples_enc: DataFrame) -> DataFram
     trip_counts = triples_enc.groupBy("graph").agg(F.count("*").alias("triples"))
     return trip_counts.join(F.broadcast(sec_counts), "graph").select(
         "graph", "triples", "properties", "distinct_subjects", "distinct_objects"
-    )
-
-
-def void_stats_encoded(triples_enc: DataFrame) -> DataFrame:
-    """Same VOID stats computed over the uid-encoded triples — counts
-    are identical (term↔uid is a bijection) but the countDistinct
-    shuffle moves 8-byte longs instead of term strings."""
-    return triples_enc.groupBy("graph").agg(
-        F.count("*").alias("triples"),
-        F.countDistinct("p_id").alias("properties"),
-        F.countDistinct("s_id").alias("distinct_subjects"),
-        F.countDistinct("o_id").alias("distinct_objects"),
     )

@@ -6,13 +6,16 @@ DELETE-INSERT (src/serve.rs:880-890) and only allows inserting into
 NEW named graphs (src/serve.rs:818-849) and dropping whole graphs
 (src/serve.rs:892-960, file removal src/sparql.rs:177-221).
 
-Spark/Iceberg realization: the triples/dict/stats tables are
-partitioned by graph, so
+Spark/Iceberg realization: the triples/dict/stats/pred_stats tables
+are partitioned by graph (a directory per graph for triples, a graph
+column for the rest), so
 
-- ``add_graph``   = append the new graph's partitions + extend the
-  global term-uid table with only the NEW terms (uids continue after
-  the current max, assigned in term order — existing uids never
-  change, so existing encoded triples stay valid);
+- ``add_graph``   = ``pipeline.build_stages`` of the new graphs into a
+  staging dir — the one build path, so the added triples are distinct
+  and VOID counts them — given the store's uid table, then a publish
+  that moves the staged files into the store.  Existing terms keep
+  their uids and new terms get uids above the store's max, so existing
+  encoded triples stay valid.  Uids are unique and stable, not dense;
 - ``drop_graph``  = drop the graph's partitions (dynamic partition
   overwrite semantics; stale uids for terms that only occurred in the
   dropped graph are harmless, like the reference's leftover side-car
@@ -26,15 +29,16 @@ time-travel.
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from de_spark.dictionary import build_dictionary, position_flags, zip_with_index
-from de_spark.encode import encode_triples, sort_spo
 from de_spark.graph import KnowledgeGraph
-from de_spark.stats import void_stats
+from de_spark.pipeline import build_stages
 
 
 class GraphExistsError(ValueError):
@@ -50,12 +54,12 @@ def _graphs(spark: SparkSession, base_dir: str) -> set[str]:
 
 
 _PENDING = ".pending_add.json"
-_ADD_TABLES = ("term_uids", "dict", "stats")  # triples handled per-partition
+_STAGING = ".add_staging"
+# graph-column tables an add appends files to (triples: per-graph dirs)
+_ADD_TABLES = ("term_uids", "dict", "stats", "pred_stats")
 
 
 def _list_files(base_dir: str, table: str) -> list[str]:
-    import os
-
     root = f"{base_dir}/{table}"
     out = []
     for dirpath, _, files in os.walk(root):
@@ -65,20 +69,30 @@ def _list_files(base_dir: str, table: str) -> list[str]:
     return sorted(out)
 
 
+def _graph_dirs(triples_dir: str) -> dict[str, str]:
+    """graph IRI → its partition dir name under ``triples_dir`` (match
+    by unescaping the dir names — Spark's partition-path escaping is not
+    exactly urllib's quote)."""
+    if not os.path.isdir(triples_dir):
+        return {}
+    return {
+        unquote(d[len("graph="):]): d
+        for d in os.listdir(triples_dir)
+        if d.startswith("graph=")
+    }
+
+
 def _recover_pending(base_dir: str) -> None:
     """Undo a torn ``add_graph``: the write-ahead marker records the
     pre-existing files of every appended table; any file not in that
-    manifest was written by the interrupted transaction and is removed
-    (triples partitions of the pending graphs are dropped whole).  The
-    marker's removal is the COMMIT POINT — a crash anywhere before it
-    rolls the store back to the pre-add snapshot, so a replayed
-    streaming batch re-runs ``add_graph`` against clean state instead
-    of duplicating dict/triples rows (ADVICE r2: stats registration is
-    written last but the earlier appends were not undone on replay)."""
-    import json
-    import os
-    from urllib.parse import unquote
-
+    manifest was published by the interrupted transaction and is removed
+    (triples partitions of the pending graphs are dropped whole), and
+    the staging dir goes too.  The marker is written once the staged
+    build is complete (before it the store itself is untouched) and its
+    removal is the COMMIT POINT — a crash anywhere before it rolls the
+    store back to the pre-add snapshot, so a replayed streaming batch
+    re-runs ``add_graph`` against clean state instead of duplicating
+    dict/triples rows."""
     marker = f"{base_dir}/{_PENDING}"
     if not os.path.exists(marker):
         return
@@ -92,9 +106,10 @@ def _recover_pending(base_dir: str) -> None:
                 os.remove(os.path.join(root, rel))
     tdir = f"{base_dir}/triples"
     pending = set(txn["graphs"])
-    for d in os.listdir(tdir):
-        if d.startswith("graph=") and unquote(d[len("graph="):]) in pending:
+    for g, d in _graph_dirs(tdir).items():
+        if g in pending:
             shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
+    shutil.rmtree(f"{base_dir}/{_STAGING}", ignore_errors=True)
     os.remove(marker)
 
 
@@ -102,55 +117,44 @@ def add_graph(spark: SparkSession, base_dir: str, triples_raw: DataFrame) -> Non
     """Append new named graph(s) to a materialized store.
 
     Every graph in ``triples_raw`` must be new (GraphExistsError
-    otherwise).  One pass extends term_uids with unseen terms; the new
-    partitions are appended to triples/dict/stats.  The append is
-    journaled: a write-ahead marker + file manifest makes a torn add
-    roll back on the next mutation (see ``_recover_pending``), so
-    foreachBatch replays are exactly-once.
+    otherwise).  The graphs are built into ``<store>/.add_staging`` by
+    the same stages as ``pipeline.build`` — reading ``triples_raw``
+    once — against the store's uid table, then published: the staged
+    parquet files of term_uids/dict/stats/pred_stats and the staged
+    ``triples/graph=*`` dirs move into the store (the staging dir's
+    triples_raw and every ``_manifest.json`` / ``_SUCCESS`` stay
+    behind).  The publish is journaled: a write-ahead marker + file
+    manifest makes a torn add roll back on the next mutation (see
+    ``_recover_pending``), so foreachBatch replays are exactly-once.
     """
-    import json
-    import os
-
     _recover_pending(base_dir)
-    new_graphs = {r["graph"] for r in triples_raw.select("graph").distinct().collect()}
-    existing = _graphs(spark, base_dir)
-    clash = new_graphs & existing
+    staging = f"{base_dir}/{_STAGING}"
+    shutil.rmtree(staging, ignore_errors=True)
+    build_stages(triples_raw, staging, base_uids=spark.read.parquet(f"{base_dir}/term_uids"))
+    staged = _graph_dirs(f"{staging}/triples")
+    clash = set(staged) & _graphs(spark, base_dir)
     if clash:
+        shutil.rmtree(staging, ignore_errors=True)
         raise GraphExistsError(f"graphs already exist (immutable): {sorted(clash)}")
 
     marker = f"{base_dir}/{_PENDING}"
     txn = {
-        "graphs": sorted(new_graphs),
+        "graphs": sorted(staged),
         "manifest": {t: _list_files(base_dir, t) for t in _ADD_TABLES},
     }
     tmp_marker = marker + ".tmp"
     with open(tmp_marker, "w") as f:
         json.dump(txn, f)
     os.replace(tmp_marker, marker)
-
-    uids = spark.read.parquet(f"{base_dir}/term_uids")
-    max_uid = uids.agg(F.max("uid").alias("m")).collect()[0]["m"] or 0
-
-    flags = position_flags(triples_raw).persist()
-    handles: list[DataFrame] = [flags]
-    new_terms = flags.select("term").distinct().join(uids, "term", "left_anti")
-    appended = zip_with_index(new_terms, ["term"], id_col="idx", handles=handles).select(
-        "term", (F.col("idx") + 1 + F.lit(max_uid)).cast("long").alias("uid")
-    )
-    appended.write.mode("append").parquet(f"{base_dir}/term_uids")
-    all_uids = spark.read.parquet(f"{base_dir}/term_uids")
-
-    build_dictionary(triples_raw, all_uids, flags, handles=handles).write.mode(
-        "append"
-    ).parquet(f"{base_dir}/dict")
-    p_vocab = flags.where(F.col("is_p") == 1).select("term").distinct()
-    sort_spo(encode_triples(triples_raw, all_uids, p_vocab)).write.mode(
-        "append"
-    ).partitionBy("graph").parquet(f"{base_dir}/triples")
-    void_stats(triples_raw).write.mode("append").parquet(f"{base_dir}/stats")
+    for table in _ADD_TABLES:
+        os.makedirs(f"{base_dir}/{table}", exist_ok=True)
+        for name in os.listdir(f"{staging}/{table}"):
+            if name.endswith(".parquet"):
+                os.rename(f"{staging}/{table}/{name}", f"{base_dir}/{table}/{name}")
+    for d in staged.values():
+        os.rename(f"{staging}/triples/{d}", f"{base_dir}/triples/{d}")
+    shutil.rmtree(staging, ignore_errors=True)
     os.remove(marker)  # COMMIT: the add is durable only past this point
-    for h in handles:
-        h.unpersist()
 
 
 def drop_graph(spark: SparkSession, base_dir: str, graph: str) -> bool:
@@ -165,21 +169,16 @@ def drop_graph(spark: SparkSession, base_dir: str, graph: str) -> bool:
     if graph not in _graphs(spark, base_dir):
         return False
     # triples: partitioned by graph → drop the partition directory
-    # (match by unescaping the dir names — Spark's partition-path
-    # escaping is not exactly urllib's quote)
-    import os
-    from urllib.parse import unquote
-
     tdir = f"{base_dir}/triples"
-    for d in os.listdir(tdir):
-        if d.startswith("graph=") and unquote(d[len("graph="):]) == graph:
-            shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-    # dict/stats: rewrite without the graph, staged through a temp dir
+    d = _graph_dirs(tdir).get(graph)
+    if d is not None:
+        shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
+    # dict/stats/pred_stats: rewrite without the graph, staged through a temp dir
     # then atomically renamed — an in-place overwrite would delete the
     # source files mid-read (a lost cached partition after the delete
     # would corrupt the table; Iceberg gets this for free via snapshot
     # commits, the parquet stand-in must stage explicitly)
-    for table in ("dict", "stats"):
+    for table in ("dict", "stats", "pred_stats"):
         final = f"{base_dir}/{table}"
         tmp = f"{base_dir}/.{table}.staging"
         old = f"{base_dir}/.{table}.old"
@@ -203,8 +202,6 @@ def sync_dir(spark: SparkSession, base_dir: str, rdf_dir: str) -> tuple[list[str
 
     Returns (added_graphs, dropped_graphs).
     """
-    import os
-
     from de_spark.sources.nt import graph_iri_for_file
     from de_spark.sources.router import read_rdf
 
@@ -304,8 +301,6 @@ def execute_update(spark: SparkSession, base_dir: str, update_text: str) -> list
                 f"INSERT DATA: {len(rows)} triples into {len(op.quads)} new graph(s)"
             )
         elif op.kind == "load":
-            from pyspark.sql import functions as F  # noqa: F811
-
             from de_spark.sources.router import read_rdf
 
             path = op.source

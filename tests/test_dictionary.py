@@ -1,16 +1,10 @@
 from pyspark.sql import functions as F
 
-from de_spark.dictionary import (
-    build_dict_and_uids,
-    build_dictionary,
-    build_term_uids,
-    position_flags,
-    zip_with_index,
-)
+from de_spark.dictionary import build_dict_and_uids, position_flags, zip_with_index
 from de_spark.encode import decode_triples, encode_triples
+from de_spark.pipeline import build
 from de_spark.sources.turtle import parse_turtle, turtle_files_to_triples
 from de_spark.sources.nt import triples_from_nt_text
-from de_spark.stats import void_stats
 from tests.fixtures import APPLE_TTL, BANANA_NT
 
 
@@ -32,8 +26,7 @@ def test_four_sections_apple(spark):
     """HDT golden from /root/reference/tests/resources/apple.hdt header:
     numSharedSubjectObject=1, 2 subjects, 9 objects, 7 predicates."""
     raw = apple_raw(spark)
-    uids = build_term_uids(raw)
-    d = build_dictionary(raw, uids)
+    d, _ = build_dict_and_uids(position_flags(raw))
     by_sec = {r["section"]: r["cnt"] for r in d.groupBy("section").count().withColumnRenamed("count", "cnt").collect()}
     assert by_sec["so"] == 1      # ex:Fruit is both subject and object
     assert by_sec["s"] == 1       # ex:Apple
@@ -54,9 +47,9 @@ def test_four_sections_apple(spark):
     assert o_terms == sorted(o_terms)
 
 
-def test_void_stats_apple_golden(spark):
-    raw = apple_raw(spark)
-    row = void_stats(raw).collect()[0]
+def test_void_stats_apple_golden(spark, tmp_path):
+    kg, _ = build(apple_raw(spark), str(tmp_path / "kg"))
+    row = kg.stats.collect()[0]
     assert (
         row["triples"],
         row["properties"],
@@ -67,7 +60,7 @@ def test_void_stats_apple_golden(spark):
 
 def test_encode_decode_roundtrip(spark):
     raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
-    uids = build_term_uids(raw)
+    _, uids = build_dict_and_uids(position_flags(raw))
     enc = encode_triples(raw, uids)
     assert enc.count() == 12
     dec = decode_triples(enc, uids)
@@ -77,19 +70,13 @@ def test_encode_decode_roundtrip(spark):
 
 
 def test_fused_dict_and_uids_single_pass(spark):
-    """build_dict_and_uids: same sec_ids as the two-pass path; uids are
-    unique, deterministic, and equal to 1 + the term's min global index
-    in (graph, sec_ord, term) order."""
+    """build_dict_and_uids: uids are unique, deterministic, and equal
+    to 1 + the term's min global index in (graph, sec_ord, term) order
+    (sec_ids: test_four_sections_apple)."""
     raw = apple_raw(spark)
     d1, u1 = build_dict_and_uids(position_flags(raw))
     dict_rows = d1.collect()
     uid_rows = {r["term"]: r["uid"] for r in u1.collect()}
-
-    # sec_ids identical to the standalone dictionary path
-    d2 = build_dictionary(raw, build_term_uids(raw))
-    ids1 = {(r["graph"], r["section"], r["term"]): r["sec_id"] for r in dict_rows}
-    ids2 = {(r["graph"], r["section"], r["term"]): r["sec_id"] for r in d2.collect()}
-    assert ids1 == ids2
 
     # uid = 1 + min global index over the term's dict rows
     order = {"so": 0, "s": 1, "o": 2, "p": 3}
@@ -112,13 +99,36 @@ def test_fused_dict_and_uids_single_pass(spark):
     assert back == {(r["s"], r["p"], r["o"]) for r in raw.collect()}
 
 
-def test_uids_are_dense_and_deterministic(spark):
+def test_uids_are_deterministic(spark, tmp_path):
+    """Two builds of the same triples, partitioned differently, assign
+    every term the same uid (uids are unique and stable, not dense)."""
     raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
-    u1 = {r["term"]: r["uid"] for r in build_term_uids(raw).collect()}
-    u2 = {r["term"]: r["uid"] for r in build_term_uids(raw).collect()}
+    builds = [
+        build(raw.repartition(n), str(tmp_path / f"kg{n}"))[0] for n in (1, 5)
+    ]
+    u1, u2 = ({r["term"]: r["uid"] for r in kg.term_uids.collect()} for kg in builds)
     assert u1 == u2
-    ids = sorted(u1.values())
-    assert ids == list(range(1, len(ids) + 1))
-    # lexicographic order
-    terms_sorted = sorted(u1, key=lambda t: u1[t])
-    assert terms_sorted == sorted(terms_sorted)
+    assert len(set(u1.values())) == len(u1)
+
+
+def test_base_uids_keep_existing_and_extend_above_max(spark):
+    """Building against an existing uid table: terms already in it keep
+    their uid, new terms get uids above its max, and dict rows carry
+    the same uids."""
+    banana = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
+    _, base = build_dict_and_uids(position_flags(banana))
+    base_rows = {r["term"]: r["uid"] for r in base.collect()}
+    max_uid = max(base_rows.values())
+    d, u = build_dict_and_uids(
+        position_flags(apple_raw(spark)), base_uids=base, max_uid=max_uid
+    )
+    got = {r["term"]: r["uid"] for r in u.collect()}
+    assert len(set(got.values())) == len(got)
+    for term, uid in got.items():
+        if term in base_rows:
+            assert uid == base_rows[term]
+        else:
+            assert uid > max_uid
+    assert {term for term in got if term in base_rows}  # the two share terms
+    for r in d.collect():
+        assert got[r["term"]] == r["uid"]

@@ -1,9 +1,10 @@
-"""Planned SPO range partition (r7): the triples stage routes rows to
+"""Planned SPO range partition: the triples stage routes rows to
 shuffle partitions from a precomputed boundary plan instead of letting
 ``repartitionByRange`` re-execute the encode joins for boundary
-sampling.  Pins (a) JVM hash parity for the magic-int routing, (b)
-result equivalence with the sampled path, (c) layout quality — rows
-land range-clustered by (graph, s_id)."""
+sampling, and drops duplicate rows in the same exchange.  Pins (a) JVM
+hash parity for the magic-int routing, (b) the output is exactly the
+distinct encoded triples, (c) layout quality — rows land SPO-sorted and
+range-clustered by (graph, s_id), (d) one exchange in the plan."""
 
 from pyspark.sql import functions as F
 
@@ -14,7 +15,6 @@ from de_spark.encode import (
     encode_triples,
     plan_spo_partitions,
     planned_sort_spo,
-    sort_spo,
 )
 from de_spark.corpus import generate_corpus
 from de_spark.extract import extract_code_triples
@@ -37,8 +37,9 @@ def test_magic_ints_route_to_their_partition(spark):
 
 
 def test_planned_sort_spo_equivalent_and_clustered(spark):
-    raw = extract_code_triples(generate_corpus(spark, 0.001))
-    raw = raw.cache()
+    # every triple twice: the layout must come out a set
+    once = extract_code_triples(generate_corpus(spark, 0.001))
+    raw = once.unionByName(once).cache()
     n_rows = raw.count()
     handles = []
     flags = position_flags(raw).persist()
@@ -54,11 +55,12 @@ def test_planned_sort_spo_equivalent_and_clustered(spark):
     assert bounds == sorted(bounds)
 
     planned = planned_sort_spo(enc, bounds, nparts)
-    sampled = sort_spo(enc, nparts)
-    # identical multiset of encoded triples — layout only differs
-    assert planned.exceptAll(sampled).count() == 0
-    assert sampled.exceptAll(planned).count() == 0
+    distinct = enc.distinct()
+    assert planned.count() < enc.count()
+    assert planned.exceptAll(distinct).count() == 0
+    assert distinct.exceptAll(planned).count() == 0
     assert "__route" not in planned.columns
+    _assert_spo_sorted(planned)
 
     # layout quality: within every partition rows are SPO-sorted, and
     # partitions cover disjoint contiguous (graph, s_id) ranges
@@ -82,3 +84,32 @@ def test_planned_sort_spo_equivalent_and_clustered(spark):
     raw.unpersist()
     for h in handles:
         h.unpersist()
+
+
+def _assert_spo_sorted(df):
+    cols = ["graph", "s_id", "p_id", "o_id"]
+    for part in df.rdd.glom().collect():
+        keys = [tuple(r[c] for c in cols) for r in part]
+        assert keys == sorted(keys)
+
+
+def test_planned_sort_spo_without_boundaries(spark):
+    """Tiny input (no boundaries): still deduplicated and SPO-sorted."""
+    rows = [("g", 3, 1, 2), ("g", 1, 1, 1), ("g", 3, 1, 2), ("f", 2, 2, 2), ("g", 1, 1, 1)]
+    enc = spark.createDataFrame(rows, "graph string, s_id long, p_id long, o_id long")
+    out = planned_sort_spo(enc, [], 4)
+    assert sorted(tuple(r) for r in out.collect()) == sorted(set(rows))
+    _assert_spo_sorted(out)
+
+
+def test_planned_sort_spo_single_exchange(spark, tmp_path):
+    """The distinct rides on the route exchange: over an encoded parquet
+    read the physical plan holds exactly one Exchange."""
+    path = str(tmp_path / "enc")
+    spark.createDataFrame(
+        [("g", i % 5, 1, i) for i in range(40)],
+        "graph string, s_id long, p_id long, o_id long",
+    ).write.parquet(path)
+    out = planned_sort_spo(spark.read.parquet(path), [("g", 2)], 4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan

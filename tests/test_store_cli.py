@@ -1,6 +1,8 @@
 """Whole-graph add/drop semantics (reference src/serve.rs:818-960) and
 the CLI verb surface."""
 
+import os
+
 import pytest
 
 from de_spark import store
@@ -20,12 +22,28 @@ def _pineapple_raw(spark):
     return spark.createDataFrame(data, ["s", "p", "o", "o_kind", "graph"])
 
 
+def _uids(kg):
+    return {r["term"]: r["uid"] for r in kg.term_uids.collect()}
+
+
+def _assert_uid_invariants(kg, pre: dict):
+    """One uid per term, uids unique, every pre-add term keeps its uid,
+    every new uid is above the pre-add max (uids are not dense)."""
+    rows = [(r["term"], r["uid"]) for r in kg.term_uids.collect()]
+    uids = dict(rows)
+    assert len(uids) == len(rows)
+    assert len(set(uids.values())) == len(uids)
+    assert {t: uids[t] for t in pre} == pre
+    assert all(u > max(pre.values()) for t, u in uids.items() if t not in pre)
+
+
 def test_add_and_drop_graph(spark, tmp_path):
     base = str(tmp_path / "store")
     raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
     build(raw, base)
 
     kg = store.load(spark, base)
+    pre = _uids(kg)
     assert to_csv(sparql_select(kg, QUERY_COLOR_RQ)).splitlines()[1:] == [
         "http://example.org/Banana"
     ]
@@ -36,10 +54,10 @@ def test_add_and_drop_graph(spark, tmp_path):
     out = to_csv(sparql_select(kg, QUERY_COLOR_RQ)).replace("\r", "").splitlines()
     assert out[1:] == ["http://example.org/Pineapple", "http://example.org/Banana"]
 
-    # uid invariants after append: dense, unique, old uids unchanged
-    uids = {r["term"]: r["uid"] for r in kg.term_uids.collect()}
-    vals = sorted(uids.values())
-    assert vals == list(range(1, len(vals) + 1))
+    # uid invariants after append: unique, old uids unchanged
+    _assert_uid_invariants(kg, pre)
+    assert len(_uids(kg)) > len(pre)
+    assert not os.path.exists(f"{base}/{store._STAGING}")
 
     # encoded triples still decode to the exact union triple set
     from de_spark.encode import decode_triples
@@ -62,6 +80,33 @@ def test_add_and_drop_graph(spark, tmp_path):
     out = to_csv(sparql_select(kg, QUERY_COLOR_RQ)).replace("\r", "").splitlines()
     assert out[1:] == ["http://example.org/Banana"]
     assert store.drop_graph(spark, base, "file:///nope.hdt") is False
+
+
+def test_predicate_cardinalities_follow_add_and_drop(spark, tmp_path):
+    """pred_stats is published with an add and rewritten by a drop: a
+    predicate's cardinality equals its decoded triple count."""
+    from de_spark.encode import decode_triples
+
+    base = str(tmp_path / "store")
+    build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+
+    seen: set[str] = set()
+
+    def check():
+        kg = store.load(spark, base)
+        counts: dict[str, int] = {}
+        for r in decode_triples(kg.triples, kg.term_uids).collect():
+            counts[r["p"]] = counts.get(r["p"], 0) + 1
+        seen.update(counts)
+        cards = kg.predicate_cardinalities(sorted(seen))
+        assert cards == {p: counts.get(p, 0) for p in seen}
+        return counts
+
+    before = check()
+    store.add_graph(spark, base, _pineapple_raw(spark))
+    assert check() != before
+    assert store.drop_graph(spark, base, "file:///banana.hdt") is True
+    check()
 
 
 def test_sync_dir(spark, tmp_path):
@@ -136,6 +181,7 @@ def test_torn_add_recovers_without_duplicates(spark, tmp_path):
     build(raw, base)
 
     # snapshot pre-add state (what a torn add must roll back to)
+    pre_uids = _uids(store.load(spark, base))
     pre_manifest = {t: store._list_files(base, t) for t in store._ADD_TABLES}
     pre_counts = {
         t: spark.read.parquet(f"{base}/{t}").count()
@@ -155,9 +201,8 @@ def test_torn_add_recovers_without_duplicates(spark, tmp_path):
     assert not os.path.exists(f"{base}/{store._PENDING}")
 
     kg = store.load(spark, base)
-    # no duplicate rows anywhere: uid density + exact decoded triple set
-    uids = [r["uid"] for r in kg.term_uids.collect()]
-    assert sorted(uids) == list(range(1, len(uids) + 1))
+    # no duplicate rows anywhere: uid invariants + exact decoded triple set
+    _assert_uid_invariants(kg, pre_uids)
     from de_spark.encode import decode_triples
 
     decoded = [
@@ -188,6 +233,20 @@ def test_sparql_update_surface(spark, tmp_path):
 
     base = str(tmp_path / "store")
     build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+
+    # a repeated triple is stored once (RDF set semantics)
+    store.execute_update(
+        spark,
+        base,
+        'INSERT DATA { GRAPH <file:///twice.hdt> { <http://x/a> <http://x/p> "v" . '
+        '<http://x/a> <http://x/p> "v" . <http://x/a> <http://x/p> "w" } }',
+    )
+    kg = store.load(spark, base)
+    n = sparql_select(
+        kg, "SELECT (COUNT(*) AS ?n) WHERE { GRAPH <file:///twice.hdt> { ?s ?p ?o } }"
+    ).collect()[0][0]
+    assert int(n) == 2
+    assert kg.stats.where("graph = 'file:///twice.hdt'").collect()[0]["triples"] == 2
 
     # INSERT DATA into a new named graph (prefixed names + typed literal)
     log = store.execute_update(
