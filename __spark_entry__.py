@@ -90,16 +90,17 @@ def _kg_path_comention(spark, sf_dir):
 def _kg_path_reach(spark, sf_dir):
     """Bound-subject + closure through the SPARQL text surface:
     `<doc/0> (source/^source)+ ?other` — transitive same-source
-    reachability.  Runs the SEEDED semi-naive path evaluation
-    (de_spark.query.bgp._seeded_closure): the frontier starts at
-    doc/0's uid and each round expands only frontier nodes, never the
-    full relation's closure (VERDICT r3 scale fix; reference semantics
-    spareval ArbitraryLengthPath, src/sparql.rs:520).  The co-mention
-    relation is too dense for a contract-budget closure (hub words
-    square the step join on BOTH the engine and oracle side); the
-    source relation keeps the same seq+inverse+closure shape at
-    contract cost, and deep-chain seeding goldens live in
-    tests/test_sparql_r4.py::test_bound_path_seeded_no_global_closure."""
+    reachability.  Runs the SEEDED path fixpoint
+    (de_spark.query.bgp._fixpoint): it starts from doc/0's step rows
+    and each round evaluates the composite atom for the frontier's
+    nodes only, never the full relation's closure (VERDICT r3 scale
+    fix; reference semantics spareval ArbitraryLengthPath,
+    src/sparql.rs:520).  The co-mention relation is too dense for a
+    contract-budget closure (hub words square the step join on BOTH
+    the engine and oracle side); the source relation keeps the same
+    seq+inverse+closure shape at contract cost.  Seeding goldens live in
+    tests/test_sparql_r4.py::test_bound_path_seeded_no_global_closure
+    and the 100-round chain in test_deep_chain_closure."""
     from de_spark.query import sparql_select
 
     kg = documents_kg(spark, sf_dir)

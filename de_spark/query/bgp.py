@@ -16,13 +16,23 @@ still re-plan at runtime.
 Variables join on global term uids, so subject/object/predicate
 positions are directly comparable (same term string ⇒ same uid; see
 de_spark.dictionary docstring).
+
+Property-path closures (``+``/``*``) and DESCRIBE's blank-node
+expansion share one fixpoint, ``_fixpoint``: the frontier and the seen
+set live on the driver, and each round sends Spark only the frontier's
+node uids and collects that round's step rows.  Nothing is persisted
+and there is no round cap; the closure's rows cross the driver once,
+as the emitted answer does.
 """
 
 from __future__ import annotations
 
 import re
+from collections import defaultdict
+from collections.abc import Callable
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,7 +77,6 @@ class TriplePattern:
 # ---------------------------------------------------------------------------
 
 _PATH_ATOM = re.compile(r"\s*(\^)?\s*<([^>]*)>\s*([+*?])?\s*")
-_CLOSURE_MAX_ITERS = 64
 
 
 def _split_top(expr: str, op: str) -> list[str]:
@@ -94,27 +103,6 @@ def _split_top(expr: str, op: str) -> list[str]:
     return parts
 
 
-def _finish_closure(total: DataFrame, cached: list[DataFrame]) -> DataFrame:
-    """Materialize the closure result (eager localCheckpoint cuts the
-    per-round lineage so the iteration never re-executes downstream)
-    and release every per-round persist — cache entries must not
-    accumulate across queries in one session.  The checkpoint RDD
-    itself is reclaimed by Spark's ContextCleaner once the returned
-    DataFrame goes out of scope.
-
-    Checkpoint here is DELIBERATE, unlike the minhash case reverted in
-    VERDICT r4: an iterative fixpoint's lineage grows per round (deep
-    closures would re-plan and re-execute the whole iteration on any
-    downstream recompute, and Catalyst plan trees grow unboundedly);
-    truncation is the standard iterative-algorithm practice.  The
-    result is tiny relative to its recompute cost, and it materializes
-    once at the END of the fixpoint — not as a mid-pipeline barrier."""
-    out = total.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
-
-
 def _has_g(pairs: DataFrame) -> bool:
     return "g" in pairs.columns
 
@@ -130,69 +118,6 @@ def _step_join(l: DataFrame, r: DataFrame) -> DataFrame:
     return l.alias("l").join(r.alias("r"), cond).select(*sel)
 
 
-def _pair_keys(pairs: DataFrame) -> list[str]:
-    return ["a", "b", "g"] if _has_g(pairs) else ["a", "b"]
-
-
-def _transitive_closure(pairs: DataFrame) -> DataFrame:
-    """One-or-more closure via semi-naive iteration: each round joins
-    only the NEW frontier against the base relation, dedups against
-    everything seen, and stops when the frontier drains.  Both sides
-    stay uid-typed longs; each round is one hash join + one anti join
-    (the standard distributed Datalog evaluation — no driver-side
-    row movement, only an emptiness probe per round).  A GRAPH ?var
-    column, when present, joins along so each named graph closes
-    independently."""
-    base = pairs.dropDuplicates().persist()
-    keys = _pair_keys(base)
-    cached = [base]
-    total = base
-    frontier = base
-    for _ in range(_CLOSURE_MAX_ITERS):
-        nxt = _step_join(frontier, base).dropDuplicates()
-        new = nxt.join(total, keys, "left_anti").persist()
-        cached.append(new)
-        if new.isEmpty():
-            break
-        total = total.unionByName(new).persist()
-        cached.append(total)
-        frontier = new
-    else:
-        raise ValueError(f"path closure did not converge in {_CLOSURE_MAX_ITERS} rounds")
-    return _finish_closure(total, cached)
-
-
-def _seeded_closure(step_fn, seeds: DataFrame) -> DataFrame:
-    """One-or-more closure FROM A SEED NODE SET (bound-endpoint paths,
-    ``<s> p+ ?o``): semi-naive reachability where each round evaluates
-    the inner path expression restricted to the current frontier nodes
-    — the full relation's closure (worst-case quadratic in pairs) is
-    never computed, matching spareval's per-node ArbitraryLengthPath
-    evaluation (src/sparql.rs:520) at distributed scale.
-
-    ``step_fn(nodes)`` must return the step pairs whose ``a`` is
-    restricted to ``nodes`` (a one-column 'n' frame); a GRAPH ?var 'g'
-    column rides along and keeps expansion within each graph."""
-    frontier = step_fn(seeds).dropDuplicates().persist()
-    keys = _pair_keys(frontier)
-    cached = [frontier]
-    total = frontier
-    for _ in range(_CLOSURE_MAX_ITERS):
-        nodes = frontier.select(F.col("b").alias("n")).dropDuplicates()
-        steps = step_fn(nodes)
-        nxt = _step_join(frontier, steps).dropDuplicates()
-        new = nxt.join(total, keys, "left_anti").persist()
-        cached.append(new)
-        if new.isEmpty():
-            break
-        total = total.unionByName(new).persist()
-        cached.append(total)
-        frontier = new
-    else:
-        raise ValueError(f"path closure did not converge in {_CLOSURE_MAX_ITERS} rounds")
-    return _finish_closure(total, cached)
-
-
 def _swap(pairs: DataFrame) -> DataFrame:
     sel = [F.col("b").alias("a"), F.col("a").alias("b")]
     if _has_g(pairs):
@@ -200,16 +125,60 @@ def _swap(pairs: DataFrame) -> DataFrame:
     return pairs.select(*sel)
 
 
-def _seed_filter(pairs: DataFrame, col: str, seeds: DataFrame) -> DataFrame:
-    """Restrict one endpoint column to the seed node set (no broadcast
-    hint — frontiers can grow; AQE picks the strategy at runtime)."""
-    return pairs.join(
-        seeds.select(F.col("n").alias(col)).dropDuplicates(), col, "left_semi"
-    )
+def _seed_filter(pairs: DataFrame, col: str, seeds: DataFrame | list[int]) -> DataFrame:
+    """Restrict one endpoint column to a node set.  A fixpoint round's
+    frontier arrives as a uid list and becomes a literal IN filter,
+    which reaches the Parquet scan and costs no join; a node frame
+    (one column 'n') becomes a semi join, and AQE picks its strategy."""
+    if isinstance(seeds, list):
+        # one expression parse, not one py4j call per literal (isin)
+        return pairs.where(F.expr(f"{col} IN ({','.join(map(str, seeds))})"))
+    return pairs.join(seeds.select(F.col("n").alias(col)), col, "left_semi")
+
+
+def _fixpoint(start: DataFrame, expand: Callable[[list[int]], DataFrame]) -> DataFrame:
+    """Semi-naive closure with the frontier and the seen set held on
+    the driver.  Rows are ``(a, b)`` — an origin and a node reached
+    from it — plus the graph name ``g`` under GRAPH ?var, so paths
+    never cross named graphs.
+
+    ``start`` (the first round's rows) is collected once.  Each round
+    calls ``expand(nodes)`` with the frontier's nodes as a uid list;
+    it returns the step rows whose ``a`` is in ``nodes``.  One
+    ``collect()`` brings them back, the driver composes them with the
+    frontier, and rows already seen are dropped; the loop stops when a
+    round adds none.  ``seen`` grows every round and is finite, so no
+    round cap is needed.  Every round runs a Spark job in the caller's
+    job group, so cancelling the group stops the closure within one
+    round, and nothing is persisted.  The result is built on the
+    driver as a local relation: a one-leaf plan whatever the depth.
+    This is spareval's per-node ArbitraryLengthPath evaluation
+    (src/sparql.rs:520) with one Spark round per path length instead
+    of one probe per node."""
+    keys = ["a", "b", "g"] if _has_g(start) else ["a", "b"]
+    seen = {tuple(r) for r in start.select(*keys).collect()}
+    frontier = seen
+    while frontier:
+        origins = defaultdict(list)
+        for a, b, *g in frontier:
+            origins[(b, *g)].append(a)
+        nodes = list({b for b, *_ in origins})
+        new = {
+            (a, b, *g)
+            for src, b, *g in expand(nodes).select(*keys).collect()
+            for a in origins.get((src, *g), ())
+        } - seen
+        seen |= new
+        frontier = new
+    # an Arrow table becomes a LocalRelation: no Python worker runs to
+    # read it back, and the planner sees its true size
+    schema = pa.schema([(k, pa.string() if k == "g" else pa.int64()) for k in keys])
+    table = pa.table(list(zip(*seen)) or [[]] * len(keys), schema=schema)
+    return start.sparkSession.createDataFrame(table)
 
 
 def _graph_nodes(
-    kg: KnowledgeGraph, graph: str | None, seed: DataFrame | None = None
+    kg: KnowledgeGraph, graph: str | None, seed: DataFrame | list[int] | None = None
 ) -> DataFrame:
     """All graph terms (subject or object occurrences) as identity
     pairs (n, n) — the zero-length component of ``*``/``?`` paths
@@ -230,7 +199,7 @@ def _graph_nodes(
         .dropDuplicates()
     )
     if seed is not None:
-        nodes = nodes.join(seed.select("n").dropDuplicates(), "n", "left_semi")
+        nodes = _seed_filter(nodes, "n", seed)
     out = [F.col("n").alias("a"), F.col("n").alias("b")]
     if graph_var:
         out.append(F.col("graph").alias("g"))
@@ -245,17 +214,19 @@ def _path_pairs(
     kg: KnowledgeGraph,
     expr: str,
     graph: str | None = None,
-    seed_a: DataFrame | None = None,
-    seed_b: DataFrame | None = None,
+    seed_a: DataFrame | list[int] | None = None,
+    seed_b: DataFrame | list[int] | None = None,
 ) -> DataFrame:
     """Compile a normalized path expression to (a, b) uid pairs.
 
-    ``seed_a`` / ``seed_b`` (one-column 'n' node frames) restrict an
-    endpoint: a bound subject/object pushes INTO the evaluation —
-    sequences chain the restriction step-to-step and ``+``/``*``
-    closures run seeded semi-naive reachability instead of the global
-    transitive closure (VERDICT r3 item 1: `<s> knows+ ?o` must not
-    pay the whole relation's closure)."""
+    ``seed_a`` / ``seed_b`` restrict an endpoint: a one-column 'n' node
+    frame, or a fixpoint round's frontier as a uid list.  A bound
+    subject/object pushes INTO the evaluation — sequences chain the
+    restriction step-to-step, and a ``+``/``*`` closure starts its
+    ``_fixpoint`` from the seed's step rows, evaluating the atom for
+    each round's frontier only (VERDICT r3 item 1: `<s> knows+ ?o` must
+    not pay the whole relation's closure).  An unseeded closure starts
+    from the whole step relation."""
     expr = expr.strip()
     # bag semantics for | and / (SPARQL PathAlt/PathSequence); only the
     # +/*/? closures are set-based (ArbitraryLengthPath), per SPARQL 1.1
@@ -323,6 +294,12 @@ def _path_pairs(
         atom_kind = "iri"
 
     graph_var = graph is not None and graph.startswith("?")
+    if atom_kind == "iri":
+        # built once, so a closure round adds only its frontier filter
+        sel = [F.col("s_id").alias("a"), F.col("o_id").alias("b")]
+        if graph_var:
+            sel.append(F.col("graph").alias("g"))
+        iri_pairs = kg.pattern(p=atom_iri, graph=None if graph_var else graph).select(*sel)
 
     def _nps_side(iris: list[str], swap: bool, sa, sb) -> DataFrame:
         """One direction of a negated property set: anti join of the
@@ -348,7 +325,9 @@ def _path_pairs(
             p = _seed_filter(p, "b", sb)
         return p
 
-    def eval_base(sa: DataFrame | None, sb: DataFrame | None) -> DataFrame:
+    def eval_base(
+        sa: DataFrame | list[int] | None, sb: DataFrame | list[int] | None
+    ) -> DataFrame:
         """The atom's base pairs (closure suffix NOT applied), with
         optional endpoint seeds pushed through inversion."""
         if inv:
@@ -368,12 +347,7 @@ def _path_pairs(
         elif atom_kind == "paren":
             p = _path_pairs(kg, expr[1:-1], graph, seed_a=sa, seed_b=sb)
         else:
-            sel = [F.col("s_id").alias("a"), F.col("o_id").alias("b")]
-            if graph_var:
-                sel.append(F.col("graph").alias("g"))
-            p = kg.pattern(
-                p=atom_iri, graph=None if graph_var else graph
-            ).select(*sel)
+            p = iri_pairs
             if sa is not None:
                 p = _seed_filter(p, "a", sa)
             if sb is not None:
@@ -383,14 +357,18 @@ def _path_pairs(
         return p
 
     if suffix == "+" or suffix == "*":
-        if seed_a is not None:
-            pairs = _seeded_closure(lambda nodes: eval_base(nodes, None), seed_a)
-        elif seed_b is not None:
+        if seed_a is None and seed_b is not None:
+            # bound object only: the same fixpoint over swapped pairs
             pairs = _swap(
-                _seeded_closure(lambda nodes: _swap(eval_base(None, nodes)), seed_b)
+                _fixpoint(
+                    _swap(eval_base(None, seed_b)),
+                    lambda nodes: _swap(eval_base(None, nodes)),
+                )
             )
         else:
-            pairs = _transitive_closure(eval_base(None, None))
+            # a bound subject seeds the start; var–var starts from the
+            # whole step relation
+            pairs = _fixpoint(eval_base(seed_a, None), lambda nodes: eval_base(nodes, None))
         if suffix == "*":
             seed = seed_a if seed_a is not None else seed_b
             pairs = pairs.unionByName(_graph_nodes(kg, graph, seed)).dropDuplicates()

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from de_spark import terms
 from de_spark.graph import KnowledgeGraph
-from de_spark.query.bgp import TriplePattern, compile_bgp
+from de_spark.query.bgp import TriplePattern, _fixpoint, _seed_filter, compile_bgp
 from de_spark.query.parser import (
     AggE,
     Aggregate,
@@ -1810,12 +1810,12 @@ def sparql_describe(kg: KnowledgeGraph, query: str) -> DataFrame:
     coincide, so prior goldens are unchanged.
 
     The described set is resolved in uid space: constants and solution
-    bindings become a tiny uid table broadcast-semi-joined against the
-    triples' s_id; the bnode closure is a seeded semi-naive iteration
-    (frontier-only semi joins, anti-join dedup against the seen set —
-    cycles among bnodes terminate) with only an emptiness probe on the
-    driver per round.  Only the final matching triples decode to
-    strings."""
+    bindings become a tiny uid table, collected once as the start of
+    ``bgp._fixpoint``, whose rounds follow bnode objects of the
+    frontier only; the driver-side seen set makes bnode cycles
+    terminate.  The described set is then broadcast-semi-joined
+    against the triples' s_id, and only the matching triples decode
+    to strings."""
     q = parse_sparql(query)
     if q.form != "describe":
         raise ValueError("not a DESCRIBE query")
@@ -1839,53 +1839,22 @@ def sparql_describe(kg: KnowledgeGraph, query: str) -> DataFrame:
     described = term_parts[0]
     for p in term_parts[1:]:
         described = described.unionByName(p)
-    uids = kg.term_uids.join(described.distinct(), "term", "left_semi").select(
-        F.col("uid").alias("s_id")
-    )
     from de_spark.encode import decode_triples
-    from de_spark.query.bgp import _CLOSURE_MAX_ITERS, _finish_closure
 
-    # CBD bnode closure: triples of described subjects whose object is
-    # a bnode add that bnode to the described set; iterate to fixpoint.
-    # Frontier-only expansion — each round touches only the NEW
-    # subjects; the anti join against the seen set terminates bnode
-    # cycles.  Bnode uids come from one pushed-down prefix scan of the
-    # term dictionary.
-    bnode_uids = (
-        kg.term_uids.where(F.col("term").startswith("_:"))
-        .select(F.col("uid").alias("s_id"))
+    # CBD bnode closure: a described subject's bnode objects join the
+    # described set, transitively; rows are (origin, node) with one
+    # constant origin.  Bnode uids come from one pushed-down prefix
+    # scan of the term dictionary.
+    start = kg.term_uids.join(described, "term", "left_semi").select(
+        F.lit(0).alias("a"), F.col("uid").alias("b")
     )
-    # Truncate lineage at the fixpoint boundary (same deliberate
-    # iterative-algorithm checkpoint as the path closure,
-    # bgp.py::_finish_closure): the seed set's analyzed plan is the
-    # FULL WHERE-query tree, and without truncation every closure
-    # round's analysis re-walks it — Catalyst analysis time, not data,
-    # dominated (observed minutes-long single-threaded foreachUp on
-    # the contract corpus).  The seed is tiny (described subjects);
-    # it materializes once, here, by design.
-    seen = uids.dropDuplicates().localCheckpoint(eager=True)
-    cached = [seen]
-    frontier = seen
-    for _ in range(_CLOSURE_MAX_ITERS):
-        new = (
-            kg.triples.join(F.broadcast(frontier), "s_id", "left_semi")
-            .select(F.col("o_id").alias("s_id"))
-            .dropDuplicates()
-            .join(bnode_uids, "s_id", "left_semi")
-            .join(seen, "s_id", "left_anti")
-            .persist()
-        )
-        cached.append(new)
-        if new.isEmpty():
-            break
-        seen = seen.unionByName(new).persist()
-        cached.append(seen)
-        frontier = new
-    else:
-        raise ValueError(
-            f"DESCRIBE bnode closure did not converge in {_CLOSURE_MAX_ITERS} rounds"
-        )
-    seen = _finish_closure(seen, cached)
-
+    bnode_uids = kg.term_uids.where(F.col("term").startswith("_:")).select(
+        F.col("uid").alias("b")
+    )
+    edges = kg.triples.select(F.col("s_id").alias("a"), F.col("o_id").alias("b"))
+    seen = _fixpoint(
+        start,
+        lambda nodes: _seed_filter(edges, "a", nodes).join(bnode_uids, "b", "left_semi"),
+    ).select(F.col("b").alias("s_id"))
     trip = kg.triples.join(F.broadcast(seen), "s_id", "left_semi")
     return decode_triples(trip, kg.term_uids).select("s", "p", "o").dropDuplicates()

@@ -295,7 +295,7 @@ def test_property_path_alt_seq_inverse(fruit_kg):
     assert rows == [("Banana", "Pineapple"), ("Pineapple", "Banana")]
 
 
-def test_property_path_transitive_closure(spark, tmp_path):
+def test_property_path_closure(spark, tmp_path):
     from de_spark.pipeline import build
 
     nt = "\n".join(

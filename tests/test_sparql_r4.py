@@ -7,6 +7,9 @@ Reference semantics throughout: oxigraph spareval (src/sparql.rs:520)
 ArbitraryLengthPath per-node evaluation, LeftJoin with expression
 (§18.5)."""
 
+import threading
+import time
+
 import pytest
 
 import de_spark.query.bgp as bgp_mod
@@ -35,6 +38,13 @@ NT = f"""\
 <http://x/e3> <http://x/next> <http://x/e4> .
 <http://x/f1> <http://x/next> <http://x/f2> .
 """
+
+# a chain deeper than any fixed round cap, under its own predicate so
+# the counts over the other predicates stay as they were
+CHAIN = 100
+NT += "".join(
+    f"<http://x/c{i}> <http://x/link> <http://x/c{i + 1}> .\n" for i in range(CHAIN)
+)
 
 PX = "PREFIX x: <http://x/>\n"
 
@@ -256,13 +266,16 @@ def test_datetime_value_comparison_and_order(kg):
 
 
 def test_bound_path_seeded_no_global_closure(kg, monkeypatch):
-    """A bound-endpoint +/* path must run the SEEDED semi-naive
-    reachability, never the full-relation transitive closure."""
+    """A bound-endpoint +/* path starts its fixpoint from the seed's
+    step rows, never from the whole relation."""
+    starts = []
+    real = bgp_mod._fixpoint
 
-    def _boom(pairs):
-        raise AssertionError("global closure invoked for a bound-endpoint path")
+    def spy(start, expand):
+        starts.append(start.count())
+        return real(start, expand)
 
-    monkeypatch.setattr(bgp_mod, "_transitive_closure", _boom)
+    monkeypatch.setattr(bgp_mod, "_fixpoint", spy)
     q = PX + "SELECT ?y WHERE { x:e1 x:next+ ?y } ORDER BY ?y"
     assert locals_(sparql_select(kg, q), "y") == ["e2", "e3", "e4"]
     q2 = PX + "SELECT ?x WHERE { ?x x:next+ x:e3 } ORDER BY ?x"
@@ -275,6 +288,10 @@ def test_bound_path_seeded_no_global_closure(kg, monkeypatch):
     # both endpoints bound
     q5 = PX + "ASK { x:e1 x:next+ x:e4 }"
     assert sparql_select(kg, q5).collect()[0]["bool"] is True
+    # each seed (e1, e3 from the object side, e1, e2 after one step,
+    # e1) has one step row; the whole x:next relation has four
+    assert sparql_select(kg, PX + "SELECT * WHERE { ?a x:next ?b }").count() == 4
+    assert starts == [1, 1, 1, 1, 1]
 
 
 def test_var_var_closure_still_global(kg):
@@ -283,15 +300,108 @@ def test_var_var_closure_still_global(kg):
 
 
 def test_closure_releases_caches(kg, spark):
-    """Closure iterations must not leave persisted frames behind
-    (VERDICT r3 item 6): after the query, the only storage added is
-    the (ContextCleaner-managed) localCheckpoint of the result."""
+    """Closure rounds persist nothing (VERDICT r3 item 6): a query
+    leaves the session's persisted frames as it found them."""
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     q = PX + "SELECT ?x ?y WHERE { ?x x:next+ ?y }"
     assert sparql_select(kg, q).count() == 7
     after = jsc.getPersistentRDDs().size()
-    assert after - before <= 1
+    assert after - before == 0
+
+
+def _in_group(spark, group, fn, timeout=60):
+    """Run ``fn`` on a thread in its own Spark job group.  On timeout
+    the group is cancelled and the test fails, so a closure that does
+    not terminate fails fast."""
+    sc = spark.sparkContext
+    out = {}
+
+    def run():
+        sc.setJobGroup(group, group)
+        try:
+            out["value"] = fn()
+        except Exception as e:  # re-raised on the test's thread
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout)
+    if t.is_alive():
+        sc.cancelJobGroup(group)
+        t.join(10)
+        pytest.fail(f"{group}: no answer within {timeout} s")
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+def test_cancelled_closure_returns_and_leaks_nothing(kg, spark):
+    """Cancelling a deep closure's job group again and again, as a
+    request watchdog does, stops it within 5 s and leaves no persisted
+    frame behind."""
+    sc = spark.sparkContext
+    jsc = sc._jsc
+    tracker = sc.statusTracker()
+    before = jsc.getPersistentRDDs().size()
+    group = "deep_chain_cancel"
+    q = PX + "SELECT ?x WHERE { x:c0 x:link+ ?x }"
+    out = {}
+
+    def run():
+        sc.setJobGroup(group, group)
+        try:
+            out["rows"] = sparql_select(kg, q).collect()
+        except Exception as e:
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    # cancel once the closure is over ten rounds deep (or 30 s in)
+    deadline = time.monotonic() + 30
+    while len(tracker.getJobIdsForGroup(group)) < 30 and time.monotonic() < deadline:
+        time.sleep(0.05)
+    first_cancel = time.monotonic()
+    while t.is_alive() and time.monotonic() - first_cancel < 5:
+        sc.cancelJobGroup(group)
+        t.join(0.1)
+    assert not t.is_alive(), "closure still running 5 s after the first cancel"
+    assert "error" in out, "the closure finished before it was cancelled"
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_deep_chain_closure(kg, spark, monkeypatch):
+    """A closure 100 rounds deep terminates with the exact answer from
+    either endpoint, and a round costs at most two Spark jobs."""
+    chain = [f"c{i}" for i in range(CHAIN + 1)]
+    expansions = []
+    real = bgp_mod._fixpoint
+
+    def counting(start, expand):
+        def step(nodes):
+            expansions.append(len(nodes))
+            return expand(nodes)
+
+        return real(start, step)
+
+    monkeypatch.setattr(bgp_mod, "_fixpoint", counting)
+    q = PX + "SELECT ?x WHERE { x:c0 x:link+ ?x }"
+    got = _in_group(spark, "deep_chain_plus", lambda: locals_(sparql_select(kg, q), "x"))
+    assert sorted(got) == sorted(chain[1:])
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("deep_chain_plus")
+    assert expansions == [1] * CHAIN
+    rounds = 1 + len(expansions)  # the collected start is the first round
+    assert len(jobs) <= 2 * rounds + 4
+
+    q = PX + "SELECT ?x WHERE { x:c0 x:link* ?x }"
+    got = _in_group(spark, "deep_chain_star", lambda: locals_(sparql_select(kg, q), "x"))
+    assert sorted(got) == sorted(chain)
+    q = PX + f"SELECT ?x WHERE {{ ?x x:link+ x:c{CHAIN} }}"
+    got = _in_group(spark, "deep_chain_obj", lambda: locals_(sparql_select(kg, q), "x"))
+    assert sorted(got) == sorted(chain[:-1])
+    q = PX + f"ASK {{ x:c0 x:link+ x:c{CHAIN} }}"
+    got = _in_group(spark, "deep_chain_ask", lambda: sparql_select(kg, q).collect())
+    assert got[0]["bool"] is True
 
 
 # ---------------------------------------------------------------------------
