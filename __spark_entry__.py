@@ -196,7 +196,7 @@ def _kg_sparql_describe(spark, sf_dir):
     makes the closure observable; oracle is a recursive CTE).  The
     reference routes DESCRIBE through QueryResults::Graph
     (src/query.rs:102-176); the described set resolves in uid space
-    and broadcast-semi-joins the fact table."""
+    and semi-joins the fact table."""
     from de_spark.query import sparql_describe
 
     kg = documents_kg(spark, sf_dir)

@@ -9,7 +9,8 @@ access path — the triple pattern with each position bound or free
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from collections.abc import Iterable
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +23,12 @@ class KnowledgeGraph:
     triples: DataFrame    # graph, s_id, p_id, o_id
     stats: DataFrame      # graph, triples, properties, distinct_subjects, distinct_objects
     pred_stats: DataFrame | None = None  # graph, p_id, n — BGP selectivity stats
+    # a request's constants: term → uid, None for a term the dictionary
+    # lacks (see with_terms); None outside a request
+    uids: dict[str, int | None] | None = None
+    # driver-side data collected once per loaded graph, shared by its
+    # request views
+    memo: dict = field(default_factory=dict, repr=False, compare=False)
 
     # -- loading ------------------------------------------------------------
 
@@ -40,34 +47,56 @@ class KnowledgeGraph:
             pred_stats=pred,
         )
 
-    def predicate_cardinalities(self, pred_terms: list[str]) -> dict[str, int]:
-        """Triple counts for constant predicate terms (plan-time driver
-        lookup over the tiny pred_stats table, one row per graph and
-        predicate, summed here; {} when stats absent)."""
-        if self.pred_stats is None or not pred_terms:
+    # -- constants (the dictionary side of triples_with_pattern) -------------
+
+    def lookup(self, terms: Iterable[str]) -> dict[str, int | None]:
+        """Resolve terms to uids in one filtered term_uids scan (the IN
+        list reaches Parquet): one Spark job, none for no terms.  A term
+        the dictionary lacks maps to None."""
+        terms = sorted(set(terms))
+        if not terms:
             return {}
-        uids = self.term_uids.where(F.col("term").isin(pred_terms)).select("term", "uid")
-        rows = (
-            uids.join(self.pred_stats, uids.uid == self.pred_stats.p_id, "left")
-            .select("term", "n")
-            .collect()
-        )
-        cards: dict[str, int] = {}
-        for r in rows:
-            cards[r["term"]] = cards.get(r["term"], 0) + int(r["n"] or 0)
-        return cards
+        rows = self.term_uids.where(F.col("term").isin(terms)).select("term", "uid").collect()
+        found = {r["term"]: r["uid"] for r in rows}
+        return {t: found.get(t) for t in terms}
+
+    def with_terms(self, terms: Iterable[str]) -> "KnowledgeGraph":
+        """A request's view of the graph with every constant resolved
+        up front, as HDT resolves a query's terms in the dictionary
+        before calling ``triples_with_pattern`` (src/sparql.rs:468).
+        The map lives for the request only; a view already holding one
+        is returned as is, so a constant the request did not collect
+        fails loudly (KeyError) instead of costing another lookup."""
+        if self.uids is not None:
+            return self
+        return replace(self, uids=self.lookup(terms))
+
+    def predicate_cardinalities(self) -> dict[int, int]:
+        """Triple count per predicate uid, summed over graphs from the
+        tiny pred_stats table (one row per graph and predicate).  It is
+        collected once per loaded graph on first use (not in ``load``,
+        so builds pay nothing) and every later call, from any request
+        view, is a dict lookup; {} when stats are absent."""
+        if self.pred_stats is None:
+            return {}
+        if "pred_counts" not in self.memo:
+            counts: dict[int, int] = {}
+            for r in self.pred_stats.select("p_id", "n").collect():
+                counts[r["p_id"]] = counts.get(r["p_id"], 0) + int(r["n"])
+            self.memo["pred_counts"] = counts
+        return self.memo["pred_counts"]
 
     # -- physical access path (F1/F2) ----------------------------------------
 
     def _bind_const(self, df: DataFrame, col: str, term: str) -> DataFrame:
-        """Filter triples where ``col`` is the uid of constant ``term``.
-
-        The uid lookup is a filtered scan of term_uids (predicate pushed
-        to parquet) broadcast into a semi join — the fact table never
-        shuffles for constant bindings.
-        """
-        uid = self.term_uids.where(F.col("term") == term).select(F.col("uid").alias(col))
-        return df.join(F.broadcast(uid), col, "left_semi")
+        """Filter triples where ``col`` is the uid of constant ``term``,
+        read from the request's term map: a literal ``col = uid`` filter
+        that reaches the Parquet scan, where the SPO-sorted files'
+        row-group statistics prune.  A term with no uid matches nothing:
+        ``where(false)`` folds the pattern to an empty relation, so no
+        scan runs."""
+        uid = self.uids[term]
+        return df.where(F.lit(False) if uid is None else F.col(col) == uid)
 
     def pattern(
         self,
@@ -78,16 +107,15 @@ class KnowledgeGraph:
     ) -> DataFrame:
         """All 8 bound/unbound shapes of (s?, p?, o?), optionally graph-
         restricted (graph filter = partition pruning, reference
-        src/sparql.rs:86-99)."""
+        src/sparql.rs:86-99).  Outside a request the constants are
+        resolved here, in one lookup."""
+        bound = {c: t for c, t in (("s_id", s), ("p_id", p), ("o_id", o)) if t is not None}
+        kg = self.with_terms(bound.values())
         df = self.triples
         if graph is not None:
             df = df.where(F.col("graph") == graph)
-        if s is not None:
-            df = self._bind_const(df, "s_id", s)
-        if p is not None:
-            df = self._bind_const(df, "p_id", p)
-        if o is not None:
-            df = self._bind_const(df, "o_id", o)
+        for col, term in bound.items():
+            df = kg._bind_const(df, col, term)
         return df
 
     def pattern_decoded(self, s=None, p=None, o=None, graph=None) -> DataFrame:

@@ -33,7 +33,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_spark.graph import KnowledgeGraph
@@ -125,15 +125,30 @@ def _swap(pairs: DataFrame) -> DataFrame:
     return pairs.select(*sel)
 
 
+def _uid_in(col: str, uids: list[int]) -> Column:
+    """``col IN (uids)`` as one literal list, which reaches the Parquet
+    scan (one expression parse, not one py4j call per literal as with
+    ``isin``).  An empty list matches nothing."""
+    if not uids:
+        return F.lit(False)
+    return F.expr(f"{col} IN ({','.join(map(str, uids))})")
+
+
 def _seed_filter(pairs: DataFrame, col: str, seeds: DataFrame | list[int]) -> DataFrame:
-    """Restrict one endpoint column to a node set.  A fixpoint round's
-    frontier arrives as a uid list and becomes a literal IN filter,
-    which reaches the Parquet scan and costs no join; a node frame
-    (one column 'n') becomes a semi join, and AQE picks its strategy."""
+    """Restrict one endpoint column to a node set.  A uid list (a bound
+    constant, or a fixpoint round's frontier) becomes a literal IN
+    filter and costs no join; a node frame (one column 'n') becomes a
+    semi join, and AQE picks its strategy."""
     if isinstance(seeds, list):
-        # one expression parse, not one py4j call per literal (isin)
-        return pairs.where(F.expr(f"{col} IN ({','.join(map(str, seeds))})"))
+        return pairs.where(_uid_in(col, seeds))
     return pairs.join(seeds.select(F.col("n").alias(col)), col, "left_semi")
+
+
+def _local_relation(spark: SparkSession, schema: pa.Schema, rows) -> DataFrame:
+    """Driver-side rows as an Arrow-built LocalRelation: no Python
+    worker runs to read it back, and the planner sees its true size."""
+    table = pa.table(list(zip(*rows)) or [[]] * len(schema), schema=schema)
+    return spark.createDataFrame(table)
 
 
 def _fixpoint(start: DataFrame, expand: Callable[[list[int]], DataFrame]) -> DataFrame:
@@ -170,11 +185,8 @@ def _fixpoint(start: DataFrame, expand: Callable[[list[int]], DataFrame]) -> Dat
         } - seen
         seen |= new
         frontier = new
-    # an Arrow table becomes a LocalRelation: no Python worker runs to
-    # read it back, and the planner sees its true size
     schema = pa.schema([(k, pa.string() if k == "g" else pa.int64()) for k in keys])
-    table = pa.table(list(zip(*seen)) or [[]] * len(keys), schema=schema)
-    return start.sparkSession.createDataFrame(table)
+    return _local_relation(start.sparkSession, schema, seen)
 
 
 def _graph_nodes(
@@ -220,7 +232,8 @@ def _path_pairs(
     """Compile a normalized path expression to (a, b) uid pairs.
 
     ``seed_a`` / ``seed_b`` restrict an endpoint: a one-column 'n' node
-    frame, or a fixpoint round's frontier as a uid list.  A bound
+    frame, or a uid list (a bound constant, or a fixpoint round's
+    frontier).  A bound
     subject/object pushes INTO the evaluation — sequences chain the
     restriction step-to-step, and a ``+``/``*`` closure starts its
     ``_fixpoint`` from the seed's step rows, evaluating the atom for
@@ -302,21 +315,20 @@ def _path_pairs(
         iri_pairs = kg.pattern(p=atom_iri, graph=None if graph_var else graph).select(*sel)
 
     def _nps_side(iris: list[str], swap: bool, sa, sb) -> DataFrame:
-        """One direction of a negated property set: anti join of the
-        (graph-pruned) fact table against the tiny excluded-uid list
-        (SPARQL 1.1 PathNegatedPropertySet); inverse members swap."""
+        """One direction of a negated property set: the (graph-pruned)
+        fact table under a literal ``p_id NOT IN (…)`` over the members
+        the dictionary holds; an absent member excludes nothing (SPARQL
+        1.1 PathNegatedPropertySet).  Inverse members swap."""
         t = (
             kg.triples
             if graph is None or graph_var
             else kg.triples.where(F.col("graph") == graph)
         )
-        excluded = kg.term_uids.where(F.col("term").isin(iris)).select(
-            F.col("uid").alias("p_id")
-        )
+        excluded = [u for t in iris if (u := kg.uids[t]) is not None]
         sel = [F.col("s_id").alias("a"), F.col("o_id").alias("b")]
         if graph_var:
             sel.append(F.col("graph").alias("g"))
-        p = t.join(F.broadcast(excluded), "p_id", "left_anti").select(*sel)
+        p = t.where(~_uid_in("p_id", excluded)).select(*sel)
         if swap:
             p = _swap(p)
         if sa is not None:
@@ -391,16 +403,15 @@ def _path_pairs(
 def _compile_path(kg: KnowledgeGraph, pat: TriplePattern) -> DataFrame:
     """Path pattern → DataFrame of the pattern's variable columns.
     Bound endpoints become SEEDS pushed into the path evaluation (a
-    constant subject/object restricts every step and seeds closures),
-    not a post-hoc filter over the full relation.  GRAPH ?var threads
-    a graph-name column through every step and closure (paths never
-    cross named graphs; the var binds the graph NAME string, like the
-    plain-pattern F2 form)."""
+    constant subject/object, as a uid list from the request's term map,
+    restricts every step and seeds closures), not a post-hoc filter
+    over the full relation.  GRAPH ?var threads a graph-name column
+    through every step and closure (paths never cross named graphs; the
+    var binds the graph NAME string, like the plain-pattern F2 form)."""
 
-    def _seed_uids(term: str) -> DataFrame:
-        return kg.term_uids.where(F.col("term") == term).select(
-            F.col("uid").alias("n")
-        )
+    def _seed_uids(term: str) -> list[int]:
+        uid = kg.uids[term]
+        return [] if uid is None else [uid]
 
     seed_a = None if pat.s.startswith("?") else _seed_uids(pat.s)
     seed_b = None if pat.o.startswith("?") else _seed_uids(pat.o)
@@ -454,23 +465,48 @@ def _compile_one(kg: KnowledgeGraph, pat: TriplePattern) -> DataFrame:
     return df.select(F.lit(1).alias("__exists")).limit(1)
 
 
+def pattern_terms(patterns: list[TriplePattern]) -> set[str]:
+    """The dictionary constants of triple patterns: bound subjects and
+    objects, constant predicates, and the IRIs of property paths
+    (atoms and negated-set members).  Graph names are not dictionary
+    terms."""
+    out: set[str] = set()
+    for pat in patterns:
+        out.update(t for t in (pat.s, pat.o) if not t.startswith("?"))
+        if pat.is_path():
+            out.update(re.findall(r"<([^>]*)>", pat.p))
+        elif not pat.p.startswith("?"):
+            out.add(pat.p)
+    return out
+
+
 def compile_bgp(kg: KnowledgeGraph, patterns: list[TriplePattern]) -> DataFrame:
     """BGP over the default union graph → DataFrame of uid-valued
     variable columns.
 
+    Every constant is bound by its uid from the request's term map (one
+    lookup for the whole request; here, for the BGP alone, when called
+    outside one): a bound position is a literal filter at the Parquet
+    scan, and a constant the dictionary lacks empties its pattern
+    without a scan.
+
     Ordering: statistics first — patterns with a constant predicate are
     ranked by that predicate's actual triple count from the pred_stats
-    table (plan-time lookup), so a hub predicate like rdf:type sinks to
-    the end of the join chain; the static bound-position heuristic
+    table (a driver-side dict), so a hub predicate like rdf:type sinks
+    to the end of the join chain; the static bound-position heuristic
     breaks ties and covers stat-less patterns."""
-    pred_terms = [
-        p.p for p in patterns if not p.p.startswith("?") and not p.is_path()
-    ]
-    cards = kg.predicate_cardinalities(pred_terms)
-    big = (max(cards.values()) + 1) if cards else 1
+    kg = kg.with_terms(pattern_terms(patterns))
+    cards = kg.predicate_cardinalities()
+    big = max(cards.values(), default=0) + 1
 
     def key(p: TriplePattern):
-        est = cards.get(p.p, big if not p.p.startswith("?") else big * 3)
+        if p.p.startswith("?"):
+            est = big * 3
+        elif p.is_path() or not cards:
+            est = big
+        else:
+            uid = kg.uids[p.p]
+            est = 0 if uid is None else cards.get(uid, 0)
         # fully-bound or o-bound patterns cut below predicate degree
         if not p.o.startswith("?"):
             est = max(est // 100, 1)

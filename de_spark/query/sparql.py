@@ -29,7 +29,14 @@ de_spark.query.parser compiles to DataFrame operators:
 - GRAPH          → graph restriction pushed onto contained patterns
                    (partition pruning; src/sparql.rs:436-453)
 - VALUES         → constant rows resolved to uids through the
-                   vocabulary, inner-joined
+                   request's term map, a local relation, inner-joined
+
+Constants first: every dictionary constant of a query (BGP positions,
+path IRIs, negated-set members, VALUES cells, DESCRIBE IRIs, in
+subqueries and EXISTS groups too) is resolved in ONE term lookup at
+the start of the request (``KnowledgeGraph.with_terms``); each binding
+site then compiles to a literal uid filter or relation, and a constant
+the dictionary lacks empties its pattern without a scan.
 
 Solutions stay uid-typed longs until the final decode; BIND/GRAPH ?g
 produce string columns that pass through the decode untouched.  Joins
@@ -44,13 +51,22 @@ datatypes.
 from __future__ import annotations
 
 import re
+from dataclasses import fields, is_dataclass
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from de_spark import terms
 from de_spark.graph import KnowledgeGraph
-from de_spark.query.bgp import TriplePattern, _fixpoint, _seed_filter, compile_bgp
+from de_spark.query.bgp import (
+    TriplePattern,
+    _fixpoint,
+    _local_relation,
+    _seed_filter,
+    compile_bgp,
+    pattern_terms,
+)
 from de_spark.query.parser import (
     AggE,
     Aggregate,
@@ -1108,19 +1124,16 @@ def _has_undef(node: ValuesNode) -> bool:
     return any(any(v is None for v in r) for r in node.rows)
 
 
-def _values_df(kg: KnowledgeGraph, node: ValuesNode) -> DataFrame:
-    """VALUES rows resolved to uids through the vocabulary (a term
-    absent from the graph matches nothing, like any constant bind)."""
-    spark = kg.triples.sparkSession
-    vdf = spark.createDataFrame(
-        [tuple(r) for r in node.rows], [f"__t_{v}" for v in node.vars]
+def _values_df(kg: KnowledgeGraph, vars_: list[str], rows) -> DataFrame:
+    """Distinct VALUES rows as a local relation of uids from the
+    request's term map.  A row holding a term absent from the
+    dictionary matches nothing, like any constant bind, so it is
+    dropped."""
+    uids = {tuple(kg.uids[t] for t in r) for r in rows}
+    schema = pa.schema([(v, pa.int64()) for v in vars_])
+    return _local_relation(
+        kg.triples.sparkSession, schema, [r for r in uids if None not in r]
     )
-    for v in node.vars:
-        vdf = vdf.join(
-            kg.term_uids.select(F.col("term").alias(f"__t_{v}"), F.col("uid").alias(v)),
-            f"__t_{v}",
-        )
-    return vdf.select(*node.vars).dropDuplicates()
 
 
 def _join_values_undef(
@@ -1133,7 +1146,6 @@ def _join_values_undef(
     bag semantics).  All-UNDEF rows are compatible with everything."""
     from collections import defaultdict
 
-    spark = sols.sparkSession
     groups: dict = defaultdict(list)
     for row in node.rows:
         mask = tuple(v for v, val in zip(node.vars, row) if val is not None)
@@ -1149,18 +1161,7 @@ def _join_values_undef(
             for _ in rows:
                 parts.append(sols)
             continue
-        vdf = spark.createDataFrame(
-            [tuple(r) for r in rows], [f"__t_{v}" for v in mask]
-        )
-        for v in mask:
-            vdf = vdf.join(
-                kg.term_uids.select(
-                    F.col("term").alias(f"__t_{v}"), F.col("uid").alias(v)
-                ),
-                f"__t_{v}",
-            )
-        vdf = vdf.select(*mask).dropDuplicates()
-        l, r, shared = _coerce_shared(kg, sols, vdf)
+        l, r, shared = _coerce_shared(kg, sols, _values_df(kg, list(mask), rows))
         parts.append(l.join(r, shared, "inner"))
     out = parts[0]
     for p in parts[1:]:
@@ -1416,7 +1417,7 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
     if isinstance(node, ValuesNode):
         if _has_undef(node):
             raise ValueError("VALUES with UNDEF requires preceding patterns")
-        return _values_df(kg, node)
+        return _values_df(kg, node.vars, node.rows)
 
     if isinstance(node, SubQueryNode):
         # subqueries evaluate bottom-up with their own projection and
@@ -1532,12 +1533,38 @@ def _apply_order(df: DataFrame, order_keys: list) -> DataFrame:
     return df.orderBy(*cols)
 
 
+def _query_terms(node) -> set[str]:
+    """Every dictionary constant a parsed query binds: triple-pattern
+    and path constants (``bgp.pattern_terms``) and VALUES cells, found
+    anywhere in the algebra — OPTIONAL/UNION/MINUS branches, subqueries
+    and EXISTS groups inside expressions."""
+    out: set[str] = set()
+
+    def walk(x) -> None:
+        if isinstance(x, TriplePattern):
+            out.update(pattern_terms([x]))
+        elif isinstance(x, ValuesNode):
+            out.update(t for r in x.rows for t in r if t is not None)
+        elif isinstance(x, (list, tuple)):
+            for y in x:
+                walk(y)
+        elif is_dataclass(x):
+            for f in fields(x):
+                walk(getattr(x, f.name))
+
+    walk(node)
+    return out
+
+
 def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> DataFrame:
     """Run a parsed query; returns solutions with *string* term columns
     (aggregate aliases stay numeric).  ``graph`` carries an enclosing
-    GRAPH scope into a subquery's pattern compilation."""
+    GRAPH scope into a subquery's pattern compilation.  The query's
+    constants are resolved first, in one lookup, unless ``kg`` is
+    already a request view holding them."""
     if q.algebra is None:
         raise ValueError("query has no WHERE clause")
+    kg = kg.with_terms(_query_terms(q))
     sols = _compile(kg, q.algebra, graph)
     if sols is None:
         raise ValueError("empty WHERE group")
@@ -1755,9 +1782,10 @@ def sparql_select(kg: KnowledgeGraph, query: str) -> DataFrame:
         raise ValueError(f"expected SELECT/ASK, got {q.form.upper()}")
     result = execute(kg, q)
     if q.ask:
-        spark = result.sparkSession
-        has = result.limit(1).count() > 0
-        return spark.createDataFrame([(has,)], ["bool"])
+        # a bounded probe (one row), and the answer as a local relation:
+        # reading it back runs no job
+        has = not result.isEmpty()
+        return _local_relation(result.sparkSession, pa.schema([("bool", pa.bool_())]), [(has,)])
     return result
 
 
@@ -1809,23 +1837,29 @@ def sparql_describe(kg: KnowledgeGraph, query: str) -> DataFrame:
     forms); for bnode-free targets CBD and the one-hop description
     coincide, so prior goldens are unchanged.
 
-    The described set is resolved in uid space: constants and solution
-    bindings become a tiny uid table, collected once as the start of
-    ``bgp._fixpoint``, whose rounds follow bnode objects of the
-    frontier only; the driver-side seen set makes bnode cycles
-    terminate.  The described set is then broadcast-semi-joined
-    against the triples' s_id, and only the matching triples decode
-    to strings."""
+    The described set is resolved in uid space, as the start of
+    ``bgp._fixpoint``: the constants' uids come from the request's
+    term map (a local relation), and solution bindings join the term
+    dictionary.  Its rounds follow bnode objects of the frontier only;
+    the driver-side seen set makes bnode cycles terminate.  The
+    described set is then semi-joined against the triples' s_id, and
+    only the matching triples decode to strings."""
     q = parse_sparql(query)
     if q.form != "describe":
         raise ValueError("not a DESCRIBE query")
     variables = [t[1:] for t in q.describe_targets if t.startswith("?")]
     consts = [t for t in q.describe_targets if not t.startswith("?")]
+    kg = kg.with_terms(_query_terms(q) | set(consts))
 
-    spark = kg.triples.sparkSession
-    term_parts: list[DataFrame] = []
-    if consts:
-        term_parts.append(spark.createDataFrame([(c,) for c in consts], ["term"]))
+    # CBD bnode closure: a described subject's bnode objects join the
+    # described set, transitively; rows are (origin, node) with one
+    # constant origin.  Bnode uids come from one pushed-down prefix
+    # scan of the term dictionary.
+    start = _local_relation(
+        kg.triples.sparkSession,
+        pa.schema([("a", pa.int64()), ("b", pa.int64())]),
+        [(0, u) for u in {kg.uids[c] for c in consts} if u is not None],
+    )
     if variables:
         if q.algebra is None:
             raise ValueError("DESCRIBE with variables requires a WHERE clause")
@@ -1833,21 +1867,14 @@ def sparql_describe(kg: KnowledgeGraph, query: str) -> DataFrame:
             kg, ParsedQuery(form="select", variables=variables, algebra=q.algebra)
         )
         for v in variables:
-            term_parts.append(
-                sols.select(F.col(v).alias("term")).where(F.col("term").isNotNull())
+            bound = sols.select(F.col(v).alias("term"))
+            start = start.unionByName(
+                kg.term_uids.join(bound, "term", "left_semi").select(
+                    F.lit(0).cast("long").alias("a"), F.col("uid").alias("b")
+                )
             )
-    described = term_parts[0]
-    for p in term_parts[1:]:
-        described = described.unionByName(p)
     from de_spark.encode import decode_triples
 
-    # CBD bnode closure: a described subject's bnode objects join the
-    # described set, transitively; rows are (origin, node) with one
-    # constant origin.  Bnode uids come from one pushed-down prefix
-    # scan of the term dictionary.
-    start = kg.term_uids.join(described, "term", "left_semi").select(
-        F.lit(0).alias("a"), F.col("uid").alias("b")
-    )
     bnode_uids = kg.term_uids.where(F.col("term").startswith("_:")).select(
         F.col("uid").alias("b")
     )

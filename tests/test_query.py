@@ -3,7 +3,9 @@ tests/test-commands.rs (query-color, fruit-color + all four formats)."""
 
 import pytest
 
+from de_spark.graph import KnowledgeGraph
 from de_spark.pipeline import build
+from de_spark.query import bgp
 from de_spark.query import sparql_select, to_csv, to_json, to_tsv, to_xml
 from de_spark.sources.nt import triples_from_nt_text
 from de_spark.sources.turtle import parse_turtle
@@ -107,6 +109,83 @@ def test_ask_query(fruit_kg):
     assert df.collect()[0]["bool"] is True
     df = sparql_select(fruit_kg, 'ASK { ?s <http://example.org/hasColor> "purple" }')
     assert df.collect()[0]["bool"] is False
+
+
+# ---------------------------------------------------------------------------
+# constants first: one term lookup per request, uids bound as literal
+# filters at the scan
+# ---------------------------------------------------------------------------
+
+EX = "PREFIX ex: <http://example.org/>\n"
+
+
+def test_absent_constants_match_nothing_without_a_scan(fruit_kg, in_job_group):
+    """A constant the dictionary lacks empties its pattern before any
+    scan: such a SELECT runs one Spark job, the term lookup."""
+    for group, q in (
+        ("absent_bgp", "SELECT ?x WHERE { ?x ex:hasColor ex:Nope }"),
+        ("absent_plus", "SELECT ?x WHERE { ex:Nope ex:growsIn+ ?x }"),
+        ("absent_star", "SELECT ?x WHERE { ?x ex:growsIn* ex:Nope }"),
+    ):
+        csv, jobs = in_job_group(group, lambda: to_csv(sparql_select(fruit_kg, EX + q)))
+        assert csv == "x", group
+        assert jobs == 1, group
+    ask = sparql_select(fruit_kg, EX + "ASK { ?x ex:nope ?y }")
+    assert ask.collect()[0]["bool"] is False
+    # a VALUES row holding an absent term is dropped; the others bind
+    q = EX + "SELECT ?f ?c WHERE { VALUES ?f { ex:Banana ex:Nope } ?f ex:hasColor ?c }"
+    rows = [(r["f"], r["c"]) for r in sparql_select(fruit_kg, q).collect()]
+    assert rows == [("http://example.org/Banana", '"yellow"')]
+    # an absent negated-set member excludes nothing; a present one does
+    every = sparql_select(fruit_kg, "SELECT ?s ?o WHERE { ?s ?p ?o }").count()
+    q = EX + "SELECT ?s ?o WHERE { ?s !(ex:nope) ?o }"
+    assert sparql_select(fruit_kg, q).count() == every
+    q = EX + "SELECT ?s ?o WHERE { ?s !(ex:nope|ex:hasColor) ?o }"
+    assert sparql_select(fruit_kg, q).count() == every - 2
+    # an empty uid list is a filter that matches nothing, not `IN ()`
+    assert bgp._seed_filter(fruit_kg.triples, "s_id", []).count() == 0
+
+
+def test_one_term_lookup_per_request(fruit_kg, monkeypatch):
+    """Every constant of a request (BGP, property path, VALUES and
+    negated-set members) resolves in one lookup."""
+    calls = []
+    real = KnowledgeGraph.lookup
+
+    def spy(self, terms):
+        calls.append(set(terms))
+        return real(self, calls[-1])
+
+    monkeypatch.setattr(KnowledgeGraph, "lookup", spy)
+    q = EX + """
+    SELECT DISTINCT ?f ?x WHERE {
+      VALUES ?f { ex:Banana ex:Pineapple }
+      ?f a ex:Fruit ; ex:growsIn+ ?x ; !(ex:hasColor|^ex:hasTaste) ?v .
+    }"""
+    rows = sorted((r["f"], r["x"]) for r in sparql_select(fruit_kg, q).collect())
+    ex = "http://example.org/"
+    assert rows == [(f"{ex}Banana", f"{ex}TropicalClimate"), (f"{ex}Pineapple", f"{ex}TropicalClimate")]
+    assert len(calls) == 1
+    assert calls[0] == {
+        f"{ex}{t}"
+        for t in ("Banana", "Pineapple", "Fruit", "growsIn", "hasColor", "hasTaste")
+    } | {"http://www.w3.org/1999/02/22-rdf-syntax-ns#type"}
+
+
+def test_pattern_binds_constants_as_scan_filters(fruit_kg):
+    """A bound position is a literal uid filter pushed to the Parquet
+    scan: no broadcast, no semi join."""
+    ex = "http://example.org/"
+    df = fruit_kg.pattern(s=f"{ex}Banana", p=f"{ex}hasColor")
+    assert df.count() == 1
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan
+    assert "LeftSemi" not in plan
+    uids = fruit_kg.lookup([f"{ex}Banana", f"{ex}hasColor"])
+    pushed = plan[plan.index("PushedFilters:"):].split("]", 1)[0]
+    assert f"EqualTo(s_id,{uids[f'{ex}Banana']})" in pushed
+    assert f"EqualTo(p_id,{uids[f'{ex}hasColor']})" in pushed
 
 
 def test_filter_and_limit(fruit_kg):

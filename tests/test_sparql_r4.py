@@ -372,7 +372,7 @@ def test_cancelled_closure_returns_and_leaks_nothing(kg, spark):
 
 def test_deep_chain_closure(kg, spark, monkeypatch):
     """A closure 100 rounds deep terminates with the exact answer from
-    either endpoint, and a round costs at most two Spark jobs."""
+    either endpoint, and a round costs at most one Spark job."""
     chain = [f"c{i}" for i in range(CHAIN + 1)]
     expansions = []
     real = bgp_mod._fixpoint
@@ -391,7 +391,7 @@ def test_deep_chain_closure(kg, spark, monkeypatch):
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("deep_chain_plus")
     assert expansions == [1] * CHAIN
     rounds = 1 + len(expansions)  # the collected start is the first round
-    assert len(jobs) <= 2 * rounds + 4
+    assert len(jobs) <= rounds + 4
 
     q = PX + "SELECT ?x WHERE { x:c0 x:link* ?x }"
     got = _in_group(spark, "deep_chain_star", lambda: locals_(sparql_select(kg, q), "x"))

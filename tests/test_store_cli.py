@@ -82,9 +82,10 @@ def test_add_and_drop_graph(spark, tmp_path):
     assert store.drop_graph(spark, base, "file:///nope.hdt") is False
 
 
-def test_predicate_cardinalities_follow_add_and_drop(spark, tmp_path):
+def test_predicate_cardinalities_follow_add_and_drop(spark, tmp_path, in_job_group):
     """pred_stats is published with an add and rewritten by a drop: a
-    predicate's cardinality equals its decoded triple count."""
+    predicate's cardinality equals its decoded triple count.  The
+    counts are collected once per loaded graph."""
     from de_spark.encode import decode_triples
 
     base = str(tmp_path / "store")
@@ -98,8 +99,12 @@ def test_predicate_cardinalities_follow_add_and_drop(spark, tmp_path):
         for r in decode_triples(kg.triples, kg.term_uids).collect():
             counts[r["p"]] = counts.get(r["p"], 0) + 1
         seen.update(counts)
-        cards = kg.predicate_cardinalities(sorted(seen))
-        assert cards == {p: counts.get(p, 0) for p in seen}
+        uids = kg.lookup(seen)
+        cards = kg.predicate_cardinalities()
+        assert {p: cards.get(uids[p], 0) for p in seen} == {p: counts.get(p, 0) for p in seen}
+        again, jobs = in_job_group(f"pred_cards_{id(kg)}", kg.predicate_cardinalities)
+        assert again == cards
+        assert jobs == 0
         return counts
 
     before = check()

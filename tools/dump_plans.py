@@ -15,12 +15,12 @@ import __spark_entry__ as entrymod
 from de_spark.session import get_spark
 
 SHOW = [
-    ("kg_bgp_mentions", "3-pattern BGP (constant binds must be pushed scans + broadcast semi-joins)"),
+    ("kg_bgp_mentions", "3-pattern BGP (constant binds must be literal uid filters pushed to the scans)"),
     ("q5_region_revenue", "6-way star join (dims broadcast, fact never re-shuffled needlessly)"),
     ("dedup_minhash_lsh", "banded LSH bucket self-join (no O(n^2) cross product)"),
     ("q1_pricing_summary", "scan + partial/final agg (whole-stage codegen span)"),
     ("embedding_neardup", "LSH-bucketed near-dup: NO CartesianProduct/BroadcastNestedLoopJoin node"),
-    ("kg_path_comention", "property path (seq+inverse): uid-pair joins, bound subject as broadcast semi"),
+    ("kg_path_comention", "property path (seq+inverse): uid-pair joins, bound subject as a literal uid filter"),
     (
         "kg_path_reach",
         "bound-subject + closure: SEEDED semi-naive reachability — the plan reads "
