@@ -1,36 +1,28 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Contract: the knowledge-graph rows de_spark answers.
 
-``queries()`` exposes every implemented operator family from
-SURVEY.md §2 plus the training-data ops, each with a DuckDB oracle in
-``oracle_sql()`` where ANSI-SQL-expressible.  The kg_* entries run the
-REAL engine code path (de_spark.dictionary / encode / query.bgp) over
-the documents table and are checked against a pure-SQL restatement of
-the HDT four-section semantics.
+``queries()`` maps each row name to ``fn(spark, sf_dir) -> DataFrame``
+and ``oracle_sql()`` maps the same names to DuckDB SQL over the
+``documents`` table.  Every row is a kg_* row: it runs the REAL engine
+code path (de_spark.pipeline / dictionary / encode / query) over the KG
+that ``de_spark.docs_kg`` builds from the documents table, and its
+oracle is a pure-SQL restatement of the HDT four-section semantics or
+of the SPARQL operator under test.
 
-Float policy: every aggregated double is rounded (money→2, ratios→6,
-cosine→3) on BOTH sides so the order-insensitive value-hash is stable
-across summation orders.
+A row matches its oracle when the row count, the column set and the
+value multiset (``rows_multiset``: cells as strings, floats at 9
+significant digits, columns in name order) agree.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_spark.docs_kg import CODE, ENT, TRIPLES_SQL, documents_kg, documents_triples
-from de_spark.ops import dedup, similarity, text
 from de_spark.query.bgp import TriplePattern, compile_bgp
-
-# ---------------------------------------------------------------------------
-# helpers
-# ---------------------------------------------------------------------------
-
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: build the KG over sf0.001 documents with the real
@@ -409,366 +401,8 @@ def _kg_mentions_degree(spark, sf_dir):
     )
 
 
-# ---------------------------------------------------------------------------
-# Relational operator queries (TPC-H-ish tables)
-# ---------------------------------------------------------------------------
-
-
-def _q1_pricing_summary(spark, sf_dir):
-    l = _read(spark, sf_dir, "lineitem")
-    return (
-        l.where(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def _q3_shipping_priority(spark, sf_dir):
-    """Same query as r6 (identical result set / oracle), restructured
-    so LINEITEM is the STREAM side: r6's left-deep chain made the
-    planner broadcast the 6M-row lineitem as a BUILD side (the 64MB
-    threshold admitted its compressed estimate) and pay a fact-table
-    hash-relation build every run — r7 joins the segment+date-filtered
-    customer⋈orders keys (the small side) INTO lineitem instead
-    (guide §3.1: broadcast the side that is small AFTER filters;
-    measured 2.8s → 0.8s at sf1.0 local[32]).  At extreme scale the
-    filtered key side outgrows a broadcast — drop the hint and the
-    session's shuffled-hash preference takes over (same plan shape,
-    one shuffle), or pre-filter with a Bloom filter (guide §3.2)."""
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    l = _read(spark, sf_dir, "lineitem")
-    co = (
-        c.where(F.col("c_mktsegment") == "BUILDING")
-        .join(o, c.c_custkey == o.o_custkey)
-        .where(F.col("o_orderdate") < "1998-03-15")
-        .select("o_orderkey", "o_orderdate")
-    )
-    return (
-        l.where(F.col("l_shipdate") > "1996-03-15")
-        .join(F.broadcast(co), l.l_orderkey == co.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-def _q5_region_revenue(spark, sf_dir):
-    """Same query as r6 (identical result set / oracle), restructured
-    like q3: the region⋈nation⋈customer⋈date-filtered-orders key side
-    broadcasts INTO a streaming lineitem instead of lineitem being
-    broadcast as a 6M-row build side (guide §3.1; measured 4.1s →
-    0.9s at sf1.0 local[32]; same drop-the-hint degradation note as
-    _q3_shipping_priority at extreme scale)."""
-    r = _read(spark, sf_dir, "region")
-    n = _read(spark, sf_dir, "nation")
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    l = _read(spark, sf_dir, "lineitem")
-    s = _read(spark, sf_dir, "supplier")
-    dims = (
-        r.join(n, r.r_regionkey == n.n_regionkey)
-        .join(c, n.n_nationkey == c.c_nationkey)
-        .join(o, c.c_custkey == o.o_custkey)
-        .where((F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01"))
-        .select("n_name", "c_nationkey", "o_orderkey")
-    )
-    return (
-        l.join(F.broadcast(dims), l.l_orderkey == dims.o_orderkey)
-        .join(s, (l.l_suppkey == s.s_suppkey) & (dims.c_nationkey == s.s_nationkey))
-        .groupBy("n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-    )
-
-
-def _q14_promo_revenue(spark, sf_dir):
-    """TPC-H Q14 shape: conditional aggregation over a fact-dim join
-    (part is the dim — broadcast-able)."""
-    l = _read(spark, sf_dir, "lineitem")
-    p = _read(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(F.lit(0.0))
-    return (
-        l.where((F.col("l_shipdate") >= "1996-09-01") & (F.col("l_shipdate") < "1996-10-01"))
-        .join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .agg(
-            F.round(F.sum(promo) * 100.0 / F.sum(rev), 4).alias("promo_revenue_pct"),
-            F.round(F.sum(rev), 2).alias("total_revenue"),
-        )
-    )
-
-
-def _top10_orders(spark, sf_dir):
-    o = _read(spark, sf_dir, "orders")
-    return o.select("o_orderkey", "o_custkey", "o_totalprice").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    ).limit(10)
-
-
-def _distinct_flag_status(spark, sf_dir):
-    return _read(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
-
-
-def _cust_order_counts_left(spark, sf_dir):
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
-
-
-def _cust_with_orders_semi(spark, sf_dir):
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
-
-
-def _cust_without_orders_anti(spark, sf_dir):
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
-
-
-def _events_union(spark, sf_dir):
-    e = _read(spark, sf_dir, "events")
-    clicks = e.where(F.col("event_type") == "click").select("event_id", "event_type")
-    errors = e.where(F.col("event_type") == "error").select("event_id", "event_type")
-    return clicks.unionByName(errors)
-
-
-def _events_agg_by_type(spark, sf_dir):
-    e = _read(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
-        F.round(F.avg("value"), 6).alias("avg_value"),
-    )
-
-
-def _events_latest_per_user(spark, sf_dir):
-    """Latest event per user — r7: ``max_by`` over the lexicographic
-    (ts, event_id) struct instead of a row_number window.  Identical
-    result (row_number rn=1 under ORDER BY ts DESC, event_id DESC ==
-    the max (ts, event_id) row) but the aggregate gets map-side
-    partial aggregation and skips the window's per-partition sort
-    (guide §2.3 "aggregate before you shuffle"; the shuffle carries
-    one candidate row per (user, map partition), not every event)."""
-    e = _read(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("event_id", "event_type"), F.struct("ts", "event_id")
-            ).alias("x")
-        )
-        .select("user_id", F.col("x.event_id").alias("event_id"), F.col("x.event_type").alias("event_type"))
-    )
-
-
-def _events_windowed_rates(spark, sf_dir):
-    """Tumbling event-time windows (batch twin of
-    de_spark.streaming.windowed_source_rates — same F.window groupBy
-    the watermarked streaming op runs incrementally): per-hour
-    per-type event counts and value sums."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total"))
-        .select(
-            F.col("win.start").alias("win_start"), "event_type", "n", "total"
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-data ops queries
-# ---------------------------------------------------------------------------
-
-
-def _text_analyze(spark, sf_dir):
-    return text.analyze(_read(spark, sf_dir, "documents"))
-
-
-def _text_chunk_docs(spark, sf_dir):
-    """Sliding-window chunking (training-data op): 32-token windows
-    stepping 24 (8-token overlap), pure Catalyst — split + sequence +
-    explode + slice, no UDF, no shuffle."""
-    return text.chunk_documents(
-        _read(spark, sf_dir, "documents"), chunk_tokens=32, overlap=8
-    )
-
-
-def _sample_mix_by_lang(spark, sf_dir):
-    """Deterministic stratified sampling (training-mix rebalancing):
-    hash-gated per-language keep rates — reproducible across runs and
-    cluster sizes, exact DuckDB twin via the portable md5-prefix
-    hash."""
-    return text.sample_stratified(
-        _read(spark, sf_dir, "documents"),
-        {"en": 0.5, "es": 0.25, "de": 0.1},
-        seed=7,
-    ).select("doc_id", "lang")
-
-
-def _text_scrub_pii(spark, sf_dir):
-    """PII scrubbing (emails / IPv4 / long digit runs → tokens).  The
-    synthetic corpus carries no PII, so deterministic PII-like spans
-    are injected per doc_id first; the oracle restates injection and
-    the same sequential redaction stages, pinning clean_text and the
-    redaction count value-exactly."""
-    from de_spark.ops import text as text_ops
-
-    docs = _read(spark, sf_dir, "documents")
-    aug = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" mail user"), F.col("doc_id").cast("string"), F.lit("@example.com"),
-            F.lit(" host 10."), (F.col("doc_id") % 256).cast("string"),
-            F.lit(".0."), (F.col("doc_id") % 100).cast("string"),
-            F.lit(" acct 12345678"), F.col("doc_id").cast("string"), F.lit(" end"),
-        ).alias("text"),
-    )
-    return text_ops.scrub_pii(aug)
-
-
-def _dedup_exact_docs(spark, sf_dir):
-    return dedup.exact_dedup(_read(spark, sf_dir, "documents"))
-
-
-def _dedup_jaccard_pairs(spark, sf_dir):
-    return dedup.jaccard_pairs(_read(spark, sf_dir, "documents"), threshold=0.5, n=1)
-
-
-def _dedup_minhash_lsh(spark, sf_dir):
-    # portable md5-based hash mode: the DuckDB oracle reproduces the
-    # banded-LSH pair set value-exactly (production default stays
-    # xxhash64 — same plan, cheaper hash)
-    return dedup.minhash_lsh_pairs(
-        _read(spark, sf_dir, "documents"), threshold=0.5, portable=True
-    )
-
-
-def _dedup_simhash(spark, sf_dir):
-    return dedup.simhash(_read(spark, sf_dir, "documents"), portable=True)
-
-
-def _embedding_neardup(spark, sf_dir):
-    # bucketed LSH candidates + exact within-candidate cosine — no
-    # cartesian product in the plan; probe params generous enough that
-    # the output hash-matches the brute-force DuckDB oracle (miss prob
-    # ≈ 4e-9/pair at the 0.4 threshold, see embedding_neardup_lsh doc)
-    return dedup.embedding_neardup_lsh(
-        _read(spark, sf_dir, "embeddings"),
-        threshold=0.4,
-        n_planes=4,
-        n_tables=10,
-        multiprobe_hamming=2,
-    )
-
-
-def _image_neardup(spark, sf_dir):
-    """Image near-duplicates via perceptual hash (dHash over REAL
-    decoded PPM/PNG pixels) + Hamming-banded grouping (VERDICT r5
-    item 5).  The 30-image fixture is deterministic integer pixel
-    arithmetic, so the DuckDB oracle restates the gradient, the 9×8
-    cell pooling, the cross-multiplied mean comparisons, and the
-    bit packing VERBATIM and the banded plan must reproduce the
-    all-pairs answer exactly (4 bands are pigeonhole-complete for
-    Hamming ≤ 3)."""
-    from de_spark.ops import multimodal
-
-    media = multimodal.image_fixture_media(spark)
-    return multimodal.image_neardup_pairs(media, max_hamming=3)
-
-
-def _audio_neardup(spark, sf_dir):
-    """Audio near-duplicates via amplitude-envelope hash (over REAL
-    decoded PCM WAV samples) + the same Hamming-banded grouping as
-    images.  The 30-clip fixture is deterministic integer sample
-    arithmetic, so the DuckDB oracle restates the sawtooth, the
-    65-cell time pooling, the cross-multiplied mean comparisons and
-    the bit packing VERBATIM; the banded plan must reproduce the
-    all-pairs answer exactly (4 bands are pigeonhole-complete for
-    Hamming ≤ 3)."""
-    from de_spark.ops import multimodal
-
-    media = multimodal.audio_fixture_media(spark)
-    return multimodal.audio_neardup_pairs(media, max_hamming=3)
-
-
-def _dedup_canonical_vecs(spark, sf_dir):
-    """Near-dup pairs → connected components → canonical member per
-    cluster (iterative min-label propagation; oracle = recursive CTE)."""
-    pairs = _embedding_neardup(spark, sf_dir)
-    return dedup.dedup_components(pairs)
-
-
-def _ann_cosine_topk(spark, sf_dir):
-    e = _read(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    qc = F.array(*[F.lit(float(x)) for x in q])
-    scored = e.select(
-        "vec_id",
-        F.round(
-            similarity._cosine(F.col("embedding").cast("array<double>"), qc), 3
-        ).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(20)
-
-
-def _ann_lsh_topk(spark, sf_dir):
-    # approximate; no exact SQL twin → rows-only driver check
-    e = _read(spark, sf_dir, "embeddings")
-    q = list(e.where(F.col("vec_id") == 0).collect()[0]["embedding"])
-    return similarity.hyperplane_lsh_topk(e, q, k=20)
-
-
-def _ann_ivf_topk(spark, sf_dir):
-    # approximate; no exact SQL twin → golden-parquet oracle
-    e = _read(spark, sf_dir, "embeddings")
-    q = list(e.where(F.col("vec_id") == 0).collect()[0]["embedding"])
-    cents_df, assigned = similarity.ivf_build(e, n_lists=8, iters=1)
-    return similarity.ivf_topk(assigned, cents_df, q, k=20, n_probe=4)
-
-
-def _release_prior_caches(fn):
-    """Release the PREVIOUS query's operator caches (persisted minhash
-    signatures, IVF assignments, component labels) before starting the
-    next one, so a long contract/bench session holds at most one
-    invocation's caches (ADVICE r5 — the contract path leaked one
-    cache entry per dedup_minhash_lsh run).  By invocation time the
-    harness has materialized the prior result, so unpersist is safe."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark, sf_dir):
-        from de_spark.ops import release_operator_caches
-
-        release_operator_caches()
-        return fn(spark, sf_dir)
-
-    return wrapped
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    qs = _raw_queries()
-    return {name: _release_prior_caches(fn) for name, fn in qs.items()}
-
-
-def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # KG pipeline (engine code path)
         "kg_triples_raw": _kg_triples_raw,
         "kg_term_uids": _kg_term_uids,
         "kg_dict_sections": _kg_dict_sections,
@@ -793,36 +427,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_sparql_datetime_order": _kg_sparql_datetime_order,
         "kg_sparql_boolean_value": _kg_sparql_boolean_value,
         "kg_mentions_degree": _kg_mentions_degree,
-        # relational operators
-        "q1_pricing_summary": _q1_pricing_summary,
-        "q3_shipping_priority": _q3_shipping_priority,
-        "q5_region_revenue": _q5_region_revenue,
-        "q14_promo_revenue": _q14_promo_revenue,
-        "top10_orders": _top10_orders,
-        "distinct_flag_status": _distinct_flag_status,
-        "cust_order_counts_left": _cust_order_counts_left,
-        "cust_with_orders_semi": _cust_with_orders_semi,
-        "cust_without_orders_anti": _cust_without_orders_anti,
-        "events_union": _events_union,
-        "events_agg_by_type": _events_agg_by_type,
-        "events_latest_per_user": _events_latest_per_user,
-        "events_windowed_rates": _events_windowed_rates,
-        # training-data ops
-        "text_analyze": _text_analyze,
-        "text_chunk_docs": _text_chunk_docs,
-        "text_scrub_pii": _text_scrub_pii,
-        "sample_mix_by_lang": _sample_mix_by_lang,
-        "dedup_exact_docs": _dedup_exact_docs,
-        "dedup_jaccard_pairs": _dedup_jaccard_pairs,
-        "dedup_minhash_lsh": _dedup_minhash_lsh,
-        "dedup_simhash": _dedup_simhash,
-        "embedding_neardup": _embedding_neardup,
-        "image_neardup": _image_neardup,
-        "audio_neardup": _audio_neardup,
-        "dedup_canonical_vecs": _dedup_canonical_vecs,
-        "ann_cosine_topk": _ann_cosine_topk,
-        "ann_lsh_topk": _ann_lsh_topk,
-        "ann_ivf_topk": _ann_ivf_topk,
     }
 
 
@@ -855,231 +459,7 @@ _UIDS_SQL = """
         uids AS (SELECT term, min(rn) AS uid FROM idxd GROUP BY term)
 """
 
-# portable 60-bit hash (md5 prefix) — the DuckDB twin of
-# de_spark.ops.dedup.portable_hash64
-def _ph_sql(x: str) -> str:
-    return f"('0x' || substring(md5({x}), 1, 15))::BIGINT"
-
-
-def _minhash_lsh_oracle(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5) -> str:
-    rpb = num_hashes // bands
-    ph = _ph_sql("h.i::VARCHAR || chr(31) || g.shingle")
-    sim = f"round(len(list_filter(range(1, {num_hashes + 1}), i -> sig_a[i] = sig_b[i]))::DOUBLE / {num_hashes}, 6)"
-    return f"""
-        WITH toks AS (
-          SELECT doc_id,
-                 regexp_split_to_array(regexp_replace(trim(text), '\\s+', ' ', 'g'), ' ') AS t
-          FROM documents
-        ),
-        pos AS (
-          SELECT doc_id, t, unnest(range(1, greatest(len(t) - 2, 0) + 1)) AS i FROM toks
-        ),
-        grams AS (
-          SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM pos
-        ),
-        hashes AS (
-          SELECT g.doc_id, h.i AS hi, min({ph}) AS mh
-          FROM grams g, (SELECT unnest(range(0, {num_hashes})) AS i) h
-          GROUP BY g.doc_id, h.i
-        ),
-        sigs AS (SELECT doc_id, list(mh ORDER BY hi) AS sig FROM hashes GROUP BY doc_id),
-        bands AS (
-          SELECT doc_id, sig, b.bi AS band,
-                 md5(array_to_string(sig[b.bi*{rpb}+1 : b.bi*{rpb}+{rpb}], ',')) AS bucket
-          FROM sigs, (SELECT unnest(range(0, {bands})) AS bi) b
-        ),
-        cand AS (
-          SELECT DISTINCT x.doc_id AS a, y.doc_id AS b, x.sig AS sig_a, y.sig AS sig_b
-          FROM bands x JOIN bands y
-            ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id
-        )
-        SELECT a, b, {sim} AS sig_sim FROM cand WHERE {sim} >= {threshold}
-    """
-
-
-def _simhash_oracle() -> str:
-    ph = _ph_sql("tok")
-    votes = ",\n               ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(64)
-    )
-    # bit 63 maps to -(2^63) in the long; the portable hash keeps bits
-    # 60-63 at zero so those votes are always negative → contribute 0
-    val = " + ".join(f"(CASE WHEN b{b} > 0 THEN {2**b} ELSE 0 END)" for b in range(63))
-    return f"""
-        WITH toks AS (
-          SELECT DISTINCT doc_id, tok FROM (
-            SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-            FROM documents
-          )
-        ),
-        tok2 AS (SELECT doc_id, tok, {ph} AS h FROM toks WHERE tok != ''),
-        votes AS (SELECT doc_id, {votes} FROM tok2 GROUP BY doc_id)
-        SELECT doc_id, ({val})::BIGINT AS simhash FROM votes
-    """
-
-
-def _image_neardup_oracle(max_hamming: int = 3) -> str:
-    """DuckDB twin of the image near-dup fixture: restates the
-    deterministic pixel gradient, the 9×8 cell pooling (pixel →
-    cell by ``x*GW // W``), the cross-multiplied mean comparisons,
-    the 64-bit packing (bit 63 → sign), and the Hamming filter —
-    ALL integer arithmetic, so the match is value-exact.  The Spark
-    side must agree through a REAL decode of the encoded PPM/PNG
-    payloads; the banded plan equals this all-pairs answer because 4
-    bands are pigeonhole-complete for Hamming ≤ 3."""
-    from de_spark.ops import multimodal as mm
-
-    w, h, gw, gh = mm.FIX_W, mm.FIX_H, mm.IMG_GRID_W, mm.IMG_GRID_H
-    n, g = mm.FIX_N, mm.FIX_GROUPS
-    return f"""
-        WITH imgs AS (
-          SELECT i AS media_id, i % {g} AS seed,
-                 CASE WHEN i >= {g} AND i < {2 * g} THEN {mm.FIX_DELTA} ELSE 0 END AS delta,
-                 CASE WHEN i >= {2 * g} THEN {mm.FIX_BUMP} ELSE 0 END AS bump
-          FROM generate_series(0, {n - 1}) t(i)
-        ),
-        px AS (
-          SELECT media_id,
-                 (x * {gw}) // {w} AS cx, (y * {gh}) // {h} AS cy,
-                 ((x + 2*y + 11*seed) % 241)
-               + ((2*x + y + 17*seed) % 241)
-               + ((x + y + 29*seed) % 241)
-               + 3 * delta
-               + 3 * (CASE WHEN (x * {gw}) // {w} = {mm.FIX_PATCH_CX}
-                            AND (y * {gh}) // {h} = {mm.FIX_PATCH_CY}
-                           THEN bump ELSE 0 END) AS gs
-          FROM imgs,
-               generate_series(0, {w - 1}) tx(x),
-               generate_series(0, {h - 1}) ty(y)
-        ),
-        cells AS (
-          SELECT media_id, cy, cx, SUM(gs) AS s, COUNT(*) AS c
-          FROM px GROUP BY media_id, cy, cx
-        ),
-        bits AS (
-          SELECT l.media_id, l.cy * {gw - 1} + l.cx AS i,
-                 CASE WHEN l.s * r.c > r.s * l.c THEN 1 ELSE 0 END AS bit
-          FROM cells l
-          JOIN cells r ON r.media_id = l.media_id
-                      AND r.cy = l.cy AND r.cx = l.cx + 1
-        ),
-        hashes AS (
-          SELECT media_id,
-                 SUM(CASE WHEN bit = 0 THEN 0
-                          WHEN i = 63 THEN -9223372036854775808
-                          ELSE (1::BIGINT << i::INT) END)::BIGINT AS dhash
-          FROM bits GROUP BY media_id
-        )
-        SELECT a.media_id AS a, b.media_id AS b,
-               bit_count(xor(a.dhash, b.dhash))::INT AS hamming
-        FROM hashes a JOIN hashes b ON a.media_id < b.media_id
-        WHERE bit_count(xor(a.dhash, b.dhash)) <= {max_hamming}
-    """
-
-
-def _audio_neardup_oracle(max_hamming: int = 3) -> str:
-    """DuckDB twin of the audio near-dup fixture: restates the
-    deterministic sample sawtooth, the 65-cell time pooling (sample →
-    cell by ``idx*CELLS // n``), the cross-multiplied mean
-    comparisons, the 64-bit packing (bit 63 → sign), and the Hamming
-    filter — ALL integer arithmetic, value-exact.  The Spark side
-    must agree through a REAL decode of the encoded PCM WAV payloads."""
-    from de_spark.ops import multimodal as mm
-
-    cells, n, g = mm.AUD_CELLS, mm.AFIX_SAMPLES, mm.AFIX_GROUPS
-    return f"""
-        WITH auds AS (
-          SELECT i AS media_id, i % {g} AS seed,
-                 CASE WHEN i >= {g} AND i < {2 * g} THEN {mm.AFIX_DELTA} ELSE 0 END AS delta,
-                 CASE WHEN i >= {2 * g} THEN {mm.AFIX_BUMP} ELSE 0 END AS bump
-          FROM generate_series(0, {mm.AFIX_N - 1}) t(i)
-        ),
-        smp AS (
-          SELECT media_id,
-                 (idx * {cells}) // {n} AS cell,
-                 (3 * idx + 11 * seed) % {mm.AFIX_MOD} + delta
-               + (CASE WHEN (idx * {cells}) // {n} = {mm.AFIX_PATCH_CELL}
-                       THEN bump ELSE 0 END) AS v
-          FROM auds, generate_series(0, {n - 1}) ti(idx)
-        ),
-        cells AS (
-          SELECT media_id, cell, SUM(v) AS s, COUNT(*) AS c
-          FROM smp GROUP BY media_id, cell
-        ),
-        bits AS (
-          SELECT l.media_id, l.cell AS i,
-                 CASE WHEN l.s * r.c > r.s * l.c THEN 1 ELSE 0 END AS bit
-          FROM cells l
-          JOIN cells r ON r.media_id = l.media_id AND r.cell = l.cell + 1
-        ),
-        hashes AS (
-          SELECT media_id,
-                 SUM(CASE WHEN bit = 0 THEN 0
-                          WHEN i = 63 THEN -9223372036854775808
-                          ELSE (1::BIGINT << i::INT) END)::BIGINT AS ahash
-          FROM bits GROUP BY media_id
-        )
-        SELECT a.media_id AS a, b.media_id AS b,
-               bit_count(xor(a.ahash, b.ahash))::INT AS hamming
-        FROM hashes a JOIN hashes b ON a.media_id < b.media_id
-        WHERE bit_count(xor(a.ahash, b.ahash)) <= {max_hamming}
-    """
-
-
-def _lsh_topk_oracle(k: int = 20, n_planes: int = 6, n_tables: int = 4, seed: int = 42) -> str:
-    """Sign-projection LSH is fully deterministic given the plane
-    literals — restated in SQL with the same fixed hyperplanes, the
-    same per-table buckets and the same hamming≤1 multiprobe."""
-    from de_spark.ops.similarity import _table_planes
-
-    def bucket(vec: str, planes) -> str:
-        bits = [
-            f"(CASE WHEN list_dot_product({vec}, "
-            + "[" + ", ".join(repr(float(x)) for x in p) + "]::DOUBLE[]"
-            + f") >= 0 THEN {2**i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        ]
-        return "(" + " + ".join(bits) + ")"
-
-    tables = _table_planes(64, n_planes, n_tables, seed)
-    sel = ", ".join(
-        f"{bucket('ee', pl)} AS b{t}, {bucket('qe', pl)} AS qb{t}"
-        for t, pl in enumerate(tables)
-    )
-    cond = " OR ".join(
-        f"bit_count(xor(b{t}::BIGINT, qb{t}::BIGINT)) <= 1" for t in range(n_tables)
-    )
-    return f"""
-        WITH q AS (SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0),
-        sigs AS (
-          SELECT e.vec_id, e.embedding::DOUBLE[] AS ee, q.qe AS qe, {sel}
-          FROM embeddings e, q
-        )
-        SELECT vec_id, round(list_cosine_similarity(ee, qe), 6) AS cosine
-        FROM sigs WHERE {cond}
-        ORDER BY cosine DESC, vec_id ASC LIMIT {k}
-    """
-
-
-_EN = r"\b(the|and|of|is)\b"
-_ES = r"\b(el|la|los|que)\b"
-_DE = r"\b(der|die|und|nicht)\b"
-_FR = r"\b(le|les|des|est)\b"
-_SUBTOK = r"[a-zA-Z]+|[0-9]+|[^\sa-zA-Z0-9]"
-# SQL string literal: the single quote in the char class is doubled
-_PUNCT_KEEP = "[^.,;:!?''\"()\\[\\]{}-]"
-
-
 def oracle_sql() -> dict[str, str]:
-    tok = r"regexp_split_to_array(trim(text), '\s+')"
-    ntok = f"CASE WHEN trim(text)='' THEN 0 ELSE len({tok}) END"
-    marker = "len(regexp_extract_all(lower(text), '{pat}'))"
-    c_en, c_es, c_de, c_fr = (
-        marker.format(pat=_EN),
-        marker.format(pat=_ES),
-        marker.format(pat=_DE),
-        marker.format(pat=_FR),
-    )
     return {
         "kg_triples_raw": TRIPLES_SQL + "SELECT s, p, o, graph FROM triples",
         "kg_term_uids": TRIPLES_SQL
@@ -1310,237 +690,19 @@ def oracle_sql() -> dict[str, str]:
                    || '"^^<{_XSD}integer>' AS mx
         FROM documents GROUP BY lang ORDER BY 1
         """,
-        "q1_pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               round(sum(l_extendedprice), 2) AS sum_base_price,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-               round(avg(l_quantity), 6) AS avg_qty,
-               round(avg(l_discount), 6) AS avg_disc,
-               count(*) AS count_order
-        FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-        """,
-        "q3_shipping_priority": """
-        SELECT l.l_orderkey, o.o_orderdate,
-               round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-        FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-        JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        WHERE c.c_mktsegment = 'BUILDING'
-          AND o.o_orderdate < TIMESTAMP '1998-03-15'
-          AND l.l_shipdate > TIMESTAMP '1996-03-15'
-        GROUP BY l.l_orderkey, o.o_orderdate
-        ORDER BY revenue DESC, l.l_orderkey ASC LIMIT 10
-        """,
-        "q5_region_revenue": """
-        SELECT n_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM region JOIN nation ON r_regionkey = n_regionkey
-        JOIN customer ON n_nationkey = c_nationkey
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON o_orderkey = l_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate < TIMESTAMP '1997-01-01'
-        GROUP BY n_name
-        """,
-        "q14_promo_revenue": """
-        SELECT round(sum(CASE WHEN p_type LIKE 'PROMO%'
-                              THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)
-                     * 100.0 / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_revenue_pct,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        WHERE l_shipdate >= TIMESTAMP '1996-09-01'
-          AND l_shipdate < TIMESTAMP '1996-10-01'
-        """,
-        "top10_orders": """
-        SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
-        """,
-        "distinct_flag_status": "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-        "cust_order_counts_left": """
-        SELECT c.c_custkey, c.c_name, count(o.o_orderkey) AS n_orders
-        FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        GROUP BY c.c_custkey, c.c_name
-        """,
-        "cust_with_orders_semi": """
-        SELECT c_custkey, c_name FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        """,
-        "cust_without_orders_anti": """
-        SELECT c_custkey, c_name FROM customer c
-        WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        """,
-        "events_union": """
-        SELECT event_id, event_type FROM events WHERE event_type = 'click'
-        UNION ALL
-        SELECT event_id, event_type FROM events WHERE event_type = 'error'
-        """,
-        "events_agg_by_type": """
-        SELECT event_type, count(*) AS n,
-               round(sum(value), 2) AS sum_value,
-               round(avg(value), 6) AS avg_value
-        FROM events GROUP BY event_type
-        """,
-        "events_latest_per_user": """
-        SELECT user_id, event_id, event_type FROM (
-          SELECT user_id, event_id, event_type,
-                 row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events
-        ) WHERE rn = 1
-        """,
-        # Spark F.window tumbling starts are epoch-aligned, same as
-        # time_bucket for a 1-hour bucket
-        "events_windowed_rates": """
-        SELECT time_bucket(INTERVAL '1 hour', ts) AS win_start,
-               event_type,
-               count(*) AS n,
-               round(sum(value), 2) AS total
-        FROM events GROUP BY 1, 2
-        """,
-        "text_analyze": f"""
-        SELECT doc_id,
-               ({ntok})::BIGINT AS n_tokens,
-               len(regexp_extract_all(text, '{_SUBTOK}'))::BIGINT AS n_subtokens,
-               round(CASE WHEN length(text) = 0 THEN 0.0
-                    ELSE length(regexp_replace(text, '{_PUNCT_KEEP}', '', 'g'))::DOUBLE / length(text) END, 6) AS punct_ratio,
-               round(CASE WHEN ({ntok}) = 0 THEN 0.0
-                    ELSE ({c_en})::DOUBLE / ({ntok}) END, 6) AS stopword_ratio,
-               round(((CASE WHEN length(text) BETWEEN 50 AND 20000 THEN 1.0
-                            WHEN length(text) > 0 THEN 0.5 ELSE 0.0 END)
-                    + (CASE WHEN (CASE WHEN length(text) = 0 THEN 0.0
-                          ELSE length(regexp_replace(text, '{_PUNCT_KEEP}', '', 'g'))::DOUBLE / length(text) END) < 0.2
-                          THEN 1.0 ELSE 0.5 END)
-                    + (CASE WHEN (CASE WHEN ({ntok}) = 0 THEN 0.0
-                          ELSE ({c_en})::DOUBLE / ({ntok}) END) > 0.01 THEN 1.0 ELSE 0.5 END)
-               ) / 3.0, 6) AS quality,
-               CASE WHEN ({c_en}) = 0 AND ({c_es}) = 0 AND ({c_de}) = 0 AND ({c_fr}) = 0 THEN 'unknown'
-                    WHEN ({c_en}) >= ({c_es}) AND ({c_en}) >= ({c_de}) AND ({c_en}) >= ({c_fr}) THEN 'en'
-                    WHEN ({c_es}) >= ({c_de}) AND ({c_es}) >= ({c_fr}) THEN 'es'
-                    WHEN ({c_de}) >= ({c_fr}) THEN 'de'
-                    ELSE 'fr' END AS lang_pred,
-               md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-        FROM documents
-        """,
-        # sequential redaction stages restated 1:1 (replacement tokens
-        # contain no digits/@, so staging order is well-defined); the
-        # regex subset is RE2/Java-compatible (no backrefs/lookaround)
-        "text_scrub_pii": r"""
-        WITH aug AS (
-          SELECT doc_id,
-                 text || ' mail user' || doc_id::VARCHAR || '@example.com'
-                      || ' host 10.' || (doc_id % 256)::VARCHAR
-                      || '.0.' || (doc_id % 100)::VARCHAR
-                      || ' acct 12345678' || doc_id::VARCHAR || ' end' AS t
-          FROM documents
-        ),
-        s1 AS (
-          SELECT doc_id,
-                 len(regexp_split_to_array(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) - 1 AS c1,
-                 regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g') AS t
-          FROM aug
-        ),
-        s2 AS (
-          SELECT doc_id, c1,
-                 len(regexp_split_to_array(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) - 1 AS c2,
-                 regexp_replace(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g') AS t
-          FROM s1
-        ),
-        s3 AS (
-          SELECT doc_id, c1, c2,
-                 len(regexp_split_to_array(t, '\d{9,}')) - 1 AS c3,
-                 regexp_replace(t, '\d{9,}', '[NUM]', 'g') AS t
-          FROM s2
-        )
-        SELECT doc_id, t AS clean_text, (c1 + c2 + c3)::BIGINT AS n_redactions
-        FROM s3
-        """,
-        "text_chunk_docs": r"""
-        WITH toks AS (
-          SELECT doc_id,
-                 CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-                      ELSE regexp_split_to_array(trim(text), '\s+') END AS t
-          FROM documents
-        ),
-        c AS (
-          SELECT doc_id, t,
-                 unnest(range(0, (len(t) - 1) // 24 + 1)) AS chunk_id
-          FROM toks WHERE len(t) > 0
-        )
-        SELECT doc_id, chunk_id::BIGINT AS chunk_id,
-               array_to_string(t[chunk_id*24+1 : chunk_id*24+32], ' ') AS chunk_text,
-               len(t[chunk_id*24+1 : chunk_id*24+32])::BIGINT AS n_tokens
-        FROM c
-        """,
-        "sample_mix_by_lang": f"""
-        SELECT doc_id, lang FROM documents
-        WHERE ({_ph_sql("'7' || chr(31) || doc_id::VARCHAR")} % 1000000) <
-              CASE lang WHEN 'en' THEN 500000 WHEN 'es' THEN 250000
-                        WHEN 'de' THEN 100000 ELSE 0 END
-        """,
-        "dedup_exact_docs": """
-        SELECT min(doc_id) AS doc_id, sha256(text) AS content_hash,
-               count(*) AS n_copies
-        FROM documents GROUP BY sha256(text)
-        """,
-        "dedup_jaccard_pairs": r"""
-        WITH tok AS (
-          SELECT DISTINCT doc_id,
-                 unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-          FROM documents
-        ),
-        tok2 AS (SELECT doc_id, tok FROM tok WHERE tok != ''),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM tok2 GROUP BY doc_id),
-        common AS (
-          SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS common
-          FROM tok2 x JOIN tok2 y ON x.tok = y.tok AND x.doc_id < y.doc_id
-          GROUP BY x.doc_id, y.doc_id
-        )
-        SELECT a, b,
-               round(common::DOUBLE / (sa.sz + sb.sz - common), 6) AS jaccard
-        FROM common
-        JOIN sizes sa ON common.a = sa.doc_id
-        JOIN sizes sb ON common.b = sb.doc_id
-        WHERE round(common::DOUBLE / (sa.sz + sb.sz - common), 6) >= 0.5
-        """,
-        "embedding_neardup": """
-        SELECT x.vec_id AS a, y.vec_id AS b,
-               round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 6) AS cosine
-        FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-        WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 6) >= 0.4
-        """,
-        "dedup_canonical_vecs": """
-        WITH RECURSIVE pairs AS (
-          SELECT x.vec_id AS a, y.vec_id AS b
-          FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-          WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 6) >= 0.4
-        ),
-        und AS (SELECT a AS x, b AS y FROM pairs UNION SELECT b, a FROM pairs),
-        nodes AS (SELECT DISTINCT x FROM und),
-        reach(src, dst) AS (
-          SELECT x, x FROM nodes
-          UNION
-          SELECT r.src, u.y FROM reach r JOIN und u ON r.dst = u.x
-        )
-        SELECT src AS doc_id, min(dst) AS canon_id FROM reach GROUP BY src
-        """,
-        "ann_cosine_topk": """
-        SELECT e.vec_id,
-               round(list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]), 3) AS cosine
-        FROM embeddings e,
-             (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-        ORDER BY cosine DESC, e.vec_id ASC LIMIT 20
-        """,
-        "dedup_minhash_lsh": _minhash_lsh_oracle(),
-        "dedup_simhash": _simhash_oracle(),
-        "image_neardup": _image_neardup_oracle(),
-        "audio_neardup": _audio_neardup_oracle(),
-        "ann_lsh_topk": _lsh_topk_oracle(),
-        # ann_ivf_topk: iterative k-means has no closed-form SQL twin →
-        # golden-parquet oracle (regenerated by tools/make_goldens.py;
-        # the build is deterministic: seeded centroids, round(avg, 9)
-        # Lloyd means, argmax tie-break by list_id).
-        "ann_ivf_topk": (
-            "SELECT * FROM read_parquet('/root/repo/tests/goldens/ann_ivf_topk_sf0.01.parquet')"
-        ),
     }
+
+
+def norm_cell(x) -> str:
+    if isinstance(x, float):
+        if math.isnan(x):
+            return "nan"
+        return f"{x:.9g}"
+    return str(x)
+
+
+def rows_multiset(cols, rows) -> list[tuple[str, ...]]:
+    """The order-insensitive value multiset of a result, columns taken
+    in name order, that a row and its oracle must share."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)

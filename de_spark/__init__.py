@@ -22,10 +22,8 @@ DataFrame stages:
                             result emitters (de query).
 - ``de_spark.store``      — whole-graph add/drop + directory sync (the
                             reference mutation surface, src/serve.rs).
-- ``de_spark.streaming``  — Structured Streaming ingest, streaming
-                            dedup, stateful accumulators.
-- ``de_spark.ops``        — training-data-pipeline operators: dedup,
-                            similarity search, text analysis, multimodal.
+- ``de_spark.docs_kg``    — the KG over the ``documents`` table that the
+                            kg_* rows of ``__spark_entry__`` query.
 """
 
 __version__ = "0.1.0"

@@ -145,11 +145,8 @@ def documents_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KG_CACHE: dict[str, KnowledgeGraph] = {}
-# the .cache()d frames behind each KG, so release can unpersist them
-_KG_CACHED_FRAMES: dict[str, list[DataFrame]] = {}
-# the on-disk artifact dirs backing each KG, removed on release
+# the on-disk artifact dirs backing each KG, removed at process exit
 _KG_ARTIFACT_DIRS: dict[str, str] = {}
-_ATEXIT_REGISTERED = False
 
 
 def documents_kg(spark: SparkSession, sf_dir: str) -> KnowledgeGraph:
@@ -167,10 +164,8 @@ def documents_kg(spark: SparkSession, sf_dir: str) -> KnowledgeGraph:
     every analysis pass, and single-threaded Catalyst time, not data,
     dominated (observed 100s+ per query at sf0.001).
 
-    The cache is deliberate WITHIN a suite of kg_* queries (they share
-    the dictionary/triples); call :func:`release_documents_kg` when a
-    bench/contract run moves on to another sf_dir so executor storage
-    doesn't accumulate across suites (VERDICT r5 item 2)."""
+    The cache is deliberate: every kg_* contract row shares the
+    dictionary/triples of one sf_dir."""
     key = sf_dir.rstrip("/")
     if key in _KG_CACHE:
         return _KG_CACHE[key]
@@ -181,17 +176,15 @@ def documents_kg(spark: SparkSession, sf_dir: str) -> KnowledgeGraph:
 
     # ADVICE r6: artifact root is configurable (on a real multi-node
     # cluster it must be a SHARED filesystem — driver-local /tmp is
-    # only correct in local mode), and leaked dirs are cleaned at
-    # process exit if the caller never calls release_documents_kg.
+    # only correct in local mode); the dirs are removed at process exit.
     out = tempfile.mkdtemp(
         prefix="de_docs_kg_", dir=os.environ.get("DE_SPARK_ARTIFACT_DIR")
     )
-    global _ATEXIT_REGISTERED
-    if not _ATEXIT_REGISTERED:
+    if not _KG_ARTIFACT_DIRS:
         import atexit
 
-        atexit.register(lambda: release_documents_kg(_unpersist=False))
-        _ATEXIT_REGISTERED = True
+        atexit.register(_remove_artifact_dirs)
+    _KG_ARTIFACT_DIRS[key] = out
     loaded, _ = build(documents_triples(spark, sf_dir), out)
     kg = KnowledgeGraph(
         term_uids=loaded.term_uids.cache(),
@@ -201,38 +194,15 @@ def documents_kg(spark: SparkSession, sf_dir: str) -> KnowledgeGraph:
         pred_stats=loaded.pred_stats,
     )
     _KG_CACHE[key] = kg
-    _KG_CACHED_FRAMES[key] = [kg.term_uids, kg.dict_df, kg.triples, kg.stats]
-    _KG_ARTIFACT_DIRS[key] = out
     return kg
 
 
-def release_documents_kg(sf_dir: str | None = None, _unpersist: bool = True) -> int:
-    """Unpersist the cached KG frames for ``sf_dir`` (or every sf_dir
-    when None), remove the backing artifact dir, and forget the KG, so
-    the next documents_kg call rebuilds fresh.  Returns the number of
-    frames released.  ``_unpersist=False`` is the atexit path: the
-    JVM may already be gone, so only the on-disk dirs are removed."""
+def _remove_artifact_dirs() -> None:
+    """atexit: delete the on-disk store behind every documents KG."""
     import shutil
 
-    keys = (
-        [sf_dir.rstrip("/")]
-        if sf_dir is not None
-        else list(_KG_CACHE.keys())
-    )
-    n = 0
-    for key in keys:
-        _KG_CACHE.pop(key, None)
-        for df in _KG_CACHED_FRAMES.pop(key, []):
-            if _unpersist:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-            n += 1
-        d = _KG_ARTIFACT_DIRS.pop(key, None)
-        if d:
-            shutil.rmtree(d, ignore_errors=True)
-    return n
+    for d in _KG_ARTIFACT_DIRS.values():
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # The same extraction as ANSI SQL (DuckDB oracle) — one CTE reused by

@@ -14,8 +14,7 @@ Join strategy at 100 TB:
   broadcast (never shuffles the fact table);
 - s/o joins shuffle on the term string; hub objects (rdf:type targets,
   hot import modules) are exactly the AQE skew-join case —
-  ``spark.sql.adaptive.skewJoin.enabled`` is on in the session factory,
-  and de_spark.ops.skew has an explicit salting fallback.
+  ``spark.sql.adaptive.skewJoin.enabled`` is on in the session factory.
 """
 
 from __future__ import annotations

@@ -118,12 +118,6 @@ class KnowledgeGraph:
             df = kg._bind_const(df, col, term)
         return df
 
-    def pattern_decoded(self, s=None, p=None, o=None, graph=None) -> DataFrame:
-        """pattern() with uids decoded back to term strings."""
-        from de_spark.encode import decode_triples
-
-        return decode_triples(self.pattern(s, p, o, graph), self.term_uids)
-
     # -- term decode (J4 decode side) ----------------------------------------
 
     def decode_vars(self, solutions: DataFrame, var_cols: list[str]) -> DataFrame:

@@ -5,7 +5,7 @@ The reference delegates SPARQL 1.1 evaluation to oxigraph's spareval
 de_spark.query.parser compiles to DataFrame operators:
 
 - BGP            → de_spark.query.bgp.compile_bgp (uid joins,
-                   selectivity-ordered, AQE/salting underneath)
+                   selectivity-ordered, AQE skew join underneath)
 - Join           → inner join on shared vars (cross join when none)
 - OPTIONAL       → left outer join; filters inside the OPTIONAL
                    scope apply to the right side, and filters that

@@ -90,8 +90,8 @@ def _recover_pending(base_dir: str) -> None:
     the staging dir goes too.  The marker is written once the staged
     build is complete (before it the store itself is untouched) and its
     removal is the COMMIT POINT — a crash anywhere before it rolls the
-    store back to the pre-add snapshot, so a replayed streaming batch
-    re-runs ``add_graph`` against clean state instead of duplicating
+    store back to the pre-add snapshot, so a LOAD / INSERT DATA that is
+    re-run after the crash finds clean state and adds no duplicate
     dict/triples rows."""
     marker = f"{base_dir}/{_PENDING}"
     if not os.path.exists(marker):
@@ -125,7 +125,7 @@ def add_graph(spark: SparkSession, base_dir: str, triples_raw: DataFrame) -> Non
     triples_raw and every ``_manifest.json`` / ``_SUCCESS`` stay
     behind).  The publish is journaled: a write-ahead marker + file
     manifest makes a torn add roll back on the next mutation (see
-    ``_recover_pending``), so foreachBatch replays are exactly-once.
+    ``_recover_pending``), so a re-run add finds clean state.
     """
     _recover_pending(base_dir)
     staging = f"{base_dir}/{_STAGING}"

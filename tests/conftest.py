@@ -7,7 +7,7 @@ from de_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # small parallelism for test latency; scale knobs are exercised in bench
+    # small parallelism for test latency; perfbench measures at its own settings
     s = get_spark("de_spark_tests", cpus=8, shuffle_partitions=8)
     yield s
 
