@@ -1,7 +1,7 @@
 """Training-data pipeline operators beyond the reference's surface:
-deduplication, similarity search, text analysis, multimodal plumbing,
-and skew-handling utilities (see repo brief: first-class components
-alongside SURVEY.md §2)."""
+deduplication, similarity search, text analysis and skew-handling
+utilities (see repo brief: first-class components alongside SURVEY.md
+§2)."""
 
 from pyspark.sql import DataFrame
 
@@ -11,9 +11,8 @@ from pyspark.sql import DataFrame
 # assignments, dedup-component labels — must not accumulate unreleased
 # executor storage).  Operators register the frames they persist when
 # the caller doesn't take ownership via a ``handles`` list; callers
-# (the contract surface, bench) call release_operator_caches() once
-# the previous result is materialized, so at most one invocation's
-# caches are live at a time.
+# call release_operator_caches() once the previous result is
+# materialized, so at most one invocation's caches are live at a time.
 # ---------------------------------------------------------------------------
 
 _SESSION_CACHES: list[DataFrame] = []

@@ -272,8 +272,7 @@ def minhash_lsh_pairs(
         handles.append(sigs)
     else:
         # no owning caller: track in the session registry so the next
-        # release_operator_caches() frees it (ADVICE r5 — the contract
-        # path leaked one cache entry per invocation)
+        # release_operator_caches() frees it
         register_operator_cache(sigs)
     banded = sigs.select("doc_id", band_cols).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
@@ -483,9 +482,9 @@ def embedding_neardup_lsh(
     Parameter guidance: at production thresholds (≥0.9, angle ≤26°) the
     per-plane collision rate is ≥0.85 and the defaults give tight
     buckets with ~1e-4 miss/pair.  For aggressive low thresholds the
-    probe set must widen (the contract entry uses n_planes=4,
-    n_tables=10, hamming≤2 to hash-match the exact oracle at
-    threshold 0.4: per-table hit 0.85, miss ≈ 4e-9/pair).
+    probe set must widen (n_planes=4, n_tables=10, hamming≤2
+    hash-match the exact pair set at threshold 0.4: per-table hit
+    0.85, miss ≈ 4e-9/pair).
     """
     from de_spark.ops.similarity import _cosine, multi_table_signatures
 

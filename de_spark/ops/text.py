@@ -3,8 +3,7 @@
 token counting, fingerprinting.
 
 All pure Catalyst column expressions — JVM-side, whole-stage codegen,
-no UDFs — so they run at scan speed and push projections down.  Each
-has an ANSI-SQL twin in __spark_entry__.oracle_sql().
+no UDFs — so they run at scan speed and push projections down.
 """
 
 from __future__ import annotations
@@ -180,9 +179,8 @@ def chunk_documents(
     by ``chunk_tokens - overlap``.  Pure Catalyst (split + sequence +
     explode + slice) — no UDF, no shuffle beyond the parent scan, and
     output partitioning follows the input so a downstream tokenizer
-    or dedup stage reads co-located chunks.  Deterministic: the
-    DuckDB twin in __spark_entry__.oracle_sql() restates the same
-    window arithmetic.  Empty documents produce no chunks."""
+    or dedup stage reads co-located chunks.  Deterministic.  Empty
+    documents produce no chunks."""
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     step = chunk_tokens - overlap

@@ -1,10 +1,10 @@
 """Tests for training-data ops: text analysis, dedup family,
-similarity search, multimodal plumbing, skew utilities."""
+similarity search, skew utilities."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from de_spark.ops import dedup, multimodal, similarity, skew, text
+from de_spark.ops import dedup, similarity, skew, text
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -169,83 +169,6 @@ def test_pairwise_topk(embeddings):
     assert all(r["count"] == 3 for r in counts)
 
 
-# ----------------------------------------------------------- multimodal ----
-
-
-def test_multimodal_features(spark):
-    media = multimodal.synthetic_media(spark, n=12)
-    feats = multimodal.extract_features(media).collect()
-    assert len(feats) == 12
-    assert all(len(r["feature"]) == 8 and r["decode_ok"] for r in feats)
-    # deterministic
-    again = multimodal.extract_features(multimodal.synthetic_media(spark, n=12)).collect()
-    assert {r["media_id"]: list(r["feature"]) for r in feats} == {
-        r["media_id"]: list(r["feature"]) for r in again
-    }
-
-
-def test_multimodal_strict_raises_on_video_only(spark):
-    media = multimodal.synthetic_media(spark, n=9)
-    # video payloads need ffmpeg → strict mode raises …
-    with pytest.raises(Exception):
-        multimodal.extract_features(media, strict=True).collect()
-    # … but images + audio decode FOR REAL even in strict mode
-    ia = media.where(F.col("kind") != "video")
-    rows = multimodal.extract_features(ia, strict=True).collect()
-    assert len(rows) == ia.count() and all(r["decode_ok"] for r in rows)
-
-
-def test_multimodal_real_codecs_roundtrip():
-    import numpy as np
-
-    from de_spark.ops.multimodal import decode_ppm, decode_wav, make_ppm, make_wav
-
-    w, h, arr = decode_ppm(make_ppm(32, 16, seed=5))
-    assert (w, h, arr.shape) == (32, 16, (16, 32, 3))
-    # pixel content is the seeded gradient, not noise
-    assert int(arr[0, 1, 0]) - int(arr[0, 0, 0]) == 1
-
-    rate, s = decode_wav(make_wav(500, freq_hz=440.0))
-    assert rate == 8000 and len(s) == 4000
-    # a 0.5-amplitude sine has RMS ≈ 0.5/√2
-    assert abs(float(np.sqrt(np.mean(s**2))) - 0.3536) < 0.01
-
-
-def test_multimodal_features_reflect_content(spark):
-    from de_spark.ops.multimodal import MEDIA_SCHEMA, make_ppm
-
-    red = b"P6\n4 4\n255\n" + bytes([255, 0, 0]) * 16
-    blue = b"P6\n4 4\n255\n" + bytes([0, 0, 255]) * 16
-    rows = [
-        (1, "image", "image/x-portable-pixmap", bytearray(red), 4, 4, None),
-        (2, "image", "image/x-portable-pixmap", bytearray(blue), 4, 4, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r["media_id"]: r["feature"] for r in multimodal.extract_features(media).collect()}
-    assert feats[1][0] > 0.99 and feats[1][2] < 0.01  # red image: R high, B low
-    assert feats[2][0] < 0.01 and feats[2][2] > 0.99  # blue image: the reverse
-
-
-def test_frame_sampling(spark):
-    media = multimodal.synthetic_media(spark, n=9)
-    frames = multimodal.sample_frames(media, every_ms=5000)
-    rows = frames.collect()
-    assert rows and all(r["ts_ms"] % 5000 == 0 for r in rows)
-    vid = media.where(F.col("kind") == "video").collect()[0]
-    expect = len(range(0, vid["duration_ms"], 5000))
-    got = frames.where(F.col("media_id") == vid["media_id"]).count()
-    assert got == expect
-
-
-def test_resize_plan(spark):
-    media = multimodal.synthetic_media(spark, n=9)
-    plan = multimodal.resize_plan(media, max_side=100).collect()
-    for r in plan:
-        assert max(r["out_width"], r["out_height"]) <= 100
-        # aspect ratio preserved within rounding
-        assert abs(r["out_width"] / r["out_height"] - r["width"] / r["height"]) < 0.1
-
-
 # ----------------------------------------------------------------- skew ----
 
 
@@ -267,7 +190,7 @@ def test_salted_join_spreads_hot_key(spark):
 
 
 def test_embedding_neardup_lsh_matches_bruteforce(embeddings):
-    """The bucketed near-dup path (contract params) must reproduce the
+    """The bucketed near-dup path (n_planes=4) must reproduce the
     brute-force pair set exactly — false positives are impossible by
     construction; misses are ~4e-9/pair at these probe params."""
     exact = {
@@ -327,64 +250,6 @@ def test_ivf_topk_recall(embeddings):
     assert approx[0] == 3
 
 
-def test_png_roundtrip_all_filters():
-    """VERDICT r2 item 4: real PNG decode (zlib inflate + all five
-    per-row filters) — the encoder cycles filter types per row, so a
-    correct decoder must reconstruct None/Sub/Up/Average/Paeth."""
-    import numpy as np
-
-    from de_spark.ops.multimodal import _gradient, decode_png, make_png
-
-    for w, h, seed in [(64, 48, 0), (17, 23, 5), (1, 1, 3)]:
-        W, H, arr = decode_png(make_png(w, h, seed))
-        assert (W, H) == (w, h)
-        assert np.array_equal(arr, _gradient(w, h, seed))
-
-
-def test_png_gray_and_rgba_normalize_to_rgb():
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from de_spark.ops.multimodal import PNG_SIG, _png_chunk, decode_png
-
-    def png_of(arr, color):
-        h, w = arr.shape[:2]
-        raw = b"".join(b"\x00" + arr[y].tobytes() for y in range(h))
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-        return (
-            PNG_SIG
-            + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(raw))
-            + _png_chunk(b"IEND", b"")
-        )
-
-    g = np.arange(12, dtype=np.uint8).reshape(3, 4)
-    _, _, arr = decode_png(png_of(g, 0))
-    assert arr.shape == (3, 4, 3) and np.array_equal(arr[..., 0], g)
-    rgba = np.arange(48, dtype=np.uint8).reshape(3, 4, 4)
-    _, _, arr = decode_png(png_of(rgba, 6))
-    assert np.array_equal(arr, rgba[..., :3])
-
-
-def test_multimodal_png_features_reflect_content(spark):
-    """PNG payloads take the REAL decode path in strict mode (no fake
-    fallback) and produce the same features as the equivalent PPM."""
-    from de_spark.ops.multimodal import MEDIA_SCHEMA, make_png, make_ppm
-
-    rows = [
-        (1, "image", "image/png", bytearray(make_png(32, 20, seed=4)), 32, 20, None),
-        (2, "image", "image/x-portable-pixmap", bytearray(make_ppm(32, 20, seed=4)), 32, 20, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {
-        r["media_id"]: r["feature"]
-        for r in multimodal.extract_features(media, strict=True).collect()
-    }
-    assert feats[1] == feats[2]  # identical pixels → identical features
-
-
 def test_chunk_documents(spark):
     docs = spark.createDataFrame(
         [
@@ -432,31 +297,6 @@ def test_sample_stratified_deterministic(spark):
     # different seed → different sample
     c = sorted(r["doc_id"] for r in text.sample_stratified(docs, {"en": 0.5, "es": 0.2}, seed=8).collect())
     assert c != ra
-
-
-def test_gif_roundtrip_and_features(spark):
-    """Real GIF decode kernel: make_gif's LZW stream decodes back to
-    the exact palette-mapped pixels, and image features route GIF
-    payloads through the real decoder in strict mode."""
-    import numpy as np
-
-    from de_spark.ops.multimodal import _gif_palette, decode_gif, make_gif
-
-    g = make_gif(13, 7, seed=3)
-    w, h, arr = decode_gif(g)
-    idx = ((np.add.outer(np.arange(7), np.arange(13)) * 7 + 3) % 256).astype(np.uint8)
-    assert (w, h) == (13, 7)
-    assert (arr == _gif_palette()[idx.astype(np.int32)]).all()
-
-    media = spark.createDataFrame(
-        [(1, "image", "image/gif", bytearray(g), 13, 7, None)],
-        multimodal.MEDIA_SCHEMA,
-    )
-    row = multimodal.extract_features(media, strict=True).collect()[0]
-    assert row["decode_ok"] and len(row["feature"]) == 8
-    # features come from the REAL pixels: mean of channel 0 matches
-    exp = float(_gif_palette()[idx.astype(np.int32)][..., 0].mean() / 255.0)
-    assert abs(row["feature"][0] - exp) < 1e-5
 
 
 def test_scrub_pii(spark):
@@ -538,235 +378,3 @@ def test_minhash_dense_bucket_star_sparsification(spark):
     clique = dedup.minhash_lsh_pairs(df, num_hashes=32, bands=8, threshold=0.9)
     assert len(clique.collect()) == 435
 
-
-def test_image_dhash_format_agnostic_and_real_decode(spark):
-    """The perceptual hash goes through a REAL decode: the same pixel
-    array encoded as PPM and as PNG yields the same dHash, and the
-    hash equals the pure-numpy reference on the decoded pixels."""
-    from de_spark.ops.multimodal import (
-        MEDIA_SCHEMA, _dhash_from_pixels, encode_png, encode_ppm, fixture_pixels,
-    )
-
-    arr = fixture_pixels(seed=4, delta=0, bump=0)
-    media = spark.createDataFrame(
-        [
-            (0, "image", "image/x-portable-pixmap", bytearray(encode_ppm(arr)), 72, 64, None),
-            (1, "image", "image/png", bytearray(encode_png(arr)), 72, 64, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    got = {r["media_id"]: r["dhash"] for r in multimodal.image_dhash(media).collect()}
-    assert got[0] == got[1] == _dhash_from_pixels(arr)
-
-
-def test_image_neardup_seeded_perturbations_recall(spark):
-    """Recall on seeded perturbations (VERDICT r5 item 5): every
-    brightened copy (Hamming 0) and every patched copy (Hamming ≤ 2)
-    must pair with its original through the BANDED plan, which for
-    Hamming ≤ 3 equals the brute-force all-pairs answer (4 bands are
-    pigeonhole-complete)."""
-    from de_spark.ops.multimodal import (
-        FIX_GROUPS, _dhash_from_pixels, fixture_pixels, image_fixture_media,
-    )
-
-    media = image_fixture_media(spark)
-    pairs = {(r["a"], r["b"]): r["hamming"]
-             for r in multimodal.image_neardup_pairs(media, max_hamming=3).collect()}
-    for s in range(FIX_GROUPS):
-        assert pairs[(s, s + FIX_GROUPS)] == 0          # uniform brightness
-        assert pairs[(s, s + 2 * FIX_GROUPS)] <= 2      # one-cell patch
-    # banded == brute force on the fixture
-    hs = {}
-    for i in range(3 * FIX_GROUPS):
-        seed = i % FIX_GROUPS
-        delta = 5 if FIX_GROUPS <= i < 2 * FIX_GROUPS else 0
-        bump = 12 if i >= 2 * FIX_GROUPS else 0
-        hs[i] = _dhash_from_pixels(fixture_pixels(seed, delta, bump))
-
-    def ham(a, b):
-        return bin((hs[a] ^ hs[b]) & (2 ** 64 - 1)).count("1")
-
-    brute = {
-        (a, b): ham(a, b)
-        for a in range(3 * FIX_GROUPS)
-        for b in range(a + 1, 3 * FIX_GROUPS)
-        if ham(a, b) <= 3
-    }
-    assert pairs == brute
-
-
-def test_image_neardup_dense_bucket_star(spark):
-    """Mass-duplicated images (one payload, many ids) would make the
-    band self-join quadratic; over the cap the plan switches to
-    representative-star candidates — O(width), connectivity kept,
-    reported not silent."""
-    from de_spark.ops.multimodal import MEDIA_SCHEMA, encode_ppm, fixture_pixels
-
-    payload = bytearray(encode_ppm(fixture_pixels(seed=1)))
-    other = bytearray(encode_ppm(fixture_pixels(seed=7)))
-    rows = [(i, "image", "image/x-portable-pixmap", payload, 72, 64, None)
-            for i in range(20)]
-    rows.append((99, "image", "image/x-portable-pixmap", other, 72, 64, None))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    report = {}
-    pairs = multimodal.image_neardup_pairs(
-        media, max_hamming=3, dense_bucket_cap=8, dense_report=report
-    ).collect()
-    assert report["max_bucket"] == 20 and report["docs_in_dense"] == 20
-    # star: every spoke pairs with media_id 0, never C(20,2)=190 rows
-    assert 0 < len(pairs) <= 19
-    assert all(r["a"] == 0 and r["hamming"] == 0 for r in pairs)
-    assert {r["b"] for r in pairs} == set(range(1, 20))
-
-
-def test_audio_envelope_hash_gain_invariant_and_real_decode(spark):
-    """The envelope hash must come through a REAL PCM WAV decode and
-    be gain-invariant by construction (a uniform +delta adds
-    delta*c_l*c_r to both sides of every cross-multiplied cell
-    comparison)."""
-    import pytest
-
-    from de_spark.ops.multimodal import (
-        AFIX_DELTA, MEDIA_SCHEMA, _envelope_hash_from_samples, audio_fixture_media,
-        encode_wav, fixture_samples,
-    )
-
-    media = audio_fixture_media(spark)
-    got = {r["media_id"]: r["ahash"] for r in multimodal.audio_ahash(media).collect()}
-    assert got[0] == _envelope_hash_from_samples(fixture_samples(0))
-    assert got[10] == got[0]  # +AFIX_DELTA gain copy → identical hash
-    assert _envelope_hash_from_samples(
-        fixture_samples(3, delta=AFIX_DELTA)
-    ) == _envelope_hash_from_samples(fixture_samples(3))
-    # strict mode refuses non-WAV audio loudly (no ffmpeg in container)
-    bad = spark.createDataFrame(
-        [(0, "audio", "audio/mpeg", bytearray(b"ID3fakempeg"), None, None, 1000)],
-        MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="ffmpeg"):
-        multimodal.audio_ahash(bad, strict=True).collect()
-    assert multimodal.audio_ahash(bad, strict=False).count() == 0
-    # multi-channel decode: stereo of the same signal → same envelope
-    s = fixture_samples(2)
-    import io as _io
-    import wave as _wave
-
-    import numpy as _np
-
-    buf = _io.BytesIO()
-    with _wave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(_np.repeat(s, 2).astype(_np.int16).tobytes())
-    stereo = spark.createDataFrame(
-        [(7, "audio", "audio/wav", bytearray(buf.getvalue()), None, None, 250)],
-        MEDIA_SCHEMA,
-    )
-    assert multimodal.audio_ahash(stereo).collect()[0]["ahash"] == got[2]
-
-
-def test_audio_lenient_skips_corrupt_riff(spark):
-    """ADVICE r6: strict=False must skip a corrupt/truncated RIFF
-    payload (which sniffs as WAV but fails decode) instead of killing
-    the job; strict=True still raises."""
-    import pytest
-
-    from de_spark.ops.multimodal import MEDIA_SCHEMA, encode_wav, fixture_samples
-
-    good = encode_wav(fixture_samples(1))
-    corrupt = b"RIFF\x10\x00\x00\x00WAVEgarbage-no-fmt-chunk"
-    media = spark.createDataFrame(
-        [
-            (0, "audio", "audio/wav", bytearray(good), None, None, 250),
-            (1, "audio", "audio/wav", bytearray(corrupt), None, None, 250),
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = multimodal.audio_ahash(media, strict=False).collect()
-    assert [r["media_id"] for r in rows] == [0]
-    with pytest.raises(Exception):
-        multimodal.audio_ahash(media, strict=True).collect()
-
-
-def test_envelope_hash_no_int64_wrap():
-    """ADVICE r6: the cross-multiplied cell comparison must not wrap
-    int64 for long, loud clips — the guarded path must agree with
-    exact arbitrary-precision arithmetic."""
-    import numpy as np
-
-    from de_spark.ops.multimodal import AUD_CELLS, _envelope_hash_from_samples
-
-    # adversarial: huge constant amplitude so sum*cnt would overflow
-    n = AUD_CELLS * 3
-    samples = np.full(n, 30000, dtype=np.int64)
-    # scale sums up by pretending very long cells: repeat each sample
-    samples = np.repeat(samples, 1, axis=0)
-    big = np.tile(np.array([30000] * n, dtype=np.int64), 1)
-    got = _envelope_hash_from_samples(big)
-    # exact reference in Python ints
-    cell = (np.arange(n, dtype=np.int64) * AUD_CELLS) // n
-    sums = [0] * AUD_CELLS
-    cnts = [0] * AUD_CELLS
-    for c, v in zip(cell.tolist(), big.tolist()):
-        sums[c] += v
-        cnts[c] += 1
-    val = 0
-    for i in range(AUD_CELLS - 1):
-        if sums[i] * cnts[i + 1] > sums[i + 1] * cnts[i]:
-            val |= 1 << i
-    want = val - (1 << 64) if val >= (1 << 63) else val
-    assert got == want
-    # force the arbitrary-precision branch: amplitudes near 2^40 per
-    # cell would wrap sums[i]*cnts[i+1] in int64 if cnts were ~2^23 —
-    # emulate with synthetic giant sums via many samples per cell
-    m = AUD_CELLS * 7
-    ramp = (np.arange(m, dtype=np.int64) % 32768) * 281_474
-    got2 = _envelope_hash_from_samples(ramp)
-    cell2 = (np.arange(m, dtype=np.int64) * AUD_CELLS) // m
-    sums2 = [0] * AUD_CELLS
-    cnts2 = [0] * AUD_CELLS
-    for c, v in zip(cell2.tolist(), ramp.tolist()):
-        sums2[c] += v
-        cnts2[c] += 1
-    val2 = 0
-    for i in range(AUD_CELLS - 1):
-        if sums2[i] * cnts2[i + 1] > sums2[i + 1] * cnts2[i]:
-            val2 |= 1 << i
-    want2 = val2 - (1 << 64) if val2 >= (1 << 63) else val2
-    assert got2 == want2
-
-
-def test_audio_neardup_seeded_perturbations_recall(spark):
-    """Audio twin of the image recall test: gain copies at Hamming 0,
-    one-cell bumps at Hamming ≤ 2, and the banded plan equals the
-    brute-force all-pairs answer on the fixture."""
-    from de_spark.ops.multimodal import (
-        AFIX_BUMP, AFIX_DELTA, AFIX_GROUPS, _envelope_hash_from_samples,
-        audio_fixture_media, fixture_samples,
-    )
-
-    media = audio_fixture_media(spark)
-    pairs = {(r["a"], r["b"]): r["hamming"]
-             for r in multimodal.audio_neardup_pairs(media, max_hamming=3).collect()}
-    for s in range(AFIX_GROUPS):
-        assert pairs[(s, s + AFIX_GROUPS)] == 0         # uniform gain
-        assert pairs[(s, s + 2 * AFIX_GROUPS)] <= 2     # one-cell bump
-    hs = {}
-    for i in range(3 * AFIX_GROUPS):
-        seed = i % AFIX_GROUPS
-        delta = AFIX_DELTA if AFIX_GROUPS <= i < 2 * AFIX_GROUPS else 0
-        bump = AFIX_BUMP if i >= 2 * AFIX_GROUPS else 0
-        hs[i] = _envelope_hash_from_samples(fixture_samples(seed, delta, bump))
-
-    def ham(a, b):
-        return bin((hs[a] ^ hs[b]) & (2 ** 64 - 1)).count("1")
-
-    brute = {
-        (a, b): ham(a, b)
-        for a in range(3 * AFIX_GROUPS)
-        for b in range(a + 1, 3 * AFIX_GROUPS)
-        if ham(a, b) <= 3
-    }
-    assert pairs == brute
