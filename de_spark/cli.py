@@ -18,132 +18,47 @@ SURVEY.md §7 risk 6.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import tempfile
 
 from de_spark.session import get_spark
 
 
-def _build_from_files(spark, files, out_dir, single_graph=None):
-    from de_spark.pipeline import build
+def _read_rdf(spark, files, single_graph=None):
+    """``read_rdf`` with its warnings printed to stderr."""
     from de_spark.sources import read_rdf
 
     raw, unhandled, warnings = read_rdf(spark, files, single_graph=single_graph)
-    for w in warnings:
+    for w in [*warnings, *(f"unhandled file type: {p}" for p in unhandled)]:
         print(f"warning: {w}", file=sys.stderr)
-    for p in unhandled:
-        print(f"warning: unhandled file type: {p}", file=sys.stderr)
-    return build(raw, out_dir)
+    return raw
 
 
 def cmd_create(args) -> int:
+    from de_spark.pipeline import build
+
     spark = get_spark("de_create")
-    kg, stages = _build_from_files(spark, args.data, args.output, args.single_graph)
+    kg, stages = build(_read_rdf(spark, args.data, args.single_graph), args.output)
     for s in stages:
         print(f"stage {s.name}: rows={s.rows} wall_ms={s.wall_ms}", file=sys.stderr)
     return 0
 
 
 def cmd_query(args) -> int:
+    """Each query file's answer, serialized by ``results.emit``."""
     from de_spark.graph import KnowledgeGraph
-    from de_spark.query import results as res
-    from de_spark.query import sparql_select
+    from de_spark.pipeline import build
+    from de_spark.query.results import emit
 
     spark = get_spark("de_query")
-    import os
-
     if len(args.data) == 1 and os.path.isdir(args.data[0]):
         kg = KnowledgeGraph.load(spark, args.data[0])
     else:
-        tmp = tempfile.mkdtemp(prefix="de_query_")
-        kg, _ = _build_from_files(spark, args.data, tmp)
-
-    import re as _re
-
-    from de_spark.query.sparql import parse_sparql, sparql_construct, sparql_describe
-    from de_spark.query.sparql import execute as sparql_execute
-    from de_spark.sources.rdf_writers import render_ntriples
-
+        kg, _ = build(_read_rdf(spark, args.data), tempfile.mkdtemp(prefix="de_query_"))
     for qf in args.query:
         with open(qf) as f:
-            q = f.read()
-        if _re.search(r"\bCONSTRUCT\b", q, _re.I) or _re.search(r"\bDESCRIBE\b", q, _re.I):
-            # CONSTRUCT/DESCRIBE → RDF graph output, like the
-            # reference's graph-format routing (src/query.rs:155-175);
-            # -o picks the serialization (NT default; solution formats
-            # csv/tsv/json/xml fall back to NT like `de`'s default)
-            from de_spark.sources.rdf_writers import (
-                render_nquads,
-                render_trig_lines,
-                render_turtle_lines,
-                write_rdfxml,
-            )
-            from pyspark.sql import functions as F
-
-            is_describe = bool(_re.search(r"\bDESCRIBE\b", q, _re.I))
-            g = sparql_describe(kg, q) if is_describe else sparql_construct(kg, q)
-            if args.output == "rdfxml":
-                # streamed straight to stdout — constant driver memory
-                write_rdfxml(g, sys.stdout)
-                print()
-                continue
-            line_renderers = {
-                "nq": render_nquads,
-                "trig": render_trig_lines,
-                "ttl": render_turtle_lines,
-                "turtle": render_turtle_lines,
-                # N3 is a superset of Turtle: the Turtle-lines rendering
-                # is a valid N3 document (completes the reference's six
-                # graph formats, src/query.rs:155-175)
-                "n3": render_turtle_lines,
-            }
-            if args.output in ("nq", "trig"):
-                g = g.withColumn("graph", F.lit("file:///constructed"))
-            render = line_renderers.get(args.output, render_ntriples)
-            for r in render(g).toLocalIterator():
-                print(r["line"])
-            continue
-        parsed = parse_sparql(q)
-        graph_formats = {"nt", "nq", "ttl", "turtle", "n3", "trig", "rdfxml"}
-        if args.output in graph_formats:
-            # graph serializations only make sense for CONSTRUCT/DESCRIBE
-            # (mirror of the reference's per-variant format routing,
-            # src/query.rs:102-176); fall back to the CSV default like
-            # the CONSTRUCT path falls back to NT for solution formats
-            print(
-                f"warning: -o {args.output} requires CONSTRUCT/DESCRIBE; using csv",
-                file=sys.stderr,
-            )
-            args.output = "csv"
-        if parsed.ask:
-            # boolean serializations match the reference's sparesults
-            # shapes ('true' CSV/TSV, {"head":{},"boolean":true} JSON —
-            # src/query.rs:133-144), not a generic 1-row DataFrame dump
-            value = sparql_execute(kg, parsed).limit(1).count() > 0
-            emit_ask = {
-                "csv": res.ask_to_csv,
-                "tsv": res.ask_to_tsv,
-                "json": res.ask_to_json,
-                "xml": res.ask_to_xml,
-            }[args.output]
-            print(emit_ask(value))
-            continue
-        sols = sparql_select(kg, q)
-        # streamed chunk-by-chunk to stdout (constant driver memory;
-        # CSV joins with \r\n, the others are pre-chunked documents)
-        emit_iter, sep = {
-            "csv": (res.iter_csv, "\r\n"),
-            "tsv": (res.iter_tsv, "\n"),
-            "json": (res.iter_json, ""),
-            "xml": (res.iter_xml, ""),
-        }[args.output]
-        first = True
-        for chunk in emit_iter(sols):
-            if not first and sep:
-                sys.stdout.write(sep)
-            first = False
-            sys.stdout.write(chunk)
-        sys.stdout.write("\n")
+            print(emit(kg, f.read(), args.output))
     return 0
 
 
@@ -154,14 +69,9 @@ def cmd_load(args) -> int:
     it is the batch mutation surface: read_rdf + add_graph (existing
     graphs are immutable and refused)."""
     from de_spark import store
-    from de_spark.sources import read_rdf
 
     spark = get_spark("de_load")
-    raw, unhandled, warnings = read_rdf(spark, args.files)
-    for w in warnings:
-        print(f"warning: {w}", file=sys.stderr)
-    for p in unhandled:
-        print(f"warning: unhandled file type: {p}", file=sys.stderr)
+    raw = _read_rdf(spark, args.files)
     try:
         store.add_graph(spark, args.data, raw)
     except store.GraphExistsError as e:

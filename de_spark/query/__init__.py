@@ -3,16 +3,7 @@ SPARQL-results emitters (reference src/query.rs + src/sparql.rs)."""
 
 from de_spark.query.bgp import TriplePattern, compile_bgp
 from de_spark.query.sparql import sparql_construct, sparql_describe, sparql_select
-from de_spark.query.results import (
-    iter_csv,
-    iter_json,
-    iter_tsv,
-    iter_xml,
-    to_csv,
-    to_json,
-    to_tsv,
-    to_xml,
-)
+from de_spark.query.results import emit, to_csv, to_json, to_tsv, to_xml
 
 __all__ = [
     "TriplePattern",
@@ -24,8 +15,5 @@ __all__ = [
     "to_tsv",
     "to_json",
     "to_xml",
-    "iter_csv",
-    "iter_tsv",
-    "iter_json",
-    "iter_xml",
+    "emit",
 ]

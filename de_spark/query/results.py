@@ -1,4 +1,5 @@
-"""SPARQL result serializers: CSV / TSV / JSON / XML (SELECT + ASK).
+"""SPARQL result serializers: CSV / TSV / JSON / XML (SELECT + ASK),
+and :func:`emit`, the one route from query text to serialized answer.
 
 Byte-shape contract comes from the reference's golden assertions
 (tests/test-commands.rs:186-238):
@@ -10,77 +11,58 @@ Byte-shape contract comes from the reference's golden assertions
 - XML: ``<?xml version="1.0"?><sparql xmlns="http://www.w3.org/2005/
   sparql-results#">…`` — no declaration spaces.
 
-The string emitters here stream via ``toLocalIterator`` (constant driver
-memory, like the reference's ReadForWrite adapter, src/serve.rs:1427).
-For cluster-scale exports use ``write_csv`` which writes distributed
-files of the same row shape.
+Each ``to_*`` emitter fetches its rows with one ``collect()`` (one
+Spark job) and renders them on the driver, so the answer must fit in
+driver memory.  ``write_csv`` (and ``rdf_writers.write_rdf`` for
+graphs) is the route for outputs larger than the driver: it writes
+distributed files of the same row shape.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+import sys
 
 from pyspark.sql import DataFrame
 
 from de_spark import terms
+from de_spark.graph import KnowledgeGraph
+from de_spark.query.sparql import parse_sparql, sparql_construct, sparql_describe, sparql_select
+from de_spark.sources import rdf_writers
 
 
-def _rows(solutions: DataFrame) -> Iterator:
-    return solutions.toLocalIterator()
-
-
-def iter_csv(solutions: DataFrame) -> Iterator[str]:
-    """Stream sparesults-CSV lines (header first) — one row in driver
-    memory at a time via ``toLocalIterator`` (the reference streams
-    serialization as it reads, src/serve.rs:1427-1502).  ``to_csv``
-    is the joined-string twin; byte shapes are identical."""
-    cols = solutions.columns
-    yield ",".join(cols)
-    for row in _rows(solutions):
-        vals = []
-        for c in cols:
-            t = row[c]
-            if t is None:
-                vals.append("")
-            elif not isinstance(t, str):
-                vals.append(str(t))
-            elif t.startswith('"'):
-                v, _, _ = terms.literal_parts_py(t)
-                # RFC4180 quoting when needed
-                if any(ch in v for ch in ",\"\n\r"):
-                    v = '"' + v.replace('"', '""') + '"'
-                vals.append(v)
-            else:
-                vals.append(t)
-        yield ",".join(vals)
+def _csv_cell(t) -> str:
+    if t is None:
+        return ""
+    if not isinstance(t, str):
+        return str(t)
+    if t.startswith('"'):
+        v, _, _ = terms.literal_parts_py(t)
+        # RFC4180 quoting when needed
+        if any(ch in v for ch in ",\"\n\r"):
+            v = '"' + v.replace('"', '""') + '"'
+        return v
+    return t
 
 
 def to_csv(solutions: DataFrame) -> str:
-    return "\r\n".join(iter_csv(solutions))
+    lines = [",".join(solutions.columns)]
+    lines += [",".join(map(_csv_cell, row)) for row in solutions.collect()]
+    return "\r\n".join(lines)
 
 
-def iter_tsv(solutions: DataFrame) -> Iterator[str]:
-    """Stream sparesults-TSV lines (see :func:`iter_csv`)."""
-    cols = solutions.columns
-    yield "\t".join("?" + c for c in cols)
-    for row in _rows(solutions):
-        vals = []
-        for c in cols:
-            t = row[c]
-            if t is None:
-                vals.append("")
-            elif not isinstance(t, str):
-                vals.append(f'"{t}"')
-            elif t.startswith('"') or t.startswith("_"):
-                vals.append(t)
-            else:
-                vals.append(f"<{t}>")
-        yield "\t".join(vals)
+def _tsv_cell(t) -> str:
+    if t is None:
+        return ""
+    if not isinstance(t, str):
+        return f'"{t}"'
+    return terms.sparql_tsv_form_py(t)
 
 
 def to_tsv(solutions: DataFrame) -> str:
-    return "\n".join(iter_tsv(solutions))
+    lines = ["\t".join("?" + c for c in solutions.columns)]
+    lines += ["\t".join(map(_tsv_cell, row)) for row in solutions.collect()]
+    return "\n".join(lines)
 
 
 def _json_term(t) -> dict:
@@ -101,75 +83,53 @@ def _json_term(t) -> dict:
     return d
 
 
-def iter_json(solutions: DataFrame) -> Iterator[str]:
-    """Stream the sparesults-JSON document in chunks: envelope, then
-    one binding object per row — never the whole bindings list in
-    driver memory.  Byte-identical to ``to_json``."""
-    cols = solutions.columns
-    yield (
-        '{"head":{"vars":'
-        + json.dumps(cols, separators=(",", ":"))
-        + '},"results":{"bindings":['
-    )
-    first = True
-    for row in _rows(solutions):
-        b = {}
-        for c in cols:
-            if row[c] is not None:
-                b[c] = _json_term(row[c])
-        chunk = json.dumps(b, separators=(",", ":"))
-        yield chunk if first else "," + chunk
-        first = False
-    yield "]}}"
-
-
 def to_json(solutions: DataFrame) -> str:
-    return "".join(iter_json(solutions))
+    cols = solutions.columns
+    bindings = [
+        {c: _json_term(t) for c, t in zip(cols, row) if t is not None}
+        for row in solutions.collect()
+    ]
+    return json.dumps(
+        {"head": {"vars": cols}, "results": {"bindings": bindings}}, separators=(",", ":")
+    )
 
 
 def _xml_escape(s: str) -> str:
     return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
 
-def iter_xml(solutions: DataFrame) -> Iterator[str]:
-    """Stream the sparesults-XML document: envelope chunks, then one
-    ``<result>…</result>`` chunk per row.  Byte-identical to
-    ``to_xml``."""
-    cols = solutions.columns
-    yield '<?xml version="1.0"?>'
-    yield '<sparql xmlns="http://www.w3.org/2005/sparql-results#">'
-    yield "<head>" + "".join(f'<variable name="{c}"/>' for c in cols) + "</head>"
-    yield "<results>"
-    for row in _rows(solutions):
-        parts = ["<result>"]
-        for c in cols:
-            t = row[c]
-            if t is None:
-                continue
-            if not isinstance(t, str):
-                parts.append(f'<binding name="{c}"><literal>{t}</literal></binding>')
-                continue
-            kind = terms.classify_py(t)
-            if kind == terms.KIND_IRI:
-                inner = f"<uri>{_xml_escape(t)}</uri>"
-            elif kind == terms.KIND_BNODE:
-                inner = f"<bnode>{_xml_escape(t[2:])}</bnode>"
-            else:
-                value, dt, lang = terms.literal_parts_py(t)
-                attrs = ""
-                if dt:
-                    attrs = f' datatype="{_xml_escape(dt)}"'
-                elif lang:
-                    attrs = f' xml:lang="{lang}"'
-                inner = f"<literal{attrs}>{_xml_escape(value)}</literal>"
-            parts.append(f'<binding name="{c}">{inner}</binding>')
-        parts.append("</result>")
-        yield "".join(parts)
-    yield "</results></sparql>"
+def _xml_binding(c: str, t) -> str:
+    if not isinstance(t, str):
+        inner = f"<literal>{t}</literal>"
+    elif (kind := terms.classify_py(t)) == terms.KIND_IRI:
+        inner = f"<uri>{_xml_escape(t)}</uri>"
+    elif kind == terms.KIND_BNODE:
+        inner = f"<bnode>{_xml_escape(t[2:])}</bnode>"
+    else:
+        value, dt, lang = terms.literal_parts_py(t)
+        attrs = ""
+        if dt:
+            attrs = f' datatype="{_xml_escape(dt)}"'
+        elif lang:
+            attrs = f' xml:lang="{lang}"'
+        inner = f"<literal{attrs}>{_xml_escape(value)}</literal>"
+    return f'<binding name="{c}">{inner}</binding>'
 
 
 def to_xml(solutions: DataFrame) -> str:
-    return "".join(iter_xml(solutions))
+    cols = solutions.columns
+    results = "".join(
+        "<result>"
+        + "".join(_xml_binding(c, t) for c, t in zip(cols, row) if t is not None)
+        + "</result>"
+        for row in solutions.collect()
+    )
+    return (
+        '<?xml version="1.0"?>'
+        '<sparql xmlns="http://www.w3.org/2005/sparql-results#">'
+        + "<head>" + "".join(f'<variable name="{c}"/>' for c in cols) + "</head>"
+        + "<results>" + results + "</results></sparql>"
+    )
 
 
 def ask_to_json(value: bool) -> str:
@@ -191,6 +151,33 @@ def ask_to_xml(value: bool) -> str:
         '<sparql xmlns="http://www.w3.org/2005/sparql-results#">'
         f"<head></head><boolean>{'true' if value else 'false'}</boolean></sparql>"
     )
+
+
+_SELECT = {"csv": to_csv, "tsv": to_tsv, "json": to_json, "xml": to_xml}
+_ASK = {"csv": ask_to_csv, "tsv": ask_to_tsv, "json": ask_to_json, "xml": ask_to_xml}
+
+
+def emit(kg: KnowledgeGraph, text: str, fmt: str) -> str:
+    """Parse ``text`` once and serialize its answer by query form, like
+    the reference's match on the ``QueryResults`` variant
+    (src/query.rs:102-176): SELECT → ``to_<fmt>``, ASK →
+    ``ask_to_<fmt>``, CONSTRUCT/DESCRIBE → ``rdf_writers.to_rdf``.
+
+    ``fmt`` falls back per query: a graph format on SELECT/ASK gives
+    csv (with a warning on stderr), a solution format on
+    CONSTRUCT/DESCRIBE gives N-Triples (``de``'s default)."""
+    q = parse_sparql(text)
+    if q.form in ("construct", "describe"):
+        g = sparql_construct(kg, q) if q.form == "construct" else sparql_describe(kg, q)
+        return rdf_writers.to_rdf(g, fmt if fmt in rdf_writers.RENDERERS else "nt")
+    if fmt not in _SELECT:
+        print(f"warning: -o {fmt} requires CONSTRUCT/DESCRIBE; using csv", file=sys.stderr)
+        fmt = "csv"
+    sols = sparql_select(kg, q)
+    if q.ask:
+        # ASK answers as a one-row local relation: reading it runs no job
+        return _ASK[fmt](sols.collect()[0][0])
+    return _SELECT[fmt](sols)
 
 
 def write_csv(solutions: DataFrame, path: str) -> None:

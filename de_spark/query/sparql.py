@@ -1775,9 +1775,14 @@ def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> Dat
     return decoded.select(*proj)
 
 
-def sparql_select(kg: KnowledgeGraph, query: str) -> DataFrame:
-    """Parse + execute a SPARQL SELECT/ASK; string-term columns."""
-    q = parse_sparql(query)
+def _parsed(query: str | ParsedQuery) -> ParsedQuery:
+    return query if isinstance(query, ParsedQuery) else parse_sparql(query)
+
+
+def sparql_select(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
+    """Execute a SPARQL SELECT/ASK (text or already parsed);
+    string-term columns."""
+    q = _parsed(query)
     if q.form not in ("select", "ask"):
         raise ValueError(f"expected SELECT/ASK, got {q.form.upper()}")
     result = execute(kg, q)
@@ -1789,14 +1794,14 @@ def sparql_select(kg: KnowledgeGraph, query: str) -> DataFrame:
     return result
 
 
-def sparql_construct(kg: KnowledgeGraph, query: str) -> DataFrame:
+def sparql_construct(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
     """CONSTRUCT { template } WHERE { … } → (s, p, o) string triples.
 
     The reference gets CONSTRUCT from oxigraph and serializes via
     oxrdfio (src/query.rs:155-175); here the template is instantiated
     per solution with a select per template triple + union + distinct
     (CONSTRUCT produces a graph, i.e. a triple SET)."""
-    q = parse_sparql(query)
+    q = _parsed(query)
     if q.form != "construct":
         raise ValueError("not a CONSTRUCT query")
     sols = execute(
@@ -1821,10 +1826,12 @@ def sparql_construct(kg: KnowledgeGraph, query: str) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.dropDuplicates()
+    # an instantiation with an unbound variable is not in the graph
+    # (SPARQL 1.1 §16.2)
+    return out.dropna().dropDuplicates()
 
 
-def sparql_describe(kg: KnowledgeGraph, query: str) -> DataFrame:
+def sparql_describe(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
     """DESCRIBE <iri>… | DESCRIBE ?v… WHERE { … } → (s, p, o) triples.
 
     Description semantics: CONCISE BOUNDED DESCRIPTION — all triples
@@ -1844,7 +1851,7 @@ def sparql_describe(kg: KnowledgeGraph, query: str) -> DataFrame:
     the driver-side seen set makes bnode cycles terminate.  The
     described set is then semi-joined against the triples' s_id, and
     only the matching triples decode to strings."""
-    q = parse_sparql(query)
+    q = _parsed(query)
     if q.form != "describe":
         raise ValueError("not a DESCRIBE query")
     variables = [t[1:] for t in q.describe_targets if t.startswith("?")]

@@ -1,4 +1,4 @@
-"""N-Triples source and sink.
+"""N-Triples source.
 
 The reference funnels every input format into N-Triples text as the
 universal intermediate (src/create.rs:24-25) and byte-copies native
@@ -75,17 +75,3 @@ def triples_from_nt_text(spark: SparkSession, nt_text: str, graph: str) -> DataF
     lines = [(l,) for l in nt_text.splitlines()]
     return _parse_nt_lines(spark.createDataFrame(lines, ["value"]), graph)
 
-
-def write_nt(triples_raw: DataFrame, path: str) -> None:
-    """Serialize triples_raw back to N-Triples text (S10 NTriples sink)."""
-    rendered = triples_raw.select(
-        F.concat(
-            terms.ntriples_form(F.col("s")),
-            F.lit(" "),
-            terms.ntriples_form(F.col("p")),
-            F.lit(" "),
-            terms.ntriples_form(F.col("o")),
-            F.lit(" ."),
-        ).alias("value")
-    )
-    rendered.write.mode("overwrite").text(path)

@@ -86,6 +86,15 @@ def test_construct(kg):
         ("http://x/s2", "http://x/classifiedAs", "http://x/A"),
         ("http://x/s3", "http://x/classifiedAs", "http://x/B"),
     }
+    # a template triple with an unbound variable is left out (§16.2)
+    q = """
+    PREFIX x: <http://x/>
+    CONSTRUCT { ?s x:big ?v }
+    WHERE { ?s x:kind ?k OPTIONAL { ?s x:val ?v FILTER(?v > 20) } }
+    """
+    rows = {(r["s"], r["p"], r["o"]) for r in sparql_construct(kg, q).collect()}
+    xsd_int = "http://www.w3.org/2001/XMLSchema#integer"
+    assert rows == {("http://x/s2", "http://x/big", f'"30"^^<{xsd_int}>')}
 
 
 def test_filter_term_functions(kg):

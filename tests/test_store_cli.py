@@ -172,12 +172,82 @@ def test_cli_create_view_query(spark, tmp_path, capsys):
     ]
 
 
+@pytest.fixture(scope="module")
+def fruit_store(spark, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("cli_store") / "kg")
+    raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
+    build(raw.unionByName(_pineapple_raw(spark)), base)
+    return base
+
+
+def _cli_query(store_dir, tmp_path, capsys, fmt, *queries):
+    """(stdout, stderr) of ``de_spark query`` over ``queries`` (texts),
+    one file each."""
+    from de_spark import cli
+
+    files = []
+    for i, q in enumerate(queries):
+        files.append(str(tmp_path / f"q{i}.rq"))
+        with open(files[-1], "w") as f:
+            f.write(q)
+    capsys.readouterr()
+    assert cli.main(["query", "-d", store_dir, "-s", *files, "-o", fmt]) == 0
+    return capsys.readouterr()
+
+
+EX = "PREFIX ex: <http://example.org/>\n"
+
+
+def test_cli_routes_by_parsed_form_not_words(fruit_store, tmp_path, capsys):
+    """A SELECT that holds the word DESCRIBE in a literal or an IRI is a
+    SELECT: the form comes from the parser, not a text search."""
+    out, _ = _cli_query(
+        fruit_store, tmp_path, capsys, "csv",
+        EX + 'SELECT ?c WHERE { ex:Banana ex:hasColor ?c FILTER(?c != "describe") }',
+        EX + "SELECT ?f WHERE { ?f ex:hasColor ?c FILTER(?f != <http://x/describe>) }"
+        " ORDER BY ?f",
+    )
+    assert out.replace("\r", "").splitlines() == [
+        "c",
+        "yellow",
+        "f",
+        "http://example.org/Banana",
+        "http://example.org/Pineapple",
+    ]
+
+
+def test_cli_format_falls_back_per_query(fruit_store, tmp_path, capsys):
+    """``-o ttl`` over a SELECT then a CONSTRUCT: the SELECT falls back
+    to CSV with a warning, and the CONSTRUCT still gets Turtle."""
+    out, err = _cli_query(
+        fruit_store, tmp_path, capsys, "ttl",
+        EX + "SELECT ?c WHERE { ex:Banana ex:hasColor ?c }",
+        EX + "CONSTRUCT { ?f ex:c ?c ; ex:s ?s } "
+        "WHERE { ?f ex:hasColor ?c ; ex:hasShape ?s FILTER(?f = ex:Banana) }",
+    )
+    assert out.replace("\r", "") == (
+        "c\nyellow\n"
+        '<http://example.org/Banana> <http://example.org/c> "yellow" ;\n'
+        '    <http://example.org/s> "curved" .\n'
+    )
+    assert err.count("warning: -o ttl requires CONSTRUCT/DESCRIBE; using csv") == 1
+
+
+def test_cli_ask(fruit_store, tmp_path, capsys):
+    ask = EX + 'ASK { ?f ex:hasColor "yellow" }'
+    assert _cli_query(fruit_store, tmp_path, capsys, "csv", ask).out == "true\n"
+    assert _cli_query(fruit_store, tmp_path, capsys, "json", ask).out == (
+        '{"head":{},"boolean":true}\n'
+    )
+
+
 def test_torn_add_recovers_without_duplicates(spark, tmp_path):
     """ADVICE r2: a crash mid-add_graph (some tables appended, stats
     registration not yet written) must roll back on the next mutation,
-    so a replayed streaming batch re-adds without duplicating
-    dict/triples rows.  Simulated by restoring the write-ahead marker
-    after a completed add — recovery must undo the whole transaction."""
+    so a LOAD / INSERT DATA re-run after the crash re-adds without
+    duplicating dict/triples rows.  Simulated by restoring the
+    write-ahead marker after a completed add — recovery must undo the
+    whole transaction."""
     import json
     import os
 
