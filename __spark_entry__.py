@@ -45,7 +45,7 @@ def _kg_term_uids(spark, sf_dir):
 
 
 def _kg_dict_sections(spark, sf_dir):
-    return documents_kg(spark, sf_dir).dict_df.select("graph", "term", "section", "sec_id")
+    return documents_kg(spark, sf_dir).sections().select("graph", "term", "section", "sec_id")
 
 
 def _kg_triples_encoded(spark, sf_dir):

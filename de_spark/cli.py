@@ -103,8 +103,10 @@ def cmd_update(args) -> int:
 
 
 def cmd_view(args) -> int:
+    from de_spark.graph import read_table
+
     spark = get_spark("de_view")
-    stats = spark.read.parquet(f"{args.data}/stats")
+    stats = read_table(spark, args.data, "stats")
     for r in stats.orderBy("graph").collect():
         print(f"graph: {r['graph']}")
         print(f"  triples: {r['triples']}")

@@ -39,14 +39,17 @@ sec_ids come from ONE shared global index, for a fresh build and for a
 store append alike (the append passes the store's uid table, so
 existing terms keep their uids).  Uids are unique and stable but
 intentionally not dense.
+
+Each term string is stored once, in ``term_uids`` (term, uid).  The
+dictionary rows hold no strings — (graph, section, sec_id, uid) — and
+``KnowledgeGraph.sections`` joins them back to their terms on uid (HDT
+likewise keeps one entry per term and integer ids everywhere else).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-SECTION_ORDER = {"so": 0, "s": 1, "o": 2, "p": 3}
 
 
 def zip_with_index(
@@ -229,7 +232,9 @@ def build_dict_and_uids(
 
     Returns (dict_df, term_uids), both covering exactly the terms of
     ``flags``; both derive lazily from one persisted indexed frame
-    (appended to ``handles`` for caller unpersist).
+    (appended to ``handles`` for caller unpersist).  ``dict_df`` is
+    (graph, section, sec_id, uid): its term strings live in
+    ``term_uids`` only.
     """
     sections = _sections(flags)
     indexed = zip_with_index(
@@ -250,6 +255,6 @@ def build_dict_and_uids(
     dict_df = (
         _rank_sections(indexed)
         .join(term_uids, "term")
-        .select("graph", "term", "section", "sec_id", "uid")
+        .select("graph", "section", "sec_id", "uid")
     )
     return dict_df, term_uids

@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from de_spark.sources.router import TRIPLES_RAW_SCHEMA
+from de_spark.graph import SCHEMAS
 
 CODE = "http://example.org/code#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -141,4 +141,4 @@ def extract_code_triples(corpus: DataFrame) -> DataFrame:
     prepared = corpus.withColumn(
         "graph", F.concat(F.lit("repo:///"), F.col("repo"))
     )
-    return prepared.mapInPandas(_extract_batches, TRIPLES_RAW_SCHEMA)
+    return prepared.mapInPandas(_extract_batches, SCHEMAS["triples_raw"])

@@ -4,7 +4,9 @@ Mirrors the reference's ``AggregateHdt`` (src/sparql.rs:25-118): a set of
 named graphs, default graph = union of all graphs
 (src/serve.rs:58 ``union_default_graph = true``), and one physical
 access path — the triple pattern with each position bound or free
-(``triples_with_pattern``, src/sparql.rs:468).
+(``triples_with_pattern``, src/sparql.rs:468).  ``SCHEMAS`` declares
+the store's tables; every engine read of one goes through
+``read_table``.
 """
 
 from __future__ import annotations
@@ -15,11 +17,28 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Declared schemas of the store's tables (DDL).  A read that names its
+# schema opens the files without a footer-inference job.
+SCHEMAS = {
+    "triples_raw": "s string, p string, o string, o_kind string, graph string",
+    "term_uids": "term string, uid bigint",
+    "dict": "graph string, section string, sec_id bigint, uid bigint",
+    "triples": "s_id bigint, p_id bigint, o_id bigint, graph string",
+    "stats": "graph string, triples bigint, properties bigint,"
+    " distinct_subjects bigint, distinct_objects bigint",
+    "pred_stats": "graph string, p_id bigint, n bigint",
+}
+
+
+def read_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
+    """One store table, read with its declared schema."""
+    return spark.read.schema(SCHEMAS[table]).parquet(f"{base_dir}/{table}")
+
 
 @dataclass
 class KnowledgeGraph:
-    term_uids: DataFrame  # term, uid
-    dict_df: DataFrame    # graph, term, section, sec_id, uid
+    term_uids: DataFrame  # term, uid — the one table here that holds term strings
+    dict_df: DataFrame    # graph, section, sec_id, uid — strings via sections()
     triples: DataFrame    # graph, s_id, p_id, o_id
     stats: DataFrame      # graph, triples, properties, distinct_subjects, distinct_objects
     pred_stats: DataFrame | None = None  # graph, p_id, n — BGP selectivity stats
@@ -38,13 +57,17 @@ class KnowledgeGraph:
 
         pred = None
         if os.path.exists(f"{base_dir}/pred_stats"):
-            pred = spark.read.parquet(f"{base_dir}/pred_stats")
+            pred = read_table(spark, base_dir, "pred_stats")
         return cls(
-            term_uids=spark.read.parquet(f"{base_dir}/term_uids"),
-            dict_df=spark.read.parquet(f"{base_dir}/dict"),
-            triples=spark.read.parquet(f"{base_dir}/triples"),
-            stats=spark.read.parquet(f"{base_dir}/stats"),
+            *(read_table(spark, base_dir, t) for t in ("term_uids", "dict", "triples", "stats")),
             pred_stats=pred,
+        )
+
+    def sections(self) -> DataFrame:
+        """The four-section dictionary with its term strings: the stored
+        (graph, section, sec_id, uid) rows joined to term_uids on uid."""
+        return self.dict_df.join(self.term_uids, "uid").select(
+            "graph", "term", "section", "sec_id", "uid"
         )
 
     # -- constants (the dictionary side of triples_with_pattern) -------------

@@ -6,7 +6,9 @@ Stages (each a checkpoint, per north_rule resumability):
 
   1. extract      — source rows → triples_raw strings
   2. term_uids    — global term→uid assignment   ┐ one shared index pass,
-  3. dict         — four-section dictionary      ┘ written concurrently
+  3. dict         — four-section dictionary      ┘ written concurrently;
+                    (graph, section, sec_id, uid): each term string is
+                    stored once, in term_uids
   4. triples      — uid-encoded, distinct, SPO-sorted, graph-partitioned
   5. stats        — VOID header stats            ┐ derived from dict+enc,
   6. pred_stats   — per-graph predicate counts   ┘ written concurrently
@@ -25,6 +27,11 @@ killed job resumes by skipping stages whose manifest already exists
 (``build(..., resume=True)``).  Per-graph lineage lives in the stats
 table itself (one row per graph with its triple count) — the resume /
 repair unit is the graph partition.
+
+``triples_raw`` is the build's input checkpoint: the later stages
+read it back instead of recomputing the caller's input, and a killed
+build resumes from it.  No query reads it, and it is not updated by a
+store add or drop.
 
 Driver-serial cost dominates at these sizes: every action pays
 Catalyst planning + codegen on one core.  This build therefore (a)
@@ -61,7 +68,7 @@ from pyspark.sql import functions as F
 
 from de_spark.dictionary import build_dict_and_uids, position_flags
 from de_spark.encode import encode_triples, plan_spo_partitions, planned_sort_spo
-from de_spark.graph import KnowledgeGraph
+from de_spark.graph import KnowledgeGraph, read_table
 from de_spark.stats import void_stats_from_dict
 
 
@@ -187,7 +194,7 @@ def build_stages(
 
     raw_dir = f"{out_dir}/triples_raw"
     results.append(_write_stage(triples_raw, raw_dir, "extract", resume))
-    raw = spark.read.parquet(raw_dir)
+    raw = read_table(spark, out_dir, "triples_raw")
 
     uids_dir = f"{out_dir}/term_uids"
     dict_dir = f"{out_dir}/dict"
@@ -247,8 +254,8 @@ def build_stages(
     # moves per-graph rows through the driver.
     stats_dir = f"{out_dir}/stats"
     pred_dir = f"{out_dir}/pred_stats"
-    enc = spark.read.parquet(triples_dir)
-    stats_df = void_stats_from_dict(spark.read.parquet(dict_dir), enc)
+    enc = read_table(spark, out_dir, "triples")
+    stats_df = void_stats_from_dict(read_table(spark, out_dir, "dict"), enc)
     pred_df = enc.groupBy("graph", "p_id").agg(F.count("*").alias("n"))
     results.extend(
         _parallel_stages(

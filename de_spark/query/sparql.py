@@ -1575,8 +1575,9 @@ def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> Dat
     # join through term_uids — a var that exists only to connect
     # patterns never pays a decode join (at 100 TB each decode is a
     # fact-sized shuffle/broadcast join, so this is column pruning for
-    # the emission stage, mirroring ReadSchema pruning at the scan)
-    needed: set[str] = set(q.variables) if q.variables else set(var_cols)
+    # the emission stage, mirroring ReadSchema pruning at the scan).
+    # An ASK emits no variable: only its modifiers' variables decode.
+    needed: set[str] = set(q.variables) if q.variables or q.ask else set(var_cols)
     for _, e in q.select_exprs:
         needed |= expr_vars(e)
     for a in q.aggregates:

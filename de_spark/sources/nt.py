@@ -44,34 +44,36 @@ def graph_iri_for_file(path: str) -> str:
     return f"file:///{os.path.basename(path)}"
 
 
-def _parse_nt_lines(lines: DataFrame, graph: str) -> DataFrame:
+def file_graph(single_graph: str | None = None):
+    """The graph column of a file scan: ``single_graph`` if given, else
+    ``graph_iri_for_file`` of the scanned file.  Spark reports the file
+    name percent-encoded (``t x+y%.ttl`` as ``t%20x+y%25.ttl``) and
+    ``url_decode`` reads ``+`` as a space, so ``+`` is escaped first."""
+    if single_graph:
+        return F.lit(single_graph)
+    name = F.replace(F.col("_metadata.file_name"), F.lit("+"), F.lit("%2B"))
+    return F.concat(F.lit("file:///"), F.url_decode(name))
+
+
+def _parse_nt_lines(lines: DataFrame) -> DataFrame:
+    """(value, graph) lines → triples_raw."""
+    spo = ("s", "p", "o")
     parsed = lines.select(
-        F.regexp_extract("value", _NT_LINE, 1).alias("s_raw"),
-        F.regexp_extract("value", _NT_LINE, 2).alias("p_raw"),
-        F.regexp_extract("value", _NT_LINE, 3).alias("o_raw"),
-    ).where(F.col("p_raw") != "")
-    out = parsed.select(
-        _strip_iri(F.col("s_raw")).alias("s"),
-        _strip_iri(F.col("p_raw")).alias("p"),
-        _strip_iri(F.col("o_raw")).alias("o"),
-    )
-    return out.select(
-        "s",
-        "p",
-        "o",
-        terms.classify(F.col("o")).alias("o_kind"),
-        F.lit(graph).alias("graph"),
-    )
+        *(F.regexp_extract("value", _NT_LINE, i).alias(c) for i, c in enumerate(spo, 1)), "graph"
+    ).where(F.col("p") != "")
+    out = parsed.select(*(_strip_iri(F.col(c)).alias(c) for c in spo), "graph")
+    return out.select(*spo, terms.classify(F.col("o")).alias("o_kind"), "graph")
 
 
-def read_nt(spark: SparkSession, path: str, graph: str | None = None) -> DataFrame:
-    """Read one N-Triples file into a triples_raw DataFrame."""
-    graph = graph or graph_iri_for_file(path)
-    return _parse_nt_lines(spark.read.text(path), graph)
+def read_nt_files(spark: SparkSession, paths: list[str], graph: str | None = None) -> DataFrame:
+    """Read N-Triples/N-Quads files in one text scan into a triples_raw
+    DataFrame: every line lands in ``graph`` if given, else in its
+    file's graph (``file_graph``)."""
+    return _parse_nt_lines(spark.read.text(paths).select("value", file_graph(graph).alias("graph")))
 
 
 def triples_from_nt_text(spark: SparkSession, nt_text: str, graph: str) -> DataFrame:
     """triples_raw from an in-memory NT string (test fixtures)."""
-    lines = [(l,) for l in nt_text.splitlines()]
-    return _parse_nt_lines(spark.createDataFrame(lines, ["value"]), graph)
+    lines = [(l, graph) for l in nt_text.splitlines()]
+    return _parse_nt_lines(spark.createDataFrame(lines, ["value", "graph"]))
 

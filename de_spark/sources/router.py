@@ -12,10 +12,13 @@ files" list (src/rdf2nt.rs:60-64); formats that can carry named graphs
 surface a demotion warning, mirroring the reference's quad→triple
 warning ("HDT does not support named graphs", src/rdf2nt.rs:89-96).
 
+All N-Triples/N-Quads inputs share one text scan, and the Turtle and
+RDF/XML inputs one whole-file scan each; every file's graph is
+``file:///<name>`` from one naming rule (``nt.file_graph``).
 Multi-file aggregation into one graph (reference ``files_to_rdf``,
-src/create.rs:66-124) is a lazy ``unionByName`` — the reference's
-single-NT skip-copy optimization (src/create.rs:101-113) is moot because
-Spark scans are lazy.
+src/create.rs:66-124) is a lazy ``unionByName`` of those scans — the
+reference's single-NT skip-copy optimization (src/create.rs:101-113) is
+moot because Spark scans are lazy.
 """
 
 from __future__ import annotations
@@ -24,21 +27,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from de_spark.sources.nt import read_nt
+from de_spark.graph import SCHEMAS
+from de_spark.sources.nt import file_graph, read_nt_files
 from de_spark.sources.rdfxml import rdfxml_files_to_triples
 from de_spark.sources.turtle import turtle_files_to_triples
-
-TRIPLES_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("s", T.StringType(), False),
-        T.StructField("p", T.StringType(), False),
-        T.StructField("o", T.StringType(), False),
-        T.StructField("o_kind", T.StringType(), False),
-        T.StructField("graph", T.StringType(), False),
-    ]
-)
 
 _TURTLE_EXTS = {".ttl", ".turtle", ".n3", ".trig"}
 _NT_EXTS = {".nt", ".ntriples", ".nq", ".nquads"}
@@ -47,15 +40,11 @@ _QUAD_EXTS = {".nq", ".nquads", ".trig"}
 
 
 def _whole_files(spark: SparkSession, paths: list[str], single_graph: str | None) -> DataFrame:
-    files = spark.read.text(paths, wholetext=True).select(
-        F.input_file_name().alias("path"), F.col("value").alias("content")
+    return spark.read.text(paths, wholetext=True).select(
+        F.input_file_name().alias("path"),
+        F.col("value").alias("content"),
+        file_graph(single_graph).alias("graph"),
     )
-    graph_col = (
-        F.lit(single_graph)
-        if single_graph
-        else F.concat(F.lit("file:///"), F.element_at(F.split("path", "/"), -1))
-    )
-    return files.withColumn("graph", graph_col)
 
 
 def read_rdf(
@@ -72,6 +61,7 @@ def read_rdf(
     ``file:///<name>`` (the ``de query`` behavior, src/sparql.rs:40-48).
     """
     parts: list[DataFrame] = []
+    nt_paths: list[str] = []
     turtle_paths: list[str] = []
     rdfxml_paths: list[str] = []
     unhandled: list[str] = []
@@ -84,7 +74,7 @@ def read_rdf(
                 "(HDT does not support named graphs)"
             )
         if ext in _NT_EXTS:
-            parts.append(read_nt(spark, p, graph=single_graph))
+            nt_paths.append(p)
         elif ext in _TURTLE_EXTS:
             turtle_paths.append(p)
         elif ext in _RDFXML_EXTS:
@@ -92,22 +82,24 @@ def read_rdf(
         else:
             unhandled.append(p)
 
+    if nt_paths:
+        parts.append(read_nt_files(spark, nt_paths, single_graph))
     # whole-file reads; one row per file, parsed in parallel tasks
     if turtle_paths:
         parts.append(
             _whole_files(spark, turtle_paths, single_graph).mapInPandas(
-                turtle_files_to_triples, TRIPLES_RAW_SCHEMA
+                turtle_files_to_triples, SCHEMAS["triples_raw"]
             )
         )
     if rdfxml_paths:
         parts.append(
             _whole_files(spark, rdfxml_paths, single_graph).mapInPandas(
-                rdfxml_files_to_triples, TRIPLES_RAW_SCHEMA
+                rdfxml_files_to_triples, SCHEMAS["triples_raw"]
             )
         )
 
     if not parts:
-        return spark.createDataFrame([], TRIPLES_RAW_SCHEMA), unhandled, warnings
+        return spark.createDataFrame([], SCHEMAS["triples_raw"]), unhandled, warnings
     df = parts[0]
     for other in parts[1:]:
         df = df.unionByName(other)

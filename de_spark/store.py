@@ -37,7 +37,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from de_spark.graph import KnowledgeGraph
+from de_spark.graph import KnowledgeGraph, read_table
 from de_spark.pipeline import build_stages
 
 
@@ -49,7 +49,7 @@ class GraphExistsError(ValueError):
 def _graphs(spark: SparkSession, base_dir: str) -> set[str]:
     return {
         r["graph"]
-        for r in spark.read.parquet(f"{base_dir}/stats").select("graph").collect()
+        for r in read_table(spark, base_dir, "stats").select("graph").collect()
     }
 
 
@@ -130,7 +130,7 @@ def add_graph(spark: SparkSession, base_dir: str, triples_raw: DataFrame) -> Non
     _recover_pending(base_dir)
     staging = f"{base_dir}/{_STAGING}"
     shutil.rmtree(staging, ignore_errors=True)
-    build_stages(triples_raw, staging, base_uids=spark.read.parquet(f"{base_dir}/term_uids"))
+    build_stages(triples_raw, staging, base_uids=read_table(spark, base_dir, "term_uids"))
     staged = _graph_dirs(f"{staging}/triples")
     clash = set(staged) & _graphs(spark, base_dir)
     if clash:
@@ -184,7 +184,7 @@ def drop_graph(spark: SparkSession, base_dir: str, graph: str) -> bool:
         old = f"{base_dir}/.{table}.old"
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
-        spark.read.parquet(final).where(F.col("graph") != graph).write.mode(
+        read_table(spark, base_dir, table).where(F.col("graph") != graph).write.mode(
             "overwrite"
         ).parquet(tmp)
         os.rename(final, old)

@@ -22,11 +22,12 @@ def test_zip_with_index_is_global_sort_order(spark):
     assert out == {"apple": 0, "fig": 1, "pear": 2, "zoo": 3}
 
 
-def test_four_sections_apple(spark):
-    """HDT golden from /root/reference/tests/resources/apple.hdt header:
-    numSharedSubjectObject=1, 2 subjects, 9 objects, 7 predicates."""
-    raw = apple_raw(spark)
-    d, _ = build_dict_and_uids(position_flags(raw))
+def test_four_sections_apple(spark, tmp_path):
+    """HDT golden from the reference's tests/resources/apple.hdt header:
+    numSharedSubjectObject=1, 2 subjects, 9 objects, 7 predicates —
+    read through the stored dictionary's decoded view."""
+    kg, _ = build(apple_raw(spark), str(tmp_path / "kg"))
+    d = kg.sections()
     by_sec = {r["section"]: r["cnt"] for r in d.groupBy("section").count().withColumnRenamed("count", "cnt").collect()}
     assert by_sec["so"] == 1      # ex:Fruit is both subject and object
     assert by_sec["s"] == 1       # ex:Apple
@@ -45,6 +46,15 @@ def test_four_sections_apple(spark):
     # sections sorted lexicographically by term
     o_terms = [t for (sec, t), v in sorted(rows.items(), key=lambda kv: kv[1]) if sec == "o"]
     assert o_terms == sorted(o_terms)
+
+
+def test_store_holds_each_term_once(spark, tmp_path):
+    """The stored dict holds no term strings (they live in term_uids
+    only), and every dict row decodes through term_uids."""
+    out = str(tmp_path / "kg")
+    kg, _ = build(apple_raw(spark), out)
+    assert spark.read.parquet(f"{out}/dict").columns == ["graph", "section", "sec_id", "uid"]
+    assert kg.sections().count() == kg.dict_df.count() == 17
 
 
 def test_void_stats_apple_golden(spark, tmp_path):
@@ -75,7 +85,9 @@ def test_fused_dict_and_uids_single_pass(spark):
     (sec_ids: test_four_sections_apple)."""
     raw = apple_raw(spark)
     d1, u1 = build_dict_and_uids(position_flags(raw))
-    dict_rows = d1.collect()
+    # the dict rows hold uids only: decode them through the uid table
+    dict_rows = d1.join(u1, "uid").collect()
+    assert len(dict_rows) == d1.count()
     uid_rows = {r["term"]: r["uid"] for r in u1.collect()}
 
     # uid = 1 + min global index over the term's dict rows
@@ -88,10 +100,6 @@ def test_fused_dict_and_uids_single_pass(spark):
         expect.setdefault(term, i + 1)
     assert uid_rows == expect
     assert len(set(uid_rows.values())) == len(uid_rows)  # unique
-
-    # dict rows carry the same uid per term
-    for r in dict_rows:
-        assert uid_rows[r["term"]] == r["uid"]
 
     # encode/decode round-trip through the fused uids
     enc = encode_triples(raw, u1)
@@ -113,8 +121,8 @@ def test_uids_are_deterministic(spark, tmp_path):
 
 def test_base_uids_keep_existing_and_extend_above_max(spark):
     """Building against an existing uid table: terms already in it keep
-    their uid, new terms get uids above its max, and dict rows carry
-    the same uids."""
+    their uid, new terms get uids above its max, and every dict row
+    decodes to the row a build without the base table gives."""
     banana = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
     _, base = build_dict_and_uids(position_flags(banana))
     base_rows = {r["term"]: r["uid"] for r in base.collect()}
@@ -130,5 +138,11 @@ def test_base_uids_keep_existing_and_extend_above_max(spark):
         else:
             assert uid > max_uid
     assert {term for term in got if term in base_rows}  # the two share terms
-    for r in d.collect():
-        assert got[r["term"]] == r["uid"]
+
+    def decoded(dict_df, uids):
+        cols = ("graph", "term", "section", "sec_id")
+        return sorted(tuple(r) for r in dict_df.join(uids, "uid").select(*cols).collect())
+
+    alone, alone_uids = build_dict_and_uids(position_flags(apple_raw(spark)))
+    assert decoded(d, u) == decoded(alone, alone_uids)
+    assert len(decoded(d, u)) == d.count()

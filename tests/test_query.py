@@ -6,7 +6,9 @@ import pytest
 from de_spark.graph import KnowledgeGraph
 from de_spark.pipeline import build
 from de_spark.query import bgp
-from de_spark.query import sparql_select, to_csv, to_json, to_tsv, to_xml
+from de_spark.query import emit, sparql_select, to_csv, to_json, to_tsv, to_xml
+from de_spark.query.parser import parse_sparql
+from de_spark.query.sparql import execute
 from de_spark.sources.nt import triples_from_nt_text
 from de_spark.sources.turtle import parse_turtle
 from de_spark import terms
@@ -153,6 +155,17 @@ def test_point_query_emits_in_three_jobs(fruit_kg, in_job_group):
     csv, jobs = in_job_group("point_csv", lambda: to_csv(sparql_select(fruit_kg, q)))
     assert csv == "c\r\nyellow"
     assert jobs <= 3
+
+
+def test_ask_decodes_nothing(fruit_kg, in_job_group):
+    """An ASK reads no term string: through emit it runs the term lookup
+    and the one-row probe, and its plan scans no term_uids."""
+    q = EX + 'ASK { ?f ex:hasColor "yellow" }'
+    out, jobs = in_job_group("ask_emit", lambda: emit(fruit_kg, q, "json"))
+    assert out == '{"head":{},"boolean":true}'
+    assert jobs == 2
+    plan = execute(fruit_kg, parse_sparql(q))._jdf.queryExecution().sparkPlan().toString()
+    assert "/triples" in plan and "term_uids" not in plan
 
 
 def test_one_term_lookup_per_request(fruit_kg, monkeypatch):

@@ -93,6 +93,8 @@ def test_router_all_formats(spark, tmp_path):
         paths.append(str(p))
     df, unhandled, warnings = read_rdf(spark, paths, single_graph="g")
     assert unhandled == [str(tmp_path / "notes.txt")]
+    # one text scan per reader: the .nt and .nq files share one
+    assert df._jdf.queryExecution().optimizedPlan().toString().count("] text") == 3
     assert sorted(w.split(":")[0].rsplit("/", 1)[-1] for w in warnings) == [
         "fruit.nq",
         "fruit.trig",

@@ -144,6 +144,70 @@ def test_sync_dir(spark, tmp_path):
     assert {r["graph"] for r in kg.stats.collect()} == {"file:///pineapple.ttl"}
 
 
+def test_file_names_with_space_percent_plus(spark, tmp_path):
+    """Every format names a file's graph ``file:///<name>`` with the
+    name as it is on disk, so sync_dir sees the files as registered."""
+    from de_spark.sources.nt import graph_iri_for_file
+    from de_spark.sources.router import read_rdf
+    from tests.fixtures import APPLE_RDFXML
+
+    rdf_dir = tmp_path / "rdf"
+    os.makedirs(rdf_dir)
+    files = {"n x+y%.nt": BANANA_NT, "t x+y%.ttl": PINEAPPLE_TTL, "r x+y%.rdf": APPLE_RDFXML}
+    for name, text in files.items():
+        (rdf_dir / name).write_text(text)
+    raw, unhandled, _ = read_rdf(spark, [str(rdf_dir / n) for n in files])
+    assert unhandled == []
+    graphs = {r["graph"] for r in raw.select("graph").distinct().collect()}
+    assert graphs == {graph_iri_for_file(n) for n in files} == {
+        "file:///n x+y%.nt", "file:///t x+y%.ttl", "file:///r x+y%.rdf"
+    }
+    base = str(tmp_path / "store")
+    build(raw, base)
+    assert store.sync_dir(spark, base, str(rdf_dir)) == ([], [])
+
+
+def test_store_load_runs_no_job(spark, fruit_store, in_job_group):
+    """Every store table is read with its declared schema: loading a
+    store infers nothing from Parquet footers and runs no Spark job.
+    The declared schemas are those the build writes (names, order and
+    types; nullability aside)."""
+    from pyspark.sql.types import StructType
+
+    from de_spark.graph import SCHEMAS
+
+    kg, jobs = in_job_group("store_load", lambda: store.load(spark, fruit_store))
+    assert jobs == 0
+    assert kg.triples.columns == ["s_id", "p_id", "o_id", "graph"]
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for table, ddl in SCHEMAS.items():
+        written = spark.read.parquet(f"{fruit_store}/{table}").schema
+        assert fields(written) == fields(StructType.fromDDL(ddl)), table
+
+
+def test_dict_decodes_after_add_and_drop(spark, tmp_path):
+    """The string-free dict stays consistent with term_uids through an
+    add and a drop: every dict row decodes, and the kept graph's
+    sections equal those of a fresh build of that graph."""
+    base = str(tmp_path / "store")
+    build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+    store.add_graph(spark, base, _pineapple_raw(spark))
+    assert store.drop_graph(spark, base, "file:///banana.hdt") is True
+    kg = store.load(spark, base)
+    fresh, _ = build(_pineapple_raw(spark), str(tmp_path / "fresh"))
+
+    def sections(k):
+        return sorted(
+            (r["graph"], r["term"], r["section"], r["sec_id"]) for r in k.sections().collect()
+        )
+
+    assert kg.sections().count() == kg.dict_df.count()
+    assert sections(kg) == sections(fresh)
+
+
 def test_cli_create_view_query(spark, tmp_path, capsys):
     import os
 
