@@ -24,8 +24,6 @@ DataFrame stages:
                             reference mutation surface, src/serve.rs).
 - ``de_spark.docs_kg``    — the KG over the ``documents`` table that the
                             kg_* rows of ``__spark_entry__`` query.
-- ``de_spark.ops``        — training-data operators no verb calls: dedup,
-                            similarity search, text analysis, skew salting.
 """
 
 __version__ = "0.1.0"

@@ -15,17 +15,20 @@ de_spark.query.parser compiles to DataFrame operators:
 - MINUS          → left_anti on shared vars (no shared vars ⇒ no
                    removal, per SPARQL 1.1 §8.3)
 - UNION          → unionByName with null padding (n-ary, nested)
-- FILTER         → three strategies, picked per expression:
-                   (1) EXISTS/NOT EXISTS compile the inner group and
-                   left_semi/left_anti join it, (2) single-variable
-                   predicates evaluate in UID SPACE over the
-                   vocabulary-sized term_uids table and semi-join in
-                   (the large intermediate never decodes just to be
-                   filtered; no explicit broadcast hint — AQE decides),
+- FILTER         → (1) EXISTS/NOT EXISTS compile the inner group
+                   and left_semi/left_anti join it; (2) a group's
+                   single-variable constraints over a uid variable
+                   fuse with && per variable, evaluate ONCE per
+                   vocabulary term (_vocab_map) and semi-join in (the
+                   large intermediate never decodes just to be
+                   filtered; no explicit broadcast hint — AQE decides);
                    (3) everything else decodes just the referenced
                    variables on the fly
-- BIND           → Extend: expression over decoded strings, rendered
-                   back to an HDT-convention term string column
+- BIND           → Extend: a run of single-variable BINDs over one uid
+                   variable evaluates once per vocabulary term
+                   (_vocab_map) and joins in as ONE uid → values map;
+                   any other BIND evaluates over decoded strings.
+                   Both render an HDT-convention term string column
 - GRAPH          → graph restriction pushed onto contained patterns
                    (partition pruning; src/sparql.rs:436-453)
 - VALUES         → constant rows resolved to uids through the
@@ -50,7 +53,7 @@ datatypes.
 
 from __future__ import annotations
 
-import re
+import functools
 from dataclasses import fields, is_dataclass
 
 import pyarrow as pa
@@ -782,11 +785,6 @@ def _render_term(col: Column, tag: str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _decode_cols(kg: KnowledgeGraph, df: DataFrame, cols: list[str]) -> DataFrame:
-    """Decode the listed uid columns to term strings in place."""
-    return kg.decode_vars(df, cols)
-
-
 def _coerce_shared(kg: KnowledgeGraph, l: DataFrame, r: DataFrame):
     """Shared columns of a join must agree on dtype; a uid (bigint)
     column meeting a string column (BIND / GRAPH ?g binding) decodes
@@ -796,9 +794,9 @@ def _coerce_shared(kg: KnowledgeGraph, l: DataFrame, r: DataFrame):
     for c in shared:
         if lt[c] != rt[c]:
             if lt[c] == "bigint":
-                l = _decode_cols(kg, l, [c])
+                l = kg.decode_vars(l, [c])
             if rt[c] == "bigint":
-                r = _decode_cols(kg, r, [c])
+                r = kg.decode_vars(r, [c])
     return l, r, shared
 
 
@@ -809,12 +807,12 @@ def _is_value_col(df: DataFrame, v: str) -> bool:
 
 
 def _with_term_strs(kg: KnowledgeGraph, df: DataFrame, vars_: list[str]):
-    """Attach ``__s_<var>`` term-string columns for the uid-typed vars
-    (on-the-fly decode for a multi-var FILTER / BIND), returning
-    (df, env, temp_cols)."""
+    """Attach ``__s_<var>`` term-string copies of the uid-typed vars
+    (on-the-fly decode for a FILTER / BIND the vocabulary cannot
+    evaluate), returning (df, env, temp_cols)."""
     dtypes = dict(df.dtypes)
     env: dict = {}
-    temp: list[str] = []
+    uid_vars: list[str] = []
     for v in vars_:
         if v not in df.columns:
             raise ValueError(f"variable ?{v} is not bound in this scope")
@@ -826,55 +824,37 @@ def _with_term_strs(kg: KnowledgeGraph, df: DataFrame, vars_: list[str]):
             # booleans, not terms
             env[v] = (F.col(v), "bool")
         elif dtypes[v] == "bigint":
-            tmp = f"__s_{v}"
-            uid_map = kg.term_uids.select(
-                F.col("uid").alias(v), F.col("term").alias(tmp)
-            )
-            df = df.join(uid_map, v, "left")
-            env[v] = (F.col(tmp), "term")
-            temp.append(tmp)
+            uid_vars.append(v)
+            env[v] = (F.col(f"__s_{v}"), "term")
         else:
             env[v] = (F.col(v), "term")
+    temp = [f"__s_{v}" for v in uid_vars]
+    if temp:
+        copies = [F.col(v).alias(t) for v, t in zip(uid_vars, temp)]
+        df = kg.decode_vars(df.select("*", *copies), temp)
     return df, env, temp
 
 
-def _push_filter_uid(kg: KnowledgeGraph, sols: DataFrame, e) -> DataFrame | None:
-    """Single-variable FILTER evaluated in uid space: the predicate
-    runs over the vocabulary-sized term_uids table and semi-joins into
-    the solutions — the large intermediate never decodes just to be
-    filtered.  No broadcast hint: for low-selectivity/negated
-    predicates the matching set approaches the whole vocabulary, so
-    AQE picks the join strategy from the actual size at runtime.
-    Returns None when not pushable."""
-    vs = expr_vars(e)
-    if len(vs) != 1:
-        return None
-    v = vs.pop()
-    # BOUND is a null test on the binding itself — term_uids rows are
-    # never null, so it must not be pushed to the vocabulary; COALESCE
-    # and IF can map an UNBOUND argument to a non-error value, so a
-    # semi join (which drops null-binding rows) would silently discard
-    # rows SPARQL keeps (ADVICE r3); non-deterministic builtins need a
-    # fresh value per solution (ADVICE r4); value columns aren't uids
-    # — all gated by the shared _bind_push_ok
-    if not _bind_push_ok(sols, v, e):
-        return None
+def _vocab_map(kg: KnowledgeGraph, v: str, exprs: list):
+    """Single-variable expressions over ``?v`` evaluated in uid space:
+    once per vocabulary term instead of once per solution.  Returns
+    the ``term_uids`` frame (with the literal parse primitives
+    projected once when any expression needs them, see
+    _seed_parse_refs) and each expression compiled over its ``term``
+    column as (Column, tag).  ``?v`` is tagged ``term`` here as on the
+    decode path (_with_term_strs), so an expression that does not
+    compile here would not compile there either."""
     base = kg.term_uids
     tcol = F.col("term")
-    if _parse_heavy(e):
+    if any(_parse_heavy(e) for e in exprs):
         base = base.select(
             "uid",
             "term",
-            F.regexp_extract(tcol, r'^"((?:[^"\\]|\\.)*)"', 1).alias("__plex"),
-            F.regexp_extract(tcol, r"\^\^<([^>]*)>$", 1).alias("__pdt"),
+            terms.literal_value(tcol).alias("__plex"),
+            terms.literal_datatype(tcol).alias("__pdt"),
         )
         _seed_parse_refs(tcol, F.col("__plex"), F.col("__pdt"))
-    try:
-        cond, tag = _ex(e, {v: (tcol, "term")})
-    except ValueError:
-        return None
-    matching = base.where(_as_bool(cond, tag)).select(F.col("uid").alias(v))
-    return sols.join(matching, v, "left_semi")
+    return base, [_ex(e, {v: (tcol, "term")}) for e in exprs]
 
 
 def _expr_map(e, fn):
@@ -958,9 +938,9 @@ def _project_parse_refs(
         if t != "term":
             continue
         lexn, dtn = f"__plex_{v}", f"__pdt_{v}"
-        df = df.withColumn(
-            lexn, F.regexp_extract(c, r'^"((?:[^"\\]|\\.)*)"', 1)
-        ).withColumn(dtn, F.regexp_extract(c, r"\^\^<([^>]*)>$", 1))
+        df = df.withColumn(lexn, terms.literal_value(c)).withColumn(
+            dtn, terms.literal_datatype(c)
+        )
         _seed_parse_refs(c, F.col(lexn), F.col(dtn))
         temp.extend([lexn, dtn])
     return df
@@ -988,16 +968,9 @@ def _extend_one(kg: KnowledgeGraph, df: DataFrame | None, node) -> DataFrame:
     if df is None:
         if vs:
             raise ValueError("BIND over an empty group cannot reference variables")
-        spark = kg.triples.sparkSession
-        df = spark.range(1).drop("id")
-        env: dict = {}
-        temp: list[str] = []
-    else:
-        pushed = _push_bind_uid(kg, df, node)
-        if pushed is not None:
-            return pushed
-        df, env, temp = _with_term_strs(kg, df, vs)
-        df = _project_parse_refs(df, env, temp, node.expr)
+        df = kg.triples.sparkSession.range(1).drop("id")
+    df, env, temp = _with_term_strs(kg, df, vs)
+    df = _project_parse_refs(df, env, temp, node.expr)
     col, tag = _ex(node.expr, env)
     return _render_staged(df, col, tag, node.var).drop(*temp)
 
@@ -1006,8 +979,14 @@ _NONPUSH_CALLS = ("BOUND", "COALESCE", "IF", "STRUUID", "UUID", "RAND", "BNODE")
 
 
 def _bind_push_ok(df: DataFrame, v: str, expr) -> bool:
-    """Whether a single-variable BIND over ``v`` may evaluate in uid
-    space (shared gate of _push_bind_uid and the fused-run batcher)."""
+    """Whether a single-variable FILTER or BIND over ``v`` may evaluate
+    over the vocabulary (_vocab_map; the gate of _apply_filters and of
+    ExtendNode's BIND runs).  ``v`` must be a uid column, not a
+    subquery's value column.  BOUND, COALESCE and IF must see the
+    unbound row itself, which the vocabulary never contains (a semi
+    join drops null-binding rows SPARQL keeps — ADVICE r3), and the
+    non-deterministic STRUUID/UUID/RAND/BNODE need a fresh value PER
+    SOLUTION, not one per vocabulary term (ADVICE r4)."""
     if v not in df.columns or dict(df.dtypes).get(v) != "bigint":
         return False
     if _is_value_col(df, v):
@@ -1017,51 +996,6 @@ def _bind_push_ok(df: DataFrame, v: str, expr) -> bool:
         lambda x: (isinstance(x, Call) and x.name in _NONPUSH_CALLS)
         or isinstance(x, ExistsE),
     )
-
-
-def _push_bind_uid(kg: KnowledgeGraph, df: DataFrame, node) -> DataFrame | None:
-    """Single-variable BIND evaluated in uid space: the expression runs
-    once over the vocabulary-sized term_uids table and the rendered
-    result joins in as a (uid → value) map — the solution-sized frame
-    never decodes the source var just to compute a scalar of it (the
-    same trade as _push_filter_uid, for Extend).  Returns None when
-    not pushable: multi-var expressions, string-typed sources, and
-    null-sensitive builtins (BOUND/COALESCE/IF must see the unbound
-    row itself, which the vocabulary never contains) and
-    non-deterministic builtins (STRUUID/UUID/RAND need a fresh value
-    PER SOLUTION; evaluated per vocabulary term, every solution
-    sharing a source term would get one value — ADVICE r4)."""
-    vs = expr_vars(node.expr)
-    if len(vs) != 1:
-        return None
-    v = vs.pop()
-    if not _bind_push_ok(df, v, node.expr):
-        return None
-    base = kg.term_uids
-    tcol = F.col("term")
-    if _parse_heavy(node.expr):
-        # materialize the parse primitives once over the vocabulary
-        # (see _seed_parse_refs — shrinks the tree janino must compile
-        # and drops the per-row regexp fanout)
-        base = base.select(
-            "uid",
-            "term",
-            F.regexp_extract(tcol, r'^"((?:[^"\\]|\\.)*)"', 1).alias("__plex"),
-            F.regexp_extract(tcol, r"\^\^<([^>]*)>$", 1).alias("__pdt"),
-        )
-        _seed_parse_refs(tcol, F.col("__plex"), F.col("__pdt"))
-    try:
-        col, tag = _ex(node.expr, {v: (tcol, "term")})
-    except ValueError:
-        return None
-    # render into an internal name first: a BIND var literally named
-    # "uid"/"term" must not collide with the vocabulary columns
-    mapdf = _render_staged(base, col, tag, "__r_bind").select(
-        F.col("uid").alias(v), F.col("__r_bind").alias(node.var)
-    )
-    # left join: a null (unbound) source var yields an unbound BIND
-    # value, matching the generic path's null propagation
-    return df.join(mapdf, v, "left")
 
 
 def _apply_exists(
@@ -1084,6 +1018,8 @@ def _apply_exists(
 
 
 def _apply_filter(kg: KnowledgeGraph, df: DataFrame, e, graph: str | None) -> DataFrame:
+    """One FILTER constraint the vocabulary does not evaluate (see
+    _apply_filters), over the variables it references, decoded."""
     # EXISTS / NOT EXISTS (possibly under a single negation): the
     # direct semi/anti join — no marker column materialized
     if isinstance(e, ExistsE):
@@ -1092,32 +1028,48 @@ def _apply_filter(kg: KnowledgeGraph, df: DataFrame, e, graph: str | None) -> Da
         flipped = ExistsE(e.expr.group, not e.expr.neg)
         return _apply_exists(kg, df, flipped, graph)
     # EXISTS nested deeper in the expression → boolean marker columns
-    if expr_has(e, lambda x: isinstance(x, ExistsE)):
-        markers: list[tuple[str, ExistsE]] = []
+    markers: list[tuple[str, ExistsE]] = []
 
-        def _mark(x):
-            if isinstance(x, ExistsE):
-                name = f"__ex{len(markers)}"
-                markers.append((name, x))
-                return VarE(name)
-            return None
+    def _mark(x):
+        if isinstance(x, ExistsE):
+            name = f"__ex{len(markers)}"
+            markers.append((name, x))
+            return VarE(name)
+        return None
 
-        e = _expr_map(e, _mark)
-        for name, ex in markers:
-            df = _attach_exists_marker(kg, df, name, ex, graph)
-        vs = sorted(expr_vars(e))
-        df2, env, temp = _with_term_strs(kg, df, vs)
-        cond, tag = _ex(e, env)
-        return df2.where(_as_bool(cond, tag)).drop(
-            *temp, *[name for name, _ in markers]
-        )
-    pushed = _push_filter_uid(kg, df, e)
-    if pushed is not None:
-        return pushed
-    vs = sorted(expr_vars(e))
-    df2, env, temp = _with_term_strs(kg, df, vs)
+    e = _expr_map(e, _mark)
+    for name, ex in markers:
+        df = _attach_exists_marker(kg, df, name, ex, graph)
+    df, env, temp = _with_term_strs(kg, df, sorted(expr_vars(e)))
     cond, tag = _ex(e, env)
-    return df2.where(_as_bool(cond, tag)).drop(*temp)
+    return df.where(_as_bool(cond, tag)).drop(*temp, *[n for n, _ in markers])
+
+
+def _apply_filters(kg: KnowledgeGraph, df: DataFrame, exprs, graph: str | None) -> DataFrame:
+    """A scope's FILTER constraints (conjunctive, so order is free).
+    The single-variable constraints that may run in uid space fuse
+    with && per variable into ONE vocabulary evaluation + semi join;
+    no broadcast hint, since a negated predicate can match nearly the
+    whole vocabulary and AQE sizes the join at runtime.  Every other
+    constraint goes through _apply_filter."""
+    groups: dict[str, list] = {}
+    rest: list = []
+    for e in exprs:
+        vs = expr_vars(e)
+        v = next(iter(vs)) if len(vs) == 1 else None
+        if v is not None and _bind_push_ok(df, v, e):
+            groups.setdefault(v, []).append(e)
+        else:
+            rest.append(e)
+    for v, es in groups.items():
+        base, [(cond, tag)] = _vocab_map(
+            kg, v, [functools.reduce(lambda a, b: Bin("&&", a, b), es)]
+        )
+        matching = base.where(_as_bool(cond, tag)).select(F.col("uid").alias(v))
+        df = df.join(matching, v, "left_semi")
+    for e in rest:
+        df = _apply_filter(kg, df, e, graph)
+    return df
 
 
 def _has_undef(node: ValuesNode) -> bool:
@@ -1212,9 +1164,7 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
         if l is None:
             # OPTIONAL as the first group element: equivalent to the
             # group itself for the supported (non-empty-right) case
-            for f in node.filters:
-                r = _apply_filter(kg, r, f, graph)
-            return r
+            return _apply_filters(kg, r, node.filters, graph)
         # filters written inside OPTIONAL { … } whose variables are all
         # bound by the right side scope to it directly; filters
         # referencing OUTER variables are the SPARQL LeftJoin
@@ -1222,8 +1172,7 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
         # over the joined solution
         inner_f = [f for f in node.filters if expr_vars(f) <= set(r.columns)]
         mixed_f = [f for f in node.filters if not expr_vars(f) <= set(r.columns)]
-        for f in inner_f:
-            r = _apply_filter(kg, r, f, graph)
+        r = _apply_filters(kg, r, inner_f, graph)
         l, r, shared = _coerce_shared(kg, l, r)
         if not mixed_f:
             if shared:
@@ -1233,8 +1182,7 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
         # left rows with NO surviving match re-enter null-padded (one
         # inner join + one null-safe anti join — no driver loops)
         j = l.join(r, shared, "inner") if shared else l.crossJoin(r)
-        for f in mixed_f:
-            j = _apply_filter(kg, j, f, graph)
+        j = _apply_filters(kg, j, mixed_f, graph)
         keys = j.select(*l.columns).dropDuplicates()
         la, ka = l.alias("__L"), keys.alias("__K")
         cond = F.lit(True)
@@ -1281,7 +1229,7 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
                 if t == "bigint" and "string" in col_types[c]
             ]
             if fix:
-                dfs[i] = _decode_cols(kg, d, fix)
+                dfs[i] = kg.decode_vars(d, fix)
         padded = []
         for d in dfs:
             cols = []
@@ -1301,38 +1249,15 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
         df = _compile(kg, node.child, graph)
         if df is None:
             raise ValueError("FILTER over an empty group")
-        # single-variable uid-pushable filters sharing a variable fuse
-        # with && and push as ONE vocabulary evaluation + semi join
-        # (filters in a group are conjunctive, so order is free);
-        # everything else keeps the per-expression strategies
-        groups: dict[str, list] = {}
-        rest: list = []
-        for e in node.exprs:
-            vs = expr_vars(e)
-            v = next(iter(vs)) if len(vs) == 1 else None
-            if v is not None and _bind_push_ok(df, v, e):
-                groups.setdefault(v, []).append(e)
-            else:
-                rest.append(e)
-        for v, es in groups.items():
-            combined = es[0]
-            for e2 in es[1:]:
-                combined = Bin("&&", combined, e2)
-            pushed = _push_filter_uid(kg, df, combined)
-            if pushed is not None:
-                df = pushed
-            else:
-                rest.extend(es)  # uncompilable in uid space → generic path
-        for e in rest:
-            df = _apply_filter(kg, df, e, graph)
-        return df
+        return _apply_filters(kg, df, node.exprs, graph)
 
     if isinstance(node, ExtendNode):
         # flatten the Extend chain (BIND . BIND . BIND parses as nested
-        # ExtendNodes) so a RUN of consecutive single-variable binds
-        # over the SAME uid source var fuses into ONE vocabulary map
-        # join carrying all the rendered columns — three BINDs over ?n
-        # must not pay three term_uids joins
+        # ExtendNodes) so a RUN of one or more consecutive
+        # single-variable binds over the SAME uid source var evaluates
+        # over the vocabulary once and joins in as ONE map carrying all
+        # the rendered columns — three BINDs over ?n must not pay three
+        # term_uids joins; any other BIND goes through _extend_one
         chain: list = []
         cur = node
         while isinstance(cur, ExtendNode):
@@ -1346,67 +1271,35 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
             if df is not None and nd.var in df.columns:
                 raise ValueError(f"BIND reuses an in-scope variable: ?{nd.var}")
             run: list = []
-            if df is not None:
-                v0: str | None = None
-                j = i
-                while j < len(chain):
-                    ndj = chain[j]
-                    vs_j = expr_vars(ndj.expr)
-                    if len(vs_j) != 1:
-                        break
-                    v = next(iter(vs_j))
-                    if v0 is None:
-                        v0 = v
-                    if (
-                        v != v0
-                        or ndj.var in df.columns
-                        or any(ndj.var == r.var for r in run)
-                        or not _bind_push_ok(df, v, ndj.expr)
-                    ):
-                        break
-                    run.append(ndj)
-                    j += 1
-            if len(run) >= 2:
-                # one term column + one parse-primitive projection
-                # shared by the WHOLE run: the memo (terms._memo)
-                # makes every expression in the run reuse the same
-                # numeric-lane subtrees, and the seeded refs keep the
-                # regexp primitives computed once per vocabulary row
-                # (see _seed_parse_refs)
-                tcol = F.col("term")
-                base = kg.term_uids
-                if any(_parse_heavy(r.expr) for r in run):
-                    base = base.select(
-                        "uid",
-                        "term",
-                        F.regexp_extract(tcol, r'^"((?:[^"\\]|\\.)*)"', 1).alias(
-                            "__plex"
-                        ),
-                        F.regexp_extract(tcol, r"\^\^<([^>]*)>$", 1).alias("__pdt"),
-                    )
-                    _seed_parse_refs(tcol, F.col("__plex"), F.col("__pdt"))
-                try:
-                    pairs = [
-                        (_ex(r.expr, {v0: (tcol, "term")}), r.var) for r in run
-                    ]
-                except ValueError:
-                    run = []
-                if run:
-                    mapdf = base
-                    # internal render names: BIND vars must not collide
-                    # with the vocabulary's uid/term/__p* columns
-                    for k, ((col, tag), _var) in enumerate(pairs):
-                        mapdf = _render_staged(mapdf, col, tag, f"__r_bind{k}")
-                    mapdf = mapdf.select(
-                        F.col("uid").alias(v0),
-                        *[
-                            F.col(f"__r_bind{k}").alias(var)
-                            for k, (_, var) in enumerate(pairs)
-                        ],
-                    )
-                    df = df.join(mapdf, v0, "left")
-                    i = j
-                    continue
+            v0: str | None = None
+            for ndj in chain[i:] if df is not None else []:
+                vs_j = expr_vars(ndj.expr)
+                v = next(iter(vs_j)) if len(vs_j) == 1 else None
+                if (
+                    v is None
+                    or v0 not in (None, v)
+                    or ndj.var in df.columns
+                    or any(ndj.var == r.var for r in run)
+                    or not _bind_push_ok(df, v, ndj.expr)
+                ):
+                    break
+                v0 = v
+                run.append(ndj)
+            if run:
+                mapdf, cols = _vocab_map(kg, v0, [r.expr for r in run])
+                # internal render names: BIND vars must not collide
+                # with the vocabulary's uid/term/__p* columns
+                for k, (col, tag) in enumerate(cols):
+                    mapdf = _render_staged(mapdf, col, tag, f"__r_bind{k}")
+                mapdf = mapdf.select(
+                    F.col("uid").alias(v0),
+                    *[F.col(f"__r_bind{k}").alias(r.var) for k, r in enumerate(run)],
+                )
+                # left join: an unbound source var leaves the BINDs
+                # unbound, as on the decode path
+                df = df.join(mapdf, v0, "left")
+                i += len(run)
+                continue
             df = _extend_one(kg, df, nd)
             i += 1
         return df
@@ -1449,25 +1342,15 @@ def _rewrite_having(e, hidden: list):
     """Replace aggregate calls inside a HAVING constraint with hidden
     aggregate columns (``__havN``) computed alongside the projected
     aggregates, returning the rewritten expression."""
-    if isinstance(e, AggE):
-        alias = f"__hav{len(hidden)}"
-        hidden.append(Aggregate(e.func, e.var, alias, e.distinct, " ", e.expr))
-        return VarE(alias)
-    if isinstance(e, Bin):
-        return Bin(e.op, _rewrite_having(e.left, hidden), _rewrite_having(e.right, hidden))
-    if isinstance(e, Un):
-        return Un(e.op, _rewrite_having(e.expr, hidden))
-    if isinstance(e, Call):
-        return Call(
-            e.name,
-            tuple(
-                a if isinstance(a, str) else _rewrite_having(a, hidden)
-                for a in e.args
-            ),
-        )
-    if isinstance(e, InE):
-        return InE(_rewrite_having(e.expr, hidden), e.items, e.neg)
-    return e
+
+    def _hide(x):
+        if isinstance(x, AggE):
+            alias = f"__hav{len(hidden)}"
+            hidden.append(Aggregate(x.func, x.var, alias, x.distinct, " ", x.expr))
+            return VarE(alias)
+        return None
+
+    return _expr_map(e, _hide)
 
 
 def _env_for(df: DataFrame) -> dict:

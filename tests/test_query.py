@@ -271,6 +271,19 @@ def test_filter_pushdown_uid_space(fruit_kg):
     """
     sols = sparql_select(fruit_kg, q)
     assert [r["fruit"].rsplit("/", 1)[1] for r in sols.collect()] == ["Banana", "Pineapple"]
+    lines = sols._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    semi = [i for i, line in enumerate(lines) if "Join LeftSemi" in line]
+    assert len(semi) == 1
+    # the semi join's subtree: the following lines nested deeper than it
+    depth = lines[semi[0]].index("Join")
+    below = []
+    for line in lines[semi[0] + 1 :]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        below.append(line)
+    # ?taste is decoded (decode_vars' __term_taste, the decode path's
+    # __s_taste) only for the output, above the filter
+    assert not any("__term_taste" in line or "__s_taste" in line for line in below)
 
 
 def test_describe_const_and_var(fruit_kg):

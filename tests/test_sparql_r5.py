@@ -213,6 +213,25 @@ def test_same_var_filters_fuse_one_semi_join(kg):
     assert _plan(df2).count("Join LeftSemi") == _plan(df1).count("Join LeftSemi")
 
 
+def test_optional_same_var_filters_fuse_one_semi_join(kg):
+    """Two FILTER clauses inside an OPTIONAL over the same uid
+    variable fuse into ONE vocabulary semi join too, with the rows of
+    the single-FILTER formulation."""
+    body = "SELECT ?s ?v WHERE {{ ?s x:f ?b . OPTIONAL {{ ?s x:n ?v {} }} }} ORDER BY ?s"
+    lo, hi = f'?v > "1"^^<{XSD}integer>', f'?v < "7"^^<{XSD}integer>'
+    df2 = sparql_select(kg, PX + body.format(f"FILTER({lo}) FILTER({hi})"))
+    df1 = sparql_select(kg, PX + body.format(f"FILTER({lo} && {hi})"))
+    rows = [(r["s"].rsplit("/", 1)[1], r["v"]) for r in df2.collect()]
+    assert rows == [
+        ("s1", f'"2"^^<{XSD}integer>'),
+        ("s2", f'"5"^^<{XSD}integer>'),
+        ("s3", None),
+        ("s4", None),
+    ]
+    assert rows == [(r["s"].rsplit("/", 1)[1], r["v"]) for r in df1.collect()]
+    assert _plan(df2).count("Join LeftSemi") == 1
+
+
 def test_same_source_binds_fuse_one_map_join(kg):
     """A run of BINDs over the same source variable joins the
     vocabulary ONCE (all rendered columns on one map join)."""
