@@ -47,13 +47,13 @@ def cmd_create(args) -> int:
 
 def cmd_query(args) -> int:
     """Each query file's answer, serialized by ``results.emit``."""
-    from de_spark.graph import KnowledgeGraph
+    from de_spark import store
     from de_spark.pipeline import build
     from de_spark.query.results import emit
 
     spark = get_spark("de_query")
     if len(args.data) == 1 and os.path.isdir(args.data[0]):
-        kg = KnowledgeGraph.load(spark, args.data[0])
+        kg = store.load(spark, args.data[0])
     else:
         kg, _ = build(_read_rdf(spark, args.data), tempfile.mkdtemp(prefix="de_query_"))
     for qf in args.query:
@@ -103,11 +103,10 @@ def cmd_update(args) -> int:
 
 
 def cmd_view(args) -> int:
-    from de_spark.graph import read_table
+    from de_spark import store
 
     spark = get_spark("de_view")
-    stats = read_table(spark, args.data, "stats")
-    for r in stats.orderBy("graph").collect():
+    for r in store.load(spark, args.data).stats.orderBy("graph").collect():
         print(f"graph: {r['graph']}")
         print(f"  triples: {r['triples']}")
         print(f"  properties: {r['properties']}")

@@ -1,9 +1,16 @@
-"""Recursive-descent SPARQL parser → group-graph-pattern algebra.
+"""Recursive-descent SPARQL parser → group-graph-pattern algebra, and
+the one reader of Turtle / TriG documents and INSERT DATA.
 
-Replaces the round-1/2 regex front-end.  The reference gets full
-SPARQL 1.1 parsing from oxigraph's spargebra (src/sparql.rs:516-519);
-this module implements the subset the engine executes, as a real
-tokenizer + recursive-descent grammar so composition nests correctly:
+The reference reads SPARQL text with oxigraph's spargebra
+(src/sparql.rs:516-519) and RDF files with oxrdfio (src/rdf2nt.rs:67),
+which share one term model.  Here one tokenizer, one prologue
+(``parse_prologue``: PREFIX / BASE / @prefix / @base, relative IRIs
+resolved against BASE per RFC 3986), one literal normalizer
+(``nt_lexical``), one triples grammar, one quad-block parser
+(``parse_quads``) and one grounding step (``Parser.ground``) serve
+query patterns, INSERT DATA (``query.update``) and data files
+(``sources.turtle``), so a statement names the same terms wherever it
+is written.  The query subset the engine executes:
 
 - group graph patterns: nested ``{}`` groups, OPTIONAL, MINUS, GRAPH,
   n-ary and *nested* UNION (branches may contain OPTIONAL/FILTER/...),
@@ -31,7 +38,8 @@ whole conjunction; OPTIONAL/MINUS/BIND are sequence points and flush.
 
 Blank-node property lists ``[ … ]`` and collections ``( … )`` in
 patterns compile to fresh non-projected variables (collections expand
-to rdf:first/rdf:rest pattern chains).  GROUP BY accepts expression
+to rdf:first/rdf:rest pattern chains); in data the grounding step
+turns them into blank nodes.  GROUP BY accepts expression
 conditions (``(expr)``, ``(expr AS ?v)``, builtin calls) and ORDER BY
 accepts expression keys including aggregates (``DESC(COUNT(?x))``).
 Unsupported constructs raise ``ValueError`` loudly (never a silent
@@ -42,10 +50,13 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from urllib.parse import urljoin
 
+from de_spark import terms
 from de_spark.query.bgp import TriplePattern
 
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+RDF_TYPE = RDF + "type"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
 
@@ -278,17 +289,29 @@ _TOKEN_RE = re.compile(
       (?P<WS>\s+|\#[^\n]*)
     | (?P<VAR>[?$][A-Za-z_]\w*)
     | (?P<IRI><[^<>"{}|^`\\\s]*>)
-    | (?P<STR>"(?:[^"\\\n]|\\.)*"|'(?:[^'\\\n]|\\.)*')
+    | (?P<STR>"{3}(?:[^"\\]|\\.|"(?!""))*"{3}|'{3}(?:[^'\\]|\\.|'(?!''))*'{3}
+            |"(?:[^"\\\n]|\\.)*"|'(?:[^'\\\n]|\\.)*')
     | (?P<BNODE>_:[A-Za-z0-9](?:[\w-]|\.(?=[\w.-]))*)
     | (?P<PNAME>(?:[A-Za-z_](?:[\w-]|\.(?=[\w.-]))*)?:(?:[A-Za-z_0-9](?:[\w-]|\.(?=[\w.-]))*)?)
-    | (?P<NUM>\d+\.\d+(?:[eE][+-]?\d+)?|\.\d+|\d+)
-    | (?P<WORD>[A-Za-z_][\w-]*)
+    | (?P<NUM>(?:\d+\.\d*|\.?\d+)[eE][+-]?\d+|\d*\.\d+|\d+)
+    | (?P<WORD>@(?:prefix|base)\b|[A-Za-z_][\w-]*)
     | (?P<OP>&&|\|\||!=|<=|>=|[=<>!+\-*/^|(){}\[\].,;?])
     """,
     re.VERBOSE,
 )
 
 _LANG_RE = re.compile(r"@[A-Za-z]+(?:-[A-Za-z0-9]+)*")
+_SCHEME_RE = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
+_LEX_RE = re.compile(r"""\\.|["\n\t\r]""", re.S)
+_LEX_MAP = {"\\'": "'", '"': '\\"', "\n": "\\n", "\t": "\\t", "\r": "\\r"}
+
+
+def nt_lexical(body: str) -> str:
+    """A literal's lexical form as N-Triples writes it: a raw newline,
+    tab, CR or ``"`` becomes its NT escape and ``\\'`` becomes ``'``;
+    every other escape (``\\uXXXX`` included) stays as written, as the
+    N-Triples text scan keeps it."""
+    return _LEX_RE.sub(lambda m: _LEX_MAP.get(m.group(), m.group()), body)
 
 
 def tokenize(text: str) -> list[Tok]:
@@ -305,14 +328,15 @@ def tokenize(text: str) -> list[Tok]:
             continue
         if kind == "STR":
             # literal with optional ^^<dt> / ^^pname / @lang suffix
-            lex = val[1:-1]
+            q = 3 if val[:3] in ('"""', "'''") else 1
+            lex = nt_lexical(val[q:-q])
             dt = lang = None
             if text.startswith("^^", i):
                 j = i + 2
                 m2 = _TOKEN_RE.match(text, j)
                 if not m2 or m2.lastgroup not in ("IRI", "PNAME"):
                     raise ValueError(f"bad datatype suffix at: {text[j:j+30]!r}")
-                dt = (m2.lastgroup, m2.group(0))
+                dt = Tok(m2.lastgroup, m2.group(0), j)
                 i = m2.end()
             elif i < n and text[i] == "@":
                 m2 = _LANG_RE.match(text, i)
@@ -347,9 +371,11 @@ _AGG_FUNCS = {"COUNT", "SUM", "AVG", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT"}
 
 class Parser:
     def __init__(self, text: str):
+        self.text = text
         self.toks = tokenize(text)
         self.i = 0
         self.prefixes: dict[str, str] = {}
+        self.base: str | None = None
 
     # -- token helpers -------------------------------------------------------
 
@@ -393,6 +419,28 @@ class Parser:
             t = self.peek()
             raise ValueError(f"expected {word} at position {t.pos}, got {t.value!r}")
 
+    # -- prologue ------------------------------------------------------------
+
+    def parse_prologue(self) -> None:
+        """PREFIX / BASE declarations and the Turtle ``@prefix`` /
+        ``@base`` directives (which end with ``.``): the one prologue of
+        queries, updates and documents.  A prefix IRI and every later
+        relative IRI resolve against BASE."""
+        while self.at_word("PREFIX", "BASE", "@PREFIX", "@BASE"):
+            kw = self.next().value.upper()
+            name = self.next() if kw.endswith("PREFIX") else None
+            if name is not None and (name.kind != "PNAME" or not name.value.endswith(":")):
+                raise ValueError(f"PREFIX requires 'name:' at position {name.pos}")
+            it = self.next()
+            if it.kind != "IRI":
+                raise ValueError(f"{kw} requires an IRI at position {it.pos}")
+            if name is None:
+                self.base = self._iri(it)
+            else:
+                self.prefixes[name.value[:-1]] = self._iri(it)
+            if kw.startswith("@"):
+                self.expect_op(".")
+
     # -- term resolution -----------------------------------------------------
 
     def _resolve_pname(self, pname: str) -> str:
@@ -401,12 +449,26 @@ class Parser:
             raise ValueError(f"undefined prefix {pfx!r} in {pname!r}")
         return self.prefixes[pfx] + local
 
+    def _iri(self, t: Tok) -> str:
+        """The bare IRI an IRI or prefixed-name token names."""
+        if t.kind == "PNAME":
+            return self._resolve_pname(t.value)
+        iri = t.value[1:-1]
+        if self.base is None or _SCHEME_RE.match(iri):
+            return iri
+        return urljoin(self.base, iri)
+
+    def parse_iri(self, what: str) -> str:
+        t = self.peek()
+        if t.kind not in ("IRI", "PNAME"):
+            raise ValueError(f"expected {what} at position {t.pos}, got {t.value!r}")
+        self.next()
+        return self._iri(t)
+
     def _literal_term(self, lit: tuple) -> str:
         lex, dt, lang = lit
         if dt is not None:
-            kind, raw = dt
-            iri = raw[1:-1] if kind == "IRI" else self._resolve_pname(raw)
-            return f'"{lex}"^^<{iri}>'
+            return f'"{lex}"^^<{self._iri(dt)}>'
         if lang is not None:
             return f'"{lex}"@{lang}'
         return f'"{lex}"'
@@ -417,12 +479,9 @@ class Parser:
         if t.kind == "VAR":
             self.next()
             return "?" + t.value[1:]
-        if t.kind == "IRI":
+        if t.kind in ("IRI", "PNAME"):
             self.next()
-            return t.value[1:-1]
-        if t.kind == "PNAME":
-            self.next()
-            return self._resolve_pname(t.value)
+            return self._iri(t)
         if t.kind == "LIT":
             self.next()
             return self._literal_term(t.value)
@@ -434,8 +493,7 @@ class Parser:
             return self._num_term(t.value)
         if t.kind == "OP" and t.value in "+-" and self.peek(1).kind == "NUM":
             sign = self.next().value
-            num = self.next().value
-            return self._num_term(num if sign == "+" else "-" + num)
+            return self._num_term(sign + self.next().value)
         if t.kind == "WORD":
             w = t.value
             if w == "a" and position == "predicate":
@@ -492,12 +550,9 @@ class Parser:
             inner, _ = self._path_alt()
             self.expect_op(")")
             rendered, compound = f"({inner})", True
-        elif t.kind == "IRI":
+        elif t.kind in ("IRI", "PNAME"):
             self.next()
-            rendered, compound = t.value, False
-        elif t.kind == "PNAME":
-            self.next()
-            rendered, compound = f"<{self._resolve_pname(t.value)}>", False
+            rendered, compound = f"<{self._iri(t)}>", False
         elif t.kind == "WORD" and t.value == "a":
             self.next()
             rendered, compound = f"<{RDF_TYPE}>", False
@@ -519,8 +574,12 @@ class Parser:
             rendered, compound = "!(" + "|".join(items) + ")", True
         else:
             raise ValueError(f"cannot parse path at position {t.pos}: {t.value!r}")
-        # closure/optional suffix — '?' only when not starting a variable
-        if self.at_op("+", "*"):
+        # closure/optional suffix — '?' only when not starting a variable,
+        # '+' only when not the sign of an adjacent number object (+5)
+        nxt = self.peek(1)
+        if self.at_op("*") or (
+            self.at_op("+") and not (nxt.kind == "NUM" and nxt.pos == self.peek().pos + 1)
+        ):
             rendered += self.next().value
             compound = True
         elif self.at_op("?"):
@@ -538,12 +597,9 @@ class Parser:
             # predicate is outside the inverse subset (SPARQL 1.1 §9.1)
             return "^" + self._nps_member()
         t = self.peek()
-        if t.kind == "IRI":
+        if t.kind in ("IRI", "PNAME"):
             self.next()
-            return t.value
-        if t.kind == "PNAME":
-            self.next()
-            return f"<{self._resolve_pname(t.value)}>"
+            return f"<{self._iri(t)}>"
         if t.kind == "WORD" and t.value == "a":
             self.next()
             return f"<{RDF_TYPE}>"
@@ -577,7 +633,6 @@ class Parser:
     def _parse_collection(self, sink: list) -> str:
         """``( o1 o2 … )`` in a pattern = fresh variables chained with
         rdf:first/rdf:rest patterns; ``()`` is the rdf:nil constant."""
-        rdf = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
         self.expect_op("(")
         items: list[str] = []
         while not self.at_op(")"):
@@ -586,16 +641,16 @@ class Parser:
             items.append(self._parse_node_term(sink))
         self.next()
         if not items:
-            return rdf + "nil"
+            return RDF + "nil"
         head = self._fresh_bnpl_var()
         node = head
         for j, item in enumerate(items):
-            sink.append(TriplePattern(node, rdf + "first", item))
+            sink.append(TriplePattern(node, RDF + "first", item))
             if j == len(items) - 1:
-                sink.append(TriplePattern(node, rdf + "rest", rdf + "nil"))
+                sink.append(TriplePattern(node, RDF + "rest", RDF + "nil"))
             else:
                 nxt = self._fresh_bnpl_var()
-                sink.append(TriplePattern(node, rdf + "rest", nxt))
+                sink.append(TriplePattern(node, RDF + "rest", nxt))
                 node = nxt
         return head
 
@@ -648,6 +703,62 @@ class Parser:
         else:
             s = self.parse_term("subject")
         self._pred_obj_list(s, sink)
+
+    # -- data: quad blocks and grounding -------------------------------------
+
+    def parse_quads(self, document: bool = False) -> dict[str | None, list]:
+        """Triples and graph blocks, as graph → TriplePatterns (None =
+        the default graph): the body of INSERT DATA up to its closing
+        ``}`` (``GRAPH <g> {…}`` blocks), or with ``document`` a whole
+        Turtle / TriG document, which also takes directives between
+        statements and the TriG blocks ``<g> {…}`` and ``{…}``."""
+        quads: dict[str | None, list] = {}
+        while True:
+            if document:
+                self.parse_prologue()
+            if self.peek().kind == "EOF" or (not document and self.at_op("}")):
+                return quads
+            if self.eat_op("."):
+                continue
+            if self.eat_word("GRAPH"):
+                g = self.parse_iri("a graph IRI")
+            elif document and self.at_op("{"):
+                g = None
+            elif document and self.peek(1).kind == "OP" and self.peek(1).value == "{":
+                g = self.parse_iri("a graph IRI")
+            else:
+                self.parse_triples(quads.setdefault(None, []))
+                continue
+            sink = quads.setdefault(g, [])
+            self.expect_op("{")
+            while not self.eat_op("}"):
+                if self.peek().kind == "EOF":
+                    raise ValueError("unbalanced graph block: missing '}'")
+                if not self.eat_op("."):
+                    self.parse_triples(sink)
+
+    def ground(self, quads: dict, source: str | None = None) -> dict:
+        """The one grounding step of data (SPARQL 1.1 Update §3.1.1:
+        QuadData is ground): a variable or property path is an error,
+        and each ``?__bnplN`` placeholder of a ``[ … ]`` / ``( … )``
+        becomes the blank node ``_:genidN``.  With a ``source`` (the
+        update text or the file path) the label also carries
+        ``terms.bnode_tag`` of (graph, source)."""
+        out: dict = {}
+        for g, pats in quads.items():
+            tag = "" if source is None else terms.bnode_tag(g, source)
+
+            def fix(term: str) -> str:
+                if term.startswith("?__bnpl"):
+                    return f"_:genid{term[7:]}{tag}"
+                if term.startswith("?"):
+                    raise ValueError(f"data requires ground terms; found variable {term}")
+                return term
+
+            if any(p.is_path() for p in pats):
+                raise ValueError("property paths are not allowed in data")
+            out[g] = [TriplePattern(fix(p.s), fix(p.p), fix(p.o)) for p in pats]
+        return out
 
     # -- VALUES --------------------------------------------------------------
 
@@ -770,14 +881,11 @@ class Parser:
         if t.kind == "LIT":
             self.next()
             return TermE(self._literal_term(t.value))
-        if t.kind == "IRI":
-            self.next()
-            return TermE(t.value[1:-1])
-        if t.kind == "PNAME":
+        if t.kind in ("IRI", "PNAME"):
             self.next()
             if self.at_op("("):
                 raise ValueError(f"unsupported function call: {t.value!r}")
-            return TermE(self._resolve_pname(t.value))
+            return TermE(self._iri(t))
         if t.kind == "WORD":
             w = t.value.upper()
             if w in ("TRUE", "FALSE"):
@@ -914,18 +1022,10 @@ class Parser:
                 acc = join(acc, self.parse_values())
             elif self.at_word("GRAPH"):
                 self.next()
-                t = self.peek()
-                if t.kind == "VAR":
-                    self.next()
-                    gterm = "?" + t.value[1:]
-                elif t.kind == "IRI":
-                    self.next()
-                    gterm = t.value[1:-1]
-                elif t.kind == "PNAME":
-                    self.next()
-                    gterm = self._resolve_pname(t.value)
+                if self.peek().kind == "VAR":
+                    gterm = "?" + self.next().value[1:]
                 else:
-                    raise ValueError("GRAPH requires a variable or IRI")
+                    gterm = self.parse_iri("a variable or IRI after GRAPH")
                 acc = join(acc, GraphScopeNode(gterm, self.parse_group()))
             elif self.at_word("SERVICE"):
                 raise ValueError("SERVICE is unsupported")
@@ -953,21 +1053,7 @@ class Parser:
     # -- query forms ---------------------------------------------------------
 
     def parse_query(self) -> ParsedQuery:
-        while self.at_word("PREFIX", "BASE"):
-            kw = self.next().value.upper()
-            if kw == "BASE":
-                if self.peek().kind != "IRI":
-                    raise ValueError("BASE requires an IRI")
-                self.next()  # absolute IRIs only; base kept for symmetry
-                continue
-            pt = self.next()
-            if pt.kind != "PNAME" or not pt.value.endswith(":"):
-                raise ValueError(f"PREFIX requires 'name:' at position {pt.pos}")
-            it = self.next()
-            if it.kind != "IRI":
-                raise ValueError("PREFIX requires an IRI")
-            self.prefixes[pt.value[:-1]] = it.value[1:-1]
-
+        self.parse_prologue()
         if self.at_word("SELECT"):
             return self._select_query()
         if self.at_word("ASK"):
@@ -1097,12 +1183,9 @@ class Parser:
             if t.kind == "VAR":
                 self.next()
                 targets.append("?" + t.value[1:])
-            elif t.kind == "IRI":
+            elif t.kind in ("IRI", "PNAME"):
                 self.next()
-                targets.append(t.value[1:-1])
-            elif t.kind == "PNAME":
-                self.next()
-                targets.append(self._resolve_pname(t.value))
+                targets.append(self._iri(t))
             else:
                 break
         if not targets:

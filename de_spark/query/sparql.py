@@ -809,14 +809,15 @@ def _is_value_col(df: DataFrame, v: str) -> bool:
 def _with_term_strs(kg: KnowledgeGraph, df: DataFrame, vars_: list[str]):
     """Attach ``__s_<var>`` term-string copies of the uid-typed vars
     (on-the-fly decode for a FILTER / BIND the vocabulary cannot
-    evaluate), returning (df, env, temp_cols)."""
+    evaluate), returning (df, env, temp_cols).  A var the group never
+    binds is unbound in every solution: a null term (SPARQL 1.1 §17)."""
     dtypes = dict(df.dtypes)
     env: dict = {}
     uid_vars: list[str] = []
     for v in vars_:
         if v not in df.columns:
-            raise ValueError(f"variable ?{v} is not bound in this scope")
-        if dtypes[v] == "bigint" and _is_value_col(df, v):
+            env[v] = (F.lit(None).cast("string"), "term")
+        elif dtypes[v] == "bigint" and _is_value_col(df, v):
             # plain value columns are COUNT-style integers
             env[v] = (F.col(v), "int")
         elif dtypes[v] == "boolean":
@@ -964,12 +965,9 @@ def _render_staged(df: DataFrame, col: Column, tag: str, out: str) -> DataFrame:
 def _extend_one(kg: KnowledgeGraph, df: DataFrame | None, node) -> DataFrame:
     """Compile a single BIND over an already-compiled child frame
     (None = the empty/unit group)."""
-    vs = sorted(expr_vars(node.expr))
     if df is None:
-        if vs:
-            raise ValueError("BIND over an empty group cannot reference variables")
         df = kg.triples.sparkSession.range(1).drop("id")
-    df, env, temp = _with_term_strs(kg, df, vs)
+    df, env, temp = _with_term_strs(kg, df, sorted(expr_vars(node.expr)))
     df = _project_parse_refs(df, env, temp, node.expr)
     col, tag = _ex(node.expr, env)
     return _render_staged(df, col, tag, node.var).drop(*temp)

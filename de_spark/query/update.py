@@ -18,9 +18,12 @@ immutable once written, so
   absent (unless SILENT); DEFAULT/NAMED/ALL targets refused
   (src/serve.rs:892-960)
 
-Parsing reuses the query front-end's tokenizer/term machinery
-(de_spark.query.parser.Parser); execution maps onto the batch
-mutation surface (store.add_graph / store.drop_graph).
+Parsing is the query front-end's (de_spark.query.parser.Parser): its
+prologue, its quad-block parser for INSERT DATA's ``{ … }`` — the one
+Turtle / TriG documents go through — and its grounding step, which
+mints each ``[ … ]`` / ``( … )`` blank node with a digest of (graph,
+update text).  Execution maps onto the batch mutation surface
+(store.add_graph / store.drop_graph).
 """
 
 from __future__ import annotations
@@ -45,84 +48,22 @@ class UpdateOp:
 
 class UpdateParser(Parser):
     def parse_update(self) -> list[UpdateOp]:
-        while self.at_word("PREFIX", "BASE"):
-            kw = self.next().value.upper()
-            if kw == "BASE":
-                self.next()
-                continue
-            pt = self.next()
-            it = self.next()
-            if pt.kind != "PNAME" or it.kind != "IRI":
-                raise ValueError("malformed PREFIX declaration")
-            self.prefixes[pt.value[:-1]] = it.value[1:-1]
         ops: list[UpdateOp] = []
-        while self.peek().kind != "EOF":
+        while True:
+            self.parse_prologue()
+            if self.peek().kind == "EOF":
+                break
             ops.append(self._operation())
             self.eat_op(";")
         if not ops:
             raise ValueError("empty SPARQL update")
         return ops
 
-    def _graph_iri(self) -> str:
-        t = self.peek()
-        if t.kind == "IRI":
-            self.next()
-            return t.value[1:-1]
-        if t.kind == "PNAME":
-            self.next()
-            return self._resolve_pname(t.value)
-        raise ValueError(f"expected a graph IRI at position {t.pos}")
-
     def _quad_data(self) -> dict[str | None, list]:
         self.expect_op("{")
-        quads: dict[str | None, list] = {}
-        while not self.at_op("}"):
-            if self.at_word("GRAPH"):
-                self.next()
-                g = self._graph_iri()
-                self.expect_op("{")
-                sink = quads.setdefault(g, [])
-                while not self.at_op("}"):
-                    if self.at_op("."):
-                        self.next()
-                        continue
-                    self.parse_triples(sink)
-                self.expect_op("}")
-            elif self.at_op("."):
-                self.next()
-            else:
-                self.parse_triples(quads.setdefault(None, []))
+        quads = self.parse_quads()
         self.expect_op("}")
-        return self._ground(quads)
-
-    def _ground(self, quads: dict[str | None, list]) -> dict[str | None, list]:
-        """QuadData must be GROUND (SPARQL 1.1 Update §3.1.1): variables
-        are a parse error; ``[ … ]`` property lists / ``( … )``
-        collections (which parse_triples compiles to ``?__bnplN``
-        placeholder variables in query position) become fresh
-        ``_:genidN`` blank-node labels, as the Turtle parser does."""
-        from de_spark.query.bgp import TriplePattern
-
-        bmap: dict[str, str] = {}
-
-        def fix(term: str) -> str:
-            if term.startswith("?__bnpl"):
-                if term not in bmap:
-                    bmap[term] = f"_:genid{len(bmap) + 1}"
-                return bmap[term]
-            if term.startswith("?"):
-                raise ValueError(
-                    f"INSERT DATA requires ground terms; found variable {term}"
-                )
-            return term
-
-        out: dict[str | None, list] = {}
-        for g, pats in quads.items():
-            for p in pats:
-                if p.is_path():
-                    raise ValueError("property paths are not allowed in INSERT DATA")
-            out[g] = [TriplePattern(fix(p.s), fix(p.p), fix(p.o)) for p in pats]
-        return out
+        return self.ground(quads, self.text)
 
     def _operation(self) -> UpdateOp:
         if self.at_word("INSERT"):
@@ -153,7 +94,7 @@ class UpdateParser(Parser):
             self.next()
             silent = self.eat_word("SILENT")
             self.expect_word("GRAPH")
-            return UpdateOp(kind="create", graph=self._graph_iri(), silent=silent)
+            return UpdateOp(kind="create", graph=self.parse_iri("a graph IRI"), silent=silent)
         if self.at_word("DROP", "CLEAR"):
             kind = self.next().value.lower()
             silent = self.eat_word("SILENT")
@@ -172,11 +113,11 @@ class UpdateParser(Parser):
                     f"{verb} ALL is not supported. Please specify individual graphs."
                 )
             self.expect_word("GRAPH")
-            return UpdateOp(kind=kind, graph=self._graph_iri(), silent=silent)
+            return UpdateOp(kind=kind, graph=self.parse_iri("a graph IRI"), silent=silent)
         if self.at_word("LOAD"):
             self.next()
             silent = self.eat_word("SILENT")
-            src = self._graph_iri()
+            src = self.parse_iri("a source IRI")
             if not self.eat_word("INTO"):
                 raise UpdateRefusedError(
                     "LOAD to default graph is not allowed. "
@@ -184,7 +125,7 @@ class UpdateParser(Parser):
                 )
             self.expect_word("GRAPH")
             return UpdateOp(
-                kind="load", graph=self._graph_iri(), silent=silent, source=src
+                kind="load", graph=self.parse_iri("a graph IRI"), silent=silent, source=src
             )
         t = self.peek()
         raise ValueError(f"unsupported update operation at position {t.pos}: {t.value!r}")

@@ -25,31 +25,21 @@ subset ontologies actually ship with:
 Reification: ``rdf:ID`` on a property element names the statement and
 adds the four ``rdf:Statement``/subject/predicate/object triples
 (RDF/XML §7.3).  Parsing runs inside ``mapInPandas`` over whole-file rows
-(one file = one row; many files parse in parallel across tasks — same
-batching contract as the Turtle converter).
+(one file = one row; many files parse in parallel across tasks — the
+router's one file kernel, shared with Turtle).
 """
 
 from __future__ import annotations
 
+import os
 import re
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
-
-import pandas as pd
 
 from de_spark import terms
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XML_NS = "http://www.w3.org/XML/1998/namespace"
 RDF_TYPE = RDF_NS + "type"
-
-_NT_ESCAPES = [("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\t", "\\t"), ("\r", "\\r")]
-
-
-def _escape_nt(s: str) -> str:
-    for a, b in _NT_ESCAPES:
-        s = s.replace(a, b)
-    return s
 
 
 def _tag_iri(tag: str) -> str:
@@ -63,10 +53,16 @@ def _tag_iri(tag: str) -> str:
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 
 
-def parse_rdfxml(text: str, base: str = "") -> list[tuple[str, str, str]]:
-    """Parse an RDF/XML-subset document into HDT-convention triples."""
+def parse_rdfxml(
+    text: str, graph: str | None = None, path: str | None = None
+) -> list[tuple[str, str, str]]:
+    """Parse an RDF/XML-subset document into HDT-convention triples.
+    Relative IRIs resolve against ``xml:base``, else the file's own
+    ``file:///<name>``; with a ``path`` the minted blank nodes carry a
+    digest of (graph, path), as Turtle's do."""
     root = ET.fromstring(text)
-    base = root.get(f"{{{XML_NS}}}base", base)
+    base = root.get(f"{{{XML_NS}}}base", f"file:///{os.path.basename(path)}" if path else "")
+    tag = "" if path is None else terms.bnode_tag(graph, path)
     triples: list[tuple[str, str, str]] = []
     bnode_counter = [0]
 
@@ -79,7 +75,7 @@ def parse_rdfxml(text: str, base: str = "") -> list[tuple[str, str, str]]:
 
     def fresh_bnode() -> str:
         bnode_counter[0] += 1
-        return f"_:rx{bnode_counter[0]}"
+        return f"_:rx{bnode_counter[0]}{tag}"
 
     def subject_of(elem: ET.Element) -> str:
         about = elem.get(f"{{{RDF_NS}}}about")
@@ -144,7 +140,7 @@ def parse_rdfxml(text: str, base: str = "") -> list[tuple[str, str, str]]:
             parts = [prop.text or ""]
             for child in prop:
                 parts.append(ET.tostring(child, encoding="unicode"))
-            lit = '"' + _escape_nt("".join(parts)) + f'"^^<{RDF_NS}XMLLiteral>'
+            lit = '"' + terms.escape_nt_py("".join(parts)) + f'"^^<{RDF_NS}XMLLiteral>'
             triples.append((subj, p, lit))
             return
         if pt is not None:
@@ -164,7 +160,7 @@ def parse_rdfxml(text: str, base: str = "") -> list[tuple[str, str, str]]:
             for child in children:
                 triples.append((subj, p, walk_node(child)))
         else:
-            lit = '"' + _escape_nt(prop.text or "") + '"'
+            lit = '"' + terms.escape_nt_py(prop.text or "") + '"'
             if dt:
                 lit += f"^^<{dt}>"
             elif lang:
@@ -185,13 +181,3 @@ def parse_rdfxml(text: str, base: str = "") -> list[tuple[str, str, str]]:
     else:
         walk_node(root)
     return triples
-
-
-def rdfxml_files_to_triples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (path, content, graph) rows → triples_raw rows."""
-    for pdf in batches:
-        out = []
-        for path, content, graph in zip(pdf["path"], pdf["content"], pdf["graph"]):
-            for s, p, o in parse_rdfxml(content, base=f"file:///{path.rsplit('/', 1)[-1]}"):
-                out.append((s, p, o, terms.classify_py(o), graph))
-        yield pd.DataFrame(out, columns=["s", "p", "o", "o_kind", "graph"])

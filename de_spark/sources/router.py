@@ -3,8 +3,8 @@
 Maps file extension → parser: ``.nt``/``.ntriples`` take the fast
 text-scan path (the reference byte-copies NT, src/create.rs:83-86);
 ``.nq``/``.nquads`` ride the same scan with the graph term demoted;
-``.ttl``/``.turtle``/``.n3`` go through the Turtle-subset converter;
-``.trig`` through the TriG extension (GRAPH blocks demoted);
+``.ttl``/``.turtle``/``.n3``/``.trig`` go through the SPARQL parser's
+document grammar (``sources.turtle``; TriG graph blocks demoted);
 ``.rdf``/``.owl``/``.xml`` through the RDF/XML-subset converter (the
 reference's explicit ``.owl`` special case, src/rdf2nt.rs:57-60).
 Unknown extensions are reported, mirroring the reference's "unhandled
@@ -13,8 +13,10 @@ surface a demotion warning, mirroring the reference's quad→triple
 warning ("HDT does not support named graphs", src/rdf2nt.rs:89-96).
 
 All N-Triples/N-Quads inputs share one text scan, and the Turtle and
-RDF/XML inputs one whole-file scan each; every file's graph is
-``file:///<name>`` from one naming rule (``nt.file_graph``).
+RDF/XML inputs one whole-file scan each, parsed by one file kernel that
+takes the format's parse function; every file's graph is
+``file:///<name>`` from one naming rule (``nt.file_graph``), and blank
+nodes a parser mints carry a digest of (graph, file path).
 Multi-file aggregation into one graph (reference ``files_to_rdf``,
 src/create.rs:66-124) is a lazy ``unionByName`` of those scans — the
 reference's single-NT skip-copy optimization (src/create.rs:101-113) is
@@ -24,14 +26,18 @@ moot because Spark scans are lazy.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterator
+from functools import partial
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from de_spark import terms
 from de_spark.graph import SCHEMAS
 from de_spark.sources.nt import file_graph, read_nt_files
-from de_spark.sources.rdfxml import rdfxml_files_to_triples
-from de_spark.sources.turtle import turtle_files_to_triples
+from de_spark.sources.rdfxml import parse_rdfxml
+from de_spark.sources.turtle import parse_turtle
 
 _TURTLE_EXTS = {".ttl", ".turtle", ".n3", ".trig"}
 _NT_EXTS = {".nt", ".ntriples", ".nq", ".nquads"}
@@ -39,11 +45,30 @@ _RDFXML_EXTS = {".rdf", ".owl", ".xml"}
 _QUAD_EXTS = {".nq", ".nquads", ".trig"}
 
 
-def _whole_files(spark: SparkSession, paths: list[str], single_graph: str | None) -> DataFrame:
-    return spark.read.text(paths, wholetext=True).select(
-        F.input_file_name().alias("path"),
-        F.col("value").alias("content"),
-        file_graph(single_graph).alias("graph"),
+def _files_to_triples(parse: Callable, batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: (path, content, graph) rows → triples_raw
+    rows, each file read by ``parse(content, graph, path)``."""
+    for pdf in batches:
+        out = [
+            (s, p, o, terms.classify_py(o), graph)
+            for path, content, graph in zip(pdf["path"], pdf["content"], pdf["graph"])
+            for s, p, o in parse(content, graph, path)
+        ]
+        yield pd.DataFrame(out, columns=["s", "p", "o", "o_kind", "graph"])
+
+
+def _whole_files(
+    spark: SparkSession, paths: list[str], single_graph: str | None, parse: Callable
+) -> DataFrame:
+    """One row per file, parsed in parallel tasks by ``parse``."""
+    return (
+        spark.read.text(paths, wholetext=True)
+        .select(
+            F.input_file_name().alias("path"),
+            F.col("value").alias("content"),
+            file_graph(single_graph).alias("graph"),
+        )
+        .mapInPandas(partial(_files_to_triples, parse), SCHEMAS["triples_raw"])
     )
 
 
@@ -84,19 +109,10 @@ def read_rdf(
 
     if nt_paths:
         parts.append(read_nt_files(spark, nt_paths, single_graph))
-    # whole-file reads; one row per file, parsed in parallel tasks
     if turtle_paths:
-        parts.append(
-            _whole_files(spark, turtle_paths, single_graph).mapInPandas(
-                turtle_files_to_triples, SCHEMAS["triples_raw"]
-            )
-        )
+        parts.append(_whole_files(spark, turtle_paths, single_graph, parse_turtle))
     if rdfxml_paths:
-        parts.append(
-            _whole_files(spark, rdfxml_paths, single_graph).mapInPandas(
-                rdfxml_files_to_triples, SCHEMAS["triples_raw"]
-            )
-        )
+        parts.append(_whole_files(spark, rdfxml_paths, single_graph, parse_rdfxml))
 
     if not parts:
         return spark.createDataFrame([], SCHEMAS["triples_raw"]), unhandled, warnings

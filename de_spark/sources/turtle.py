@@ -1,310 +1,47 @@
-"""Turtle-subset → triples converter.
+"""Turtle and TriG documents → triples.
 
 The reference delegates non-NT parsing to oxrdfio and re-serializes to
-N-Triples, dropping graph names (src/rdf2nt.rs:33-105).  Round 3
-upgrades the round-2 tokenizer into a recursive-descent parser covering
-the constructs real-world ontologies use constantly (VERDICT r2 item
-2): @prefix/@base, prefixed names, the ``a`` keyword, ``;``/``,``
-lists, quoted literals with ``^^``/``@lang``, bare
-booleans/integers/decimals, **blank-node property lists ``[ … ]``**
-(fresh deterministic ``_:genidN`` labels), **collections ``( … )``**
-(rdf:first/rdf:rest chains, ``()`` = rdf:nil), **long / single-
-quoted literals** (``\"\"\"…\"\"\"``, ``'''…'''``, ``'…'`` — lexical
-forms normalized to NT escaping so the term strings match what
-oxigraph's NT re-serialization produces), and **@base / BASE / PREFIX
-directives with RFC 3986 relative-IRI resolution** (Turtle 1.1 §6.3).
+N-Triples, dropping graph names (src/rdf2nt.rs:33-105).  Its RDF and
+SPARQL parsers come from one stack, so a constant in a query names the
+same term as the data it matches.  Here the same holds because a
+document is read by the SPARQL ``Parser``
+(de_spark.query.parser): its prologue (@prefix/@base, PREFIX/BASE,
+RFC 3986 relative IRIs), its literal normalizer (long and single-quoted
+literals in N-Triples form), its triples grammar (``;``/``,`` lists,
+``a``, numbers, booleans, ``[ … ]`` property lists, ``( … )``
+collections), its quad blocks (TriG ``GRAPH <g> {…}``, ``<g> {…}``,
+``{…}``) and its grounding step (``[ … ]`` / ``( … )`` mint blank
+nodes ``_:genidN``).
 
-Parsing runs inside ``mapInPandas`` over (path, content) rows — one
-file is one row, many files parse in parallel across tasks, and the
-parser is plain Python over an in-memory string (file-level batching;
-no per-row Python over triples).
+The router reads each file as one (path, content, graph) row and
+parses many files in parallel inside ``mapInPandas``.
 """
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
+from de_spark.query.parser import RDF, Parser
 
-import pandas as pd
-
-from de_spark import terms
-
-XSD = "http://www.w3.org/2001/XMLSchema#"
-RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-RDF_TYPE = RDF + "type"
-
-_SUFFIX = r"(?:\^\^<[^>]*>|\^\^[A-Za-z_][\w.-]*:[\w.-]*|@[A-Za-z0-9-]+)?"
-
-_TOKEN = re.compile(
-    r"""
-      (?P<comment>\#[^\n]*)
-    | (?P<literal>(?:
-            \"\"\"(?:[^"\\]|\\.|"(?!""))*\"\"\"
-          | '''(?:[^'\\]|\\.|'(?!''))*'''
-          | "(?:[^"\\\n]|\\.)*"
-          | '(?:[^'\\\n]|\\.)*'
-        )"""
-    + _SUFFIX
-    + r""")
-    | (?P<iri><[^>]*>)
-    | (?P<anon>\[\s*\])
-    | (?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+)[eE][+-]?\d+|[+-]?\d*\.\d+|[+-]?\d+)
-    | (?P<punct>[;,.\[\]{}()])
-    | (?P<kw>@prefix|@base)
-    | (?P<bnode>_:[\w-]+)
-    | (?P<pname>[A-Za-z_][\w-]*(?:\.[\w-]+)*:[\w-]*(?:\.[\w-]+)*|:[\w-]*(?:\.[\w-]+)*|[A-Za-z_][\w-]*(?:\.[\w-]+)*)
-    """,
-    re.VERBOSE,
-)
+__all__ = ["RDF", "parse_trig", "parse_turtle"]
 
 
-def parse_turtle(text: str) -> list[tuple[str, str, str]]:
-    """Parse a Turtle-subset document into HDT-convention string triples."""
-    return _parse_turtle_impl(text)[0]
-
-
-def parse_trig(text: str) -> tuple[list[tuple[str, str, str]], bool]:
-    """TriG = Turtle + GRAPH blocks.  Graph names are DEMOTED: every
-    statement lands in the enclosing file's single graph, mirroring the
+def parse_trig(
+    text: str, graph: str | None = None, path: str | None = None
+) -> tuple[list[tuple[str, str, str]], bool]:
+    """TriG = Turtle + graph blocks.  Graph names are DEMOTED: every
+    statement lands in the file's single graph ``graph``, mirroring the
     reference's quad→triple demotion with a warning ("HDT does not
-    support named graphs", src/rdf2nt.rs:89-96).  Returns
+    support named graphs", src/rdf2nt.rs:89-96).  With a ``path`` the
+    minted blank nodes carry a digest of (graph, path).  Returns
     (triples, had_named_graphs)."""
-    return _parse_turtle_impl(text)
+    p = Parser(text)
+    quads = p.parse_quads(document=True)
+    demoted = [t for ts in quads.values() for t in ts]
+    triples = p.ground({graph: demoted}, path)[graph]
+    return [(t.s, t.p, t.o) for t in triples], any(g is not None for g in quads)
 
 
-def _normalize_lexical(body: str, quote: str) -> str:
-    """Turtle lexical form → NT-escaped lexical form (so long literals
-    with raw newlines and single-quoted strings produce the same term
-    string oxigraph's NT serialization would)."""
-    if quote == "'":
-        body = body.replace("\\'", "'")
-    return terms.escape_nt_py(terms.unescape_nt_py(body))
-
-
-_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
-
-
-class _TurtleParser:
-    def __init__(self, text: str):
-        self.toks: list[tuple[str, str]] = []
-        for m in _TOKEN.finditer(text):
-            if m.lastgroup == "comment":
-                continue
-            self.toks.append((m.lastgroup, m.group()))
-        self.i = 0
-        self.prefixes: dict[str, str] = {}
-        self.base: str | None = None
-        self.triples: list[tuple[str, str, str]] = []
-        self.had_graphs = False
-        self._gen = 0
-
-    def _abs_iri(self, iri: str) -> str:
-        """Resolve a (possibly relative) IRI against @base / BASE per
-        RFC 3986 (Turtle 1.1 §6.3); absolute IRIs pass through."""
-        if _SCHEME.match(iri) or self.base is None:
-            return iri
-        from urllib.parse import urljoin
-
-        return urljoin(self.base, iri)
-
-    # -- helpers --------------------------------------------------------------
-
-    def _fresh(self) -> str:
-        self._gen += 1
-        return f"_:genid{self._gen}"
-
-    def _peek(self) -> tuple[str, str]:
-        if self.i >= len(self.toks):
-            return ("eof", "")
-        return self.toks[self.i]
-
-    def _at(self, tok: str) -> bool:
-        k, t = self._peek()
-        return k == "punct" and t == tok
-
-    def _expect(self, tok: str) -> None:
-        if not self._at(tok):
-            k, t = self._peek()
-            raise ValueError(f"malformed Turtle: expected {tok!r}, got {t!r}")
-        self.i += 1
-
-    def _resolve(self, kind: str, tok: str) -> str:
-        if kind == "iri":
-            return self._abs_iri(tok[1:-1])
-        if kind == "literal":
-            m2 = re.match(
-                r"^(.*?)(\^\^<[^>]*>|\^\^[A-Za-z_][\w.-]*:[\w.-]*|@[A-Za-z0-9-]+)?$",
-                tok,
-                re.S,
-            )
-            body, suffix = m2.group(1), m2.group(2) or ""
-            if suffix.startswith("^^") and not suffix.startswith("^^<"):
-                pfx, local = suffix[2:].split(":", 1)
-                suffix = f"^^<{self.prefixes[pfx]}{local}>"
-            for q in ('"""', "'''", '"', "'"):
-                if body.startswith(q):
-                    lex = _normalize_lexical(body[len(q):-len(q)], q[0])
-                    break
-            return f'"{lex}"{suffix}'
-        if kind == "bnode":
-            return tok
-        if kind == "num":
-            # Turtle abbreviated numeric forms (§2.5.2): INTEGER →
-            # xsd:integer, DECIMAL → xsd:decimal, exponent DOUBLE →
-            # xsd:double — lexical form preserved as written
-            if "e" in tok.lower():
-                dt = "double"
-            elif "." in tok:
-                dt = "decimal"
-            else:
-                dt = "integer"
-            return f'"{tok}"^^<{XSD}{dt}>'
-        if kind == "pname":
-            if tok == "a":
-                return RDF_TYPE
-            if tok in ("true", "false"):
-                return f'"{tok}"^^<{XSD}boolean>'
-            if ":" in tok:
-                pfx, local = tok.split(":", 1)
-                if pfx not in self.prefixes:
-                    raise ValueError(f"undefined prefix {pfx!r} in {tok!r}")
-                return self.prefixes[pfx] + local
-            raise ValueError(f"bare name not supported: {tok!r}")
-        raise ValueError(f"unexpected token {kind}:{tok!r}")
-
-    # -- grammar ---------------------------------------------------------------
-
-    def parse_node(self) -> str:
-        """subject/object position: term, ``[ … ]`` property list (fresh
-        bnode), or ``( … )`` collection (rdf:first/rdf:rest chain)."""
-        kind, tok = self._peek()
-        if kind == "anon":
-            self.i += 1
-            return self._fresh()
-        if self._at("["):
-            self.i += 1
-            b = self._fresh()
-            self.parse_predicate_object_list(b)
-            self._expect("]")
-            return b
-        if self._at("("):
-            self.i += 1
-            items: list[str] = []
-            while not self._at(")"):
-                if self._peek()[0] == "eof":
-                    raise ValueError("malformed Turtle: unterminated collection")
-                items.append(self.parse_node())
-            self.i += 1
-            if not items:
-                return RDF + "nil"
-            head = self._fresh()
-            node = head
-            for j, item in enumerate(items):
-                self.triples.append((node, RDF + "first", item))
-                if j == len(items) - 1:
-                    self.triples.append((node, RDF + "rest", RDF + "nil"))
-                else:
-                    nxt = self._fresh()
-                    self.triples.append((node, RDF + "rest", nxt))
-                    node = nxt
-            return head
-        self.i += 1
-        return self._resolve(kind, tok)
-
-    def parse_predicate_object_list(self, subj: str) -> None:
-        while True:
-            kind, tok = self._peek()
-            pred = self._resolve(kind, tok)
-            self.i += 1
-            while True:
-                obj = self.parse_node()
-                self.triples.append((subj, pred, obj))
-                if self._at(","):
-                    self.i += 1
-                    continue
-                break
-            if self._at(";"):
-                self.i += 1
-                # trailing ';' before '.' / ']' / '}'
-                k, t = self._peek()
-                if (k == "punct" and t in ".]}") or k == "eof":
-                    break
-                continue
-            break
-
-    def parse_doc(self) -> None:
-        while self.i < len(self.toks):
-            kind, tok = self.toks[self.i]
-            if kind == "kw":
-                if tok == "@prefix":
-                    pname = self.toks[self.i + 1][1].rstrip(":")
-                    iri = self._abs_iri(self.toks[self.i + 2][1][1:-1])
-                    assert self.toks[self.i + 3][1] == ".", "malformed @prefix"
-                    self.prefixes[pname] = iri
-                    self.i += 4
-                else:  # @base <iri> . — later relative IRIs resolve
-                    self.base = self._abs_iri(self.toks[self.i + 1][1][1:-1])
-                    self.i += 3
-                continue
-            # SPARQL-style directives (Turtle 1.1: no '@', no final '.')
-            if (
-                kind == "pname"
-                and tok.upper() == "BASE"
-                and self.i + 1 < len(self.toks)
-                and self.toks[self.i + 1][0] == "iri"
-            ):
-                self.base = self._abs_iri(self.toks[self.i + 1][1][1:-1])
-                self.i += 2
-                continue
-            if (
-                kind == "pname"
-                and tok.upper() == "PREFIX"
-                and self.i + 2 < len(self.toks)
-                and self.toks[self.i + 1][0] == "pname"
-                and self.toks[self.i + 1][1].endswith(":")
-                and self.toks[self.i + 2][0] == "iri"
-            ):
-                self.prefixes[self.toks[self.i + 1][1].rstrip(":")] = self._abs_iri(
-                    self.toks[self.i + 2][1][1:-1]
-                )
-                self.i += 3
-                continue
-            # TriG: 'GRAPH <g> { … }' — consume keyword + graph name;
-            # the braces below are skipped, so the block's statements
-            # parse into the enclosing (single) graph = quad→triple
-            # demotion (src/rdf2nt.rs:89-96)
-            if kind == "pname" and tok == "GRAPH":
-                self.had_graphs = True
-                self.i += 2
-                continue
-            if kind == "punct" and tok in "{}":
-                self.i += 1
-                continue
-            subj = self.parse_node()
-            # '<g> { … }' TriG label form — demoted like GRAPH
-            if self._at("{"):
-                self.had_graphs = True
-                continue
-            # '[ p o ] .' — the property list IS the whole statement
-            if self._at("."):
-                self.i += 1
-                continue
-            self.parse_predicate_object_list(subj)
-            if self._at("."):
-                self.i += 1
-
-
-def _parse_turtle_impl(text: str) -> tuple[list[tuple[str, str, str]], bool]:
-    p = _TurtleParser(text)
-    p.parse_doc()
-    return p.triples, p.had_graphs
-
-
-def turtle_files_to_triples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (path, content, graph) rows → triples_raw rows."""
-    for pdf in batches:
-        out = []
-        for path, content, graph in zip(pdf["path"], pdf["content"], pdf["graph"]):
-            for s, p, o in parse_turtle(content):
-                out.append((s, p, o, terms.classify_py(o), graph))
-        yield pd.DataFrame(out, columns=["s", "p", "o", "o_kind", "graph"])
+def parse_turtle(
+    text: str, graph: str | None = None, path: str | None = None
+) -> list[tuple[str, str, str]]:
+    """Parse a Turtle document into HDT-convention string triples."""
+    return parse_trig(text, graph, path)[0]

@@ -306,10 +306,10 @@ def execute_update(spark: SparkSession, base_dir: str, update_text: str) -> list
             path = op.source
             if path.startswith("file://"):
                 path = path[len("file://"):]
-            raw, unhandled, _ = read_rdf(spark, [path])
+            raw, unhandled, _ = read_rdf(spark, [path], single_graph=op.graph)
             if unhandled:
                 raise ValueError(f"LOAD source has an unhandled format: {op.source}")
-            add_graph(spark, base_dir, raw.withColumn("graph", F.lit(op.graph)))
+            add_graph(spark, base_dir, raw)
             log.append(f"LOAD {op.source} INTO GRAPH {op.graph}")
         elif op.kind in ("clear", "drop"):
             if drop_graph(spark, base_dir, op.graph):

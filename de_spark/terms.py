@@ -16,6 +16,8 @@ whole-stage codegen) and once in plain Python for driver-side emitters.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -273,6 +275,14 @@ def escape_nt_py(s: str) -> str:
     for a, b in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\t", "\\t"), ("\r", "\\r")):
         s = s.replace(a, b)
     return s
+
+
+def bnode_tag(graph: str | None, source: str) -> str:
+    """Suffix of the blank-node labels minted while reading ``source``
+    (a file path or an update text) into ``graph``: a short digest, so
+    the nodes two documents mint, or one document minted into two
+    graphs, stay distinct terms."""
+    return "_" + hashlib.sha1(f"{graph}\n{source}".encode()).hexdigest()[:8]
 
 
 def sparql_tsv_form_py(term: str) -> str:

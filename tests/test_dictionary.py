@@ -3,7 +3,7 @@ from pyspark.sql import functions as F
 from de_spark.dictionary import build_dict_and_uids, position_flags, zip_with_index
 from de_spark.encode import decode_triples, encode_triples
 from de_spark.pipeline import build
-from de_spark.sources.turtle import parse_turtle, turtle_files_to_triples
+from de_spark.sources.turtle import parse_turtle
 from de_spark.sources.nt import triples_from_nt_text
 from tests.fixtures import APPLE_TTL, BANANA_NT
 

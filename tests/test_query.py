@@ -528,6 +528,24 @@ def test_optional(fruit_kg):
     assert all(r["label"] is None for r in rows)
 
 
+def test_filter_and_bind_over_a_never_bound_variable(fruit_kg):
+    """A variable the group never binds is unbound in every solution
+    (SPARQL 1.1 §17): BOUND is false, a comparison is an error that
+    drops the row, and BIND of it leaves the target unbound."""
+    px = "PREFIX ex: <http://example.org/>\n"
+
+    def fruits(where, var="f"):
+        q = px + f"SELECT ?{var} WHERE {{ ?f ex:hasTaste ?t {where} }} ORDER BY ?f"
+        return [r[0] for r in sparql_select(fruit_kg, q).collect()]
+
+    assert fruits("FILTER(!BOUND(?z))") == [
+        "http://example.org/Banana",
+        "http://example.org/Pineapple",
+    ]
+    assert fruits('FILTER(?z = "x")') == []
+    assert fruits("BIND(?z AS ?w)", "w") == [None, None]
+
+
 def test_result_emitters_fetch_once(spark, in_job_group):
     """Each CSV/TSV/JSON/XML emitter fetches its rows in one Spark job,
     however many partitions the result has, and returns every row."""

@@ -1,3 +1,5 @@
+import pytest
+
 from de_spark.sources.nt import triples_from_nt_text
 from de_spark.sources.rdfxml import parse_rdfxml
 from de_spark.sources.router import read_rdf
@@ -273,7 +275,7 @@ def test_turtle_numeric_literal_grammar():
     xsd = "http://www.w3.org/2001/XMLSchema#"
     doc = (
         "@prefix ex: <http://x/> .\n"
-        "ex:a ex:i 123 ; ex:d 1.5 ; ex:e 2.5e0 ; ex:g -4.0E-2 ; ex:h .5 ; ex:j -7 ."
+        "ex:a ex:i 123 ; ex:d 1.5 ; ex:e 2.5e0 ; ex:g -4.0E-2 ; ex:h .5 ; ex:j -7 ; ex:k +5 ."
     )
     objs = {p.rsplit("/", 1)[1]: o for _, p, o in parse_turtle(doc)}
     assert objs["i"] == f'"123"^^<{xsd}integer>'
@@ -282,3 +284,102 @@ def test_turtle_numeric_literal_grammar():
     assert objs["g"] == f'"-4.0E-2"^^<{xsd}double>'
     assert objs["h"] == f'".5"^^<{xsd}decimal>'
     assert objs["j"] == f'"-7"^^<{xsd}integer>'
+    assert objs["k"] == f'"+5"^^<{xsd}integer>'
+
+
+# ---------------------------------------------------------------------------
+# one grammar: a statement names the same terms in a .ttl file, an .nt
+# file, INSERT DATA and a query constant
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def parity_kg(spark, tmp_path_factory):
+    """t.ttl and t.nt read by read_rdf and built into one store."""
+    from de_spark.pipeline import build
+
+    d = tmp_path_factory.mktemp("parity")
+    (d / "t.ttl").write_text(
+        "@prefix x: <http://x/> .\n"
+        "x:a x:p 'it\\'s' , \"caf\\u00e9\" .\n"
+        "x:c x:p \"\"\"two\nlines\"\"\" .\n"
+    )
+    (d / "t.nt").write_text('<http://x/b> <http://x/p> "caf\\u00e9" .\n')
+    raw, _, _ = read_rdf(spark, [str(d / "t.ttl"), str(d / "t.nt")])
+    kg, _ = build(raw, str(d / "kg"))
+    return kg
+
+
+def _subjects(kg, q):
+    from de_spark.query import sparql_select
+
+    return sorted(r[0] for r in sparql_select(kg, q).collect())
+
+
+def test_escaped_quote_query_literal_matches_turtle(parity_kg):
+    assert _subjects(parity_kg, "SELECT ?s { ?s <http://x/p> 'it\\'s' }") == ["http://x/a"]
+
+
+def test_unicode_escape_is_one_term_in_ttl_nt_and_query(parity_kg):
+    cafe = [r["term"] for r in parity_kg.term_uids.collect() if "caf" in r["term"]]
+    assert cafe == ['"caf\\u00e9"']
+    assert _subjects(parity_kg, 'SELECT ?s { ?s <http://x/p> "caf\\u00e9" }') == [
+        "http://x/a",
+        "http://x/b",
+    ]
+
+
+def test_long_literal_query_matches_turtle(parity_kg):
+    assert _subjects(parity_kg, 'SELECT ?s { ?s <http://x/p> """two\nlines""" }') == [
+        "http://x/c"
+    ]
+
+
+def test_base_resolves_relative_query_iris(parity_kg):
+    q = "BASE <http://x/> SELECT ?s { ?s <p> ?o FILTER(?s = <a>) }"
+    assert _subjects(parity_kg, q) == ["http://x/a", "http://x/a"]
+    assert _subjects(parity_kg, "BASE <http://x/> SELECT ?o { <a> ?p ?o }") == [
+        "\"caf\\u00e9\"",
+        "\"it's\"",
+    ]
+
+
+def test_exponent_number_is_one_term_in_turtle_query_and_insert_data():
+    from de_spark.query.parser import parse_sparql
+    from de_spark.query.update import parse_update
+
+    (_, _, ttl), = parse_turtle("<http://x/a> <http://x/p> 1e5 .")
+    assert ttl == '"1e5"^^<http://www.w3.org/2001/XMLSchema#double>'
+    (pat,) = parse_sparql("SELECT * { ?s <http://x/p> 1e5 }").algebra.patterns
+    assert pat.o == ttl
+    ops = parse_update("INSERT DATA { GRAPH <http://g/> { <http://x/a> <http://x/p> 1e5 } }")
+    assert [t.o for t in ops[0].quads["http://g/"]] == [ttl]
+
+
+def test_long_literal_in_insert_data_matches_turtle():
+    from de_spark.query.update import parse_update
+
+    body = '<http://x/a> <http://x/p> """A "quoted"\nline""" , \'\'\'it\\\'s\'\'\' .'
+    ops = parse_update("INSERT DATA { GRAPH <http://g/> { %s } }" % body)
+    got = [(t.s, t.p, t.o) for t in ops[0].quads["http://g/"]]
+    assert got == parse_turtle(body)
+    assert [o for _, _, o in got] == ['"A \\"quoted\\"\\nline"', '"it\'s"']
+
+
+def test_blank_nodes_of_two_files_stay_apart(spark, tmp_path):
+    """Each file mints its own ``[ … ]`` nodes: two files that both
+    number theirs from 1 still give two nodes, so the join below pairs
+    each subject with its own value only."""
+    from de_spark.pipeline import build
+
+    (tmp_path / "f1.ttl").write_text('<http://x/a> <http://x/p> [ <http://x/q> "1" ] .')
+    (tmp_path / "f2.ttl").write_text('<http://x/b> <http://x/p> [ <http://x/q> "2" ] .')
+    raw, _, _ = read_rdf(spark, [str(tmp_path / "f1.ttl"), str(tmp_path / "f2.ttl")])
+    kg, _ = build(raw, str(tmp_path / "kg"))
+    from de_spark.query import sparql_select
+
+    q = "SELECT ?s ?v { ?s <http://x/p> ?x . ?x <http://x/q> ?v }"
+    assert sorted(tuple(r) for r in sparql_select(kg, q).collect()) == [
+        ("http://x/a", '"1"'),
+        ("http://x/b", '"2"'),
+    ]

@@ -493,7 +493,7 @@ def test_insert_data_ground_terms():
     pats = ops[0].quads["http://g/n"]
     # the [ … ] property list became a fresh blank node, not a
     # ?__bnpl placeholder variable
-    assert {p.s for p in pats} == {"http://x/a", "_:genid1"}
+    assert {p.s for p in pats} == {"http://x/a", "_:genid1_e170b527"}
     assert all(not t.startswith("?") for p in pats for t in (p.s, p.p, p.o))
     with pytest.raises(ValueError, match="ground"):
         parse_update(

@@ -489,3 +489,51 @@ def test_sparql_update_load(spark, tmp_path):
         'SELECT ?f WHERE { GRAPH <file:///pine.hdt> { ?f <http://example.org/hasColor> "yellow" } }',
     ).collect()
     assert [r["f"].rsplit("/", 1)[1] for r in rows] == ["Pineapple"]
+
+
+def test_load_one_file_into_two_graphs_keeps_two_blank_nodes(spark, tmp_path):
+    """A ``[ … ]`` node minted by LOAD belongs to its landing graph:
+    the same file LOADed twice gives two nodes, not one shared node."""
+    base = str(tmp_path / "store")
+    build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+    src = tmp_path / "anon.ttl"
+    src.write_text('<http://x/a> <http://x/p> [ <http://x/q> "1" ] .')
+    store.execute_update(
+        spark,
+        base,
+        f"LOAD <file://{src}> INTO GRAPH <http://g/1> ; "
+        f"LOAD <file://{src}> INTO GRAPH <http://g/2>",
+    )
+    kg = store.load(spark, base)
+    q = "SELECT DISTINCT ?x WHERE { <http://x/a> <http://x/p> ?x }"
+    assert sparql_select(kg, q).count() == 2
+
+
+def test_cli_view_and_query_roll_back_a_torn_add(spark, tmp_path, capsys):
+    """``view`` and ``query`` open a store through ``store.load``, so a
+    torn add (the write-ahead marker still present) is rolled back
+    before they read it: its half-published rows are never shown."""
+    import json
+
+    from de_spark import cli
+
+    base = str(tmp_path / "store")
+    build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+    pre_manifest = {t: store._list_files(base, t) for t in store._ADD_TABLES}
+    store.add_graph(spark, base, _pineapple_raw(spark))
+    with open(f"{base}/{store._PENDING}", "w") as f:
+        json.dump({"graphs": ["file:///pineapple.hdt"], "manifest": pre_manifest}, f)
+
+    (tmp_path / "q.rq").write_text(QUERY_COLOR_RQ)
+    capsys.readouterr()
+    assert cli.main(["query", "-d", base, "-s", str(tmp_path / "q.rq"), "-o", "csv"]) == 0
+    out = capsys.readouterr().out.replace("\r", "").split()
+    assert out == ["fruit", "http://example.org/Banana"]
+    assert not os.path.exists(f"{base}/{store._PENDING}")
+
+    store.add_graph(spark, base, _pineapple_raw(spark))
+    with open(f"{base}/{store._PENDING}", "w") as f:
+        json.dump({"graphs": ["file:///pineapple.hdt"], "manifest": pre_manifest}, f)
+    assert cli.main(["view", "-d", base]) == 0
+    view = capsys.readouterr().out
+    assert "graph: file:///banana.hdt" in view and "pineapple" not in view
