@@ -7,13 +7,24 @@ access path — the triple pattern with each position bound or free
 (``triples_with_pattern``, src/sparql.rs:468).  ``SCHEMAS`` declares
 the store's tables; every engine read of one goes through
 ``read_table``.
+
+The term dictionary also lives on the driver, as HDT keeps its
+dictionary in the query process (``hdt::Hdt::new_hybrid_cache``,
+src/sparql.rs:107): ``term_table`` collects ``term_uids`` into one
+Arrow table once per loaded graph, and ``lookup`` resolves a request's
+constants in it with ``pyarrow.compute.is_in``, running no Spark job.
+Its memory is roughly the term bytes plus 12 B per term (a 4 B string
+offset and the 8 B uid).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+import threading
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field, replace
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,8 +57,9 @@ class KnowledgeGraph:
     # lacks (see with_terms); None outside a request
     uids: dict[str, int | None] | None = None
     # driver-side data collected once per loaded graph, shared by its
-    # request views
+    # request views (``replace`` passes both fields on)
     memo: dict = field(default_factory=dict, repr=False, compare=False)
+    memo_lock: threading.Lock = field(default_factory=threading.Lock, repr=False, compare=False)
 
     # -- loading ------------------------------------------------------------
 
@@ -70,17 +82,43 @@ class KnowledgeGraph:
             "graph", "term", "section", "sec_id", "uid"
         )
 
+    def _held(self, key: str, collect: Callable[[], object]):
+        """``memo[key]``, collected by the first request that needs it;
+        concurrent requests on one loaded graph wait for that one
+        collection instead of repeating it."""
+        if key not in self.memo:
+            with self.memo_lock:
+                if key not in self.memo:
+                    self.memo[key] = collect()
+        return self.memo[key]
+
     # -- constants (the dictionary side of triples_with_pattern) -------------
 
+    def term_table(self) -> pa.Table:
+        """The whole term dictionary as one Arrow table (term, uid),
+        collected with one Spark job per loaded graph on first use (not
+        in ``load``, so builds pay nothing).  A graph loaded before a
+        store mutation keeps the files it listed, so its table stays
+        that snapshot."""
+        return self._held(
+            "term_table",
+            lambda: self.term_uids.select("term", "uid").toArrow(),
+        )
+
     def lookup(self, terms: Iterable[str]) -> dict[str, int | None]:
-        """Resolve terms to uids in one filtered term_uids scan (the IN
-        list reaches Parquet): one Spark job, none for no terms.  A term
-        the dictionary lacks maps to None."""
+        """Resolve terms to uids in the driver-held dictionary
+        (``term_table``), running no Spark job.  The request's terms are
+        the hashed set and the dictionary is scanned against it: hashing
+        the whole dictionary instead (``pc.index_in`` with it as the
+        value set) would rebuild that table on every call.  A term the
+        dictionary lacks maps to None."""
         terms = sorted(set(terms))
         if not terms:
             return {}
-        rows = self.term_uids.where(F.col("term").isin(terms)).select("term", "uid").collect()
-        found = {r["term"]: r["uid"] for r in rows}
+        table = self.term_table()
+        wanted = pa.array(terms, table.schema.field("term").type)
+        hits = table.filter(pc.is_in(table.column("term"), value_set=wanted))
+        found = dict(zip(hits.column("term").to_pylist(), hits.column("uid").to_pylist()))
         return {t: found.get(t) for t in terms}
 
     def with_terms(self, terms: Iterable[str]) -> "KnowledgeGraph":
@@ -102,12 +140,14 @@ class KnowledgeGraph:
         view, is a dict lookup; {} when stats are absent."""
         if self.pred_stats is None:
             return {}
-        if "pred_counts" not in self.memo:
+
+        def collect() -> dict[int, int]:
             counts: dict[int, int] = {}
             for r in self.pred_stats.select("p_id", "n").collect():
                 counts[r["p_id"]] = counts.get(r["p_id"], 0) + int(r["n"])
-            self.memo["pred_counts"] = counts
-        return self.memo["pred_counts"]
+            return counts
+
+        return self._held("pred_counts", collect)
 
     # -- physical access path (F1/F2) ----------------------------------------
 
@@ -145,7 +185,11 @@ class KnowledgeGraph:
 
     def decode_vars(self, solutions: DataFrame, var_cols: list[str]) -> DataFrame:
         """Replace uid columns by their term strings (emission time only,
-        mirroring src/sparql.rs:491-497).  Already-string columns (a
+        mirroring src/sparql.rs:491-497).  Each decoded column joins the
+        same ``term_uids`` scan, so Spark broadcasts the dictionary once
+        and reuses that exchange for every further column (a 3-variable
+        SELECT plans one ``BroadcastExchange`` and two
+        ``ReusedExchange``).  Already-string columns (a
         GRAPH ?g binding — graph names are not dictionary terms) pass
         through untouched, as are bigint columns tagged with the
         ``de_spark_value`` column metadata (subquery aggregate results

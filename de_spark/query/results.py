@@ -185,6 +185,6 @@ def write_csv(solutions: DataFrame, path: str) -> None:
     from pyspark.sql import functions as F
 
     out = solutions.select(
-        *[terms.sparql_csv_form(F.col(c)).alias(c) for c in solutions.columns]
+        *[F.expr(terms.sparql_csv_form(f"`{c}`")).alias(c) for c in solutions.columns]
     )
     out.write.mode("overwrite").option("header", True).csv(path)

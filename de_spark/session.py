@@ -65,8 +65,9 @@ def get_spark(
                 "/dev/shm/spark_local" if os.path.isdir("/dev/shm") else "/tmp",
             ),
         )
-        # broadcast threshold: dictionaries' P section and constant-term
-        # lookups are tiny; let Catalyst broadcast aggressively.
+        # broadcast threshold: the dictionaries' P section and a query's
+        # term_uids decode join are small; let Catalyst broadcast
+        # aggressively.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # prefer shuffled-hash over sort-merge (guide §3.1): the engine's
         # big joins key the fact table against vocabulary-sized uid

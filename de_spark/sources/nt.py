@@ -62,7 +62,7 @@ def _parse_nt_lines(lines: DataFrame) -> DataFrame:
         *(F.regexp_extract("value", _NT_LINE, i).alias(c) for i, c in enumerate(spo, 1)), "graph"
     ).where(F.col("p") != "")
     out = parsed.select(*(_strip_iri(F.col(c)).alias(c) for c in spo), "graph")
-    return out.select(*spo, terms.classify(F.col("o")).alias("o_kind"), "graph")
+    return out.select(*spo, F.expr(terms.classify("o")).alias("o_kind"), "graph")
 
 
 def read_nt_files(spark: SparkSession, paths: list[str], graph: str | None = None) -> DataFrame:

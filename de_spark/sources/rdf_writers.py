@@ -21,7 +21,7 @@ from de_spark import terms
 
 def _nt_terms(*names: str) -> Column:
     """The N-Triples forms of the named columns, space-separated."""
-    return F.concat_ws(" ", *[terms.ntriples_form(F.col(n)) for n in names])
+    return F.expr(f"concat_ws(' ', {', '.join(terms.ntriples_form(f'`{n}`') for n in names)})")
 
 
 def render_ntriples(triples_raw: DataFrame) -> DataFrame:
@@ -79,10 +79,10 @@ def render_rdfxml_descriptions(triples_raw: DataFrame) -> DataFrame:
     ns = F.regexp_extract("p", r"^(.*[/#])", 1)
     local = F.regexp_extract("p", r"([^/#]+)$", 1)
     o = F.col("o")
-    kind = terms.classify(o)
+    kind = F.expr(terms.classify("o"))
     open_tag = F.concat(F.lit("<ns1:"), local, F.lit(' xmlns:ns1="'), _xml_esc(ns), F.lit('"'))
-    dt = terms.literal_datatype(o)
-    lang = terms.literal_lang(o)
+    dt = F.expr(terms.literal_datatype("o"))
+    lang = F.expr(terms.literal_lang("o"))
     lit_attrs = (
         F.when(dt != "", F.concat(F.lit(' rdf:datatype="'), _xml_esc(dt), F.lit('"')))
         .when(lang != "", F.concat(F.lit(' xml:lang="'), lang, F.lit('"')))
@@ -90,7 +90,7 @@ def render_rdfxml_descriptions(triples_raw: DataFrame) -> DataFrame:
     )
     lit_elem = F.concat(
         open_tag, lit_attrs, F.lit(">"),
-        _xml_esc(terms.unescape_nt(terms.literal_value(o))),
+        _xml_esc(F.expr(terms.unescape_nt(terms.literal_value("o")))),
         F.lit("</ns1:"), local, F.lit(">"),
     )
     prop = (

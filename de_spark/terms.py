@@ -10,7 +10,7 @@ src/sparql.rs:407-413 ``term_to_hdt_bgp_str``):
 - blank     → leading underscore: ``_:b0``
 
 Everything here is a pure function of the term string, implemented twice:
-once as Catalyst Column expressions (the hot path — stays JVM-side inside
+once as Spark SQL text templates (the hot path — stays JVM-side inside
 whole-stage codegen) and once in plain Python for driver-side emitters.
 """
 
@@ -18,66 +18,80 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 KIND_IRI = "iri"
 KIND_LITERAL = "literal"
 KIND_BNODE = "bnode"
 
 # ---------------------------------------------------------------------------
-# Column-level (JVM, codegen) versions — use these in pipelines.
+# SQL-text templates — JVM-side, inside whole-stage codegen.  Each takes
+# the SQL text of its operands (a quoted column name, a string literal
+# or any expression) and returns SQL text; a caller compiles the result
+# with one ``F.expr``, so building a key costs one py4j round trip, not
+# one per expression node.
 # ---------------------------------------------------------------------------
 
 
-def classify(term: Column) -> Column:
+def sql_str(s: str) -> str:
+    """A Spark SQL string literal holding ``s`` exactly."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_double(x: float) -> str:
+    """A Spark SQL double literal (``2.5D``; the specials by cast)."""
+    if x != x:
+        return "CAST('NaN' AS DOUBLE)"
+    if x in (float("inf"), float("-inf")):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def sql_in(x: str, values) -> str:
+    return f"({x} IN ({', '.join(map(sql_str, values))}))"
+
+
+def classify(t: str) -> str:
     """{iri, literal, bnode} by first character (src/sparql.rs:372-404)."""
     return (
-        F.when(term.startswith('"'), F.lit(KIND_LITERAL))
-        .when(term.startswith("_"), F.lit(KIND_BNODE))
-        .otherwise(F.lit(KIND_IRI))
+        f"(CASE WHEN startswith({t}, '\"') THEN '{KIND_LITERAL}'"
+        f" WHEN startswith({t}, '_') THEN '{KIND_BNODE}' ELSE '{KIND_IRI}' END)"
     )
 
 
-def _memo(term: Column, key: str, build) -> Column:
-    """Per-Column-INSTANCE memo of parse primitives.
-
-    The SPARQL expression compiler's env maps each variable to one
-    Column object, so every re-derivation of a primitive (lexical
-    form, datatype IRI, numeric lanes) over that variable returns the
-    SAME Column instead of re-running the whole py4j construction —
-    the r7 profile measured ~1.3s of pure Column construction per
-    arithmetic BIND query, dominated by these repeated subtrees.
-    Call sites that PRE-PROJECT a primitive (sparql._seed_parse_refs)
-    seed this memo with the projected attribute ref, which also
-    shrinks the ANALYZED tree: the regexp appears once in a lower
-    Project instead of dozens of times inline (big enough trees made
-    janino fail compilation and forced interpreted row eval).
-    Memoized values are pure functions of the term column, so sharing
-    them never changes results."""
-    memo = term.__dict__.setdefault("_de_parse_memo", {})
-    if key not in memo:
-        memo[key] = build()
-    return memo[key]
+def kind_rank(t: str) -> str:
+    """SPARQL §15.1 ordering rank of a term's kind: unbound -1, blank 0,
+    IRI 1, literal 2 (explicit for NULL: a null startswith never
+    matches, so without it unbound would rank with IRIs)."""
+    return (
+        f"(CASE WHEN {t} IS NULL THEN -1 WHEN startswith({t}, '\"') THEN 2"
+        f" WHEN startswith({t}, '_') THEN 0 ELSE 1 END)"
+    )
 
 
-def literal_value(term: Column) -> Column:
+_LEX_RE = r'^"((?:[^"\\]|\\.)*)"'
+_DT_RE = r"\^\^<([^>]*)>$"
+_LANG_RE = r'"@([A-Za-z0-9-]+)$'
+
+
+def literal_value(t: str) -> str:
     """Lexical form of a literal term (contents of the leading quotes)."""
-    return _memo(
-        term, "lex", lambda: F.regexp_extract(term, r'^"((?:[^"\\]|\\.)*)"', 1)
-    )
+    return f"regexp_extract({t}, {sql_str(_LEX_RE)}, 1)"
 
 
-def literal_datatype(term: Column) -> Column:
+def literal_datatype(t: str) -> str:
     """Datatype IRI of a literal, or '' if plain/lang-tagged."""
-    return _memo(term, "dt", lambda: F.regexp_extract(term, r'\^\^<([^>]*)>$', 1))
+    return f"regexp_extract({t}, {sql_str(_DT_RE)}, 1)"
 
 
-def literal_lang(term: Column) -> Column:
+def literal_lang(t: str) -> str:
     """Language tag of a literal, or ''."""
-    return _memo(
-        term, "lang", lambda: F.regexp_extract(term, r'"@([A-Za-z0-9-]+)$', 1)
-    )
+    return f"regexp_extract({t}, {sql_str(_LANG_RE)}, 1)"
+
+
+def parts(t: str) -> tuple[str, str]:
+    """(lexical form, datatype) of term ``t``: the two operands every
+    value primitive below reads.  A caller that projected them once
+    per row passes those columns' names instead."""
+    return literal_value(t), literal_datatype(t)
 
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -92,7 +106,7 @@ _NUMERIC_DTS = [
 ]
 
 
-def numeric_value(term: Column) -> Column:
+def numeric_value(lex: str, dt: str) -> str:
     """Numeric VALUE of a literal with a numeric XSD datatype, else
     NULL — the SPARQL 1.1 operator-mapping view of a term (two
     lexically different integers, "1" and "01", compare equal by
@@ -101,26 +115,22 @@ def numeric_value(term: Column) -> Column:
     "-INF"/"NaN"; the JVM cast only accepts "Infinity"/"NaN", so INF
     maps explicitly — and ONLY for xsd:float/xsd:double, where the
     value space has infinities ("INF"^^xsd:integer is an invalid
-    lexical and must stay NULL; ADVICE r5)."""
-    def build():
-        lv = literal_value(term)
-        dt = literal_datatype(term)
-        has_inf = dt.isin(XSD + "float", XSD + "double")
-        cast = lv.try_cast("double")
-        # Spark's string→double cast itself accepts "INF"/"Infinity"/
-        # "NaN" spellings, so integer/decimal datatypes (whose value
-        # spaces have no specials) must reject non-finite results
-        # explicitly
-        finite = cast.isNotNull() & ~F.isnan(cast) & (F.abs(cast) != float("inf"))
-        v = (
-            F.when(has_inf & lv.isin("INF", "+INF"), F.lit(float("inf")))
-            .when(has_inf & (lv == "-INF"), F.lit(float("-inf")))
-            .when(has_inf, cast)
-            .when(finite, cast)
-        )
-        return F.when(dt.isin(_NUMERIC_DTS), v)
-
-    return _memo(term, "numv", build)
+    lexical and must stay NULL; ADVICE r5).  Spark's string→double
+    cast itself accepts "INF"/"Infinity"/"NaN" spellings, so the
+    integer/decimal datatypes (whose value spaces have no specials)
+    reject non-finite results explicitly."""
+    has_inf = sql_in(dt, [XSD + "float", XSD + "double"])
+    cast = f"try_cast({lex} AS DOUBLE)"
+    finite = (
+        f"({cast} IS NOT NULL AND NOT isnan({cast})"
+        f" AND abs({cast}) != {sql_double(float('inf'))})"
+    )
+    return (
+        f"(CASE WHEN {sql_in(dt, _NUMERIC_DTS)} THEN CASE"
+        f" WHEN {has_inf} AND {sql_in(lex, ['INF', '+INF'])} THEN {sql_double(float('inf'))}"
+        f" WHEN {has_inf} AND {lex} = '-INF' THEN {sql_double(float('-inf'))}"
+        f" WHEN {has_inf} THEN {cast} WHEN {finite} THEN {cast} END END)"
+    )
 
 
 # XPath numeric promotion ranks (op:numeric-* resolution order:
@@ -136,7 +146,7 @@ _INT_DTS = [
 ]
 
 
-def integer_value(term: Column) -> Column:
+def integer_value(lex: str, dt: str) -> str:
     """EXACT integer value of an integer-family literal as
     decimal(38,0), else NULL.  The double lane of `numeric_value`
     loses precision above 2^53; SPARQL xsd:integer arithmetic is
@@ -147,98 +157,88 @@ def integer_value(term: Column) -> Column:
     documented bound (Spark's widest decimal); beyond it the lexical
     try_cast yields NULL and the result degrades to unbound rather
     than a silently-wrong rendering."""
-    return _memo(
-        term,
-        "numi",
-        lambda: F.when(
-            literal_datatype(term).isin(_INT_DTS),
-            literal_value(term).try_cast("decimal(38,0)"),
-        ),
-    )
+    return f"(CASE WHEN {sql_in(dt, _INT_DTS)} THEN try_cast({lex} AS DECIMAL(38,0)) END)"
 
 
-def numeric_kind(term: Column) -> Column:
+def numeric_kind(dt: str) -> str:
     """Promotion rank of a numeric literal's datatype: 0 = integer
     family, 1 = xsd:decimal, 2 = xsd:float, 3 = xsd:double; NULL for
     non-numeric terms.  Drives SPARQL/XPath numeric result typing
     (integer+integer→integer, integer÷integer→decimal — the reference
     inherits this from spareval's operator mapping, src/sparql.rs:520)."""
-    def build():
-        dt = literal_datatype(term)
-        return (
-            F.when(dt.isin(_INT_DTS), F.lit(0))
-            .when(dt == XSD + "decimal", F.lit(1))
-            .when(dt == XSD + "float", F.lit(2))
-            .when(dt == XSD + "double", F.lit(3))
-        )
-
-    return _memo(term, "numk", build)
+    return (
+        f"(CASE WHEN {sql_in(dt, _INT_DTS)} THEN 0"
+        f" WHEN {dt} = {sql_str(XSD + 'decimal')} THEN 1"
+        f" WHEN {dt} = {sql_str(XSD + 'float')} THEN 2"
+        f" WHEN {dt} = {sql_str(XSD + 'double')} THEN 3 END)"
+    )
 
 
-def boolean_value(term: Column) -> Column:
+def boolean_value(lex: str, dt: str) -> str:
     """Boolean VALUE of an xsd:boolean literal — both canonical and
     numeral lexical forms ("true"/"1", "false"/"0") map to the same
     value, so "1"^^xsd:boolean = "true"^^xsd:boolean under the
     operator mapping; NULL for other terms (or invalid lexicals)."""
-    def build():
-        lv = literal_value(term)
-        return F.when(
-            literal_datatype(term) == XSD + "boolean",
-            F.when(lv.isin("true", "1"), F.lit(True)).when(
-                lv.isin("false", "0"), F.lit(False)
-            ),
-        )
-
-    return _memo(term, "boolv", build)
+    return (
+        f"(CASE WHEN {dt} = {sql_str(XSD + 'boolean')} THEN CASE"
+        f" WHEN {sql_in(lex, ['true', '1'])} THEN true"
+        f" WHEN {sql_in(lex, ['false', '0'])} THEN false END END)"
+    )
 
 
 _DATETIME_DTS = [XSD + "dateTime", XSD + "date"]
 
 
-def datetime_value(term: Column) -> Column:
+def datetime_value(lex: str, dt: str) -> str:
     """Timestamp VALUE of an xsd:dateTime/xsd:date literal, else NULL.
     try_cast resolves timezone offsets to instants, so two lexical
     forms of the same moment compare equal and offsets order
     chronologically (SPARQL op:dateTime ordering)."""
-    return _memo(
-        term,
-        "dtv",
-        lambda: F.when(
-            literal_datatype(term).isin(_DATETIME_DTS),
-            literal_value(term).try_cast("timestamp"),
-        ),
-    )
+    return f"(CASE WHEN {sql_in(dt, _DATETIME_DTS)} THEN try_cast({lex} AS TIMESTAMP) END)"
 
 
-def sparql_csv_form(term: Column) -> Column:
+def sort_keys(t: str, lex: str, dt: str) -> list[str]:
+    """SPARQL value ordering of term ``t`` as a sort-key list: term kind
+    first (blank < IRI < literal, §15.1), then numeric literals by
+    VALUE ("9" before "10"), then the exact integer lane (integers
+    above 2^53 collide in the double key; placed after it so int vs
+    decimal vs double still follow the promoted value), dateTime/date
+    literals by instant, booleans by value, and last the raw term
+    string (non-numeric literals, and a deterministic tiebreak among
+    value-equal lexical forms)."""
+    return [
+        kind_rank(t),
+        numeric_value(lex, dt),
+        integer_value(lex, dt),
+        datetime_value(lex, dt),
+        boolean_value(lex, dt),
+        t,
+    ]
+
+
+def sparql_csv_form(t: str, lex: str | None = None) -> str:
     """SPARQL-results-CSV rendering: IRIs bare, literals unquoted lexical
     form, bnodes as-is (matches sparesults CSV, asserted at
     reference tests/test-commands.rs:186-190)."""
-    return F.when(term.startswith('"'), literal_value(term)).otherwise(term)
+    return f"(CASE WHEN startswith({t}, '\"') THEN {lex or literal_value(t)} ELSE {t} END)"
 
 
-def sparql_tsv_form(term: Column) -> Column:
-    """SPARQL-results-TSV rendering: IRIs in <>, literals quoted with
-    suffix, bnodes as-is (tests/test-commands.rs:203-206)."""
+def ntriples_form(t: str) -> str:
+    """N-Triples rendering (also SPARQL-results-TSV's): IRIs in <>,
+    literals quoted with suffix, bnodes as-is
+    (tests/test-commands.rs:203-206)."""
     return (
-        F.when(term.startswith('"'), term)
-        .when(term.startswith("_"), term)
-        .otherwise(F.concat(F.lit("<"), term, F.lit(">")))
+        f"(CASE WHEN startswith({t}, '\"') OR startswith({t}, '_') THEN {t}"
+        f" ELSE concat('<', {t}, '>') END)"
     )
 
 
-def ntriples_form(term: Column) -> Column:
-    """N-Triples rendering (for CONSTRUCT-style graph output)."""
-    return sparql_tsv_form(term)
-
-
-def unescape_nt(col: Column) -> Column:
-    """Column twin of :func:`unescape_nt_py` — NT escape sequences back
-    to raw characters (JVM-side, for non-NT serializers)."""
-    out = F.replace(col, F.lit("\\\\"), F.lit("\x00"))
-    for a, b in (('\\"', '"'), ("\\n", "\n"), ("\\t", "\t"), ("\\r", "\r"), ("\x00", "\\")):
-        out = F.replace(out, F.lit(a), F.lit(b))
-    return out
+def unescape_nt(x: str) -> str:
+    """SQL twin of :func:`unescape_nt_py` — NT escape sequences back
+    to raw characters (for non-NT serializers)."""
+    for a, b in _NT_UNESCAPES:
+        x = f"replace({x}, {sql_str(a)}, {sql_str(b)})"
+    return x
 
 
 # ---------------------------------------------------------------------------
@@ -286,7 +286,7 @@ def bnode_tag(graph: str | None, source: str) -> str:
 
 
 def sparql_tsv_form_py(term: str) -> str:
-    """Python twin of :func:`sparql_tsv_form` / :func:`ntriples_form`:
+    """Python twin of :func:`ntriples_form`:
     IRIs in <>, literals and bnodes as-is."""
     if term.startswith('"') or term.startswith("_"):
         return term

@@ -583,7 +583,7 @@ def test_value_ordering_property(spark):
         return (rank, num is not None, num or 0.0, dtv is not None, dtv or 0.0, t)
 
     df = spark.createDataFrame([(t,) for t in terms_pop], ["v"])
-    got = [r["v"] for r in df.orderBy(*_term_sort_cols(F.col("v"))).collect()]
+    got = [r["v"] for r in df.orderBy(*_term_sort_cols("v")).collect()]
     want = sorted(terms_pop, key=model_key)
     assert got == want
 

@@ -253,6 +253,7 @@ def test_promotion_model_property(spark):
 
     from de_spark.query.parser import Bin, VarE
     from de_spark.query.sparql import _ex, _render_term
+    from de_spark.terms import sql_str
 
     rng = random.Random(7)
     kinds = [("integer", 0), ("decimal", 1), ("float", 2), ("double", 3)]
@@ -268,11 +269,11 @@ def test_promotion_model_property(spark):
     exprs = []
     for i, (dta, va, op, dtb, vb, _, _) in enumerate(cases):
         env = {
-            "a": (F.lit(f'"{va}"^^<{XSD}{dta}>'), "term"),
-            "b": (F.lit(f'"{vb}"^^<{XSD}{dtb}>'), "term"),
+            "a": (sql_str(f'"{va}"^^<{XSD}{dta}>'), "term"),
+            "b": (sql_str(f'"{vb}"^^<{XSD}{dtb}>'), "term"),
         }
         col, tag = _ex(Bin(op, VarE("a"), VarE("b")), env)
-        exprs.append(_render_term(col, tag).alias(f"c{i}"))
+        exprs.append(F.expr(_render_term(col, tag)).alias(f"c{i}"))
     row = spark.range(1).select(*exprs).collect()[0]
 
     for i, (dta, va, op, dtb, vb, ka, kb) in enumerate(cases):

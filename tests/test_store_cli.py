@@ -188,6 +188,77 @@ def test_store_load_runs_no_job(spark, fruit_store, in_job_group):
         assert fields(written) == fields(StructType.fromDDL(ddl)), table
 
 
+def test_term_dictionary_is_collected_once_per_loaded_graph(spark, fruit_store, in_job_group):
+    """The first requests on a loaded graph, even concurrent ones,
+    collect term_uids in one Spark job; every later lookup and request
+    on that graph runs no lookup job."""
+    import threading
+
+    ex = "http://example.org/"
+    kg = store.load(spark, fruit_store)
+    sc = spark.sparkContext
+    group = f"held_first_{id(kg)}"
+
+    def first():
+        sc.setJobGroup(group, group)
+        kg.lookup([f"{ex}Banana"])
+
+    threads = [threading.Thread(target=first) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    uids, jobs = in_job_group(f"held_again_{id(kg)}", lambda: kg.lookup([f"{ex}Banana", f"{ex}Nope"]))
+    assert jobs == 0
+    assert uids[f"{ex}Banana"] is not None and uids[f"{ex}Nope"] is None
+    q = f"SELECT ?x WHERE {{ ?x <{ex}hasColor> <{ex}Nope> }}"
+    to_csv(sparql_select(kg, q))  # the first request also collects pred_stats
+    csv, jobs = in_job_group(f"held_request_{id(kg)}", lambda: to_csv(sparql_select(kg, q)))
+    assert (csv, jobs) == ("x", 0)
+
+
+def test_held_dictionary_is_a_snapshot_of_its_load(spark, tmp_path):
+    """A term INSERT DATA adds resolves in a graph loaded after the
+    update; a graph loaded before it, holding its dictionary already or
+    not yet, keeps its own snapshot."""
+    base = str(tmp_path / "store")
+    build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+    new = ["http://x/new", '"fresh"']
+    held = store.load(spark, base)
+    held.lookup(["http://x/any"])
+    listed = store.load(spark, base)
+    store.execute_update(spark, base, 'INSERT DATA { GRAPH <http://g/new> { <http://x/new> <http://example.org/hasColor> "fresh" } }')
+    fresh = store.load(spark, base)
+    assert None not in fresh.lookup(new).values()
+    assert held.lookup(new) == {t: None for t in new}
+    assert listed.lookup(new) == {t: None for t in new}
+
+
+def test_held_lookup_resolves_as_a_term_scan(spark, tmp_path):
+    """Absent terms, escaped literals and non-ASCII literals resolve in
+    the held dictionary exactly as a ``term IN (…)`` scan of term_uids
+    resolves them."""
+    from pyspark.sql import functions as F
+
+    ttl = PINEAPPLE_TTL + r"""
+    ex:Pineapple ex:label 'it\'s', "caf\u00e9", "café", "say \"hi\"", "tab\there",
+        "日本"@ja, '''two
+lines''' .
+    """
+    data = [(s_, p, o, terms.classify_py(o), "file:///p.ttl") for s_, p, o in parse_turtle(ttl)]
+    base = str(tmp_path / "store")
+    build(spark.createDataFrame(data, ["s", "p", "o", "o_kind", "graph"]), base)
+    kg = store.load(spark, base)
+    stored = [r["term"] for r in kg.term_uids.collect()]
+    assert {'"café"', '"caf\\u00e9"', '"日本"@ja', '"two\\nlines"'} <= set(stored)
+    probes = stored + [
+        "http://example.org/Nope", '"nope"', '"café"@fr', '"cafe\u0301"', '"caf\\u00E9"', "",
+    ]
+    found = {r["term"]: r["uid"] for r in kg.term_uids.where(F.col("term").isin(probes)).collect()}
+    assert kg.lookup(probes) == {t: found.get(t) for t in probes}
+
+
 def test_dict_decodes_after_add_and_drop(spark, tmp_path):
     """The string-free dict stays consistent with term_uids through an
     add and a drop: every dict row decodes, and the kept graph's
