@@ -11,15 +11,20 @@ the store's tables; every engine read of one goes through
 The term dictionary also lives on the driver, as HDT keeps its
 dictionary in the query process (``hdt::Hdt::new_hybrid_cache``,
 src/sparql.rs:107): ``term_table`` collects ``term_uids`` into one
-Arrow table once per loaded graph, and ``lookup`` resolves a request's
-constants in it with ``pyarrow.compute.is_in``, running no Spark job.
-Its memory is roughly the term bytes plus 12 B per term (a 4 B string
-offset and the 8 B uid).
+Arrow table once per store snapshot, and ``lookup`` resolves a
+request's constants in it with ``pyarrow.compute.is_in``, running no
+Spark job.  A snapshot is the file set a load's ``term_uids`` reads,
+so every ``store.load`` of an unchanged store shares one table, and a
+load-per-request caller pays the collection only after a mutation.
+Each table's memory is roughly the term bytes plus 12 B per term (a
+4 B string offset and the 8 B uid); the process keeps the newest
+``_SNAPSHOTS_KEPT`` tables, plus any a live loaded graph still holds.
 """
 
 from __future__ import annotations
 
 import threading
+from collections import OrderedDict
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field, replace
 
@@ -44,6 +49,30 @@ SCHEMAS = {
 def read_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
     """One store table, read with its declared schema."""
     return spark.read.schema(SCHEMAS[table]).parquet(f"{base_dir}/{table}")
+
+
+# Term tables collected in this process, keyed by the sorted file list
+# of the term_uids read they came from (a store snapshot: a mutation
+# adds or removes files).  Oldest use is evicted first.
+_snapshots: OrderedDict[tuple[str, ...], pa.Table] = OrderedDict()
+_snapshots_lock = threading.Lock()
+_SNAPSHOTS_KEPT = 4
+
+
+def _snapshot_terms(term_uids: DataFrame) -> pa.Table:
+    """The (term, uid) Arrow table of one term_uids read: collected
+    with one Spark job the first time its snapshot is seen in this
+    process, then shared.  Concurrent first loads of one snapshot wait
+    for that one collection instead of repeating it."""
+    key = tuple(sorted(term_uids.inputFiles()))
+    with _snapshots_lock:
+        table = _snapshots.get(key)
+        if table is None:
+            table = _snapshots[key] = term_uids.select("term", "uid").toArrow()
+            while len(_snapshots) > _SNAPSHOTS_KEPT:
+                _snapshots.popitem(last=False)
+        _snapshots.move_to_end(key)
+        return table
 
 
 @dataclass
@@ -96,14 +125,12 @@ class KnowledgeGraph:
 
     def term_table(self) -> pa.Table:
         """The whole term dictionary as one Arrow table (term, uid),
-        collected with one Spark job per loaded graph on first use (not
-        in ``load``, so builds pay nothing).  A graph loaded before a
-        store mutation keeps the files it listed, so its table stays
-        that snapshot."""
-        return self._held(
-            "term_table",
-            lambda: self.term_uids.select("term", "uid").toArrow(),
-        )
+        taken on first use (not in ``load``, so builds pay nothing)
+        from the table of this graph's store snapshot, which a Spark
+        job collects once per snapshot (``_snapshot_terms``).  A graph
+        loaded before a store mutation keeps the files it listed, so
+        its table stays that snapshot."""
+        return self._held("term_table", lambda: _snapshot_terms(self.term_uids))
 
     def lookup(self, terms: Iterable[str]) -> dict[str, int | None]:
         """Resolve terms to uids in the driver-held dictionary

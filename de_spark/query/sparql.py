@@ -38,10 +38,10 @@ Constants first: every dictionary constant of a query (BGP positions,
 path IRIs, negated-set members, VALUES cells, DESCRIBE IRIs, in
 subqueries and EXISTS groups too) is resolved in ONE term lookup at
 the start of the request (``KnowledgeGraph.with_terms``), in the
-dictionary the loaded graph holds on the driver, so it runs no Spark
-job; each binding site then compiles to a literal uid filter or
-relation, and a constant the dictionary lacks empties its pattern
-without a scan.
+dictionary held on the driver for the graph's store snapshot, so it
+runs no Spark job; each binding site then compiles to a literal uid
+filter or relation, and a constant the dictionary lacks empties its
+pattern without a scan.
 
 Solutions stay uid-typed longs until the final decode; BIND/GRAPH ?g
 produce string columns that pass through the decode untouched.  Joins
@@ -155,6 +155,13 @@ def _q(name: str) -> str:
 
 def _sql(c) -> str:
     return c.sql if isinstance(c, _T) else c
+
+
+def _lex(c) -> str:
+    """The lexical form a term template reads: a term's projected one,
+    else the literal parse of the operand's SQL (so a plain string
+    operand, which has no leading quote, reads as '')."""
+    return c.lex if isinstance(c, _T) else terms.literal_value(c)
 
 
 _STATIC_NUM_RANK = {"int": 0, "dec": 1, "num": 3}
@@ -624,14 +631,12 @@ def _call(e: Call, env: dict) -> tuple:
     if name == "TZ":
         # timezone designator of the LEXICAL form ('' when absent) —
         # a pure string function of the term, per SPARQL 1.1 §17.4.5.9
-        c, _ = arg(0)
-        return f"regexp_extract({c.lex}, {terms.sql_str(_TZ_RE)}, 1)", "str"
+        return f"regexp_extract({_lex(arg(0)[0])}, {terms.sql_str(_TZ_RE)}, 1)", "str"
     if name == "TIMEZONE":
         # fn:timezone-from-dateTime → xsd:dayTimeDuration in canonical
         # form ("PT0S" for Z/+00:00, "-PT5H30M", "PT2H"); a literal
         # WITHOUT a timezone is an error → unbound (§17.4.5.8)
-        c, _ = arg(0)
-        lex = c.lex
+        lex = _lex(arg(0)[0])
         tz = f"regexp_extract({lex}, {terms.sql_str(_TZ_RE)}, 1)"
         off = terms.sql_str(r"([+-])(\d{2}):(\d{2})$")
         hh = f"try_cast(regexp_extract({lex}, {off}, 2) AS INT)"
@@ -1602,13 +1607,14 @@ def sparql_describe(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
     The described set is resolved in uid space, as the start of
     ``bgp._fixpoint``: the constants' uids come from the request's
     term map (a local relation), and solution bindings join the term
-    dictionary.  Its rounds follow bnode objects of the frontier only;
-    the bnode uids come from the driver-held dictionary
-    (``KnowledgeGraph.term_table``) as a literal IN list, and a store
-    without blank nodes runs no round at all.  The driver-side seen
-    set makes bnode cycles terminate.  The described set is then
-    semi-joined against the triples' s_id, and only the matching
-    triples decode to strings."""
+    dictionary.  Its rounds follow bnode objects of the frontier only,
+    semi-joined against one pushed-down ``_:`` prefix scan of the
+    dictionary; the driver-held dictionary
+    (``KnowledgeGraph.term_table``) only tells whether the store has
+    any blank node, and a store without one runs no round at all.
+    The driver-side seen set makes bnode cycles terminate.  The
+    described set is then semi-joined against the triples' s_id, and
+    only the matching triples decode to strings."""
     q = _parsed(query)
     if q.form != "describe":
         raise ValueError("not a DESCRIBE query")
@@ -1639,13 +1645,15 @@ def sparql_describe(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
             )
     from de_spark.encode import decode_triples
 
-    table = kg.term_table()
-    bnodes = table.filter(pc.starts_with(table.column("term"), "_:")).column("uid").to_pylist()
-    if bnodes:
-        edges = _seed_filter(
-            kg.triples.select(F.col("s_id").alias("a"), F.col("o_id").alias("b")), "b", bnodes
+    if pc.any(pc.starts_with(kg.term_table().column("term"), "_:")).as_py():
+        bnode_uids = kg.term_uids.where(F.col("term").startswith("_:")).select(
+            F.col("uid").alias("b")
         )
-        start = _fixpoint(start, lambda nodes: _seed_filter(edges, "a", nodes))
+        edges = kg.triples.select(F.col("s_id").alias("a"), F.col("o_id").alias("b"))
+        start = _fixpoint(
+            start,
+            lambda nodes: _seed_filter(edges, "a", nodes).join(bnode_uids, "b", "left_semi"),
+        )
     seen = start.select(F.col("b").alias("s_id"))
     trip = kg.triples.join(F.broadcast(seen), "s_id", "left_semi")
     return decode_triples(trip, kg.term_uids).select("s", "p", "o").dropDuplicates()

@@ -32,8 +32,13 @@ KIND_BNODE = "bnode"
 
 
 def sql_str(s: str) -> str:
-    """A Spark SQL string literal holding ``s`` exactly."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """A Spark SQL string literal holding ``s`` exactly.  ``$`` is
+    written as the escape ``\\u0024``: Spark's parser substitutes
+    ``${…}`` variables (``spark.sql.variable.substitute``) in the raw
+    text before lexing, so a literal ``${env:HOME}`` would otherwise
+    read the driver's environment; the lexer turns the escape back
+    into ``$`` after substitution."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024") + "'"
 
 
 def sql_double(x: float) -> str:

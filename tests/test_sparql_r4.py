@@ -243,6 +243,22 @@ def test_datetime_builtins(kg):
     assert locals_(sparql_select(kg, q3), "s") == ["s1"]
 
 
+def test_tz_and_timezone_of_a_plain_string(kg):
+    """TZ and TIMEZONE read the lexical form of a term; a plain string
+    argument (STR(?w), a simple literal) has none, so TZ gives "" and
+    TIMEZONE is unbound, and neither fails the query."""
+    q = PX + """
+    SELECT ?tz ?z ?ctz ?cz WHERE {
+      x:s1 x:when ?w .
+      BIND(TZ(STR(?w)) AS ?tz) BIND(TIMEZONE(STR(?w)) AS ?z)
+      BIND(TZ("2024-03-05T10:20:30Z") AS ?ctz)
+      BIND(TIMEZONE("2024-03-05T10:20:30+02:00") AS ?cz)
+    }
+    """
+    r = sparql_select(kg, q).collect()[0]
+    assert (r["tz"], r["z"], r["ctz"], r["cz"]) == ('""', None, '""', None)
+
+
 def test_datetime_value_comparison_and_order(kg):
     """xsd:dateTime compares and orders by INSTANT: s2's
     2023-12-31T23:59:58+02:00 is 21:59:58Z — before s1's

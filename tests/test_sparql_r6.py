@@ -27,6 +27,8 @@ NT = f"""\
 <http://x/bad> <http://x/q> "INF"^^<{XSD}integer> .
 <http://x/inf> <http://x/q> "+INF"^^<{XSD}double> .
 <http://x/ninf> <http://x/q> "-INF"^^<{XSD}float> .
+<http://x/home> <http://x/lit> "${{env:HOME}}" .
+<http://x/app> <http://x/lit> "${{spark.app.name}}" .
 """
 
 PX = "PREFIX x: <http://x/>\n"
@@ -203,3 +205,23 @@ def test_plus_inf_numeric_value(spark):
     got = df.select(F.expr(terms.numeric_value(*terms.parts("t"))).alias("v")).collect()
     assert got[0]["v"] == float("inf")
     assert got[1]["v"] is None
+
+
+# ---------------------------------------------------------------------------
+# query text reaches the compiled SQL unchanged
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "text,subject", [("${env:HOME}", "http://x/home"), ("${spark.app.name}", "http://x/app")]
+)
+def test_dollar_brace_literals_are_not_substituted(kg, text, subject):
+    """Spark's SQL parser substitutes ``${…}`` variables; a SPARQL
+    literal holding one must neither read the driver's environment or
+    session settings nor stop matching its own data."""
+    bound = rows_of(kg, f'SELECT ?v WHERE {{ BIND("{text}" AS ?v) }}')
+    assert [r["v"] for r in bound] == [f'"{text}"']
+    matched = rows_of(kg, f'SELECT ?s WHERE {{ ?s x:lit ?o . FILTER(?o = "{text}") }}')
+    assert [r["s"] for r in matched] == [subject]
+    concat = rows_of(kg, f'SELECT ?v WHERE {{ BIND(CONCAT("{text}", "!") AS ?v) }}')
+    assert [r["v"] for r in concat] == [f'"{text}!"']

@@ -188,14 +188,17 @@ def test_store_load_runs_no_job(spark, fruit_store, in_job_group):
         assert fields(written) == fields(StructType.fromDDL(ddl)), table
 
 
-def test_term_dictionary_is_collected_once_per_loaded_graph(spark, fruit_store, in_job_group):
-    """The first requests on a loaded graph, even concurrent ones,
+def test_term_dictionary_is_collected_once_per_store_snapshot(spark, tmp_path, in_job_group):
+    """The first requests on a store snapshot, even concurrent ones,
     collect term_uids in one Spark job; every later lookup and request
-    on that graph runs no lookup job."""
+    on that loaded graph, and on later loads of the unchanged store,
+    runs no lookup job."""
     import threading
 
     ex = "http://example.org/"
-    kg = store.load(spark, fruit_store)
+    base = str(tmp_path / "store")
+    build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+    kg = store.load(spark, base)
     sc = spark.sparkContext
     group = f"held_first_{id(kg)}"
 
@@ -216,6 +219,10 @@ def test_term_dictionary_is_collected_once_per_loaded_graph(spark, fruit_store, 
     to_csv(sparql_select(kg, q))  # the first request also collects pred_stats
     csv, jobs = in_job_group(f"held_request_{id(kg)}", lambda: to_csv(sparql_select(kg, q)))
     assert (csv, jobs) == ("x", 0)
+    again, jobs = in_job_group(
+        f"held_reload_{id(kg)}", lambda: store.load(spark, base).lookup([f"{ex}Banana"])
+    )
+    assert (again, jobs) == ({f"{ex}Banana": uids[f"{ex}Banana"]}, 0)
 
 
 def test_held_dictionary_is_a_snapshot_of_its_load(spark, tmp_path):
