@@ -53,7 +53,11 @@ def read_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
 
 # Term tables collected in this process, keyed by the sorted file list
 # of the term_uids read they came from (a store snapshot: a mutation
-# adds or removes files).  Oldest use is evicted first.
+# adds or removes files, and a written file is never rewritten under
+# its name).  It lives at module level because ``store.load`` callers
+# share no object; an entry is a function of its key alone, so sharing
+# changes how many jobs run, never a result.  Oldest use is evicted
+# first.
 _snapshots: OrderedDict[tuple[str, ...], pa.Table] = OrderedDict()
 _snapshots_lock = threading.Lock()
 _SNAPSHOTS_KEPT = 4

@@ -189,10 +189,12 @@ def test_store_load_runs_no_job(spark, fruit_store, in_job_group):
 
 
 def test_term_dictionary_is_collected_once_per_store_snapshot(spark, tmp_path, in_job_group):
-    """The first requests on a store snapshot, even concurrent ones,
-    collect term_uids in one Spark job; every later lookup and request
-    on that loaded graph, and on later loads of the unchanged store,
-    runs no lookup job."""
+    """The first requests on a store snapshot, even concurrent ones on
+    one loaded graph and on fresh loads of the store, collect term_uids
+    in one Spark job; every later lookup and request on that loaded
+    graph, and on later loads of the unchanged store, runs no lookup
+    job."""
+    import sys
     import threading
 
     ex = "http://example.org/"
@@ -201,16 +203,25 @@ def test_term_dictionary_is_collected_once_per_store_snapshot(spark, tmp_path, i
     kg = store.load(spark, base)
     sc = spark.sparkContext
     group = f"held_first_{id(kg)}"
+    found = []
 
-    def first():
+    def first(k):
         sc.setJobGroup(group, group)
-        kg.lookup([f"{ex}Banana"])
+        graph = kg if k % 2 else store.load(spark, base)
+        found.append(graph.lookup([f"{ex}Banana"])[f"{ex}Banana"])
 
-    threads = [threading.Thread(target=first) for _ in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    threads = [threading.Thread(target=first, args=(k,)) for k in range(2 * os.cpu_count())]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(found) == len(threads) and len(set(found)) == 1 and None not in found
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     uids, jobs = in_job_group(f"held_again_{id(kg)}", lambda: kg.lookup([f"{ex}Banana", f"{ex}Nope"]))
     assert jobs == 0
