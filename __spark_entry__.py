@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_spark.docs_kg import CODE, ENT, TRIPLES_SQL, documents_kg, documents_triples
-from de_spark.query.bgp import TriplePattern, compile_bgp
+from de_spark.query.bgp import Path, TriplePattern, compile_bgp
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: build the KG over sf0.001 documents with the real
@@ -73,8 +73,9 @@ def _kg_path_comention(spark, sf_dir):
     semantics (multiplicity = number of shared words), engine path
     compiler (de_spark.query.bgp._path_pairs)."""
     kg = documents_kg(spark, sf_dir)
+    mentions = CODE + "mentions"
     pat = TriplePattern(
-        ENT + "doc/0", f"path:<{CODE}mentions>/^<{CODE}mentions>", "?other"
+        ENT + "doc/0", Path("seq", (mentions, Path("inv", (mentions,)))), "?other"
     )
     return kg.decode_vars(compile_bgp(kg, [pat]), ["other"])
 

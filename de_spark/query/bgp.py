@@ -17,6 +17,12 @@ Variables join on global term uids, so subject/object/predicate
 positions are directly comparable (same term string ⇒ same uid; see
 de_spark.dictionary docstring).
 
+Property paths (SPARQL 1.1 §9.1: ``/ | ^ + * ?`` and negated property
+sets) reach this module as the parser's :class:`Path` tree, and
+``_path_pairs`` evaluates it by structural recursion, one case per
+operator, as spareval evaluates spargebra's path expressions
+(src/sparql.rs:520).
+
 Property-path closures (``+``/``*``) and DESCRIBE's blank-node
 expansion share one fixpoint, ``_fixpoint``: the frontier and the seen
 set live on the driver, and each round sends Spark only the frontier's
@@ -27,7 +33,6 @@ as the emitted answer does.
 
 from __future__ import annotations
 
-import re
 from collections import defaultdict
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -40,67 +45,46 @@ from de_spark.graph import KnowledgeGraph
 
 
 @dataclass(frozen=True)
+class Path:
+    """A property path in predicate position, as the parser builds it
+    (SPARQL 1.1 §9.1).  ``op`` is ``seq`` or ``alt`` over child paths;
+    ``inv``, ``+``, ``*`` or ``?`` over one child path; or ``!`` (a
+    negated property set) over ``(iri, inverse)`` members.  A child is
+    a ``Path`` or a bare IRI string (a one-IRI step).  The reference
+    gets the same tree from spargebra and evaluates it with spareval
+    (src/sparql.rs:520); zero-length matches pair every graph term
+    (subject or object occurrence) with itself, per SPARQL 1.1
+    ArbitraryLengthPath/ZeroOrOnePath."""
+
+    op: str
+    args: tuple
+
+
+@dataclass(frozen=True)
 class TriplePattern:
     """Each position is '?name' for a variable or an HDT-convention
-    constant term string.  The predicate may also be a PROPERTY PATH,
-    encoded as ``path:<expr>`` with IRIs in angle brackets and the
-    operators ``/`` (sequence), ``|`` (alternative), ``^`` (inverse),
-    ``+`` (one-or-more), ``*`` (zero-or-more), ``?`` (zero-or-one) and
-    negated property sets ``!(<a>|<b>)`` —
-    e.g. ``path:<http://a>/^<http://b>+``.  The reference gets full
-    SPARQL 1.1 paths from spareval (src/sparql.rs:520); zero-length
-    matches pair every graph term (subject or object occurrence) with
-    itself, per SPARQL 1.1 ArbitraryLengthPath/ZeroOrOnePath."""
+    constant term string.  The predicate may also be a :class:`Path`;
+    a plain one-IRI predicate stays a string."""
 
     s: str
-    p: str
+    p: str | Path
     o: str
     graph: str | None = None  # F2: constant graph IRI, or '?var' to BIND the graph name
 
     def is_path(self) -> bool:
-        return self.p.startswith("path:")
-
-    def vars(self) -> list[str]:
-        return [t[1:] for t in (self.s, self.p, self.o) if t.startswith("?")]
-
-    def bound_count(self) -> int:
-        return sum(0 if t.startswith("?") else 1 for t in (self.s, self.p, self.o))
+        return isinstance(self.p, Path)
 
     def selectivity_key(self) -> tuple:
-        # more bound = earlier; tie-break: bound-p+o most selective shape
-        bound = tuple(0 if t.startswith("?") else 1 for t in (self.s, self.p, self.o))
-        return (-self.bound_count(), -bound[2], -bound[1], -bound[0])
+        # more bound = earlier; tie-break: bound-p+o most selective
+        # shape.  A path counts as a bound predicate.
+        s, o = (0 if t.startswith("?") else 1 for t in (self.s, self.o))
+        p = 1 if self.is_path() or not self.p.startswith("?") else 0
+        return (-(s + p + o), -o, -p, -s)
 
 
 # ---------------------------------------------------------------------------
-# Property paths (SPARQL 1.1 subset: / | ^ + over IRIs)
+# Property paths
 # ---------------------------------------------------------------------------
-
-_PATH_ATOM = re.compile(r"\s*(\^)?\s*<([^>]*)>\s*([+*?])?\s*")
-
-
-def _split_top(expr: str, op: str) -> list[str]:
-    """Split on ``op`` at paren depth 0, never inside <IRI> brackets
-    (IRIs contain '/' and may contain '|')."""
-    parts, depth, cur = [], 0, []
-    in_iri = False
-    for ch in expr:
-        if ch == "<":
-            in_iri = True
-        elif ch == ">":
-            in_iri = False
-        elif not in_iri:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        if ch == op and depth == 0 and not in_iri:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return parts
 
 
 def _has_g(pairs: DataFrame) -> bool:
@@ -189,6 +173,23 @@ def _fixpoint(start: DataFrame, expand: Callable[[list[int]], DataFrame]) -> Dat
     return _local_relation(start.sparkSession, schema, seen)
 
 
+def _scoped_triples(kg: KnowledgeGraph, graph: str | None) -> DataFrame:
+    """The fact table a path reads: pruned to GRAPH <g>; whole under
+    GRAPH ?var (rows carry their graph) and in the default union."""
+    if graph is None or graph.startswith("?"):
+        return kg.triples
+    return kg.triples.where(F.col("graph") == graph)
+
+
+def _edge_pairs(triples: DataFrame, graph: str | None) -> DataFrame:
+    """Triples as (a, b) = (subject, object) pairs, plus the graph name
+    ``g`` under GRAPH ?var."""
+    sel = [F.col("s_id").alias("a"), F.col("o_id").alias("b")]
+    if graph is not None and graph.startswith("?"):
+        sel.append(F.col("graph").alias("g"))
+    return triples.select(*sel)
+
+
 def _graph_nodes(
     kg: KnowledgeGraph, graph: str | None, seed: DataFrame | list[int] | None = None
 ) -> DataFrame:
@@ -199,11 +200,7 @@ def _graph_nodes(
     GRAPH ?var the identity rows carry their graph name, scoped per
     graph."""
     graph_var = graph is not None and graph.startswith("?")
-    t = (
-        kg.triples
-        if graph is None or graph_var
-        else kg.triples.where(F.col("graph") == graph)
-    )
+    t = _scoped_triples(kg, graph)
     gcols = [F.col("graph")] if graph_var else []
     nodes = (
         t.select(F.col("s_id").alias("n"), *gcols)
@@ -222,41 +219,94 @@ def _nodes_of(pairs: DataFrame, col: str) -> DataFrame:
     return pairs.select(F.col(col).alias("n")).dropDuplicates()
 
 
+def _iri_pairs(kg: KnowledgeGraph, iri: str, graph: str | None) -> DataFrame:
+    """One IRI step: the pairs of the triples under that predicate."""
+    graph_var = graph is not None and graph.startswith("?")
+    return _edge_pairs(kg.pattern(p=iri, graph=None if graph_var else graph), graph)
+
+
+def _seed_ends(
+    pairs: DataFrame, seed_a: DataFrame | list[int] | None, seed_b: DataFrame | list[int] | None
+) -> DataFrame:
+    if seed_a is not None:
+        pairs = _seed_filter(pairs, "a", seed_a)
+    if seed_b is not None:
+        pairs = _seed_filter(pairs, "b", seed_b)
+    return pairs
+
+
+def _nps_pairs(
+    kg: KnowledgeGraph,
+    members: tuple[tuple[str, bool], ...],
+    graph: str | None,
+    seed_a: DataFrame | list[int] | None,
+    seed_b: DataFrame | list[int] | None,
+) -> DataFrame:
+    """A negated property set: the (graph-pruned) fact table under a
+    literal ``p_id NOT IN (…)`` over the members the dictionary holds;
+    an absent member excludes nothing (SPARQL 1.1
+    PathNegatedPropertySet).  Forward members exclude forward edges;
+    inverse members ``^iri`` exclude reverse edges, which swap; a mixed
+    set unions both sides (SPARQL 1.1 §9.1 NPS translation), and the
+    empty set ``!()`` matches every forward edge."""
+    t = _scoped_triples(kg, graph)
+    fwd = [iri for iri, inverse in members if not inverse]
+    inv = [iri for iri, inverse in members if inverse]
+    sides = [(fwd, False)] if fwd or not inv else []
+    if inv:
+        sides.append((inv, True))
+    out = None
+    for iris, swap in sides:
+        excluded = [u for iri in iris if (u := kg.uids[iri]) is not None]
+        p = _edge_pairs(t.where(~_uid_in("p_id", excluded)), graph)
+        p = _seed_ends(_swap(p) if swap else p, seed_a, seed_b)
+        out = p if out is None else out.unionByName(p)
+    return out
+
+
 def _path_pairs(
     kg: KnowledgeGraph,
-    expr: str,
+    path: str | Path,
     graph: str | None = None,
     seed_a: DataFrame | list[int] | None = None,
     seed_b: DataFrame | list[int] | None = None,
 ) -> DataFrame:
-    """Compile a normalized path expression to (a, b) uid pairs.
+    """Compile a path tree to (a, b) uid pairs, one case per ``op``.
 
     ``seed_a`` / ``seed_b`` restrict an endpoint: a one-column 'n' node
     frame, or a uid list (a bound constant, or a fixpoint round's
     frontier).  A bound
     subject/object pushes INTO the evaluation — sequences chain the
-    restriction step-to-step, and a ``+``/``*`` closure starts its
-    ``_fixpoint`` from the seed's step rows, evaluating the atom for
-    each round's frontier only (VERDICT r3 item 1: `<s> knows+ ?o` must
-    not pay the whole relation's closure).  An unseeded closure starts
-    from the whole step relation."""
-    expr = expr.strip()
+    restriction step-to-step, an inverse swaps the seeds, and a
+    ``+``/``*`` closure starts its ``_fixpoint`` from the seed's step
+    rows, evaluating the step for each round's frontier only (VERDICT
+    r3 item 1: `<s> knows+ ?o` must not pay the whole relation's
+    closure).  An unseeded closure starts from the whole step
+    relation."""
+    if isinstance(path, str):
+        return _seed_ends(_iri_pairs(kg, path, graph), seed_a, seed_b)
+    op, args = path.op, path.args
+    if op == "!":
+        return _nps_pairs(kg, args, graph, seed_a, seed_b)
+    if op == "inv":
+        return _swap(_path_pairs(kg, args[0], graph, seed_b, seed_a))
     # bag semantics for | and / (SPARQL PathAlt/PathSequence); only the
     # +/*/? closures are set-based (ArbitraryLengthPath), per SPARQL 1.1
-    alts = _split_top(expr, "|")
-    if len(alts) > 1:
-        out = _path_pairs(kg, alts[0], graph, seed_a, seed_b)
-        for alt in alts[1:]:
+    if op == "alt":
+        out = _path_pairs(kg, args[0], graph, seed_a, seed_b)
+        for alt in args[1:]:
             out = out.unionByName(_path_pairs(kg, alt, graph, seed_a, seed_b))
         return out
-    seq = _split_top(expr, "/")
-    if len(seq) > 1:
+    if op == "seq":
+        if len(args) == 1:
+            # a parenthesized one-IRI group
+            return _path_pairs(kg, args[0], graph, seed_a, seed_b)
         if seed_a is not None:
             # left-to-right: each step restricted to the previous
             # step's reached nodes, so closures inside the sequence
             # stay seeded too (never a full-relation closure)
-            out = _path_pairs(kg, seq[0], graph, seed_a=seed_a)
-            for step in seq[1:]:
+            out = _path_pairs(kg, args[0], graph, seed_a=seed_a)
+            for step in args[1:]:
                 nxt = _path_pairs(kg, step, graph, seed_a=_nodes_of(out, "b"))
                 out = _step_join(out, nxt)
             if seed_b is not None:
@@ -264,140 +314,43 @@ def _path_pairs(
             return out
         if seed_b is not None:
             # bound object only: chain right-to-left through inverses
-            out = _path_pairs(kg, seq[-1], graph, seed_b=seed_b)
-            for step in reversed(seq[:-1]):
+            out = _path_pairs(kg, args[-1], graph, seed_b=seed_b)
+            for step in reversed(args[:-1]):
                 prv = _path_pairs(kg, step, graph, seed_b=_nodes_of(out, "a"))
                 out = _step_join(prv, out)
             return out
-        out = _path_pairs(kg, seq[0], graph)
-        for step in seq[1:]:
-            nxt = _path_pairs(kg, step, graph)
-            out = _step_join(out, nxt)
+        out = _path_pairs(kg, args[0], graph)
+        for step in args[1:]:
+            out = _step_join(out, _path_pairs(kg, step, graph))
         return out
-    # atom: [^] ( <iri> | (expr) | !(...) ) [+*?]
-    inv = expr.startswith("^")
-    if inv:
-        expr = expr[1:].strip()
-    suffix = ""
-    if expr.endswith(("+", "*", "?")):
-        suffix = expr[-1]
-        expr = expr[:-1].strip()
 
-    if expr.startswith("!"):
-        nps_fwd = [
-            m.group(2)
-            for m in re.finditer(r"(\^)?<([^>]*)>", expr)
-            if not m.group(1)
-        ]
-        nps_inv = [
-            m.group(2)
-            for m in re.finditer(r"(\^)?<([^>]*)>", expr)
-            if m.group(1)
-        ]
-        atom_kind = "nps"
-    elif expr.startswith("(") and expr.endswith(")"):
-        atom_kind = "paren"
-    else:
-        m = _PATH_ATOM.fullmatch(expr)
-        if not m:
-            raise ValueError(f"unsupported property path atom: {expr!r}")
-        inv = inv or bool(m.group(1))
-        suffix = suffix or (m.group(3) or "")
-        atom_iri = m.group(2)
-        atom_kind = "iri"
-
-    graph_var = graph is not None and graph.startswith("?")
-    if atom_kind == "iri":
+    if op not in ("+", "*", "?"):
+        raise ValueError(f"unknown property path operator {op!r}")
+    (child,) = args
+    if isinstance(child, str):
         # built once, so a closure round adds only its frontier filter
-        sel = [F.col("s_id").alias("a"), F.col("o_id").alias("b")]
-        if graph_var:
-            sel.append(F.col("graph").alias("g"))
-        iri_pairs = kg.pattern(p=atom_iri, graph=None if graph_var else graph).select(*sel)
-
-    def _nps_side(iris: list[str], swap: bool, sa, sb) -> DataFrame:
-        """One direction of a negated property set: the (graph-pruned)
-        fact table under a literal ``p_id NOT IN (…)`` over the members
-        the dictionary holds; an absent member excludes nothing (SPARQL
-        1.1 PathNegatedPropertySet).  Inverse members swap."""
-        t = (
-            kg.triples
-            if graph is None or graph_var
-            else kg.triples.where(F.col("graph") == graph)
+        iri_pairs = _iri_pairs(kg, child, graph)
+        base = lambda sa, sb: _seed_ends(iri_pairs, sa, sb)
+    else:
+        base = lambda sa, sb: _path_pairs(kg, child, graph, sa, sb)
+    if op == "?":
+        pairs = base(seed_a, seed_b)
+    elif seed_a is None and seed_b is not None:
+        # bound object only: the same fixpoint over swapped pairs
+        pairs = _swap(
+            _fixpoint(_swap(base(None, seed_b)), lambda nodes: _swap(base(None, nodes)))
         )
-        excluded = [u for t in iris if (u := kg.uids[t]) is not None]
-        sel = [F.col("s_id").alias("a"), F.col("o_id").alias("b")]
-        if graph_var:
-            sel.append(F.col("graph").alias("g"))
-        p = t.where(~_uid_in("p_id", excluded)).select(*sel)
-        if swap:
-            p = _swap(p)
-        if sa is not None:
-            p = _seed_filter(p, "a", sa)
-        if sb is not None:
-            p = _seed_filter(p, "b", sb)
-        return p
-
-    def eval_base(
-        sa: DataFrame | list[int] | None, sb: DataFrame | list[int] | None
-    ) -> DataFrame:
-        """The atom's base pairs (closure suffix NOT applied), with
-        optional endpoint seeds pushed through inversion."""
-        if inv:
-            sa, sb = sb, sa
-        if atom_kind == "nps":
-            parts = []
-            if nps_fwd or not nps_inv:
-                parts.append(_nps_side(nps_fwd, False, sa, sb))
-            if nps_inv:
-                # inverse members: y→x edges whose predicate is outside
-                # the inverse set (union with the forward side per
-                # SPARQL 1.1 §9.1 NPS translation)
-                parts.append(_nps_side(nps_inv, True, sa, sb))
-            p = parts[0]
-            for extra in parts[1:]:
-                p = p.unionByName(extra)
-        elif atom_kind == "paren":
-            p = _path_pairs(kg, expr[1:-1], graph, seed_a=sa, seed_b=sb)
-        else:
-            p = iri_pairs
-            if sa is not None:
-                p = _seed_filter(p, "a", sa)
-            if sb is not None:
-                p = _seed_filter(p, "b", sb)
-        if inv:
-            p = _swap(p)
-        return p
-
-    if suffix == "+" or suffix == "*":
-        if seed_a is None and seed_b is not None:
-            # bound object only: the same fixpoint over swapped pairs
-            pairs = _swap(
-                _fixpoint(
-                    _swap(eval_base(None, seed_b)),
-                    lambda nodes: _swap(eval_base(None, nodes)),
-                )
-            )
-        else:
-            # a bound subject seeds the start; var–var starts from the
-            # whole step relation
-            pairs = _fixpoint(eval_base(seed_a, None), lambda nodes: eval_base(nodes, None))
-        if suffix == "*":
-            seed = seed_a if seed_a is not None else seed_b
-            pairs = pairs.unionByName(_graph_nodes(kg, graph, seed)).dropDuplicates()
-        if seed_a is not None and seed_b is not None:
-            pairs = _seed_filter(pairs, "b", seed_b)
-        return pairs
-    if suffix == "?":
+    else:
+        # a bound subject seeds the start; var–var starts from the
+        # whole step relation
+        pairs = _fixpoint(base(seed_a, None), lambda nodes: base(nodes, None))
+    if op != "+":
+        # zero-length matches: * and ? add the identity pairs
         seed = seed_a if seed_a is not None else seed_b
-        pairs = (
-            eval_base(seed_a, seed_b)
-            .unionByName(_graph_nodes(kg, graph, seed))
-            .dropDuplicates()
-        )
-        if seed_a is not None and seed_b is not None:
-            pairs = _seed_filter(pairs, "b", seed_b)
-        return pairs
-    return eval_base(seed_a, seed_b)
+        pairs = pairs.unionByName(_graph_nodes(kg, graph, seed)).dropDuplicates()
+    if seed_a is not None and seed_b is not None:
+        pairs = _seed_filter(pairs, "b", seed_b)
+    return pairs
 
 
 def _compile_path(kg: KnowledgeGraph, pat: TriplePattern) -> DataFrame:
@@ -415,7 +368,7 @@ def _compile_path(kg: KnowledgeGraph, pat: TriplePattern) -> DataFrame:
 
     seed_a = None if pat.s.startswith("?") else _seed_uids(pat.s)
     seed_b = None if pat.o.startswith("?") else _seed_uids(pat.o)
-    pairs = _path_pairs(kg, pat.p[len("path:"):], pat.graph, seed_a, seed_b)
+    pairs = _path_pairs(kg, pat.p, pat.graph, seed_a, seed_b)
     cols = []
     if pat.graph is not None and pat.graph.startswith("?"):
         cols.append(F.col("g").alias(pat.graph[1:]))
@@ -465,6 +418,18 @@ def _compile_one(kg: KnowledgeGraph, pat: TriplePattern) -> DataFrame:
     return df.select(F.lit(1).alias("__exists")).limit(1)
 
 
+def _path_iris(path: str | Path):
+    """The IRIs of a predicate: itself when it is one IRI, else the
+    IRI steps and negated-set members of its path tree."""
+    if isinstance(path, str):
+        yield path
+    elif path.op == "!":
+        yield from (iri for iri, _ in path.args)
+    else:
+        for arg in path.args:
+            yield from _path_iris(arg)
+
+
 def pattern_terms(patterns: list[TriplePattern]) -> set[str]:
     """The dictionary constants of triple patterns: bound subjects and
     objects, constant predicates, and the IRIs of property paths
@@ -473,10 +438,8 @@ def pattern_terms(patterns: list[TriplePattern]) -> set[str]:
     out: set[str] = set()
     for pat in patterns:
         out.update(t for t in (pat.s, pat.o) if not t.startswith("?"))
-        if pat.is_path():
-            out.update(re.findall(r"<([^>]*)>", pat.p))
-        elif not pat.p.startswith("?"):
-            out.add(pat.p)
+        if pat.is_path() or not pat.p.startswith("?"):
+            out.update(_path_iris(pat.p))
     return out
 
 
@@ -500,9 +463,11 @@ def compile_bgp(kg: KnowledgeGraph, patterns: list[TriplePattern]) -> DataFrame:
     big = max(cards.values(), default=0) + 1
 
     def key(p: TriplePattern):
-        if p.p.startswith("?"):
+        if p.is_path():
+            est = big
+        elif p.p.startswith("?"):
             est = big * 3
-        elif p.is_path() or not cards:
+        elif not cards:
             est = big
         else:
             uid = kg.uids[p.p]

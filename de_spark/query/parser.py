@@ -22,7 +22,10 @@ is written.  The query subset the engine executes:
   STRBEFORE/STRAFTER, CONCAT, REPLACE, ABS/CEIL/FLOOR/ROUND,
   IF, COALESCE)
 - property paths in the predicate position: ``/ | ^ + * ?`` with
-  parens and negated property sets ``!iri`` / ``!(iri|…)``
+  parens and negated property sets ``!iri`` / ``!(iri|^iri|…)`` /
+  ``!()``, parsed once into a ``bgp.Path`` tree that the BGP compiler
+  evaluates; a plain one-IRI predicate stays a string, and a
+  parenthesized one ``(<p>)`` stays a path, which data refuses
 - all four query forms: SELECT (vars, aggregates, expr-AS), ASK,
   CONSTRUCT { template }, DESCRIBE targets [WHERE]
 - subqueries: ``{ SELECT … }`` as a group element (SPARQL 1.1 §12)
@@ -53,7 +56,7 @@ from dataclasses import dataclass, field
 from urllib.parse import urljoin
 
 from de_spark import terms
-from de_spark.query.bgp import TriplePattern
+from de_spark.query.bgp import Path, TriplePattern
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_TYPE = RDF + "type"
@@ -518,94 +521,74 @@ class Parser:
 
     # -- property paths ------------------------------------------------------
 
-    def _parse_path(self) -> str:
-        """Path in predicate position → bare IRI or normalized
-        ``path:…`` string for de_spark.query.bgp._path_pairs."""
-        rendered, compound = self._path_alt()
-        return "path:" + rendered if compound else rendered[1:-1]
-
-    def _path_alt(self) -> tuple[str, bool]:
+    def _parse_path(self) -> str | Path:
+        """Path in predicate position → a bare IRI, or the path tree
+        de_spark.query.bgp._path_pairs evaluates."""
         parts = [self._path_seq()]
-        while self.at_op("|"):
-            self.next()
+        while self.eat_op("|"):
             parts.append(self._path_seq())
-        if len(parts) == 1:
-            return parts[0]
-        return "|".join(p[0] for p in parts), True
+        return parts[0] if len(parts) == 1 else Path("alt", tuple(parts))
 
-    def _path_seq(self) -> tuple[str, bool]:
+    def _path_seq(self) -> str | Path:
         parts = [self._path_elt()]
-        while self.at_op("/"):
-            self.next()
+        while self.eat_op("/"):
             parts.append(self._path_elt())
-        if len(parts) == 1:
-            return parts[0]
-        return "/".join(p[0] for p in parts), True
+        return parts[0] if len(parts) == 1 else Path("seq", tuple(parts))
 
-    def _path_elt(self) -> tuple[str, bool]:
+    def _path_elt(self) -> str | Path:
         inv = self.eat_op("^")
         t = self.peek()
-        if self.at_op("("):
-            self.next()
-            inner, _ = self._path_alt()
+        if self.eat_op("("):
+            node = self._parse_path()
             self.expect_op(")")
-            rendered, compound = f"({inner})", True
+            if isinstance(node, str):
+                # a parenthesized IRI stays a path, so data refuses it
+                node = Path("seq", (node,))
         elif t.kind in ("IRI", "PNAME"):
             self.next()
-            rendered, compound = f"<{self._iri(t)}>", False
+            node = self._iri(t)
         elif t.kind == "WORD" and t.value == "a":
             self.next()
-            rendered, compound = f"<{RDF_TYPE}>", False
-        elif self.at_op("!"):
-            # negated property set: !iri or !(iri|iri|…) — forward
-            # members only (inverse members ^iri are rejected loudly)
-            self.next()
-            items = []
-            if self.at_op("("):
-                self.next()
-                while True:
-                    items.append(self._nps_member())
-                    if self.eat_op("|"):
-                        continue
-                    break
+            node = RDF_TYPE
+        elif self.eat_op("!"):
+            # negated property set: !iri, !^iri or !(member|…), and the
+            # empty set !() (SPARQL 1.1 grammar rule [96])
+            members = []
+            if self.eat_op("("):
+                if not self.at_op(")"):
+                    members.append(self._nps_member())
+                    while self.eat_op("|"):
+                        members.append(self._nps_member())
                 self.expect_op(")")
             else:
-                items.append(self._nps_member())
-            rendered, compound = "!(" + "|".join(items) + ")", True
+                members.append(self._nps_member())
+            node = Path("!", tuple(members))
         else:
             raise ValueError(f"cannot parse path at position {t.pos}: {t.value!r}")
         # closure/optional suffix — '?' only when not starting a variable,
         # '+' only when not the sign of an adjacent number object (+5)
         nxt = self.peek(1)
-        if self.at_op("*") or (
+        if self.at_op("*", "?") or (
             self.at_op("+") and not (nxt.kind == "NUM" and nxt.pos == self.peek().pos + 1)
         ):
-            rendered += self.next().value
-            compound = True
-        elif self.at_op("?"):
-            self.next()
-            rendered += "?"
-            compound = True
-        if inv:
-            rendered = "^" + rendered
-            compound = True
-        return rendered, compound
+            node = Path(self.next().value, (node,))
+        return Path("inv", (node,)) if inv else node
 
-    def _nps_member(self) -> str:
-        if self.eat_op("^"):
-            # inverse member ^iri: matches reverse edges whose
-            # predicate is outside the inverse subset (SPARQL 1.1 §9.1)
-            return "^" + self._nps_member()
+    def _nps_member(self) -> tuple[str, bool]:
+        """``iri`` / ``a`` / ``^iri`` → (iri, inverse).  An inverse
+        member matches reverse edges whose predicate is outside the
+        inverse subset (SPARQL 1.1 §9.1)."""
+        inverse = self.eat_op("^")
         t = self.peek()
         if t.kind in ("IRI", "PNAME"):
             self.next()
-            return f"<{self._iri(t)}>"
+            return self._iri(t), inverse
         if t.kind == "WORD" and t.value == "a":
             self.next()
-            return f"<{RDF_TYPE}>"
+            return RDF_TYPE, inverse
         raise ValueError(f"bad negated-property-set member at position {t.pos}")
 
-    def _parse_verb(self) -> str:
+    def _parse_verb(self) -> str | Path:
         if self.peek().kind == "VAR":
             return "?" + self.next().value[1:]
         return self._parse_path()
@@ -1170,6 +1153,8 @@ class Parser:
                 continue
             self.parse_triples(template)
         self.expect_op("}")
+        if any(p.is_path() for p in template):
+            raise ValueError("property paths are not allowed in a CONSTRUCT template")
         q.construct_template = template
         self._where_and_modifiers(q)
         return q

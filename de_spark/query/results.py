@@ -13,9 +13,7 @@ Byte-shape contract comes from the reference's golden assertions
 
 Each ``to_*`` emitter fetches its rows with one ``collect()`` (one
 Spark job) and renders them on the driver, so the answer must fit in
-driver memory.  ``write_csv`` (and ``rdf_writers.write_rdf`` for
-graphs) is the route for outputs larger than the driver: it writes
-distributed files of the same row shape.
+driver memory.
 """
 
 from __future__ import annotations
@@ -179,12 +177,3 @@ def emit(kg: KnowledgeGraph, text: str, fmt: str) -> str:
         return _ASK[fmt](sols.collect()[0][0])
     return _SELECT[fmt](sols)
 
-
-def write_csv(solutions: DataFrame, path: str) -> None:
-    """Distributed CSV export (S9 at scale): same cell shapes as to_csv."""
-    from pyspark.sql import functions as F
-
-    out = solutions.select(
-        *[F.expr(terms.sparql_csv_form(f"`{c}`")).alias(c) for c in solutions.columns]
-    )
-    out.write.mode("overwrite").option("header", True).csv(path)

@@ -7,9 +7,11 @@ spargebra/spareval (src/sparql.rs:516-521)."""
 import pytest
 
 from de_spark.pipeline import build
-from de_spark.query import sparql_select
-from de_spark.query.parser import parse_sparql
+from de_spark.query import Path, sparql_select
+from de_spark.query.parser import RDF_TYPE, XSD, parse_sparql
+from de_spark.query.update import parse_update
 from de_spark.sources.nt import triples_from_nt_text
+from de_spark.sources.turtle import parse_turtle
 from tests.fixtures import BANANA_NT, PINEAPPLE_TTL
 
 EX = "PREFIX ex: <http://example.org/>\n"
@@ -327,6 +329,66 @@ def test_negated_property_set(fruit_kg):
     assert names(sparql_select(fruit_kg, q4), "o") == ["Banana", "Pineapple"]
     q5 = EX + "SELECT ?s ?o WHERE { ?s !(a|^a) ?o }"
     assert sparql_select(fruit_kg, q5).count() == 40
+
+
+def test_empty_negated_property_set(fruit_kg):
+    """``!()`` (SPARQL 1.1 grammar rule [96]) excludes no predicate, so
+    it matches every edge once, as ``?p`` does."""
+    rows = lambda q: sorted((r["x"], r["y"]) for r in sparql_select(fruit_kg, q).collect())
+    got = rows("SELECT ?x ?y WHERE { ?x !() ?y }")
+    assert got and got == rows("SELECT ?x ?y WHERE { ?x ?p ?y }")
+
+
+def _path_of(text):
+    (pat,) = parse_sparql(EX + f"SELECT * WHERE {{ {text} }}").algebra.patterns
+    return pat.p
+
+
+def test_path_trees():
+    """The parser hands the BGP compiler a path tree; a one-IRI step is
+    a bare IRI string, and a parenthesized one stays a path."""
+    p, q, r = (f"http://example.org/{x}" for x in "pqr")
+    assert _path_of("?s ex:p ?o") == p
+    assert _path_of("?s a ?o") == RDF_TYPE
+    assert _path_of("?s ex:p|ex:q/ex:r ?o") == Path("alt", (p, Path("seq", (q, r))))
+    assert _path_of("?s ^ex:p/ex:q ?o") == Path("seq", (Path("inv", (p,)), q))
+    assert _path_of("?s ^ex:p+ ?o") == Path("inv", (Path("+", (p,)),))
+    assert _path_of("?s ex:p* ?o") == Path("*", (p,))
+    assert _path_of("?s (ex:p/^ex:q)? ?o") == Path("?", (Path("seq", (p, Path("inv", (q,)))),))
+    assert _path_of("?s !ex:p ?o") == Path("!", ((p, False),))
+    assert _path_of("?s !(ex:p|^a) ?o") == Path("!", ((p, False), (RDF_TYPE, True)))
+    assert _path_of("?s !() ?o") == Path("!", ())
+    assert _path_of("?s (ex:p) ?o") == Path("seq", (p,))
+    assert _path_of("?s ((ex:p|ex:q)) ?o") == Path("alt", (p, q))
+    # a '+' right before a number is the number's sign, not a closure
+    plus5 = parse_sparql(EX + "SELECT * WHERE { ?s ex:p +5 }").algebra.patterns[0]
+    assert (plus5.p, plus5.o) == (p, f'"+5"^^<{XSD}integer>')
+    assert _path_of("?s ex:p+ 5") == Path("+", (p,))
+
+
+@pytest.mark.parametrize(
+    "parse",
+    [
+        parse_turtle,
+        lambda d: parse_update(f"INSERT DATA {{ {d} }}"),
+        lambda d: parse_sparql(f"CONSTRUCT WHERE {{ {d} }}"),
+    ],
+    ids=["turtle", "insert_data", "construct_where"],
+)
+@pytest.mark.parametrize("pred", ["(<http://p>)", "<http://p>/<http://q>", "^<http://p>"])
+def test_data_refuses_a_path_predicate(parse, pred):
+    """Data holds plain triples: a path, even a parenthesized single
+    IRI, is refused, never read as its IRI."""
+    with pytest.raises(ValueError, match="path|plain triple"):
+        parse(f"<http://s> {pred} <http://o> .")
+
+
+def test_construct_template_refuses_a_path():
+    """A CONSTRUCT template's predicate is a variable or an IRI (SPARQL
+    1.1 ConstructTriples); a path there is an error, not an emitted
+    triple."""
+    with pytest.raises(ValueError, match="CONSTRUCT template"):
+        parse_sparql("CONSTRUCT { ?s (<http://p>) ?o } WHERE { ?s ?p ?o }")
 
 
 def test_values_undef_partial_rows(fruit_kg):
