@@ -1,23 +1,21 @@
-"""Vectorized per-language triple extractors (M1).
+"""Per-language triple extractors (M1), as one Spark SQL projection.
 
 This is the Spark realization of the reference's pluggable
 file→triples converter trait (``Rdf2Nt``, src/rdf2nt.rs:15-28): one
-extractor per ``lang``, registered in a dispatch table, batch contract
-``Iterator[pd.DataFrame(repo,path,commit,lang,content,sha256,graph)] →
-Iterator[pd.DataFrame(s,p,o,o_kind,graph)]``.  All string work is
-pandas/Arrow vectorized (``str.extractall`` / concatenation of whole
-Series) — no per-row Python, per the input_hint.
+rule pair per ``lang`` in the ``LANG_RULES`` dispatch table, applied to
+a code table ``(repo, path, commit, lang, content)``.  Each row's
+triples are built as one array of ``(s, p, o, o_kind)`` structs and
+exploded once, the shape ``docs_kg.documents_triples`` uses.  Every
+step is a JVM expression (``regexp_extract_all``, ``sha2``,
+``transform``, ``arrays_zip``), so extraction starts no Python worker.
 
 Emitted entity/edge vocabulary (our KG schema over code):
 
   repo   —  rdf:type code:Repository
   file   —  rdf:type code:File; code:inRepo repo; code:lang "…";
             code:commit "…"; code:sha256 "…" (the ingest invariant,
-            hashed with hashlib INSIDE the Arrow batch in each Python
-            worker — deliberately not F.sha2, whose per-row
-            MessageDigest.getInstance serializes all JVM threads on
-            the provider lock; JVM-parity is pinned by
-            tests/test_extract.py::test_sha256_invariant);
+            ``sha2(content, 256)`` of the UTF-8 text, pinned against
+            Python's SHA-256 by test_extract.py::test_sha256_invariant);
             code:imports module  (hub predicate — skewed)
   fn     —  rdf:type code:Function (hub object); code:definedIn file;
             code:calls fn        (call edge)
@@ -29,116 +27,78 @@ analog of the reference's one-HDT-per-input-file naming
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from de_spark.graph import SCHEMAS
 
 CODE = "http://example.org/code#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 ENT = "http://example.org/"
 
-# dispatch table: lang → (import_regex, def_call_regex)
+# dispatch table: lang → (import_regex, def_call_regex), in Java regex
+# syntax.  Group 1 of the import regex is the module number; groups 1
+# and 2 of the def regex are a function and the function its body calls.
 LANG_RULES: dict[str, tuple[str, str]] = {
     "python": (
-        r"^(?:import mod_(\d+)|from mod_(\d+) import)",
+        r"(?m)^(?:import mod_|from mod_(?=\d+ import))(\d+)",
         r"def (fn_\d+_\d+)\([^)]*\):\n(?:\s*#[^\n]*\n)*\s+return (fn_\d+_\d+)\(",
     ),
     "rust": (
-        r"^use mod_(\d+);",
+        r"(?m)^use mod_(\d+);",
         r"fn (fn_\d+_\d+)\([^)]*\)[^{]*\{\n\s+(fn_\d+_\d+)\(",
     ),
 }
 
 
-def _const(series_index, s: str) -> pd.Series:
-    return pd.Series(s, index=series_index)
+def _matches(rule: int, group: int) -> Column:
+    """Group ``group`` of every match of the row's ``LANG_RULES`` regex
+    ``rule``; an empty array for a language without rules."""
+    out = F.array().cast("array<string>")
+    for lang, regexes in LANG_RULES.items():
+        hits = F.regexp_extract_all("content", F.lit(regexes[rule]), F.lit(group))
+        out = F.when(F.col("lang") == lang, hits).otherwise(out)
+    return out
 
 
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    frames: list[pd.DataFrame] = []
-    if "sha256" not in pdf.columns:
-        # content invariant hashed HERE, in the Python worker process:
-        # hashlib releases no JVM lock (Spark's sha2 serializes on
-        # MessageDigest.getInstance across all threads of a JVM) and
-        # each Arrow batch hashes at C speed in its own process.
-        import hashlib
-
-        pdf = pdf.assign(
-            sha256=[hashlib.sha256(c.encode()).hexdigest() for c in pdf["content"]]
-        )
-    graph = pdf["graph"]
-    repo_iri = ENT + "repo/" + pdf["repo"]
-    file_iri = ENT + "file/" + pdf["repo"] + "/" + pdf["path"]
-
-    def emit(s: pd.Series, p: str, o: pd.Series, kind: str, g: pd.Series) -> None:
-        frames.append(
-            pd.DataFrame(
-                {"s": s.values, "p": p, "o": o.values, "o_kind": kind, "graph": g.values}
-            )
-        )
-
-    emit(repo_iri, RDF_TYPE, _const(pdf.index, CODE + "Repository"), "iri", graph)
-    emit(file_iri, RDF_TYPE, _const(pdf.index, CODE + "File"), "iri", graph)
-    emit(file_iri, CODE + "inRepo", repo_iri, "iri", graph)
-    emit(file_iri, CODE + "lang", '"' + pdf["lang"] + '"', "literal", graph)
-    emit(file_iri, CODE + "commit", '"' + pdf["commit"] + '"', "literal", graph)
-    emit(file_iri, CODE + "sha256", '"' + pdf["sha256"] + '"', "literal", graph)
-
-    for lang, (imp_re, def_re) in LANG_RULES.items():
-        mask = pdf["lang"] == lang
-        if not mask.any():
-            continue
-        sub = pdf[mask]
-        sub_file = file_iri[mask]
-
-        # imports: extractall returns a (row, match) multi-index frame
-        imp = sub["content"].str.extractall(imp_re, flags=re.M)
-        if len(imp):
-            mod = imp[0] if imp.shape[1] == 1 else imp[0].fillna(imp[1])
-            row_idx = imp.index.get_level_values(0)
-            emit(
-                sub_file.loc[row_idx],
-                CODE + "imports",
-                ENT + "module/mod_" + mod,
-                "iri",
-                graph.loc[row_idx],
-            )
-
-        # function defs + call edges in one pass
-        defs = sub["content"].str.extractall(def_re, flags=re.M)
-        if len(defs):
-            row_idx = defs.index.get_level_values(0)
-            fn_iri = ENT + "fn/" + defs[0]
-            callee_iri = ENT + "fn/" + defs[1]
-            g2 = graph.loc[row_idx]
-            emit(fn_iri, RDF_TYPE, _const(fn_iri.index, CODE + "Function"), "iri", g2)
-            emit(fn_iri, CODE + "definedIn", sub_file.loc[row_idx], "iri", g2)
-            emit(fn_iri, CODE + "calls", callee_iri, "iri", g2)
-
-    if not frames:
-        return pd.DataFrame(columns=["s", "p", "o", "o_kind", "graph"])
-    return pd.concat(frames, ignore_index=True)
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield _extract_batch(pdf)
+def _triple(s: Column, p: str, o: Column, o_kind: str = "iri") -> Column:
+    return F.struct(
+        s.alias("s"), F.lit(p).alias("p"), o.alias("o"), F.lit(o_kind).alias("o_kind")
+    )
 
 
 def extract_code_triples(corpus: DataFrame) -> DataFrame:
     """corpus (repo,path,commit,lang,content) → triples_raw.
 
-    The sha256 content invariant is computed inside the extraction
-    kernel (hashlib over each Arrow batch, per worker process) — see
-    the lock-contention note in _extract_batch.  Correctness vs the
-    JVM's sha2 is pinned by tests/test_extract.py::test_sha256_invariant.
-    """
-    prepared = corpus.withColumn(
-        "graph", F.concat(F.lit("repo:///"), F.col("repo"))
+    The rows come out sorted by (p, s) within each input partition:
+    the stored ``triples_raw`` then compresses as well as it did when
+    the triples were emitted one predicate at a time."""
+    repo_iri = F.concat(F.lit(ENT + "repo/"), "repo")
+    file_iri = F.concat(F.lit(ENT + "file/"), "repo", F.lit("/"), "path")
+
+    def literal(c: str | Column) -> Column:
+        return F.concat(F.lit('"'), c, F.lit('"'))
+
+    per_file = F.array(
+        _triple(repo_iri, RDF_TYPE, F.lit(CODE + "Repository")),
+        _triple(file_iri, RDF_TYPE, F.lit(CODE + "File")),
+        _triple(file_iri, CODE + "inRepo", repo_iri),
+        _triple(file_iri, CODE + "lang", literal("lang"), "literal"),
+        _triple(file_iri, CODE + "commit", literal("commit"), "literal"),
+        _triple(file_iri, CODE + "sha256", literal(F.sha2("content", 256)), "literal"),
     )
-    return prepared.mapInPandas(_extract_batches, SCHEMAS["triples_raw"])
+    imports = F.transform(
+        _matches(0, 1),
+        lambda m: _triple(file_iri, CODE + "imports", F.concat(F.lit(ENT + "module/mod_"), m)),
+    )
+
+    def fn_triples(d: Column) -> Column:
+        fn = F.concat(F.lit(ENT + "fn/"), d["fn"])
+        return F.array(
+            _triple(fn, RDF_TYPE, F.lit(CODE + "Function")),
+            _triple(fn, CODE + "definedIn", file_iri),
+            _triple(fn, CODE + "calls", F.concat(F.lit(ENT + "fn/"), d["callee"])),
+        )
+
+    defs = F.arrays_zip(_matches(1, 1).alias("fn"), _matches(1, 2).alias("callee"))
+    triples = F.concat(per_file, imports, F.flatten(F.transform(defs, fn_triples)))
+    graph = F.concat(F.lit("repo:///"), "repo").alias("graph")
+    return corpus.select(F.inline(triples), graph).sortWithinPartitions("p", "s")

@@ -63,7 +63,8 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_spark.dictionary import build_dict_and_uids, position_flags
@@ -157,13 +158,16 @@ def _write_stage(
     return StageResult(name, stage_dir, rows, checksum, wall_ms, False)
 
 
-def _parallel_stages(jobs: list[tuple]) -> list[StageResult]:
+def _parallel_stages(spark: SparkSession, jobs: list[tuple]) -> list[StageResult]:
     """Run independent _write_stage calls on driver threads.  Spark's
     scheduler interleaves their tasks; Catalyst planning of one action
     overlaps execution of the other (the py4j calls release the GIL).
+    Each thread inherits the caller's job group, description and tags,
+    so cancelling the caller's group stops the stage writes too.
     """
+    write = inheritable_thread_target(spark)(_write_stage)
     with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futs = [pool.submit(_write_stage, *j) for j in jobs]
+        futs = [pool.submit(write, *j) for j in jobs]
         return [f.result() for f in futs]
 
 
@@ -238,6 +242,7 @@ def build_stages(
     # manifest exists on resume is skipped without evaluating its frame.
     results.extend(
         _parallel_stages(
+            spark,
             [
                 (new_uids, uids_dir, "term_uids", resume),
                 (dict_df, dict_dir, "dict", resume),
@@ -259,6 +264,7 @@ def build_stages(
     pred_df = enc.groupBy("graph", "p_id").agg(F.count("*").alias("n"))
     results.extend(
         _parallel_stages(
+            spark,
             [
                 (stats_df, stats_dir, "stats", resume),
                 (pred_df, pred_dir, "pred_stats", resume),

@@ -1281,26 +1281,22 @@ def _env_for(df: DataFrame) -> dict:
     return env
 
 
-def _term_sort_cols(name: str) -> list[Column]:
-    """SPARQL value ordering of term-string column ``name`` as sort-key
-    columns (``terms.sort_keys``), each compiled from SQL text with one
-    ``F.expr``."""
-    t = _q(name)
-    return [F.expr(k) for k in terms.sort_keys(t, *terms.parts(t))]
-
-
 def _apply_order(df: DataFrame, order_keys: list) -> DataFrame:
     """ORDER BY with SPARQL value semantics; keys are var names or
     expressions (aggregate-bearing expressions were already rewritten
     to hidden columns).  An expression key is first projected into a
-    hidden ``__ok<i>`` column and then keyed by name like a variable;
-    the hidden columns are dropped after the sort.  Term keys sort by
-    ``_term_sort_cols``, value columns (aggregates, computed numbers
-    and strings) by themselves."""
+    hidden ``__oe<i>`` column and then keyed by name like a variable.
+    A term key sorts by ``terms.sort_keys``, a value column (aggregates,
+    computed numbers and strings) by itself.  A term key's lexical form
+    and datatype (its regex extractions) are projected into hidden
+    ``__ol<j>`` / ``__od<j>`` columns, so they are extracted once per
+    row, not in every comparison; projecting every sort key instead
+    made each query's generated code larger and its sort slower.  The
+    hidden columns are dropped after the sort."""
     if not order_keys:
         return df
     dtypes = dict(df.dtypes)
-    hidden: list[Column] = []
+    exprs: list[str] = []
     keys: list[tuple[str, bool, bool]] = []  # (column, is a term, desc)
     for key, desc in order_keys:
         if isinstance(key, str):
@@ -1309,17 +1305,27 @@ def _apply_order(df: DataFrame, order_keys: list) -> DataFrame:
             keys.append((key, dtypes[key] == "string", desc))
             continue
         sql, tag = _ex(key, _env_for(df))
-        name = f"__ok{len(hidden)}"
-        hidden.append(F.expr(_sql(sql)).alias(name))
+        name = f"__oe{len(exprs)}"
+        exprs.append(f"{_sql(sql)} AS {name}")
         keys.append((name, tag == "term", desc))
-    if hidden:
-        df = df.select("*", *hidden)
-    cols = [
-        p.desc() if desc else p.asc()
-        for name, is_term, desc in keys
-        for p in (_term_sort_cols(name) if is_term else [F.col(name)])
-    ]
-    return df.orderBy(*cols).drop(*[f"__ok{i}" for i in range(len(hidden))])
+    if exprs:
+        df = df.selectExpr("*", *exprs)
+    hidden = [f"__oe{i}" for i in range(len(exprs))]
+    parts: list[str] = []
+    cols: list[Column] = []
+    for name, is_term, desc in keys:
+        t = _q(name)
+        sort_keys = [t]
+        if is_term:
+            lex, dt = f"__ol{len(parts)}", f"__od{len(parts)}"
+            lex_sql, dt_sql = terms.parts(t)
+            parts += [f"{lex_sql} AS {lex}", f"{dt_sql} AS {dt}"]
+            hidden += [lex, dt]
+            sort_keys = terms.sort_keys(t, lex, dt)
+        cols += [F.expr(k).desc() if desc else F.expr(k).asc() for k in sort_keys]
+    if parts:
+        df = df.selectExpr("*", *parts)
+    return df.orderBy(*cols).drop(*hidden)
 
 
 def _query_terms(node) -> set[str]:

@@ -2,8 +2,11 @@
 ingest invariant and hub-predicate skew presence)."""
 
 import hashlib
+import re
 import zlib
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from de_spark.corpus import generate_corpus
@@ -57,6 +60,64 @@ def test_extract_triples(spark):
     # graph naming: one named graph per repo
     graphs = {r["graph"] for r in rows}
     assert all(g.startswith("repo:///org") for g in graphs)
+
+
+# The extractor's rules in Python ``re`` syntax, applied row by row.
+ORACLE_RULES = {
+    "python": (
+        r"^(?:import mod_(\d+)|from mod_(\d+) import)",
+        r"def (fn_\d+_\d+)\([^)]*\):\n(?:\s*#[^\n]*\n)*\s+return (fn_\d+_\d+)\(",
+    ),
+    "rust": (
+        r"^use mod_(\d+);",
+        r"fn (fn_\d+_\d+)\([^)]*\)[^{]*\{\n\s+(fn_\d+_\d+)\(",
+    ),
+}
+
+
+def oracle_triples(row) -> list[tuple]:
+    g = "repo:///" + row["repo"]
+    repo = ENT + "repo/" + row["repo"]
+    file = ENT + "file/" + row["repo"] + "/" + row["path"]
+    sha = hashlib.sha256(row["content"].encode()).hexdigest()
+    out = [
+        (repo, RDF_TYPE, CODE + "Repository", "iri"),
+        (file, RDF_TYPE, CODE + "File", "iri"),
+        (file, CODE + "inRepo", repo, "iri"),
+        (file, CODE + "lang", f'"{row["lang"]}"', "literal"),
+        (file, CODE + "commit", f'"{row["commit"]}"', "literal"),
+        (file, CODE + "sha256", f'"{sha}"', "literal"),
+    ]
+    imp_re, def_re = ORACLE_RULES[row["lang"]]
+    for m in re.finditer(imp_re, row["content"], re.M):
+        mod = next(x for x in m.groups() if x is not None)
+        out.append((file, CODE + "imports", ENT + "module/mod_" + mod, "iri"))
+    for m in re.finditer(def_re, row["content"], re.M):
+        fn, callee = ENT + "fn/" + m.group(1), ENT + "fn/" + m.group(2)
+        out += [
+            (fn, RDF_TYPE, CODE + "Function", "iri"),
+            (fn, CODE + "definedIn", file, "iri"),
+            (fn, CODE + "calls", callee, "iri"),
+        ]
+    return [t + (g,) for t in out]
+
+
+@pytest.mark.parametrize("sf", [0.0001, 0.001])
+def test_extract_matches_python_re_oracle(spark, sf):
+    corpus = generate_corpus(spark, sf)
+    want = Counter(t for row in corpus.collect() for t in oracle_triples(row))
+    got = Counter(tuple(r) for r in extract_code_triples(corpus).collect())
+    assert got == want
+
+
+def test_extract_runs_no_python(spark):
+    """Extraction is one JVM projection: no Python worker is started."""
+    df = extract_code_triples(generate_corpus(spark, 0.0001))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Generate inline" in plan, plan
+    for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
 
 
 def test_sha256_invariant(spark):

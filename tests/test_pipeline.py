@@ -70,3 +70,14 @@ def test_checksum_is_partitioning_invariant(spark, tmp_path):
         if stage != "triples_raw":
             assert manifest("a", stage) == manifest("dup", stage), stage
     assert manifest("dup", "triples_raw")[0] == 2 * manifest("a", "triples_raw")[0]
+
+
+def test_build_runs_every_job_in_the_callers_group(spark, tmp_path, in_job_group):
+    """The overlapped stage writes run on threads that inherit the
+    caller's job group, so cancelling the group stops the whole build."""
+    tracker = spark.sparkContext.statusTracker()
+    raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
+    before = set(tracker.getJobIdsForGroup(None))
+    _, in_group = in_job_group("pipeline-build", lambda: build(raw, str(tmp_path / "kg")))
+    assert in_group > 0
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

@@ -240,6 +240,22 @@ def test_star_query_builds_in_few_py4j_calls(fruit_kg, monkeypatch):
     assert len(calls) <= 500, len(calls)
 
 
+def test_order_keys_are_computed_once_per_row(fruit_kg):
+    """Each term key's lexical form and datatype are projected before
+    the sort, so no regexp_extract over a term runs inside the sort's
+    comparator."""
+    import re
+
+    df = sparql_select(fruit_kg, STAR)
+    rows = [tuple(r) for r in df.collect()]
+    assert len(rows) == 2 and rows == sorted(rows)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    orderings = re.findall(r"TakeOrderedAndProject\(limit=\d+, (?:offset=\d+, )?orderBy=\[(.*?)\], output=", plan)
+    orderings += re.findall(r"\bSort \[(.*)\], (?:true|false), \d+", plan)
+    assert orderings, plan
+    assert not [o for o in orderings if "regexp_extract" in o], plan
+
+
 def test_pattern_binds_constants_as_scan_filters(fruit_kg):
     """A bound position is a literal uid filter pushed to the Parquet
     scan: no broadcast, no semi join."""

@@ -556,9 +556,7 @@ def test_value_ordering_property(spark):
     populations exactly like the reference Python model."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from de_spark.query.sparql import _term_sort_cols
+    from de_spark.query.sparql import _apply_order
 
     rng = random.Random(42)
     xsd = "http://www.w3.org/2001/XMLSchema#"
@@ -599,7 +597,7 @@ def test_value_ordering_property(spark):
         return (rank, num is not None, num or 0.0, dtv is not None, dtv or 0.0, t)
 
     df = spark.createDataFrame([(t,) for t in terms_pop], ["v"])
-    got = [r["v"] for r in df.orderBy(*_term_sort_cols("v")).collect()]
+    got = [r["v"] for r in _apply_order(df, [("v", False)]).collect()]
     want = sorted(terms_pop, key=model_key)
     assert got == want
 
