@@ -187,7 +187,9 @@ def documents_kg(spark: SparkSession, sf_dir: str) -> KnowledgeGraph:
     _KG_ARTIFACT_DIRS[key] = out
     loaded, _ = build(documents_triples(spark, sf_dir), out)
     kg = KnowledgeGraph(
-        term_uids=loaded.term_uids.cache(),
+        # uncached: the driver-held dictionary is read from the files
+        # this frame lists (graph._snapshot_terms); a cached one lists none
+        term_uids=loaded.term_uids,
         dict_df=loaded.dict_df.cache(),
         triples=loaded.triples.cache(),
         stats=loaded.stats.cache(),

@@ -10,12 +10,13 @@ the store's tables; every engine read of one goes through
 
 The term dictionary also lives on the driver, as HDT keeps its
 dictionary in the query process (``hdt::Hdt::new_hybrid_cache``,
-src/sparql.rs:107): ``term_table`` collects ``term_uids`` into one
-Arrow table once per store snapshot, and ``lookup`` resolves a
-request's constants in it with ``pyarrow.compute.is_in``, running no
-Spark job.  A snapshot is the file set a load's ``term_uids`` reads,
-so every ``store.load`` of an unchanged store shares one table, and a
-load-per-request caller pays the collection only after a mutation.
+src/sparql.rs:107): ``term_table`` reads the ``term_uids`` files into
+one Arrow table once per store snapshot, with ``pyarrow.parquet`` on
+the driver, and ``lookup`` resolves a request's constants in it with
+``pyarrow.compute.is_in``; neither runs a Spark job.  A snapshot is
+the file set a load's ``term_uids`` reads, so every ``store.load`` of
+an unchanged store shares one table, and a load-per-request caller
+pays the read only after a mutation.
 Each table's memory is roughly the term bytes plus 12 B per term (a
 4 B string offset and the 8 B uid); the process keeps the newest
 ``_SNAPSHOTS_KEPT`` tables, plus any a live loaded graph still holds.
@@ -30,6 +31,8 @@ from dataclasses import dataclass, field, replace
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyarrow import fs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,28 +54,43 @@ def read_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[table]).parquet(f"{base_dir}/{table}")
 
 
-# Term tables collected in this process, keyed by the sorted file list
-# of the term_uids read they came from (a store snapshot: a mutation
-# adds or removes files, and a written file is never rewritten under
-# its name).  It lives at module level because ``store.load`` callers
+# Term tables read in this process, keyed by the sorted file list of
+# the term_uids read they came from (a store snapshot: a mutation adds
+# or removes files, and a written file is never rewritten under its
+# name).  It lives at module level because ``store.load`` callers
 # share no object; an entry is a function of its key alone, so sharing
-# changes how many jobs run, never a result.  Oldest use is evicted
+# changes how many reads run, never a result.  Oldest use is evicted
 # first.
 _snapshots: OrderedDict[tuple[str, ...], pa.Table] = OrderedDict()
 _snapshots_lock = threading.Lock()
 _SNAPSHOTS_KEPT = 4
+_TERMS_SCHEMA = pa.schema([("term", pa.string()), ("uid", pa.int64())])
+
+
+def _read_terms(files: tuple[str, ...]) -> pa.Table:
+    """The (term, uid) columns of the listed parquet files (URIs, as
+    ``DataFrame.inputFiles`` gives them), read on the driver."""
+    if not files:
+        return _TERMS_SCHEMA.empty_table()
+    filesystem = fs.FileSystem.from_uri(files[0])[0]
+    paths = [fs.FileSystem.from_uri(f)[1] for f in files]
+    return pq.read_table(
+        paths, columns=_TERMS_SCHEMA.names, filesystem=filesystem, partitioning=None
+    )
 
 
 def _snapshot_terms(term_uids: DataFrame) -> pa.Table:
-    """The (term, uid) Arrow table of one term_uids read: collected
-    with one Spark job the first time its snapshot is seen in this
-    process, then shared.  Concurrent first loads of one snapshot wait
-    for that one collection instead of repeating it."""
+    """The (term, uid) Arrow table of one term_uids read: read from its
+    files, with no Spark job, the first time its snapshot is seen in
+    this process, then shared.  Concurrent first loads of one snapshot
+    wait for that one read instead of repeating it.  The frame must be
+    an uncached file read: a cached frame lists no files, so its table
+    would be empty."""
     key = tuple(sorted(term_uids.inputFiles()))
     with _snapshots_lock:
         table = _snapshots.get(key)
         if table is None:
-            table = _snapshots[key] = term_uids.select("term", "uid").toArrow()
+            table = _snapshots[key] = _read_terms(key)
             while len(_snapshots) > _SNAPSHOTS_KEPT:
                 _snapshots.popitem(last=False)
         _snapshots.move_to_end(key)
@@ -130,8 +148,8 @@ class KnowledgeGraph:
     def term_table(self) -> pa.Table:
         """The whole term dictionary as one Arrow table (term, uid),
         taken on first use (not in ``load``, so builds pay nothing)
-        from the table of this graph's store snapshot, which a Spark
-        job collects once per snapshot (``_snapshot_terms``).  A graph
+        from the table of this graph's store snapshot, which is read
+        from its files once per snapshot (``_snapshot_terms``).  A graph
         loaded before a store mutation keeps the files it listed, so
         its table stays that snapshot."""
         return self._held("term_table", lambda: _snapshot_terms(self.term_uids))

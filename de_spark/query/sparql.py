@@ -15,20 +15,15 @@ de_spark.query.parser compiles to DataFrame operators:
 - MINUS          → left_anti on shared vars (no shared vars ⇒ no
                    removal, per SPARQL 1.1 §8.3)
 - UNION          → unionByName with null padding (n-ary, nested)
-- FILTER         → (1) EXISTS/NOT EXISTS compile the inner group
-                   and left_semi/left_anti join it; (2) a group's
-                   single-variable constraints over a uid variable
-                   fuse with && per variable, evaluate ONCE per
-                   vocabulary term (_vocab_map) and semi-join in (the
-                   large intermediate never decodes just to be
-                   filtered; no explicit broadcast hint — AQE decides);
-                   (3) everything else decodes just the referenced
-                   variables on the fly
-- BIND           → Extend: a run of single-variable BINDs over one uid
-                   variable evaluates once per vocabulary term
-                   (_vocab_map) and joins in as ONE uid → values map;
-                   any other BIND evaluates over decoded strings.
-                   Both render an HDT-convention term string column
+- FILTER         → a constraint that is an EXISTS / NOT EXISTS compiles
+                   the inner group and left_semi/left_anti joins it;
+                   a scope's other constraints decode each variable
+                   they read once and apply as ONE conjunctive where
+                   (an EXISTS nested in one becomes a marker column)
+- BIND           → Extend: a chain of BINDs decodes each uid variable
+                   it reads once and renders its targets in order as
+                   HDT-convention term string columns, which later
+                   BINDs of the chain read
 - GRAPH          → graph restriction pushed onto contained patterns
                    (partition pruning; src/sparql.rs:436-453)
 - VALUES         → constant rows resolved to uids through the
@@ -55,7 +50,6 @@ datatypes.
 
 from __future__ import annotations
 
-import functools
 from dataclasses import fields, is_dataclass
 from typing import NamedTuple
 
@@ -263,9 +257,9 @@ def _as_num(c, tag: str) -> str:
     if tag == "numk":
         return f"({c}).v"
     # try_cast: non-numeric terms (IRIs, plain strings) become NULL so
-    # the comparison is simply false — a numeric filter pushed over the
-    # whole vocabulary must not abort on the non-literal rows (ANSI
-    # mode makes a plain cast throw)
+    # the comparison is simply false — a numeric filter must not abort
+    # on a solution binding a non-literal (ANSI mode makes a plain cast
+    # throw)
     if tag == "term":
         return f"try_cast({c.lex} AS DOUBLE)"
     if tag == "str":
@@ -650,13 +644,13 @@ def _call(e: Call, env: dict) -> tuple:
         suffix = terms.sql_str(f'"^^<{XSD}dayTimeDuration>')
         return _term(f"concat('\"', {dur}, {suffix})"), "term"
     if name == "BNODE":
-        # BNODE() → a FRESH blank node per solution (never pushed to
-        # the vocabulary — see the non-deterministic blocklist).  The
-        # one-argument form needs a per-solution argument→bnode map
-        # (two BNODE("x") calls in ONE solution must coincide while
-        # differing across solutions) that a column expression cannot
-        # carry — rejected loudly, like the reference surface we
-        # don't silently mis-answer.
+        # BNODE() → a FRESH blank node per solution (uuid() runs once
+        # per row of the decoded solutions).  The one-argument form
+        # needs a per-solution argument→bnode map (two BNODE("x")
+        # calls in ONE solution must coincide while differing across
+        # solutions) that a column expression cannot carry — rejected
+        # loudly, like the reference surface we don't silently
+        # mis-answer.
         if e.args:
             raise ValueError(
                 "BNODE(expr) requires per-solution bnode scoping; only BNODE() is supported"
@@ -740,9 +734,9 @@ def _is_value_col(df: DataFrame, v: str) -> bool:
 
 def _with_term_strs(kg: KnowledgeGraph, df: DataFrame, vars_: list[str]):
     """Attach ``__s_<var>`` term-string copies of the uid-typed vars
-    (on-the-fly decode for a FILTER / BIND the vocabulary cannot
-    evaluate), returning (df, env, temp_cols).  A var the group never
-    binds is unbound in every solution: a null term (SPARQL 1.1 §17)."""
+    (the one decode of a FILTER scope or a BIND chain), returning
+    (df, env, temp_cols).  A var the group never binds is unbound in
+    every solution: a null term (SPARQL 1.1 §17)."""
     dtypes = dict(df.dtypes)
     env: dict = {}
     uid_vars: list[str] = []
@@ -766,21 +760,6 @@ def _with_term_strs(kg: KnowledgeGraph, df: DataFrame, vars_: list[str]):
         copies = [F.col(v).alias(t) for v, t in zip(uid_vars, temp)]
         df = kg.decode_vars(df.select("*", *copies), temp)
     return df, env, temp
-
-
-def _vocab_map(kg: KnowledgeGraph, v: str, exprs: list):
-    """Single-variable expressions over ``?v`` evaluated in uid space:
-    once per vocabulary term instead of once per solution.  Returns
-    the ``term_uids`` frame (with the literal parse primitives
-    projected once when any expression needs them, see
-    _project_parse_refs) and each expression compiled over its
-    ``term`` column as (SQL, tag).  ``?v`` is tagged ``term`` here as
-    on the decode path (_with_term_strs), so an expression that does
-    not compile here would not compile there either."""
-    base, env = kg.term_uids, {v: (_q("term"), "term")}
-    if any(_parse_heavy(e) for e in exprs):
-        base, env, _ = _project_parse_refs(base, env)
-    return base, [_ex(e, env) for e in exprs]
 
 
 def _expr_map(e, fn):
@@ -878,40 +857,38 @@ def _render_staged(df: DataFrame, sql, tag: str, out: str) -> DataFrame:
     )
 
 
-def _extend_one(kg: KnowledgeGraph, df: DataFrame | None, node) -> DataFrame:
-    """Compile a single BIND over an already-compiled child frame
-    (None = the empty/unit group)."""
+def _extend_chain(kg: KnowledgeGraph, df: DataFrame | None, chain: list) -> DataFrame:
+    """Compile a chain of BINDs, in textual order, over an
+    already-compiled child frame (None = the empty/unit group).  Each
+    uid variable the chain reads decodes once (_with_term_strs); each
+    BIND renders its target as a term string column, which later BINDs
+    read.  A parse-heavy BIND reads the lexical form and datatype of a
+    bound term variable from columns projected once per variable
+    (_project_parse_refs)."""
     if df is None:
         df = kg.triples.sparkSession.range(1).drop("id")
-    df, env, temp = _with_term_strs(kg, df, sorted(expr_vars(node.expr)))
-    if _parse_heavy(node.expr):
-        df, env, parsed = _project_parse_refs(df, env)
-        temp += parsed
-    col, tag = _ex(node.expr, env)
-    return _render_staged(df, col, tag, node.var).drop(*temp)
-
-
-_NONPUSH_CALLS = ("BOUND", "COALESCE", "IF", "STRUUID", "UUID", "RAND", "BNODE")
-
-
-def _bind_push_ok(df: DataFrame, v: str, expr) -> bool:
-    """Whether a single-variable FILTER or BIND over ``v`` may evaluate
-    over the vocabulary (_vocab_map; the gate of _apply_filters and of
-    ExtendNode's BIND runs).  ``v`` must be a uid column, not a
-    subquery's value column.  BOUND, COALESCE and IF must see the
-    unbound row itself, which the vocabulary never contains (a semi
-    join drops null-binding rows SPARQL keeps — ADVICE r3), and the
-    non-deterministic STRUUID/UUID/RAND/BNODE need a fresh value PER
-    SOLUTION, not one per vocabulary term (ADVICE r4)."""
-    if v not in df.columns or dict(df.dtypes).get(v) != "bigint":
-        return False
-    if _is_value_col(df, v):
-        return False
-    return not expr_has(
-        expr,
-        lambda x: (isinstance(x, Call) and x.name in _NONPUSH_CALLS)
-        or isinstance(x, ExistsE),
+    cols = set(df.columns)
+    df, env, temp = _with_term_strs(
+        kg, df, sorted(set().union(*(expr_vars(nd.expr) for nd in chain)))
     )
+    for nd in chain:
+        if nd.var in cols:
+            raise ValueError(f"BIND reuses an in-scope variable: ?{nd.var}")
+        if _parse_heavy(nd.expr):
+            # a variable bound nowhere yet stays the NULL term literal
+            unparsed = {
+                v: env[v]
+                for v in expr_vars(nd.expr)
+                if v in cols and not isinstance(env[v][0], _T)
+            }
+            df, parsed, names = _project_parse_refs(df, unparsed)
+            env.update(parsed)
+            temp += names
+        col, tag = _ex(nd.expr, env)
+        df = _render_staged(df, col, tag, nd.var)
+        cols.add(nd.var)
+        env[nd.var] = (_q(nd.var), "term")
+    return df.drop(*temp)
 
 
 def _apply_exists(
@@ -933,58 +910,42 @@ def _apply_exists(
     return l.join(r.select(*shared).dropDuplicates(), shared, how)
 
 
-def _apply_filter(kg: KnowledgeGraph, df: DataFrame, e, graph: str | None) -> DataFrame:
-    """One FILTER constraint the vocabulary does not evaluate (see
-    _apply_filters), over the variables it references, decoded."""
-    # EXISTS / NOT EXISTS (possibly under a single negation): the
-    # direct semi/anti join — no marker column materialized
+def _exists_constraint(e) -> ExistsE | None:
+    """The EXISTS a constraint is, possibly under one negation."""
     if isinstance(e, ExistsE):
-        return _apply_exists(kg, df, e, graph)
+        return e
     if isinstance(e, Un) and e.op == "!" and isinstance(e.expr, ExistsE):
-        flipped = ExistsE(e.expr.group, not e.expr.neg)
-        return _apply_exists(kg, df, flipped, graph)
-    # EXISTS nested deeper in the expression → boolean marker columns
-    markers: list[tuple[str, ExistsE]] = []
-
-    def _mark(x):
-        if isinstance(x, ExistsE):
-            name = f"__ex{len(markers)}"
-            markers.append((name, x))
-            return VarE(name)
-        return None
-
-    e = _expr_map(e, _mark)
-    for name, ex in markers:
-        df = _attach_exists_marker(kg, df, name, ex, graph)
-    df, env, temp = _with_term_strs(kg, df, sorted(expr_vars(e)))
-    cond, tag = _ex(e, env)
-    return df.where(F.expr(_as_bool(cond, tag))).drop(*temp, *[n for n, _ in markers])
+        return ExistsE(e.expr.group, not e.expr.neg)
+    return None
 
 
 def _apply_filters(kg: KnowledgeGraph, df: DataFrame, exprs, graph: str | None) -> DataFrame:
-    """A scope's FILTER constraints (conjunctive, so order is free).
-    The single-variable constraints that may run in uid space fuse
-    with && per variable into ONE vocabulary evaluation + semi join;
-    no broadcast hint, since a negated predicate can match nearly the
-    whole vocabulary and AQE sizes the join at runtime.  Every other
-    constraint goes through _apply_filter."""
-    groups: dict[str, list] = {}
-    rest: list = []
-    for e in exprs:
-        vs = expr_vars(e)
-        v = next(iter(vs)) if len(vs) == 1 else None
-        if v is not None and _bind_push_ok(df, v, e):
-            groups.setdefault(v, []).append(e)
-        else:
-            rest.append(e)
-    for v, es in groups.items():
-        base, [(cond, tag)] = _vocab_map(
-            kg, v, [functools.reduce(lambda a, b: Bin("&&", a, b), es)]
-        )
-        matching = base.where(F.expr(_as_bool(cond, tag))).select(F.col("uid").alias(v))
-        df = df.join(matching, v, "left_semi")
-    for e in rest:
-        df = _apply_filter(kg, df, e, graph)
+    """A scope's FILTER constraints.  A constraint that is an EXISTS
+    is the direct semi / anti join (_apply_exists).  The others apply
+    as ONE conjunctive where over one decode of the variables they
+    read (_with_term_strs); an EXISTS nested deeper in one of them is
+    a boolean marker column.  SQL's AND keeps exactly the rows where
+    every constraint is true, as one filter per constraint would."""
+    exists = [x for x in map(_exists_constraint, exprs) if x is not None]
+    conds = [e for e in exprs if _exists_constraint(e) is None]
+    if conds:
+        markers: list[tuple[str, ExistsE]] = []
+
+        def _mark(x):
+            if isinstance(x, ExistsE):
+                name = f"__ex{len(markers)}"
+                markers.append((name, x))
+                return VarE(name)
+            return None
+
+        conds = [_expr_map(e, _mark) for e in conds]
+        for name, ex in markers:
+            df = _attach_exists_marker(kg, df, name, ex, graph)
+        df, env, temp = _with_term_strs(kg, df, sorted(set().union(*map(expr_vars, conds))))
+        where = " AND ".join(f"({_as_bool(*_ex(e, env))})" for e in conds)
+        df = df.where(F.expr(where)).drop(*temp, *[n for n, _ in markers])
+    for ex in exists:
+        df = _apply_exists(kg, df, ex, graph)
     return df
 
 
@@ -1168,57 +1129,12 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
         return _apply_filters(kg, df, node.exprs, graph)
 
     if isinstance(node, ExtendNode):
-        # flatten the Extend chain (BIND . BIND . BIND parses as nested
-        # ExtendNodes) so a RUN of one or more consecutive
-        # single-variable binds over the SAME uid source var evaluates
-        # over the vocabulary once and joins in as ONE map carrying all
-        # the rendered columns — three BINDs over ?n must not pay three
-        # term_uids joins; any other BIND goes through _extend_one
+        # BIND . BIND . BIND parses as nested ExtendNodes: one chain
         chain: list = []
-        cur = node
-        while isinstance(cur, ExtendNode):
-            chain.append(cur)
-            cur = cur.child
-        chain.reverse()  # innermost first = textual order
-        df = _compile(kg, cur, graph)
-        i = 0
-        while i < len(chain):
-            nd = chain[i]
-            if df is not None and nd.var in df.columns:
-                raise ValueError(f"BIND reuses an in-scope variable: ?{nd.var}")
-            run: list = []
-            v0: str | None = None
-            for ndj in chain[i:] if df is not None else []:
-                vs_j = expr_vars(ndj.expr)
-                v = next(iter(vs_j)) if len(vs_j) == 1 else None
-                if (
-                    v is None
-                    or v0 not in (None, v)
-                    or ndj.var in df.columns
-                    or any(ndj.var == r.var for r in run)
-                    or not _bind_push_ok(df, v, ndj.expr)
-                ):
-                    break
-                v0 = v
-                run.append(ndj)
-            if run:
-                mapdf, cols = _vocab_map(kg, v0, [r.expr for r in run])
-                # internal render names: BIND vars must not collide
-                # with the vocabulary's uid/term/__p* columns
-                for k, (col, tag) in enumerate(cols):
-                    mapdf = _render_staged(mapdf, col, tag, f"__r_bind{k}")
-                mapdf = mapdf.select(
-                    F.col("uid").alias(v0),
-                    *[F.col(f"__r_bind{k}").alias(r.var) for k, r in enumerate(run)],
-                )
-                # left join: an unbound source var leaves the BINDs
-                # unbound, as on the decode path
-                df = df.join(mapdf, v0, "left")
-                i += len(run)
-                continue
-            df = _extend_one(kg, df, nd)
-            i += 1
-        return df
+        while isinstance(node, ExtendNode):
+            chain.append(node)
+            node = node.child
+        return _extend_chain(kg, _compile(kg, node, graph), chain[::-1])
 
     if isinstance(node, GraphScopeNode):
         return _compile(kg, node.child, node.term)

@@ -69,16 +69,6 @@ def get_spark(
         # term_uids decode join are small; let Catalyst broadcast
         # aggressively.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # prefer shuffled-hash over sort-merge (guide §3.1): the engine's
-        # big joins key the fact table against vocabulary-sized uid
-        # tables on STRING terms — SMJ pays an O(n log n) string sort on
-        # BOTH sides per join, SHJ builds a per-partition hash map of
-        # the small side only.  Measured at sf1.0 local[32]: the two
-        # encode joins drop 34.5s → 10.5s warm (r7 profile).  The
-        # planner still applies its size conditions (build side must
-        # fit per partition) and AQE skew-split handles SHJ since 3.2,
-        # so this is safe at cluster scale with sane partition sizing.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cpus}]")

@@ -2,8 +2,8 @@
 escape sequences, datatypes, language tags, blank nodes, unicode —
 must survive  parse → full build (dict/uid/encode) → decode → render
 byte-identically (as a set; NT is unordered).  Hardens the term codec
-(de_spark.terms) beyond what the fruit fixtures reach (VERDICT.md
-round-1 item 9)."""
+(de_spark.terms) beyond what the fruit fixtures reach
+(history/VERDICT.md round-1 item 9)."""
 
 import random
 

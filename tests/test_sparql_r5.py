@@ -1,5 +1,5 @@
-"""Round-5 SPARQL semantics: ADVICE r4 fixes (non-deterministic BIND
-pushdown, unbound-lowest ordering, ENCODE_FOR_URI tilde) and numeric
+"""Round-5 SPARQL semantics: ADVICE r4 fixes (a non-deterministic BIND
+per solution, unbound-lowest ordering, ENCODE_FOR_URI tilde) and numeric
 result type promotion (XPath op:numeric — integer+integer→integer,
 int/int division→decimal), plus boolean value equality.
 
@@ -56,8 +56,7 @@ def one(kg, q, col):
 
 def test_struuid_fresh_per_solution(kg):
     """BIND with STRUUID over a shared source term must produce a
-    DISTINCT value per solution — the uid-space pushdown (one value
-    per vocabulary term) must not capture non-deterministic builtins
+    DISTINCT value per solution, not one value per source term
     (ADVICE r4 medium)."""
     q = PX + "SELECT ?s ?u WHERE { ?s x:f ?v . BIND(CONCAT(STR(?v), STRUUID()) AS ?u) }"
     rows = sparql_select(kg, q).collect()
@@ -186,14 +185,16 @@ def test_sum_of_decimals_is_decimal(kg):
     )
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
+def _term_uid_reads(df) -> int:
+    """The term_uids scans of a query's optimized plan: one per decode
+    join."""
+    return df._jdf.queryExecution().optimizedPlan().toString().count("Relation [term#")
 
 
 def test_same_var_filters_fuse_one_semi_join(kg):
-    """Two FILTER clauses over the same uid variable must compile to
-    ONE vocabulary semi join (fused with &&), not one per clause —
-    the plan matches the single-FILTER formulation exactly."""
+    """Two FILTER clauses over the same uid variable decode it once:
+    the plan joins term_uids as often as the single-FILTER (&&)
+    formulation's."""
     q2 = PX + f"""
     SELECT ?s WHERE {{
       ?s x:n ?v .
@@ -210,13 +211,13 @@ def test_same_var_filters_fuse_one_semi_join(kg):
     df2, df1 = sparql_select(kg, q2), sparql_select(kg, q1)
     got = [r["s"].rsplit("/", 1)[1] for r in df2.collect()]
     assert got == ["s1", "s2"]  # n = 2, 5 pass; 7 fails the upper bound
-    assert _plan(df2).count("Join LeftSemi") == _plan(df1).count("Join LeftSemi")
+    assert _term_uid_reads(df2) == _term_uid_reads(df1)
 
 
 def test_optional_same_var_filters_fuse_one_semi_join(kg):
     """Two FILTER clauses inside an OPTIONAL over the same uid
-    variable fuse into ONE vocabulary semi join too, with the rows of
-    the single-FILTER formulation."""
+    variable decode it once too, with the rows and the term_uids joins
+    of the single-FILTER formulation."""
     body = "SELECT ?s ?v WHERE {{ ?s x:f ?b . OPTIONAL {{ ?s x:n ?v {} }} }} ORDER BY ?s"
     lo, hi = f'?v > "1"^^<{XSD}integer>', f'?v < "7"^^<{XSD}integer>'
     df2 = sparql_select(kg, PX + body.format(f"FILTER({lo}) FILTER({hi})"))
@@ -229,17 +230,41 @@ def test_optional_same_var_filters_fuse_one_semi_join(kg):
         ("s4", None),
     ]
     assert rows == [(r["s"].rsplit("/", 1)[1], r["v"]) for r in df1.collect()]
-    assert _plan(df2).count("Join LeftSemi") == 1
+    assert _term_uid_reads(df2) == _term_uid_reads(df1)
 
 
 def test_same_source_binds_fuse_one_map_join(kg):
-    """A run of BINDs over the same source variable joins the
-    vocabulary ONCE (all rendered columns on one map join)."""
+    """A chain of BINDs over the same source variable decodes it ONCE:
+    the plan joins term_uids as often as the single-BIND form's.  A
+    later BIND reads an earlier target, and an unbound source leaves
+    the chain's targets unbound."""
     q2 = PX + "SELECT ?a ?b WHERE { ?s x:n ?v . BIND(?v+1 AS ?a) BIND(?v*2 AS ?b) }"
     q1 = PX + "SELECT ?a WHERE { ?s x:n ?v . BIND(?v+1 AS ?a) }"
     df2, df1 = sparql_select(kg, q2), sparql_select(kg, q1)
     assert df2.count() == 3
-    assert _plan(df2).count("Join LeftOuter") == _plan(df1).count("Join LeftOuter")
+    assert _term_uid_reads(df2) == _term_uid_reads(df1)
+
+    def rows(q):
+        return [
+            (r["s"].rsplit("/", 1)[1], r["a"], r["b"])
+            for r in sparql_select(kg, PX + q + " ORDER BY ?s").collect()
+        ]
+
+    def i(n):
+        return f'"{n}"^^<{XSD}integer>'
+
+    chained = "SELECT ?s ?a ?b WHERE { ?s x:n ?v . BIND(?v+1 AS ?a) BIND(?a*2 AS ?b) }"
+    assert rows(chained) == [("s1", i(3), i(6)), ("s2", i(6), i(12)), ("s3", i(8), i(16))]
+    optional = (
+        "SELECT ?s ?a ?b WHERE { ?s x:f ?f OPTIONAL { ?s x:n ?v }"
+        " BIND(?v+1 AS ?a) BIND(STR(?v) AS ?b) }"
+    )
+    assert rows(optional) == [
+        ("s1", i(3), '"2"'),
+        ("s2", i(6), '"5"'),
+        ("s3", i(8), '"7"'),
+        ("s4", None, None),
+    ]
 
 
 def test_promotion_model_property(spark):

@@ -188,17 +188,29 @@ def test_store_load_runs_no_job(spark, fruit_store, in_job_group):
         assert fields(written) == fields(StructType.fromDDL(ddl)), table
 
 
-def test_term_dictionary_is_collected_once_per_store_snapshot(spark, tmp_path, in_job_group):
+def test_term_dictionary_is_collected_once_per_store_snapshot(
+    spark, tmp_path, in_job_group, monkeypatch
+):
     """The first requests on a store snapshot, even concurrent ones on
-    one loaded graph and on fresh loads of the store, collect term_uids
-    in one Spark job; every later lookup and request on that loaded
-    graph, and on later loads of the unchanged store, runs no lookup
-    job."""
+    one loaded graph and on fresh loads of the store, read the
+    term_uids files once, on the driver, with no Spark job; every later
+    lookup and request on that loaded graph, and on later loads of the
+    unchanged store, reads nothing and runs no lookup job."""
     import sys
     import threading
 
+    from de_spark import graph as graph_mod
+
+    reads = []
+    read_terms = graph_mod._read_terms
+
+    def counting(files):
+        reads.append(files)
+        return read_terms(files)
+
+    monkeypatch.setattr(graph_mod, "_read_terms", counting)
     ex = "http://example.org/"
-    base = str(tmp_path / "store")
+    base = str(tmp_path / "st ore")
     build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
     kg = store.load(spark, base)
     sc = spark.sparkContext
@@ -222,7 +234,8 @@ def test_term_dictionary_is_collected_once_per_store_snapshot(spark, tmp_path, i
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert len(found) == len(threads) and len(set(found)) == 1 and None not in found
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert len(reads) == 1
     uids, jobs = in_job_group(f"held_again_{id(kg)}", lambda: kg.lookup([f"{ex}Banana", f"{ex}Nope"]))
     assert jobs == 0
     assert uids[f"{ex}Banana"] is not None and uids[f"{ex}Nope"] is None
@@ -234,6 +247,9 @@ def test_term_dictionary_is_collected_once_per_store_snapshot(spark, tmp_path, i
         f"held_reload_{id(kg)}", lambda: store.load(spark, base).lookup([f"{ex}Banana"])
     )
     assert (again, jobs) == ({f"{ex}Banana": uids[f"{ex}Banana"]}, 0)
+    assert len(reads) == 1
+    empty = read_terms(())
+    assert empty.num_rows == 0 and empty.schema == kg.term_table().schema
 
 
 def test_held_dictionary_is_a_snapshot_of_its_load(spark, tmp_path):
