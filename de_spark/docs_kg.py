@@ -28,7 +28,7 @@ MIN_WORD_LEN = 5
 
 
 def documents_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet → triples_raw (s, p, o, o_kind, graph).
+    """documents.parquet → triples_raw (s, p, o, graph).
 
     r7: the ten per-doc legs (six fixed properties + four modulo-gated
     bnode-annotation triples) are ONE native array-of-structs explode
@@ -45,10 +45,8 @@ def documents_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_iri = F.concat(F.lit(ENT + "doc/"), F.col("doc_id").cast("string"))
     src_iri = F.concat(F.lit(ENT + "source/"), F.col("source"))
 
-    def t(s, p, o, kind):
-        return F.struct(
-            s.alias("s"), F.lit(p).alias("p"), o.alias("o"), F.lit(kind).alias("o_kind")
-        )
+    def t(s, p, o):
+        return F.struct(s.alias("s"), F.lit(p).alias("p"), o.alias("o"))
 
     # typed integer literal per doc (the analog of the reference
     # fixtures' typed integers, tests/resources/superhero.ttl heights)
@@ -89,13 +87,13 @@ def documents_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod7 = F.col("doc_id") % 7 == 0
     mod14 = F.col("doc_id") % 14 == 0
     per_doc = F.array(
-        t(doc_iri, RDF_TYPE, F.lit(CODE + "Document"), "iri"),
-        t(doc_iri, CODE + "source", src_iri, "iri"),
-        t(doc_iri, CODE + "lang", F.concat(F.lit('"'), F.col("lang"), F.lit('"')), "literal"),
-        t(doc_iri, CODE + "nChars", nchars_lex, "literal"),
-        t(doc_iri, CODE + "modified", modified_lex, "literal"),
-        t(doc_iri, CODE + "isLong", F.concat(F.lit('"'), bool_lex, F.lit(f'"^^<{XSD}boolean>')), "literal"),
-        F.when(mod7, t(doc_iri, CODE + "annotation", ann_lbl, "bnode")),
+        t(doc_iri, RDF_TYPE, F.lit(CODE + "Document")),
+        t(doc_iri, CODE + "source", src_iri),
+        t(doc_iri, CODE + "lang", F.concat(F.lit('"'), F.col("lang"), F.lit('"'))),
+        t(doc_iri, CODE + "nChars", nchars_lex),
+        t(doc_iri, CODE + "modified", modified_lex),
+        t(doc_iri, CODE + "isLong", F.concat(F.lit('"'), bool_lex, F.lit(f'"^^<{XSD}boolean>'))),
+        F.when(mod7, t(doc_iri, CODE + "annotation", ann_lbl)),
         F.when(
             mod7,
             t(
@@ -105,29 +103,26 @@ def documents_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit('"'), ((F.col("doc_id") * 13) % 100).cast("string"),
                     F.lit(f'"^^<{XSD}integer>'),
                 ),
-                "literal",
             ),
         ),
-        F.when(mod14, t(ann_lbl, CODE + "detail", det_lbl, "bnode")),
+        F.when(mod14, t(ann_lbl, CODE + "detail", det_lbl)),
         F.when(
             mod14,
             t(
                 det_lbl,
                 CODE + "note",
                 F.concat(F.lit('"note-'), (F.col("doc_id") % 10).cast("string"), F.lit('"')),
-                "literal",
             ),
         ),
     )
     fixed = (
         docs.select(F.explode(per_doc).alias("e"), graph.alias("graph"))
         .where(F.col("e").isNotNull())
-        .select("e.s", "e.p", "e.o", "e.o_kind", "graph")
+        .select("e.s", "e.p", "e.o", "graph")
     )
     src_type = docs.select(
         src_iri.alias("s"), F.lit(RDF_TYPE).alias("p"),
-        F.lit(CODE + "Source").alias("o"), F.lit("iri").alias("o_kind"),
-        graph.alias("graph"),
+        F.lit(CODE + "Source").alias("o"), graph.alias("graph"),
     ).distinct()
     words = docs.select(
         doc_iri.alias("s"),
@@ -138,7 +133,6 @@ def documents_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s",
         F.lit(CODE + "mentions").alias("p"),
         F.concat(F.lit(ENT + "word/"), F.col("w")).alias("o"),
-        F.lit("iri").alias("o_kind"),
         "graph",
     )
     return fixed.unionByName(src_type).unionByName(mentions)

@@ -4,7 +4,7 @@ This is the Spark realization of the reference's pluggable
 file→triples converter trait (``Rdf2Nt``, src/rdf2nt.rs:15-28): one
 rule pair per ``lang`` in the ``LANG_RULES`` dispatch table, applied to
 a code table ``(repo, path, commit, lang, content)``.  Each row's
-triples are built as one array of ``(s, p, o, o_kind)`` structs and
+triples are built as one array of ``(s, p, o)`` structs and
 exploded once, the shape ``docs_kg.documents_triples`` uses.  Every
 step is a JVM expression (``regexp_extract_all``, ``sha2``,
 ``transform``, ``arrays_zip``), so extraction starts no Python worker.
@@ -59,10 +59,8 @@ def _matches(rule: int, group: int) -> Column:
     return out
 
 
-def _triple(s: Column, p: str, o: Column, o_kind: str = "iri") -> Column:
-    return F.struct(
-        s.alias("s"), F.lit(p).alias("p"), o.alias("o"), F.lit(o_kind).alias("o_kind")
-    )
+def _triple(s: Column, p: str, o: Column) -> Column:
+    return F.struct(s.alias("s"), F.lit(p).alias("p"), o.alias("o"))
 
 
 def extract_code_triples(corpus: DataFrame) -> DataFrame:
@@ -81,9 +79,9 @@ def extract_code_triples(corpus: DataFrame) -> DataFrame:
         _triple(repo_iri, RDF_TYPE, F.lit(CODE + "Repository")),
         _triple(file_iri, RDF_TYPE, F.lit(CODE + "File")),
         _triple(file_iri, CODE + "inRepo", repo_iri),
-        _triple(file_iri, CODE + "lang", literal("lang"), "literal"),
-        _triple(file_iri, CODE + "commit", literal("commit"), "literal"),
-        _triple(file_iri, CODE + "sha256", literal(F.sha2("content", 256)), "literal"),
+        _triple(file_iri, CODE + "lang", literal("lang")),
+        _triple(file_iri, CODE + "commit", literal("commit")),
+        _triple(file_iri, CODE + "sha256", literal(F.sha2("content", 256))),
     )
     imports = F.transform(
         _matches(0, 1),

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 # Declared schemas of the store's tables (DDL).  A read that names its
 # schema opens the files without a footer-inference job.
 SCHEMAS = {
-    "triples_raw": "s string, p string, o string, o_kind string, graph string",
+    "triples_raw": "s string, p string, o string, graph string",
     "term_uids": "term string, uid bigint",
     "dict": "graph string, section string, sec_id bigint, uid bigint",
     "triples": "s_id bigint, p_id bigint, o_id bigint, graph string",
@@ -85,7 +85,9 @@ def _snapshot_terms(term_uids: DataFrame) -> pa.Table:
     this process, then shared.  Concurrent first loads of one snapshot
     wait for that one read instead of repeating it.  The frame must be
     an uncached file read: a cached frame lists no files, so its table
-    would be empty."""
+    would be empty and every constant would miss."""
+    if term_uids.is_cached:
+        raise ValueError("term_uids is cached: the held dictionary is read from its files")
     key = tuple(sorted(term_uids.inputFiles()))
     with _snapshots_lock:
         table = _snapshots.get(key)

@@ -45,7 +45,9 @@ pattern var) decode the uid side first.  ORDER BY uses SPARQL value
 ordering over decoded terms (§15.1: blank < IRI < literal, numeric
 literals by value — spareval semantics); comparisons between two
 term operands likewise go numeric when both carry numeric XSD
-datatypes.
+datatypes.  Every number, a constant or a term's value, has one
+representation (the 'numk' lanes below), so a constant and a term
+holding the same number compute and compare alike.
 """
 
 from __future__ import annotations
@@ -113,17 +115,19 @@ __all__ = [
 # whole tree into a Column with one ``F.expr``: building a FILTER, BIND,
 # aggregate or sort key costs a few py4j round trips, not one per node.
 #
-# tags: 'term' (HDT term string), 'str', 'bool', and four numerics —
-# 'int' (xsd:integer, long), 'dec' (xsd:decimal, double), 'num'
-# (xsd:double, double), 'numk' (RUNTIME-kinded numeric: a
-# struct<v: double, k: int, i: decimal(38,0)> where k is the XPath
-# promotion rank from terms.numeric_kind and i is the EXACT integer
-# lane, non-NULL only for integer-kinded values — produced whenever a
-# term operand enters arithmetic, so integer+integer renders back as
-# xsd:integer even though the operand datatype is only known per row,
-# and renders EXACTLY beyond 2^53 where the double lane loses
-# precision; VERDICT r5 item 1).  A 'term' value is a _T, which also
-# carries the SQL of its lexical form and datatype.
+# tags: 'term' (HDT term string), 'str', 'bool' and 'numk', the one
+# numeric representation: an _N of three SQL lanes, the double value v,
+# the XPath promotion rank k (terms.numeric_kind: 0 integer, 1 decimal,
+# 2 float, 3 double) and the EXACT integer lane i, non-NULL only for
+# integer-kinded values; as one column it is the struct<v: double, k:
+# int, i: decimal(38,0)> (_N.sql).  A constant is literal lanes
+# (Catalyst folds constant arithmetic at plan time); a term operand
+# carries its rank per row, so integer+integer renders back as
+# xsd:integer however its operands arrive, and EXACTLY beyond 2^53,
+# where the double lane loses precision.  Arithmetic combines lane with
+# lane, so an expression's SQL grows with its size, not exponentially
+# with its depth.  A 'term' value is a _T, which also carries the SQL of
+# its lexical form and datatype.
 # env: var name → (SQL text, tag); a term var may carry a _T whose
 # lexical form and datatype are projected columns (_project_parse_refs)
 # ---------------------------------------------------------------------------
@@ -148,7 +152,7 @@ def _q(name: str) -> str:
 
 
 def _sql(c) -> str:
-    return c.sql if isinstance(c, _T) else c
+    return c if isinstance(c, str) else c.sql
 
 
 def _lex(c) -> str:
@@ -158,41 +162,72 @@ def _lex(c) -> str:
     return c.lex if isinstance(c, _T) else terms.literal_value(c)
 
 
-_STATIC_NUM_RANK = {"int": 0, "dec": 1, "num": 3}
-
 _NULL_I = "CAST(NULL AS DECIMAL(38,0))"
 _INF, _NINF, _NAN = (terms.sql_double(float(x)) for x in ("inf", "-inf", "nan"))
 
 
-def _mk_numk(v: str, k: str, i: str = _NULL_I) -> str:
-    """Kinded numeric struct; NULL (not a struct of NULLs) when the
-    value is NULL, so COALESCE/BIND null-propagation behave exactly
-    like any scalar column.  ``i`` is the exact integer lane
-    (decimal(38,0)); the default NULL means "not integer-exact"
-    (division results, float/double values)."""
-    return f"(CASE WHEN {v} IS NOT NULL THEN named_struct('v', {v}, 'k', {k}, 'i', {i}) END)"
+class _N(NamedTuple):
+    """A number-tagged operand: the SQL of its value, promotion rank and
+    exact integer lane.  The default lane NULL means "not
+    integer-exact" (division results, decimal/float/double values); a
+    NULL value means no number (an error, or a non-numeric term)."""
+
+    v: str
+    k: str
+    i: str = _NULL_I
+
+    @property
+    def sql(self) -> str:
+        """The number as one struct column; NULL (not a struct of
+        NULLs) when the value is NULL, so COALESCE/BIND null-propagation
+        behave exactly like any scalar column."""
+        v, k, i = self
+        return f"(CASE WHEN {v} IS NOT NULL THEN named_struct('v', {v}, 'k', {k}, 'i', {i}) END)"
 
 
-def _as_numk(c, tag: str) -> tuple[str, str, str]:
-    """(double value, XPath promotion rank, exact integer lane) of a
-    numeric-ish operand; (NULL, NULL, NULL) rows for non-numeric
-    terms.  The exact lane is NULL for non-integer kinds."""
-    if tag == "numk":
-        return f"({c}).v", f"({c}).k", f"({c}).i"
-    if tag == "int":
-        return f"CAST({c} AS DOUBLE)", "0", f"CAST({c} AS DECIMAL(38,0))"
-    if tag == "dec":
-        return f"CAST({c} AS DOUBLE)", "1", _NULL_I
-    if tag == "num":
-        return c, "3", _NULL_I
+def _num_col(sql: str) -> _N:
+    """The lanes of a struct column (or expression) holding a number."""
+    return _N(f"({sql}).v", f"({sql}).k", f"({sql}).i")
+
+
+def _typed(sql: str, tag: str):
+    """The operand of ``tag`` whose value is the column ``sql``."""
     if tag == "term":
-        return (
+        return _term(sql)
+    return _num_col(sql) if tag == "numk" else sql
+
+
+def _int_num(x: str) -> _N:
+    """An integer-valued SQL expression (a length, a datetime field, a
+    COUNT column) as an xsd:integer."""
+    return _N(f"CAST({x} AS DOUBLE)", "0", f"CAST({x} AS DECIMAL(38,0))")
+
+
+def _num_const(e: NumE) -> _N:
+    """A numeric constant as literal lanes.  SPARQL grammar: an
+    INTEGER is xsd:integer (its exact lane holds up to 38 digits;
+    try_cast leaves a longer one NULL, which renders unbound beyond
+    2^53), a bare "2.5" xsd:decimal and an exponent form "2.5e0"
+    xsd:double."""
+    v = terms.sql_double(float(e.value))
+    if e.is_int:
+        return _N(v, "0", f"try_cast('{e.value}' AS DECIMAL(38,0))")
+    return _N(v, "3" if e.kind == "dbl" else "1")
+
+
+def _as_numk(c, tag: str) -> _N:
+    """The number of a numeric-ish operand; (NULL, NULL, NULL) rows for
+    non-numeric terms.  The exact lane is NULL for non-integer kinds."""
+    if tag == "numk":
+        return c
+    if tag == "term":
+        return _N(
             terms.numeric_value(c.lex, c.dt),
             terms.numeric_kind(c.dt),
             terms.integer_value(c.lex, c.dt),
         )
     if tag == "str":
-        return f"try_cast({c} AS DOUBLE)", "3", _NULL_I
+        return _N(f"try_cast({c} AS DOUBLE)", "3")
     raise ValueError("cannot use a boolean as a number")
 
 
@@ -203,16 +238,6 @@ def _ieee_div0(lv: str) -> str:
         f"(CASE WHEN {lv} = 0 THEN {_NAN} WHEN {lv} > 0 THEN {_INF}"
         f" WHEN {lv} < 0 THEN {_NINF} END)"
     )
-
-
-def _safe_div(ln: str, rn: str, ieee: bool) -> str:
-    """Division that never raises under ANSI mode: NULL on a zero
-    divisor (the SPARQL error → unbound mapping) unless ``ieee``
-    (float/double semantics)."""
-    safe = f"try_divide({ln}, {rn})"
-    if not ieee:
-        return safe
-    return f"(CASE WHEN {rn} = 0 THEN {_ieee_div0(ln)} ELSE {safe} END)"
 
 
 _DOT0 = terms.sql_str(r"\.0$")
@@ -251,33 +276,13 @@ def _num_lex(v: str, k: str, i: str) -> str:
     )
 
 
-def _as_num(c, tag: str) -> str:
-    if tag in ("num", "int", "dec"):
-        return c
-    if tag == "numk":
-        return f"({c}).v"
-    # try_cast: non-numeric terms (IRIs, plain strings) become NULL so
-    # the comparison is simply false — a numeric filter must not abort
-    # on a solution binding a non-literal (ANSI mode makes a plain cast
-    # throw)
-    if tag == "term":
-        return f"try_cast({c.lex} AS DOUBLE)"
-    if tag == "str":
-        return f"try_cast({c} AS DOUBLE)"
-    raise ValueError("cannot use a boolean as a number")
-
-
 def _as_str(c, tag: str) -> str:
     if tag == "str":
         return c
     if tag == "term":
         return terms.sparql_csv_form(c.sql, c.lex)
-    if tag == "dec":
-        return _dec_lex(c)
     if tag == "numk":
-        return _num_lex(*_as_numk(c, tag))
-    if tag in ("num", "int"):
-        return f"CAST({c} AS STRING)"
+        return _num_lex(*c)
     return f"(CASE WHEN {c} THEN 'true' ELSE 'false' END)"
 
 
@@ -287,10 +292,13 @@ def _as_bool(c, tag: str) -> str:
     if tag == "term":
         return terms.sql_in(c.lex, ["true", "1"])
     if tag == "numk":
-        return f"(({c}).v != 0)"
-    if tag in ("num", "int", "dec"):
-        return f"({c} != 0)"
+        return f"({c.v} != 0)"
     return f"(length({c}) > 0)"
+
+
+def _as_term(c, tag: str) -> _T:
+    """Any operand as a term (a computed value rendered as BIND would)."""
+    return c if tag == "term" else _term(_render_term(c, tag))
 
 
 def _const_str(e) -> str:
@@ -305,39 +313,41 @@ def _const_str(e) -> str:
 _CMP_OPS = ("=", "!=", "<", "<=", ">", ">=")
 
 
+def _num_lanes(lc, lt, rc, rt) -> list[tuple[str, str]]:
+    """The exact decimal(38,0) lanes, then the double lanes, of two
+    operands: the numeric comparison reads the first pair where both
+    sides have a value.  Doubles collide above 2^53 (9007199254740993
+    would equal 9007199254740992), so two integers compare exactly."""
+    (lv, _, li), (rv, _, ri) = _as_numk(lc, lt), _as_numk(rc, rt)
+    return [(li, ri), (lv, rv)]
+
+
+def _lanes_cmp(op: str, lanes, otherwise: str = "NULL") -> str:
+    """``op`` on the first (left, right) lane pair where both are set."""
+    whens = " ".join(
+        f"WHEN {l} IS NOT NULL AND {r} IS NOT NULL THEN ({l} {op} {r})" for l, r in lanes
+    )
+    return f"(CASE {whens} ELSE {otherwise} END)"
+
+
 def _cmp(op: str, lc, lt, rc, rt) -> tuple[str, str]:
     if lt == "bool" or rt == "bool":
-        lc, rc = _as_bool(lc, lt), _as_bool(rc, rt)
-    elif lt in ("num", "int", "dec", "numk") or rt in ("num", "int", "dec", "numk"):
-        lc, rc = _as_num(lc, lt), _as_num(rc, rt)
-    elif lt == "str" or rt == "str":
-        lc, rc = _as_str(lc, lt), _as_str(rc, rt)
-    else:
-        # term vs term (var-var, or var vs a typed literal): SPARQL
-        # operator mapping compares numeric literals by VALUE —
-        # "1"^^xsd:integer = "01"^^xsd:integer, ?a > "9"^^xsd:integer
-        # is numeric, not lexicographic — xsd:dateTime/date compare
-        # by INSTANT, and xsd:boolean by VALUE ("1" = "true")
-        # (spareval, src/sparql.rs:520).  Everything else keeps the
-        # raw HDT-string comparison (equality incl. datatype suffix;
-        # ordering = the reference's string collation).  Integer vs
-        # integer compares on the EXACT decimal lane — doubles collide
-        # above 2^53 ("9007199254740993" would equal "9007199254740992"
-        # by double value; VERDICT r5 item 1).
-        lanes = [
-            (f(lc.lex, lc.dt), f(rc.lex, rc.dt))
-            for f in (
-                terms.integer_value,
-                terms.numeric_value,
-                terms.datetime_value,
-                terms.boolean_value,
-            )
-        ]
-        whens = " ".join(
-            f"WHEN {l} IS NOT NULL AND {r} IS NOT NULL THEN ({l} {op} {r})" for l, r in lanes
-        )
-        return f"(CASE {whens} ELSE ({lc.sql} {op} {rc.sql}) END)", "bool"
-    return f"({lc} {op} {rc})", "bool"
+        return f"({_as_bool(lc, lt)} {op} {_as_bool(rc, rt)})", "bool"
+    if "numk" in (lt, rt):
+        return _lanes_cmp(op, _num_lanes(lc, lt, rc, rt)), "bool"
+    if "str" in (lt, rt):
+        return f"({_as_str(lc, lt)} {op} {_as_str(rc, rt)})", "bool"
+    # term vs term (var-var, or var vs a typed literal): SPARQL operator
+    # mapping compares numeric literals by VALUE — "1"^^xsd:integer =
+    # "01"^^xsd:integer, ?a > "9"^^xsd:integer is numeric, not
+    # lexicographic — xsd:dateTime/date compare by INSTANT, and
+    # xsd:boolean by VALUE ("1" = "true") (spareval, src/sparql.rs:520).
+    # Everything else keeps the raw HDT-string comparison (equality incl.
+    # datatype suffix; ordering = the reference's string collation).
+    lanes = _num_lanes(lc, lt, rc, rt) + [
+        (f(lc.lex, lc.dt), f(rc.lex, rc.dt)) for f in (terms.datetime_value, terms.boolean_value)
+    ]
+    return _lanes_cmp(op, lanes, f"({lc.sql} {op} {rc.sql})"), "bool"
 
 
 def _ex(e, env: dict) -> tuple:
@@ -345,7 +355,7 @@ def _ex(e, env: dict) -> tuple:
         if e.name not in env:
             raise ValueError(f"variable ?{e.name} is not bound in this scope")
         c, t = env[e.name]
-        return (_term(c) if t == "term" and isinstance(c, str) else c), t
+        return (_typed(c, t) if isinstance(c, str) else c), t
     if isinstance(e, TermE):
         if e.term.startswith('"') and e.term.endswith('"'):
             # plain literal (no datatype/lang): SPARQL simple-literal
@@ -355,31 +365,15 @@ def _ex(e, env: dict) -> tuple:
             return terms.sql_str(e.term[1:-1]), "str"
         return _term(terms.sql_str(e.term)), "term"
     if isinstance(e, NumE):
-        if e.is_int:
-            v = int(e.value)
-            if not (-(2**63) <= v < 2**63):
-                # beyond long range: a runtime-kinded value whose
-                # exact lane is the decimal(38,0) form
-                return (
-                    _mk_numk(terms.sql_double(float(v)), "0", f"CAST('{v}' AS DECIMAL(38,0))"),
-                    "numk",
-                )
-            return f"({v})", "int"
-        # SPARQL grammar: a bare "2.5" is an xsd:decimal literal, an
-        # exponent form "2.5e0" is xsd:double (older constructors
-        # without a kind keep the double behavior)
-        tag = "dec" if getattr(e, "kind", "") == "dec" else "num"
-        return f"({terms.sql_double(float(e.value))})", tag
+        return _num_const(e), "numk"
     if isinstance(e, BoolE):
         return ("true" if e.value else "false"), "bool"
     if isinstance(e, Un):
         c, t = _ex(e.expr, env)
         if e.op == "!":
             return f"(NOT {_as_bool(c, t)})", "bool"
-        if t in _STATIC_NUM_RANK:
-            return f"(-{c})", t
         v, k, i = _as_numk(c, t)
-        return _mk_numk(f"(-{v})", k, f"(-{i})"), "numk"
+        return _N(f"(-{v})", k, f"(-{i})"), "numk"
     if isinstance(e, Bin):
         lc, lt = _ex(e.left, env)
         rc, rt = _ex(e.right, env)
@@ -389,62 +383,27 @@ def _ex(e, env: dict) -> tuple:
         if e.op in _CMP_OPS:
             return _cmp(e.op, lc, lt, rc, rt)
         # arithmetic — XPath numeric promotion (§17.3 operator
-        # mapping): the result type is the max promotion rank of the
-        # operands; integer ÷ integer is xsd:decimal.  Statically
-        # typed operands resolve the rank at compile time; a term (or
-        # kinded) operand makes the result RUNTIME-kinded ('numk'),
-        # carrying the rank per row alongside the double value.
-        try_op = {"+": "try_add", "-": "try_subtract", "*": "try_multiply"}.get(e.op)
-        if lt in _STATIC_NUM_RANK and rt in _STATIC_NUM_RANK:
-            ln, rn = _as_num(lc, lt), _as_num(rc, rt)
-            rank = max(_STATIC_NUM_RANK[lt], _STATIC_NUM_RANK[rt])
-            if e.op == "/":
-                # ANSI mode makes a plain Divide ABORT the whole job on
-                # a zero divisor; SPARQL maps the XPath error to an
-                # UNBOUND result (try_divide → NULL) for integer and
-                # decimal, and to IEEE ±INF/NaN for double
-                col = _safe_div(ln, rn, ieee=(rank >= 2))
-                if rank == 0:
-                    rank = 1  # op:numeric-divide on integers → decimal
-            elif rank == 0:
-                # both static integers: long lane is exact to 2^63;
-                # overflow → NULL (the XPath error → unbound mapping —
-                # a plain +/- would ABORT the job under ANSI)
-                col = f"{try_op}({ln}, {rn})"
-            else:
-                col = f"({ln} {e.op} {rn})"
-            return col, {0: "int", 1: "dec", 3: "num"}[rank]
+        # mapping): the result rank is the max promotion rank of the
+        # operands, per row; integer ÷ integer is xsd:decimal.
         lv, lk, li = _as_numk(lc, lt)
         rv, rk, ri = _as_numk(rc, rt)
-        # Static-rank elision (VERDICT r6 item 6): when ONE operand's
-        # rank is statically known, the runtime-kinded machinery can
-        # shrink — a double operand pins the result rank at 3 (the
-        # XPath max), and any statically non-integer operand
-        # (decimal/double) proves the result non-integer, so the exact
-        # decimal(38,0) lane is provably NULL and its try-arithmetic is
-        # dropped from the tree.  Same values/render; the arith-heavy
-        # contract queries pay this tree on every BIND.
-        static_rank = {**_STATIC_NUM_RANK, "str": 3}
-        lr = static_rank.get(lt)
-        rr = static_rank.get(rt)
-        kind = "3" if lr == 3 or rr == 3 else f"greatest({lk}, {rk})"
-        int_possible = (lr in (None, 0)) and (rr in (None, 0))
+        kind = f"greatest({lk}, {rk})"
         if e.op == "/":
-            # integer/decimal ÷ 0 is an ERROR (→ unbound); float/double
+            # integer/decimal ÷ 0 is an ERROR (→ unbound; try_divide
+            # never aborts the job under ANSI mode); float/double
             # divide by IEEE rules (±INF, 0/0 → NaN) — op:numeric-divide
             val = (
                 f"(CASE WHEN {rv} = 0 THEN CASE WHEN {kind} >= 2 THEN {_ieee_div0(lv)} END"
                 f" ELSE try_divide({lv}, {rv}) END)"
             )
-            if int_possible:
-                kind = f"(CASE WHEN {kind} = 0 THEN 1 ELSE {kind} END)"
             # integer ÷ integer is xsd:decimal (double lane)
-            return _mk_numk(val, kind), "numk"
-        # exact integer lane: decimal(38,0) try-arithmetic — >38-digit
-        # overflow → NULL and the render degrades to unbound instead of
-        # a precision-lost double lexical
-        exact = f"{try_op}({li}, {ri})" if int_possible else _NULL_I
-        return _mk_numk(f"({lv} {e.op} {rv})", kind, exact), "numk"
+            return _N(val, f"(CASE WHEN {kind} = 0 THEN 1 ELSE {kind} END)"), "numk"
+        # exact integer lane (NULL unless both operands have one):
+        # decimal(38,0) try-arithmetic — >38-digit overflow → NULL and
+        # the render degrades to unbound instead of a precision-lost
+        # double lexical
+        try_op = {"+": "try_add", "-": "try_subtract", "*": "try_multiply"}[e.op]
+        return _N(f"({lv} {e.op} {rv})", kind, f"{try_op}({li}, {ri})"), "numk"
     if isinstance(e, InE):
         c, t = _ex(e.expr, env)
         if t != "term":
@@ -461,6 +420,7 @@ def _ex(e, env: dict) -> tuple:
 
 
 _TZ_RE = r"(Z|[+-]\d{2}:\d{2})$"
+_INTEGRAL = terms.sql_double(float(2**52))
 
 
 def _call(e: Call, env: dict) -> tuple:
@@ -496,21 +456,20 @@ def _call(e: Call, env: dict) -> tuple:
         }[name]
         return f"({terms.classify(c.sql)} = '{kind}')", "bool"
     if name == "LANG":
-        return terms.literal_lang(_sql(arg(0)[0])), "str"
+        return terms.literal_lang(_as_term(*arg(0)).sql), "str"
     if name == "DATATYPE":
-        c, _ = arg(0)
-        return (c.dt if isinstance(c, _T) else terms.literal_datatype(c)), "str"
+        return _as_term(*arg(0)).dt, "str"
     if name == "STR":
         return str_arg(0), "str"
     if name in ("STRSTARTS", "STRENDS", "CONTAINS"):
         fn = {"STRSTARTS": "startswith", "STRENDS": "endswith", "CONTAINS": "contains"}[name]
         return f"{fn}({str_arg(0)}, {str_arg(1)})", "bool"
     if name == "STRLEN":
-        return f"length({str_arg(0)})", "int"
+        return _int_num(f"length({str_arg(0)})"), "numk"
     if name == "SUBSTR":
         s = str_arg(0)
-        pos = f"CAST({_as_num(*arg(1))} AS INT)"
-        ln = f"CAST({_as_num(*arg(2))} AS INT)" if len(e.args) > 2 else f"length({s})"
+        pos = f"CAST({_as_numk(*arg(1)).v} AS INT)"
+        ln = f"CAST({_as_numk(*arg(2)).v} AS INT)" if len(e.args) > 2 else f"length({s})"
         return f"substring({s}, {pos}, {ln})", "str"
     if name in ("UCASE", "LCASE"):
         return f"{'upper' if name == 'UCASE' else 'lower'}({str_arg(0)})", "str"
@@ -529,46 +488,34 @@ def _call(e: Call, env: dict) -> tuple:
         pat, rep = (terms.sql_str(_const_str(a)) for a in e.args[1:3])
         return f"regexp_replace({str_arg(0)}, {pat}, {rep})", "str"
     if name == "ABS":
-        c, t = arg(0)
-        if t in _STATIC_NUM_RANK:
-            return f"abs({c})", t
-        v, k, i = _as_numk(c, t)
-        return _mk_numk(f"abs({v})", k, f"abs({i})"), "numk"
+        v, k, i = _as_numk(*arg(0))
+        return _N(f"abs({v})", k, f"abs({i})"), "numk"
     if name in ("CEIL", "FLOOR", "ROUND"):
         # XPath fn:ceiling/fn:floor/fn:round return the ARGUMENT's
         # type (ceiling of a decimal is a decimal whose lexical form
-        # just has no fraction), not always an integer
-        c, t = arg(0)
-        fn = {"CEIL": "ceil({})", "FLOOR": "floor({})", "ROUND": "round({}, 0)"}[name]
-        if t == "int":
-            return (c if name == "ROUND" else f"CAST({fn.format(c)} AS BIGINT)"), "int"
-        if t in ("dec", "num"):
-            return f"CAST({fn.format(c)} AS DOUBLE)", t
-        v, k, i = _as_numk(c, t)
-        # ceiling/floor/round of an integer is itself — the exact lane
-        # passes through (only consulted when k == 0)
-        return _mk_numk(f"CAST({fn.format(v)} AS DOUBLE)", k, i), "numk"
+        # just has no fraction), not always an integer; fn:round
+        # rounds a half toward +∞ (ROUND(-2.5) is -2).  A double of
+        # magnitude ≥ 2^52 (or INF/NaN) is already integral and passes
+        # through, since Spark's ceil/floor return a long, which
+        # saturates.  An integer is itself: its exact lane passes
+        # through (only consulted when k == 0).
+        v, k, i = _as_numk(*arg(0))
+        fn = {"CEIL": "ceil({})", "FLOOR": "floor({})", "ROUND": "floor({} + 0.5D)"}[name]
+        val = f"(CASE WHEN abs({v}) < {_INTEGRAL} THEN CAST({fn.format(v)} AS DOUBLE) ELSE {v} END)"
+        return _N(val, k, i), "numk"
     if name == "IF":
         cond = _as_bool(*arg(0))
         ac, at = arg(1)
         bc, bt = arg(2)
         if at != bt:
-            numf = ("num", "int", "dec", "numk")
-            if at in numf and bt in numf:
-                ac, bc, at = _mk_numk(*_as_numk(ac, at)), _mk_numk(*_as_numk(bc, bt)), "numk"
-            else:
-                ac, bc, at = _as_str(ac, at), _as_str(bc, bt), "str"
-        out = f"(CASE WHEN {cond} THEN {_sql(ac)} ELSE {_sql(bc)} END)"
-        return (_term(out) if at == "term" else out), at
+            ac, bc, at = _as_str(ac, at), _as_str(bc, bt), "str"
+        return _typed(f"(CASE WHEN {cond} THEN {_sql(ac)} ELSE {_sql(bc)} END)", at), at
     if name == "COALESCE":
         parts = [_ex(a, env) for a in e.args]
         tags = {t for _, t in parts}
         if len(tags) == 1:
             tag = tags.pop()
-            out = f"coalesce({', '.join(_sql(c) for c, _ in parts)})"
-            return (_term(out) if tag == "term" else out), tag
-        if tags <= {"num", "int", "dec", "numk"}:
-            return f"coalesce({', '.join(_mk_numk(*_as_numk(c, t)) for c, t in parts)})", "numk"
+            return _typed(f"coalesce({', '.join(_sql(c) for c, _ in parts)})", tag), tag
         return f"coalesce({', '.join(_as_str(c, t) for c, t in parts)})", "str"
     if name == "SAMETERM":
         lc, lt = arg(0)
@@ -598,13 +545,9 @@ def _call(e: Call, env: dict) -> tuple:
         return f"({lc} = {terms.sql_str(rng)} OR startswith({lc}, {terms.sql_str(rng + '-')}))", "bool"
     if name == "ISNUMERIC":
         c, t = arg(0)
-        if t in ("num", "int", "dec"):
-            return "true", "bool"
-        if t == "numk":
-            return f"(({c}).v IS NOT NULL)", "bool"
-        if t != "term":
+        if t not in ("numk", "term"):
             return "false", "bool"
-        return f"({terms.numeric_value(c.lex, c.dt)} IS NOT NULL)", "bool"
+        return f"({_as_numk(c, t).v} IS NOT NULL)", "bool"
     if name in ("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS"):
         # datetime accessors over xsd:dateTime/xsd:date literals: the
         # lexical form casts to a timestamp (try_cast: non-datetime
@@ -621,7 +564,7 @@ def _call(e: Call, env: dict) -> tuple:
             "YEAR": "year", "MONTH": "month", "DAY": "dayofmonth",
             "HOURS": "hour", "MINUTES": "minute", "SECONDS": "second",
         }[name]
-        return f"{fn}(try_cast({naive} AS TIMESTAMP))", "int"
+        return _int_num(f"{fn}(try_cast({naive} AS TIMESTAMP))"), "numk"
     if name == "TZ":
         # timezone designator of the LEXICAL form ('' when absent) —
         # a pure string function of the term, per SPARQL 1.1 §17.4.5.9
@@ -672,7 +615,7 @@ def _call(e: Call, env: dict) -> tuple:
     if name == "STRUUID":
         return "uuid()", "str"
     if name == "RAND":
-        return "rand()", "num"
+        return _N("rand()", "3"), "numk"
     raise ValueError(f"unsupported builtin: {name}")
 
 
@@ -686,19 +629,13 @@ def _render_term(c, tag: str) -> str:
         return c.sql
     if tag == "str":
         return f"concat('\"', {c}, '\"')"
-    if tag == "int":
-        return f"concat('\"', CAST(CAST({c} AS BIGINT) AS STRING), '\"^^<{XSD}integer>')"
-    if tag == "dec":
-        return f"concat('\"', {_dec_lex(c)}, '\"^^<{XSD}decimal>')"
     if tag == "numk":
-        v, k, i = _as_numk(c, tag)
+        v, k, i = c
         dt = (
             f"(CASE WHEN {k} = 0 THEN '{XSD}integer' WHEN {k} = 1 THEN '{XSD}decimal'"
             f" WHEN {k} = 2 THEN '{XSD}float' ELSE '{XSD}double' END)"
         )
         return f"concat('\"', {_num_lex(v, k, i)}, '\"^^<', {dt}, '>')"
-    if tag == "num":
-        return f"concat('\"', CAST(CAST({c} AS DOUBLE) AS STRING), '\"^^<{XSD}double>')"
     return (
         f"(CASE WHEN {c} THEN '\"true\"^^<{XSD}boolean>'"
         f" ELSE '\"false\"^^<{XSD}boolean>' END)"
@@ -745,7 +682,7 @@ def _with_term_strs(kg: KnowledgeGraph, df: DataFrame, vars_: list[str]):
             env[v] = ("CAST(NULL AS STRING)", "term")
         elif dtypes[v] == "bigint" and _is_value_col(df, v):
             # plain value columns are COUNT-style integers
-            env[v] = (_q(v), "int")
+            env[v] = (_int_num(_q(v)), "numk")
         elif dtypes[v] == "boolean":
             # EXISTS marker columns (nested-EXISTS rewrite) are plain
             # booleans, not terms
@@ -851,8 +788,8 @@ def _render_staged(df: DataFrame, sql, tag: str, out: str) -> DataFrame:
         return df.withColumn(out, F.expr(_render_term(sql, tag)))
     tmp = f"__bv_{out}"
     return (
-        df.withColumn(tmp, F.expr(sql))
-        .withColumn(out, F.expr(_render_term(_q(tmp), "numk")))
+        df.withColumn(tmp, F.expr(sql.sql))
+        .withColumn(out, F.expr(_render_term(_num_col(_q(tmp)), "numk")))
         .drop(tmp)
     )
 
@@ -1189,11 +1126,15 @@ def _env_for(df: DataFrame) -> dict:
     """Expression env over a decoded solutions DataFrame: string
     columns are term strings; numeric columns (aggregate results)
     compare as numbers — bigint (COUNT) as xsd:integer so arithmetic
-    over them promotes per XPath, doubles as xsd:double."""
+    over them promotes per XPath, others as xsd:double."""
     env = {}
     for c, t in df.dtypes:
-        tag = "term" if t == "string" else ("int" if t == "bigint" else "num")
-        env[c] = (_q(c), tag)
+        if t == "string":
+            env[c] = (_q(c), "term")
+        elif t == "bigint":
+            env[c] = (_int_num(_q(c)), "numk")
+        else:
+            env[c] = (_N(f"CAST({_q(c)} AS DOUBLE)", "3"), "numk")
     return env
 
 
@@ -1284,7 +1225,8 @@ def _aggregate(a: Aggregate, env: dict, columns: list[str]) -> str:
         # as one struct key
         return f"count(DISTINCT struct({', '.join(map(_q, columns))}))" if a.distinct else "count(1)"
     if a.func == "sample":
-        return f"first({s})"
+        # a number is picked as its struct and rendered as a term
+        return _render_term(_num_col(f"first({s})"), tag) if tag == "numk" else f"first({s})"
     if a.func == "group_concat":
         # DISTINCT: collect_set is order-insensitive, so sort for a
         # deterministic rendering
@@ -1300,17 +1242,16 @@ def _aggregate(a: Aggregate, env: dict, columns: list[str]) -> str:
         # winning row and render it back with its promoted datatype.
         if tag == "term":
             return f"{a.func}_by({s}, struct({', '.join(terms.sort_keys(*src))}))"
-        v, k, i = _as_numk(src, tag)
-        pick = f"{a.func}_by(named_struct('v', {v}, 'k', {k}, 'i', {i}), {v})"
-        return _render_term(pick, "numk")
+        n = _as_numk(src, tag)
+        return _render_term(_num_col(f"{a.func}_by({n.sql}, {n.v})"), "numk")
     # SUM/AVG operate on the literal's numeric VALUE (try_cast:
     # non-numeric terms aggregate as NULL, not abort) and carry the
     # XPath-promoted result datatype: SUM of integers is an xsd:integer
     # term, AVG of integers/decimals an xsd:decimal (VERDICT r4 item
-    # 3; result kind = max operand rank over the group, computed
-    # alongside the value in the same agg).
+    # 3; result kind = max operand rank over the group's numbers,
+    # computed alongside the value in the same agg).
     v, k, i = _as_numk(src, tag)
-    kind = f"coalesce(max({k}), 0)"
+    kind = f"coalesce(max(CASE WHEN {v} IS NOT NULL THEN {k} END), 0)"
     if a.func == "sum":
         # exact integer lane of the SUM: valid only when EVERY numeric
         # row in the group carried an exact value (an upstream
@@ -1322,13 +1263,13 @@ def _aggregate(a: Aggregate, env: dict, columns: list[str]) -> str:
             f" THEN {i} IS NOT NULL END), true)"
         )
         exact = f"CAST(CASE WHEN {all_exact} THEN sum({distinct}{i}) END AS DECIMAL(38,0))"
-        return _render_term(_mk_numk(f"sum({distinct}{v})", kind, exact), "numk")
+        return _render_term(_N(f"sum({distinct}{v})", kind, exact), "numk")
     # no avg_distinct builtin: sum_distinct / count_distinct
     # (try_divide: an all-null group has count 0, which must yield
     # NULL — ANSI Divide would abort the job)
     val = f"try_divide(sum(DISTINCT {v}), count(DISTINCT {v}))" if a.distinct else f"avg({v})"
     kind = f"(CASE WHEN {kind} <= 1 THEN 1 ELSE {kind} END)"
-    return _render_term(_mk_numk(val, kind), "numk")
+    return _render_term(_N(val, kind), "numk")
 
 
 def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> DataFrame:

@@ -7,7 +7,7 @@ scan + one vectorized regex per line — Spark splits large files across
 tasks automatically, which fixes the reference's acknowledged missing
 parallel parse (TODO at src/rdf2nt.rs:66).
 
-Output schema (``triples_raw``): s, p, o, o_kind, graph — all strings,
+Output schema (``triples_raw``): s, p, o, graph — all strings,
 terms in HDT convention (see de_spark.terms).
 """
 
@@ -17,8 +17,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from de_spark import terms
 
 # subject: IRI or bnode; predicate: IRI; object: IRI, bnode, or literal
 # (with optional ^^<dt> / @lang suffix).  Comment/blank lines yield no
@@ -61,8 +59,7 @@ def _parse_nt_lines(lines: DataFrame) -> DataFrame:
     parsed = lines.select(
         *(F.regexp_extract("value", _NT_LINE, i).alias(c) for i, c in enumerate(spo, 1)), "graph"
     ).where(F.col("p") != "")
-    out = parsed.select(*(_strip_iri(F.col(c)).alias(c) for c in spo), "graph")
-    return out.select(*spo, F.expr(terms.classify("o")).alias("o_kind"), "graph")
+    return parsed.select(*(_strip_iri(F.col(c)).alias(c) for c in spo), "graph")
 
 
 def read_nt_files(spark: SparkSession, paths: list[str], graph: str | None = None) -> DataFrame:

@@ -33,7 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from de_spark import terms
 from de_spark.graph import SCHEMAS
 from de_spark.sources.nt import file_graph, read_nt_files
 from de_spark.sources.rdfxml import parse_rdfxml
@@ -50,11 +49,11 @@ def _files_to_triples(parse: Callable, batches: Iterator[pd.DataFrame]) -> Itera
     rows, each file read by ``parse(content, graph, path)``."""
     for pdf in batches:
         out = [
-            (s, p, o, terms.classify_py(o), graph)
+            (s, p, o, graph)
             for path, content, graph in zip(pdf["path"], pdf["content"], pdf["graph"])
             for s, p, o in parse(content, graph, path)
         ]
-        yield pd.DataFrame(out, columns=["s", "p", "o", "o_kind", "graph"])
+        yield pd.DataFrame(out, columns=["s", "p", "o", "graph"])
 
 
 def _whole_files(

@@ -244,7 +244,6 @@ def execute_update(spark: SparkSession, base_dir: str, update_text: str) -> list
     into existing graphs or the default graph, DEFAULT/NAMED/ALL graph
     targets — the parse layer raises for the statically-refused forms.
     """
-    from de_spark import terms
     from de_spark.query.update import UpdateRefusedError, parse_update
 
     ops = parse_update(update_text)
@@ -291,11 +290,11 @@ def execute_update(spark: SparkSession, base_dir: str, update_text: str) -> list
             log.append(f"CREATE GRAPH {op.graph} - will be created on first INSERT")
         elif op.kind == "insert_data":
             rows = [
-                (t.s, t.p, t.o, terms.classify_py(t.o), g)
+                (t.s, t.p, t.o, g)
                 for g, triples in sorted(op.quads.items())
                 for t in triples
             ]
-            raw = spark.createDataFrame(rows, ["s", "p", "o", "o_kind", "graph"])
+            raw = spark.createDataFrame(rows, ["s", "p", "o", "graph"])
             add_graph(spark, base_dir, raw)
             log.append(
                 f"INSERT DATA: {len(rows)} triples into {len(op.quads)} new graph(s)"

@@ -9,11 +9,8 @@ from tests.fixtures import APPLE_TTL, BANANA_NT
 
 
 def apple_raw(spark):
-    rows = [(s, p, o) for s, p, o in parse_turtle(APPLE_TTL)]
-    from de_spark import terms
-
-    data = [(s, p, o, terms.classify_py(o), "file:///apple.hdt") for s, p, o in rows]
-    return spark.createDataFrame(data, ["s", "p", "o", "o_kind", "graph"])
+    data = [(s, p, o, "file:///apple.hdt") for s, p, o in parse_turtle(APPLE_TTL)]
+    return spark.createDataFrame(data, ["s", "p", "o", "graph"])
 
 
 def test_zip_with_index_is_global_sort_order(spark):

@@ -81,23 +81,23 @@ def oracle_triples(row) -> list[tuple]:
     file = ENT + "file/" + row["repo"] + "/" + row["path"]
     sha = hashlib.sha256(row["content"].encode()).hexdigest()
     out = [
-        (repo, RDF_TYPE, CODE + "Repository", "iri"),
-        (file, RDF_TYPE, CODE + "File", "iri"),
-        (file, CODE + "inRepo", repo, "iri"),
-        (file, CODE + "lang", f'"{row["lang"]}"', "literal"),
-        (file, CODE + "commit", f'"{row["commit"]}"', "literal"),
-        (file, CODE + "sha256", f'"{sha}"', "literal"),
+        (repo, RDF_TYPE, CODE + "Repository"),
+        (file, RDF_TYPE, CODE + "File"),
+        (file, CODE + "inRepo", repo),
+        (file, CODE + "lang", f'"{row["lang"]}"'),
+        (file, CODE + "commit", f'"{row["commit"]}"'),
+        (file, CODE + "sha256", f'"{sha}"'),
     ]
     imp_re, def_re = ORACLE_RULES[row["lang"]]
     for m in re.finditer(imp_re, row["content"], re.M):
         mod = next(x for x in m.groups() if x is not None)
-        out.append((file, CODE + "imports", ENT + "module/mod_" + mod, "iri"))
+        out.append((file, CODE + "imports", ENT + "module/mod_" + mod))
     for m in re.finditer(def_re, row["content"], re.M):
         fn, callee = ENT + "fn/" + m.group(1), ENT + "fn/" + m.group(2)
         out += [
-            (fn, RDF_TYPE, CODE + "Function", "iri"),
-            (fn, CODE + "definedIn", file, "iri"),
-            (fn, CODE + "calls", callee, "iri"),
+            (fn, RDF_TYPE, CODE + "Function"),
+            (fn, CODE + "definedIn", file),
+            (fn, CODE + "calls", callee),
         ]
     return [t + (g,) for t in out]
 

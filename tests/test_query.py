@@ -11,7 +11,6 @@ from de_spark.query.parser import parse_sparql
 from de_spark.query.sparql import execute
 from de_spark.sources.nt import triples_from_nt_text
 from de_spark.sources.turtle import parse_turtle
-from de_spark import terms
 from tests.fixtures import (
     ALL_RQ,
     BANANA_NT,
@@ -22,8 +21,8 @@ from tests.fixtures import (
 
 
 def raw_from_ttl(spark, ttl, graph):
-    data = [(s, p, o, terms.classify_py(o), graph) for s, p, o in parse_turtle(ttl)]
-    return spark.createDataFrame(data, ["s", "p", "o", "o_kind", "graph"])
+    data = [(s, p, o, graph) for s, p, o in parse_turtle(ttl)]
+    return spark.createDataFrame(data, ["s", "p", "o", "graph"])
 
 
 @pytest.fixture(scope="module")

@@ -24,9 +24,8 @@ def test_nt_parse(spark):
     by_p = {(r["s"], r["p"]): r for r in rows}
     r = by_p[("http://example.org/Banana", "http://example.org/isEdible")]
     assert r["o"] == f'"true"^^<{XSD_BOOL}>'
-    assert r["o_kind"] == "literal"
     r = by_p[("http://example.org/Banana", RDF_TYPE)]
-    assert r["o"] == "http://example.org/Fruit" and r["o_kind"] == "iri"
+    assert r["o"] == "http://example.org/Fruit"
     assert all(r["graph"] == "file:///banana.hdt" for r in rows)
 
 

@@ -67,6 +67,16 @@ def test_group_by_sum_avg_min_max(kg):
     assert (b["k"], b["total"]) == ("http://x/B", f'"5"^^<{xsd}integer>')
 
 
+def test_sample_of_a_number_is_a_term(kg):
+    xsd = "http://www.w3.org/2001/XMLSchema#"
+    q = """
+    PREFIX x: <http://x/>
+    SELECT (SAMPLE(?v + 1) AS ?one) (SAMPLE(7) AS ?seven) WHERE { x:s3 x:val ?v }
+    """
+    r = sparql_select(kg, q).collect()[0]
+    assert (r["one"], r["seven"]) == (f'"6"^^<{xsd}integer>', f'"7"^^<{xsd}integer>')
+
+
 def test_aggregate_csv_emission(kg):
     df = sparql_select(kg, "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }")
     assert to_csv(df).replace("\r", "").strip() == "n\n6"

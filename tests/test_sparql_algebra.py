@@ -437,7 +437,6 @@ def test_collection_in_query_pattern(spark, tmp_path):
     order-sensitively."""
     from de_spark.query import sparql_select as sel
     from de_spark.sources.turtle import parse_turtle
-    from de_spark import terms as _terms
 
     ttl = """
     @prefix ex: <http://x/>.
@@ -445,9 +444,9 @@ def test_collection_in_query_pattern(spark, tmp_path):
     ex:t ex:list (ex:B ex:A) .
     ex:u ex:list () .
     """
-    rows = [(s, p, o, _terms.classify_py(o), "g") for s, p, o in parse_turtle(ttl)]
+    rows = [(s, p, o, "g") for s, p, o in parse_turtle(ttl)]
     kg, _ = build(
-        spark.createDataFrame(rows, ["s", "p", "o", "o_kind", "graph"]),
+        spark.createDataFrame(rows, ["s", "p", "o", "graph"]),
         str(tmp_path / "coll"),
     )
     q = "PREFIX ex: <http://x/>\nSELECT ?s WHERE { ?s ex:list (ex:A ex:B) }"

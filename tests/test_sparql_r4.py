@@ -428,17 +428,16 @@ def test_deep_chain_closure(kg, spark, monkeypatch):
 
 @pytest.fixture(scope="module")
 def fruit2_kg(spark, tmp_path_factory):
-    from de_spark import terms
     from de_spark.sources.turtle import parse_turtle
     from tests.fixtures import BANANA_NT, PINEAPPLE_TTL
 
     out = str(tmp_path_factory.mktemp("fruit2_kg"))
     pine = spark.createDataFrame(
         [
-            (s, p, o, terms.classify_py(o), "file:///pineapple.hdt")
+            (s, p, o, "file:///pineapple.hdt")
             for s, p, o in parse_turtle(PINEAPPLE_TTL)
         ],
-        ["s", "p", "o", "o_kind", "graph"],
+        ["s", "p", "o", "graph"],
     )
     raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt").unionByName(pine)
     kg, _ = build(raw, out)

@@ -271,17 +271,26 @@ def test_promotion_model_property(spark):
     """Seeded randomized check: the runtime-kinded arithmetic
     ('numk') promotes and renders exactly like the XPath model —
     result datatype = max operand rank (÷ lifts integers to decimal),
-    value = float arithmetic."""
+    value = float arithmetic.  An integer, decimal or double constant
+    on either side renders the same term as a term operand holding the
+    same number, and a term compares exactly with a bare integer above
+    2^53."""
+    import operator
     import random
 
     from pyspark.sql import functions as F
 
-    from de_spark.query.parser import Bin, VarE
+    from de_spark.query.parser import Bin, NumE, VarE
     from de_spark.query.sparql import _ex, _render_term
     from de_spark.terms import sql_str
 
     rng = random.Random(7)
     kinds = [("integer", 0), ("decimal", 1), ("float", 2), ("double", 3)]
+    consts = {
+        "integer": lambda v: NumE(v, True, "int"),
+        "decimal": lambda v: NumE(float(v), False, "dec"),
+        "double": lambda v: NumE(float(v), False, "dbl"),
+    }
     cases = []
     for _ in range(60):
         dta, ka = rng.choice(kinds)
@@ -291,14 +300,34 @@ def test_promotion_model_property(spark):
         op = rng.choice("+-*/")
         cases.append((dta, va, op, dtb, vb, ka, kb))
 
+    def term(dt, v):
+        return (sql_str(f'"{v}"^^<{XSD}{dt}>'), "term")
+
     exprs = []
+    forms = {}  # case index → the column names of its constant forms
     for i, (dta, va, op, dtb, vb, _, _) in enumerate(cases):
-        env = {
-            "a": (sql_str(f'"{va}"^^<{XSD}{dta}>'), "term"),
-            "b": (sql_str(f'"{vb}"^^<{XSD}{dtb}>'), "term"),
-        }
-        col, tag = _ex(Bin(op, VarE("a"), VarE("b")), env)
-        exprs.append(F.expr(_render_term(col, tag)).alias(f"c{i}"))
+        env = {"a": term(dta, va), "b": term(dtb, vb)}
+        trees = [("", Bin(op, VarE("a"), VarE("b")))]
+        if dta in consts:
+            trees.append(("l", Bin(op, consts[dta](va), VarE("b"))))
+        if dtb in consts:
+            trees.append(("r", Bin(op, VarE("a"), consts[dtb](vb))))
+        forms[i] = [f"c{i}{side}" for side, _ in trees[1:]]
+        for side, tree in trees:
+            col, tag = _ex(tree, env)
+            exprs.append(F.expr(_render_term(col, tag)).alias(f"c{i}{side}"))
+
+    big = 2**53
+    cmps = []
+    for x, y in [(big, big + 1), (big + 1, big + 1), (big + 1, big), (big + 2, big + 1)]:
+        for op, fn in (("=", operator.eq), ("<", operator.lt)):
+            env = {"t": term("integer", x)}
+            for tree, want in (
+                (Bin(op, VarE("t"), NumE(y, True, "int")), fn(x, y)),
+                (Bin(op, NumE(y, True, "int"), VarE("t")), fn(y, x)),
+            ):
+                exprs.append(F.expr(_ex(tree, env)[0]).alias(f"k{len(cmps)}"))
+                cmps.append((x, op, y, want))
     row = spark.range(1).select(*exprs).collect()[0]
 
     for i, (dta, va, op, dtb, vb, ka, kb) in enumerate(cases):
@@ -313,6 +342,11 @@ def test_promotion_model_property(spark):
         assert got.endswith(f'^^<{XSD}{want_dt}>'), (i, cases[i], got)
         lex = got[1 : got.index('"', 1)]
         assert abs(float(lex) - want_val) < 1e-9, (i, cases[i], got)
+        for name in forms[i]:
+            assert row[name] == got, (name, cases[i], row[name], got)
+    assert sum(map(len, forms.values())) >= 60
+    for j, case in enumerate(cmps):
+        assert row[f"k{j}"] is case[3], case
 
 
 # ---------------------------------------------------------------------------

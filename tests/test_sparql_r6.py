@@ -29,6 +29,11 @@ NT = f"""\
 <http://x/ninf> <http://x/q> "-INF"^^<{XSD}float> .
 <http://x/home> <http://x/lit> "${{env:HOME}}" .
 <http://x/app> <http://x/lit> "${{spark.app.name}}" .
+<http://x/k> <http://x/max> "9223372036854775807"^^<{XSD}integer> .
+<http://x/k> <http://x/one> "1"^^<{XSD}integer> .
+<http://x/k> <http://x/dbl> "1.0E0"^^<{XSD}double> .
+<http://x/k> <http://x/half> "2.5"^^<{XSD}decimal> .
+<http://x/k> <http://x/odd> "9007199254740993"^^<{XSD}integer> .
 """
 
 PX = "PREFIX x: <http://x/>\n"
@@ -132,21 +137,84 @@ def test_beyond_i64_exact_via_decimal_lane(kg):
         """,
     )
     assert rows[0]["big"] == f'"27670116110564327421"^^<{XSD}integer>'
+    # constants take the same lane: i64 max + 1 is exact, not an overflow
+    rows = rows_of(kg, "SELECT ?big WHERE { BIND(9223372036854775807 + 1 AS ?big) }")
+    assert rows[0]["big"] == f'"9223372036854775808"^^<{XSD}integer>'
 
 
 def test_static_int_overflow_unbound(kg):
-    """Static long + long overflow degrades to unbound (try_add),
-    never an ANSI abort or a wrong wrapped value."""
+    """A constant integer product beyond decimal(38,0) degrades to
+    unbound (try_multiply), never an ANSI abort or a wrong value."""
     rows = rows_of(
         kg,
         """
         SELECT ?big WHERE {
           <http://x/a> x:m ?m .
-          BIND(9223372036854775807 + 1 AS ?big)
+          BIND(99999999999999999999 * 99999999999999999999 AS ?big)
         }
         """,
     )
     assert rows[0]["big"] is None
+
+
+def _int(lex):
+    return f'"{lex}"^^<{XSD}integer>'
+
+
+# (constant form, term form, expected): a term is the expected BIND
+# result, a list the subjects a FILTER keeps.  The term forms read x:k's
+# values: ?max = 2^63 - 1, ?one = 1, ?dbl = 1.0E0, ?half = 2.5, ?odd =
+# 2^53 + 1.
+AGREE = [
+    ("9223372036854775807 + 1", "?max + ?one", _int("9223372036854775808")),
+    ("9223372036854775807 * 2", "?max * 2", _int("18446744073709551614")),
+    ("1.0e0 / 0", "?dbl / 0", f'"INF"^^<{XSD}double>'),
+    ("STR(1.0e0 / 0)", "STR(?dbl / 0)", '"INF"'),
+    ("ABS(-9223372036854775807 - 1)", "ABS(-?max - ?one)", _int("9223372036854775808")),
+    ("?n = 9007199254740993", "?n = ?odd", ["http://x/b"]),
+    ("?n + 0 = 9007199254740993", "?n + 0 = ?odd", ["http://x/b"]),
+    ("ROUND(-2.5)", "ROUND(-?half)", f'"-2"^^<{XSD}decimal>'),
+    ("ROUND(2.5)", "ROUND(?half)", f'"3"^^<{XSD}decimal>'),
+    ("FLOOR(1.0e20)", "FLOOR(?dbl * 1.0e20)", f'"1.0E20"^^<{XSD}double>'),
+    ("DATATYPE(1)", "DATATYPE(?one)", f'"{XSD}integer"'),
+]
+
+
+@pytest.mark.parametrize("const,term,want", AGREE, ids=[c for c, _, _ in AGREE])
+def test_constant_and_term_operands_agree(kg, const, term, want):
+    """A numeric constant and a term holding the same number give the
+    same result: exact integers beyond i64, the XSD spelling INF, no
+    query error, an exact equality above 2^53, fn:round's halves
+    toward +∞, a floor beyond long range and the integer datatype."""
+    if isinstance(want, list):
+        q = "SELECT ?s WHERE {{ ?s x:n ?n . x:k x:odd ?odd FILTER({}) }} ORDER BY ?s"
+        col = "s"
+    else:
+        q = (
+            "SELECT ?r WHERE {{ x:k x:max ?max ; x:one ?one ; x:dbl ?dbl ;"
+            " x:half ?half . BIND({} AS ?r) }}"
+        )
+        want, col = [want], "r"
+    for form in (const, term):
+        assert [r[col] for r in rows_of(kg, q.format(form))] == want, form
+
+
+def test_arithmetic_sql_grows_with_the_expression():
+    """Each lane of a sum reads only the same lane of its operands, so
+    the SQL of a chain of additions grows linearly with its length, not
+    by a factor per operator."""
+    from de_spark.query.parser import Bin, NumE, VarE
+    from de_spark.query.sparql import _ex, _sql
+
+    env = {"a": (terms.sql_str(f'"1"^^<{XSD}integer>'), "term")}
+
+    def chain(n):
+        e = VarE("a")
+        for j in range(n):
+            e = Bin("+", e, NumE(j, True, "int"))
+        return len(_sql(_ex(e, env)[0]))
+
+    assert chain(6) < 2 * chain(3)
 
 
 # ---------------------------------------------------------------------------

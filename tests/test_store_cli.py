@@ -10,16 +10,15 @@ from de_spark.pipeline import build
 from de_spark.query import sparql_select, to_csv
 from de_spark.sources.nt import triples_from_nt_text
 from de_spark.sources.turtle import parse_turtle
-from de_spark import terms
 from tests.fixtures import BANANA_NT, PINEAPPLE_TTL, QUERY_COLOR_RQ
 
 
 def _pineapple_raw(spark):
     data = [
-        (s, p, o, terms.classify_py(o), "file:///pineapple.hdt")
+        (s, p, o, "file:///pineapple.hdt")
         for s, p, o in parse_turtle(PINEAPPLE_TTL)
     ]
-    return spark.createDataFrame(data, ["s", "p", "o", "o_kind", "graph"])
+    return spark.createDataFrame(data, ["s", "p", "o", "graph"])
 
 
 def _uids(kg):
@@ -252,6 +251,23 @@ def test_term_dictionary_is_collected_once_per_store_snapshot(
     assert empty.num_rows == 0 and empty.schema == kg.term_table().schema
 
 
+def test_cached_term_uids_refuses_the_held_dictionary(spark, tmp_path):
+    """A cached term_uids frame lists no files, so the dictionary held
+    for it would be empty and every constant would miss: the first
+    lookup raises instead."""
+    from dataclasses import replace
+
+    base = str(tmp_path / "store")
+    build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+    cached = store.load(spark, base).term_uids.cache()
+    try:
+        kg = replace(store.load(spark, base), term_uids=cached)
+        with pytest.raises(ValueError, match="cached"):
+            kg.lookup(["http://example.org/Banana"])
+    finally:
+        cached.unpersist()
+
+
 def test_held_dictionary_is_a_snapshot_of_its_load(spark, tmp_path):
     """A term INSERT DATA adds resolves in a graph loaded after the
     update; a graph loaded before it, holding its dictionary already or
@@ -280,9 +296,9 @@ def test_held_lookup_resolves_as_a_term_scan(spark, tmp_path):
         "日本"@ja, '''two
 lines''' .
     """
-    data = [(s_, p, o, terms.classify_py(o), "file:///p.ttl") for s_, p, o in parse_turtle(ttl)]
+    data = [(s_, p, o, "file:///p.ttl") for s_, p, o in parse_turtle(ttl)]
     base = str(tmp_path / "store")
-    build(spark.createDataFrame(data, ["s", "p", "o", "o_kind", "graph"]), base)
+    build(spark.createDataFrame(data, ["s", "p", "o", "graph"]), base)
     kg = store.load(spark, base)
     stored = [r["term"] for r in kg.term_uids.collect()]
     assert {'"café"', '"caf\\u00e9"', '"日本"@ja', '"two\\nlines"'} <= set(stored)
