@@ -235,31 +235,27 @@ class KnowledgeGraph:
     # -- term decode (J4 decode side) ----------------------------------------
 
     def decode_vars(self, solutions: DataFrame, var_cols: list[str]) -> DataFrame:
-        """Replace uid columns by their term strings (emission time only,
-        mirroring src/sparql.rs:491-497).  Each decoded column joins the
-        same ``term_uids`` scan, so Spark broadcasts the dictionary once
-        and reuses that exchange for every further column (a 3-variable
-        SELECT plans one ``BroadcastExchange`` and two
-        ``ReusedExchange``).  Already-string columns (a
-        GRAPH ?g binding — graph names are not dictionary terms) pass
-        through untouched, as are bigint columns tagged with the
-        ``de_spark_value`` column metadata (subquery aggregate results
-        — plain numbers, not uids)."""
+        """Replace uid columns by their term strings (decode_uids).
+        Already-string columns (a GRAPH ?g binding — graph names are
+        not dictionary terms) pass through untouched."""
         dtypes = dict(solutions.dtypes)
-        decode = [
-            v
-            for v in var_cols
-            if dtypes.get(v) == "bigint"
-            and not (solutions.schema[v].metadata or {}).get("de_spark_value")
-        ]
-        out = solutions
-        for v in decode:
+        uid_cols = [v for v in var_cols if dtypes.get(v) == "bigint"]
+        return self.decode_uids(solutions, solutions.columns, uid_cols)
+
+    def decode_uids(self, df: DataFrame, columns: list[str], uid_cols: list[str]) -> DataFrame:
+        """Replace the uid columns ``uid_cols`` of ``df``, whose
+        columns are ``columns``, by their term strings (mirroring
+        src/sparql.rs:491-497); the caller knows both, so no schema is
+        read.  Each decoded column joins the same
+        ``term_uids`` scan, so Spark broadcasts the dictionary once and
+        reuses that exchange for every further column (a 3-variable
+        SELECT plans one ``BroadcastExchange`` and two
+        ``ReusedExchange``)."""
+        out = df
+        for v in uid_cols:
             uid_map = self.term_uids.select(
                 F.col("uid").alias(v), F.col("term").alias(f"__term_{v}")
             )
             out = out.join(uid_map, v, "left")
-        keep = [
-            F.col(f"__term_{v}").alias(v) if v in decode else F.col(v)
-            for v in solutions.columns
-        ]
+        keep = [F.col(f"__term_{v}").alias(v) if v in uid_cols else F.col(v) for v in columns]
         return out.select(*keep)

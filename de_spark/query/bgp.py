@@ -36,6 +36,8 @@ from __future__ import annotations
 from collections import defaultdict
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import reduce
+from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -83,28 +85,63 @@ class TriplePattern:
 
 
 # ---------------------------------------------------------------------------
+# Solution frames
+# ---------------------------------------------------------------------------
+
+
+class _Sols(NamedTuple):
+    """Compiled solutions: the frame and the kind of each variable
+    column, in column order, known from the algebra: ``uid`` (a
+    dictionary uid), ``term`` (an HDT-convention term string) or
+    ``value`` (a plain number, a subquery's COUNT alias)."""
+
+    df: DataFrame
+    kinds: dict[str, str]
+
+
+def _join(l: _Sols, r: _Sols, how: str = "inner") -> _Sols:
+    """``l`` joined with ``r`` on the variables they share, of one kind
+    (a cross join, or a join on true, when they share none).  Spark
+    puts the shared columns first, then l's others, then r's unless
+    the join is a semi or anti join."""
+    shared = [v for v in r.kinds if v in l.kinds]
+    if shared:
+        df = l.df.join(r.df, shared, how)
+    elif how == "inner":
+        df = l.df.crossJoin(r.df)
+    else:
+        df = l.df.join(r.df, F.lit(True), how)
+    kinds = {v: l.kinds[v] for v in shared} | l.kinds
+    if how not in ("left_semi", "left_anti"):
+        kinds |= r.kinds
+    return _Sols(df, kinds)
+
+
+# ---------------------------------------------------------------------------
 # Property paths
 # ---------------------------------------------------------------------------
 
 
-def _has_g(pairs: DataFrame) -> bool:
-    return "g" in pairs.columns
+def _graph_var(graph: str | None) -> bool:
+    """Whether a pattern's graph is GRAPH ?var, whose pair relations
+    carry the graph name as a column ``g``."""
+    return graph is not None and graph.startswith("?")
 
 
-def _step_join(l: DataFrame, r: DataFrame) -> DataFrame:
+def _step_join(l: DataFrame, r: DataFrame, graph: str | None) -> DataFrame:
     """Compose two pair relations: l.b = r.a (and same graph when a
     GRAPH ?var column rides along — paths never cross named graphs)."""
     cond = F.col("l.b") == F.col("r.a")
     sel = [F.col("l.a").alias("a"), F.col("r.b").alias("b")]
-    if _has_g(l):
+    if _graph_var(graph):
         cond = cond & (F.col("l.g") == F.col("r.g"))
         sel.append(F.col("l.g").alias("g"))
     return l.alias("l").join(r.alias("r"), cond).select(*sel)
 
 
-def _swap(pairs: DataFrame) -> DataFrame:
+def _swap(pairs: DataFrame, graph: str | None) -> DataFrame:
     sel = [F.col("b").alias("a"), F.col("a").alias("b")]
-    if _has_g(pairs):
+    if _graph_var(graph):
         sel.append(F.col("g"))
     return pairs.select(*sel)
 
@@ -135,11 +172,13 @@ def _local_relation(spark: SparkSession, schema: pa.Schema, rows) -> DataFrame:
     return spark.createDataFrame(table)
 
 
-def _fixpoint(start: DataFrame, expand: Callable[[list[int]], DataFrame]) -> DataFrame:
+def _fixpoint(
+    start: DataFrame, expand: Callable[[list[int]], DataFrame], graph: str | None = None
+) -> DataFrame:
     """Semi-naive closure with the frontier and the seen set held on
     the driver.  Rows are ``(a, b)`` — an origin and a node reached
-    from it — plus the graph name ``g`` under GRAPH ?var, so paths
-    never cross named graphs.
+    from it — plus the graph name ``g`` under GRAPH ?var (``graph``),
+    so paths never cross named graphs.
 
     ``start`` (the first round's rows) is collected once.  Each round
     calls ``expand(nodes)`` with the frontier's nodes as a uid list;
@@ -154,7 +193,7 @@ def _fixpoint(start: DataFrame, expand: Callable[[list[int]], DataFrame]) -> Dat
     This is spareval's per-node ArbitraryLengthPath evaluation
     (src/sparql.rs:520) with one Spark round per path length instead
     of one probe per node."""
-    keys = ["a", "b", "g"] if _has_g(start) else ["a", "b"]
+    keys = ["a", "b", "g"] if _graph_var(graph) else ["a", "b"]
     seen = {tuple(r) for r in start.select(*keys).collect()}
     frontier = seen
     while frontier:
@@ -176,7 +215,7 @@ def _fixpoint(start: DataFrame, expand: Callable[[list[int]], DataFrame]) -> Dat
 def _scoped_triples(kg: KnowledgeGraph, graph: str | None) -> DataFrame:
     """The fact table a path reads: pruned to GRAPH <g>; whole under
     GRAPH ?var (rows carry their graph) and in the default union."""
-    if graph is None or graph.startswith("?"):
+    if graph is None or _graph_var(graph):
         return kg.triples
     return kg.triples.where(F.col("graph") == graph)
 
@@ -185,7 +224,7 @@ def _edge_pairs(triples: DataFrame, graph: str | None) -> DataFrame:
     """Triples as (a, b) = (subject, object) pairs, plus the graph name
     ``g`` under GRAPH ?var."""
     sel = [F.col("s_id").alias("a"), F.col("o_id").alias("b")]
-    if graph is not None and graph.startswith("?"):
+    if _graph_var(graph):
         sel.append(F.col("graph").alias("g"))
     return triples.select(*sel)
 
@@ -199,7 +238,7 @@ def _graph_nodes(
     With a seed set, only the seeded nodes' identity rows.  Under
     GRAPH ?var the identity rows carry their graph name, scoped per
     graph."""
-    graph_var = graph is not None and graph.startswith("?")
+    graph_var = _graph_var(graph)
     t = _scoped_triples(kg, graph)
     gcols = [F.col("graph")] if graph_var else []
     nodes = (
@@ -221,8 +260,7 @@ def _nodes_of(pairs: DataFrame, col: str) -> DataFrame:
 
 def _iri_pairs(kg: KnowledgeGraph, iri: str, graph: str | None) -> DataFrame:
     """One IRI step: the pairs of the triples under that predicate."""
-    graph_var = graph is not None and graph.startswith("?")
-    return _edge_pairs(kg.pattern(p=iri, graph=None if graph_var else graph), graph)
+    return _edge_pairs(kg.pattern(p=iri, graph=None if _graph_var(graph) else graph), graph)
 
 
 def _seed_ends(
@@ -259,7 +297,7 @@ def _nps_pairs(
     for iris, swap in sides:
         excluded = [u for iri in iris if (u := kg.uids[iri]) is not None]
         p = _edge_pairs(t.where(~_uid_in("p_id", excluded)), graph)
-        p = _seed_ends(_swap(p) if swap else p, seed_a, seed_b)
+        p = _seed_ends(_swap(p, graph) if swap else p, seed_a, seed_b)
         out = p if out is None else out.unionByName(p)
     return out
 
@@ -289,7 +327,7 @@ def _path_pairs(
     if op == "!":
         return _nps_pairs(kg, args, graph, seed_a, seed_b)
     if op == "inv":
-        return _swap(_path_pairs(kg, args[0], graph, seed_b, seed_a))
+        return _swap(_path_pairs(kg, args[0], graph, seed_b, seed_a), graph)
     # bag semantics for | and / (SPARQL PathAlt/PathSequence); only the
     # +/*/? closures are set-based (ArbitraryLengthPath), per SPARQL 1.1
     if op == "alt":
@@ -308,7 +346,7 @@ def _path_pairs(
             out = _path_pairs(kg, args[0], graph, seed_a=seed_a)
             for step in args[1:]:
                 nxt = _path_pairs(kg, step, graph, seed_a=_nodes_of(out, "b"))
-                out = _step_join(out, nxt)
+                out = _step_join(out, nxt, graph)
             if seed_b is not None:
                 out = _seed_filter(out, "b", seed_b)
             return out
@@ -317,11 +355,11 @@ def _path_pairs(
             out = _path_pairs(kg, args[-1], graph, seed_b=seed_b)
             for step in reversed(args[:-1]):
                 prv = _path_pairs(kg, step, graph, seed_b=_nodes_of(out, "a"))
-                out = _step_join(prv, out)
+                out = _step_join(prv, out, graph)
             return out
         out = _path_pairs(kg, args[0], graph)
         for step in args[1:]:
-            out = _step_join(out, _path_pairs(kg, step, graph))
+            out = _step_join(out, _path_pairs(kg, step, graph), graph)
         return out
 
     if op not in ("+", "*", "?"):
@@ -337,13 +375,12 @@ def _path_pairs(
         pairs = base(seed_a, seed_b)
     elif seed_a is None and seed_b is not None:
         # bound object only: the same fixpoint over swapped pairs
-        pairs = _swap(
-            _fixpoint(_swap(base(None, seed_b)), lambda nodes: _swap(base(None, nodes)))
-        )
+        swap = lambda pairs: _swap(pairs, graph)
+        pairs = swap(_fixpoint(swap(base(None, seed_b)), lambda n: swap(base(None, n)), graph))
     else:
         # a bound subject seeds the start; var–var starts from the
         # whole step relation
-        pairs = _fixpoint(base(seed_a, None), lambda nodes: base(nodes, None))
+        pairs = _fixpoint(base(seed_a, None), lambda nodes: base(nodes, None), graph)
     if op != "+":
         # zero-length matches: * and ? add the identity pairs
         seed = seed_a if seed_a is not None else seed_b
@@ -370,7 +407,7 @@ def _compile_path(kg: KnowledgeGraph, pat: TriplePattern) -> DataFrame:
     seed_b = None if pat.o.startswith("?") else _seed_uids(pat.o)
     pairs = _path_pairs(kg, pat.p, pat.graph, seed_a, seed_b)
     cols = []
-    if pat.graph is not None and pat.graph.startswith("?"):
+    if _graph_var(pat.graph):
         cols.append(F.col("g").alias(pat.graph[1:]))
     if pat.s.startswith("?"):
         cols.append(F.col("a").alias(pat.s[1:]))
@@ -384,12 +421,22 @@ def _compile_path(kg: KnowledgeGraph, pat: TriplePattern) -> DataFrame:
     return pairs.select(*cols)
 
 
+def _pattern_kinds(pat: TriplePattern) -> dict[str, str]:
+    """The variable columns of one compiled pattern (_compile_one) and
+    their kinds; none for a fully bound one, which holds ``__exists``."""
+    kinds = {pat.graph[1:]: "term"} if _graph_var(pat.graph) else {}
+    for t in (pat.s, pat.o) if pat.is_path() else (pat.s, pat.p, pat.o):
+        if t.startswith("?"):
+            kinds.setdefault(t[1:], "uid")
+    return kinds
+
+
 def _compile_one(kg: KnowledgeGraph, pat: TriplePattern) -> DataFrame:
     """One pattern → DataFrame whose columns are the pattern's variable
     names (uid-valued)."""
     if pat.is_path():
         return _compile_path(kg, pat)
-    graph_var = pat.graph is not None and pat.graph.startswith("?")
+    graph_var = _graph_var(pat.graph)
     df = kg.pattern(
         s=None if pat.s.startswith("?") else pat.s,
         p=None if pat.p.startswith("?") else pat.p,
@@ -445,7 +492,13 @@ def pattern_terms(patterns: list[TriplePattern]) -> set[str]:
 
 def compile_bgp(kg: KnowledgeGraph, patterns: list[TriplePattern]) -> DataFrame:
     """BGP over the default union graph → DataFrame of uid-valued
-    variable columns.
+    variable columns (a GRAPH ?var column holds the graph name)."""
+    return _compile_bgp(kg, patterns).df
+
+
+def _compile_bgp(kg: KnowledgeGraph, patterns: list[TriplePattern]) -> _Sols:
+    """compile_bgp with the kinds of its variable columns, which the
+    patterns fix: a GRAPH ?var is a term, every other variable a uid.
 
     Every constant is bound by its uid from the request's term map (one
     lookup for the whole request; here, for the BGP alone, when called
@@ -479,17 +532,9 @@ def compile_bgp(kg: KnowledgeGraph, patterns: list[TriplePattern]) -> DataFrame:
             est = max(est // 100, 1)
         return (est, p.selectivity_key())
 
-    ordered = sorted(patterns, key=key)
-    df: DataFrame | None = None
-    for pat in ordered:
-        part = _compile_one(kg, pat)
-        if df is None:
-            df = part
-            continue
-        shared = [c for c in part.columns if c in df.columns and c != "__exists"]
-        if shared:
-            df = df.join(part, shared, "inner")
-        else:
-            df = df.crossJoin(part)
-    assert df is not None, "empty BGP"
-    return df.drop("__exists") if "__exists" in df.columns else df
+    assert patterns, "empty BGP"
+    parts = [_Sols(_compile_one(kg, p), _pattern_kinds(p)) for p in sorted(patterns, key=key)]
+    sols = reduce(_join, parts)
+    if any(not p.kinds for p in parts):
+        return _Sols(sols.df.drop("__exists"), sols.kinds)
+    return sols

@@ -38,20 +38,22 @@ runs no Spark job; each binding site then compiles to a literal uid
 filter or relation, and a constant the dictionary lacks empties its
 pattern without a scan.
 
-Solutions stay uid-typed longs until the final decode; BIND/GRAPH ?g
-produce string columns that pass through the decode untouched.  Joins
-between a uid column and a string column (e.g. a BIND var meeting a
-pattern var) decode the uid side first.  ORDER BY uses SPARQL value
-ordering over decoded terms (§15.1: blank < IRI < literal, numeric
-literals by value — spareval semantics); comparisons between two
-term operands likewise go numeric when both carry numeric XSD
-datatypes.  Every number, a constant or a term's value, has one
-representation (the 'numk' lanes below), so a constant and a term
-holding the same number compute and compare alike.
+The compiler knows each variable's kind statically (a uid, a term
+string or a COUNT value; see the algebra compiler below), so it asks
+Spark for no schema.  A uid stays a uid until the final decode; where
+two operands meet one variable with two kinds, both make it a term.
+ORDER BY uses SPARQL value ordering over decoded terms (§15.1: blank
+< IRI < literal, numeric literals by value — spareval semantics);
+comparisons between two term operands likewise go numeric when both
+carry numeric XSD datatypes.  Every number, a constant or a term's
+value, has one representation (the 'numk' lanes below), so a
+constant and a term holding the same number compute and compare
+alike.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import fields, is_dataclass
 from typing import NamedTuple
 
@@ -64,10 +66,12 @@ from de_spark import terms
 from de_spark.graph import KnowledgeGraph
 from de_spark.query.bgp import (
     TriplePattern,
+    _compile_bgp,
     _fixpoint,
+    _join,
     _local_relation,
     _seed_filter,
-    compile_bgp,
+    _Sols,
     pattern_terms,
 )
 from de_spark.query.parser import (
@@ -209,7 +213,11 @@ def _num_const(e: NumE) -> _N:
     try_cast leaves a longer one NULL, which renders unbound beyond
     2^53), a bare "2.5" xsd:decimal and an exponent form "2.5e0"
     xsd:double."""
-    v = terms.sql_double(float(e.value))
+    # an integer beyond the double range reads as inf (float(int)
+    # raises), and an integer or decimal has no infinity: like a stored
+    # term's (terms.numeric_value), its value is then no number
+    x = float(str(e.value))
+    v = terms.sql_double(x) if math.isfinite(x) or e.kind == "dbl" else "CAST(NULL AS DOUBLE)"
     if e.is_int:
         return _N(v, "0", f"try_cast('{e.value}' AS DECIMAL(38,0))")
     return _N(v, "3" if e.kind == "dbl" else "1")
@@ -643,60 +651,82 @@ def _render_term(c, tag: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Algebra compiler: Node → DataFrame of variable columns
-# (uid-typed longs; GRAPH ?g / BIND vars are string columns)
+# Algebra compiler: Node → _Sols, the solution frame and the static kind of
+# each variable column (bgp._Sols), so no frame's schema is read.  A BGP,
+# path or VALUES variable is a uid; a GRAPH ?g name or a BIND target is a
+# term; a subquery's COUNT alias is a value and its other projected
+# variables are terms.  Where two operands meet one variable with two
+# kinds, both make it a term (_unify, _union).
 # ---------------------------------------------------------------------------
 
 
-def _coerce_shared(kg: KnowledgeGraph, l: DataFrame, r: DataFrame):
-    """Shared columns of a join must agree on dtype; a uid (bigint)
-    column meeting a string column (BIND / GRAPH ?g binding) decodes
-    the uid side first."""
-    shared = [c for c in r.columns if c in l.columns]
-    lt, rt = dict(l.dtypes), dict(r.dtypes)
-    for c in shared:
-        if lt[c] != rt[c]:
-            if lt[c] == "bigint":
-                l = kg.decode_vars(l, [c])
-            if rt[c] == "bigint":
-                r = kg.decode_vars(r, [c])
-    return l, r, shared
+def _unbound(v: str, kind: str) -> Column:
+    """``v`` unbound: a NULL column of its kind."""
+    return F.lit(None).cast("string" if kind == "term" else "long").alias(v)
 
 
-def _is_value_col(df: DataFrame, v: str) -> bool:
-    """True for bigint columns tagged as plain values (subquery
-    aggregate aliases), which must never decode through term_uids."""
-    return bool((df.schema[v].metadata or {}).get("de_spark_value"))
+def _as_terms(kg: KnowledgeGraph, sols: _Sols, vars_: list[str]) -> _Sols:
+    """``sols`` with the listed variables as terms: a uid decodes, and a
+    value renders as its xsd:integer term."""
+    uids = [v for v in vars_ if sols.kinds[v] == "uid"]
+    values = [v for v in vars_ if sols.kinds[v] == "value"]
+    df = kg.decode_uids(sols.df, list(sols.kinds), uids) if uids else sols.df
+    for v in values:
+        df = df.withColumn(v, F.expr(_render_term(_int_num(_q(v)), "numk")))
+    return _Sols(df, {**sols.kinds, **dict.fromkeys(uids + values, "term")})
 
 
-def _with_term_strs(kg: KnowledgeGraph, df: DataFrame, vars_: list[str]):
-    """Attach ``__s_<var>`` term-string copies of the uid-typed vars
-    (the one decode of a FILTER scope or a BIND chain), returning
-    (df, env, temp_cols).  A var the group never binds is unbound in
-    every solution: a null term (SPARQL 1.1 §17)."""
-    dtypes = dict(df.dtypes)
-    env: dict = {}
-    uid_vars: list[str] = []
-    for v in vars_:
-        if v not in dtypes:
-            env[v] = ("CAST(NULL AS STRING)", "term")
-        elif dtypes[v] == "bigint" and _is_value_col(df, v):
-            # plain value columns are COUNT-style integers
-            env[v] = (_int_num(_q(v)), "numk")
-        elif dtypes[v] == "boolean":
-            # EXISTS marker columns (nested-EXISTS rewrite) are plain
-            # booleans, not terms
-            env[v] = (_q(v), "bool")
-        elif dtypes[v] == "bigint":
-            uid_vars.append(v)
-            env[v] = (_q(f"__s_{v}"), "term")
-        else:
-            env[v] = (_q(v), "term")
-    temp = [f"__s_{v}" for v in uid_vars]
-    if temp:
-        copies = [F.col(v).alias(t) for v, t in zip(uid_vars, temp)]
-        df = kg.decode_vars(df.select("*", *copies), temp)
-    return df, env, temp
+def _unify(kg: KnowledgeGraph, l: _Sols, r: _Sols) -> tuple[_Sols, _Sols, list[str]]:
+    """``l``, ``r`` and the variables they share, each shared variable
+    of two kinds made a term on both sides."""
+    shared = [v for v in r.kinds if v in l.kinds]
+    mixed = [v for v in shared if l.kinds[v] != r.kinds[v]]
+    return _as_terms(kg, l, mixed), _as_terms(kg, r, mixed), shared
+
+
+def _union(kg: KnowledgeGraph, parts: list[_Sols], sort: bool = False) -> _Sols:
+    """The bag union of ``parts``, its variables in first-seen (or
+    sorted) order: a variable of two kinds across them is a term in
+    all, and a part lacking a variable pads it with NULLs."""
+    seen: dict[str, set] = {}
+    for p in parts:
+        for v, k in p.kinds.items():
+            seen.setdefault(v, set()).add(k)
+    items = sorted(seen.items()) if sort else seen.items()
+    kinds = {v: ks.pop() if len(ks) == 1 else "term" for v, ks in items}
+    out = None
+    for p in parts:
+        p = _as_terms(kg, p, [v for v, k in p.kinds.items() if kinds[v] != k])
+        df = p.df.select(*[F.col(v) if v in p.kinds else _unbound(v, k) for v, k in kinds.items()])
+        out = df if out is None else out.unionByName(df)
+    return _Sols(out, kinds)
+
+
+def _env(kinds: dict[str, str]) -> dict:
+    """Expression operands of the columns that are no uid: a COUNT
+    value is an xsd:integer, an EXISTS marker (kind ``bool``) a
+    boolean, a term a term."""
+    return {
+        v: (_int_num(_q(v)), "numk") if k == "value" else (_q(v), k)
+        for v, k in kinds.items()
+        if k != "uid"
+    }
+
+
+def _with_term_strs(kg: KnowledgeGraph, sols: _Sols, vars_: list[str]):
+    """Attach ``__s_<var>`` term-string copies of the uid vars (the one
+    decode of a FILTER scope or a BIND chain), returning (df, env,
+    temp_cols).  A var the group never binds is unbound in every
+    solution: a null term (SPARQL 1.1 §17)."""
+    uids = [v for v in vars_ if sols.kinds.get(v) == "uid"]
+    temp = [f"__s_{v}" for v in uids]
+    env = {v: ("CAST(NULL AS STRING)", "term") for v in vars_ if v not in sols.kinds}
+    env |= _env({v: sols.kinds[v] for v in vars_ if v in sols.kinds})
+    env |= {v: (_q(t), "term") for v, t in zip(uids, temp)}
+    if not temp:
+        return sols.df, env, temp
+    copies = [F.col(v).alias(t) for v, t in zip(uids, temp)]
+    return kg.decode_uids(sols.df.select("*", *copies), [*sols.kinds, *temp], temp), env, temp
 
 
 def _expr_map(e, fn):
@@ -718,29 +748,6 @@ def _expr_map(e, fn):
     if isinstance(e, InE):
         return InE(_expr_map(e.expr, fn), e.items, e.neg)
     return e
-
-
-def _attach_exists_marker(
-    kg: KnowledgeGraph, df: DataFrame, name: str, ex: ExistsE, graph: str | None
-) -> DataFrame:
-    """EXISTS nested inside a general expression (``?a = 1 || EXISTS
-    {…}``) → a boolean marker column via a left join against the inner
-    group's distinct shared-variable rows, so it composes under
-    ``||``/``IF``/negation like any other boolean."""
-    inner = _compile(kg, ex.group, graph)
-    if inner is None:
-        raise ValueError("EXISTS over an empty group")
-    l, r, shared = _coerce_shared(kg, df, inner)
-    if not shared:
-        nonempty = not inner.limit(1).isEmpty()
-        val = (not nonempty) if ex.neg else nonempty
-        return l.withColumn(name, F.lit(val))
-    marked = r.select(*shared).dropDuplicates().withColumn(name, F.lit(True))
-    out = l.join(marked, shared, "left")
-    flag = F.coalesce(F.col(name), F.lit(False))
-    if ex.neg:
-        flag = ~flag
-    return out.withColumn(name, flag)
 
 
 def _parse_heavy(expr) -> bool:
@@ -794,7 +801,7 @@ def _render_staged(df: DataFrame, sql, tag: str, out: str) -> DataFrame:
     )
 
 
-def _extend_chain(kg: KnowledgeGraph, df: DataFrame | None, chain: list) -> DataFrame:
+def _extend_chain(kg: KnowledgeGraph, sols: _Sols | None, chain: list) -> _Sols:
     """Compile a chain of BINDs, in textual order, over an
     already-compiled child frame (None = the empty/unit group).  Each
     uid variable the chain reads decodes once (_with_term_strs); each
@@ -802,49 +809,60 @@ def _extend_chain(kg: KnowledgeGraph, df: DataFrame | None, chain: list) -> Data
     read.  A parse-heavy BIND reads the lexical form and datatype of a
     bound term variable from columns projected once per variable
     (_project_parse_refs)."""
-    if df is None:
-        df = kg.triples.sparkSession.range(1).drop("id")
-    cols = set(df.columns)
+    if sols is None:
+        sols = _Sols(kg.triples.sparkSession.range(1).drop("id"), {})
+    kinds = dict(sols.kinds)
     df, env, temp = _with_term_strs(
-        kg, df, sorted(set().union(*(expr_vars(nd.expr) for nd in chain)))
+        kg, sols, sorted(set().union(*(expr_vars(nd.expr) for nd in chain)))
     )
     for nd in chain:
-        if nd.var in cols:
+        if nd.var in kinds:
             raise ValueError(f"BIND reuses an in-scope variable: ?{nd.var}")
         if _parse_heavy(nd.expr):
             # a variable bound nowhere yet stays the NULL term literal
             unparsed = {
                 v: env[v]
                 for v in expr_vars(nd.expr)
-                if v in cols and not isinstance(env[v][0], _T)
+                if v in kinds and not isinstance(env[v][0], _T)
             }
             df, parsed, names = _project_parse_refs(df, unparsed)
             env.update(parsed)
             temp += names
         col, tag = _ex(nd.expr, env)
         df = _render_staged(df, col, tag, nd.var)
-        cols.add(nd.var)
+        kinds[nd.var] = "term"
         env[nd.var] = (_q(nd.var), "term")
-    return df.drop(*temp)
+    return _Sols(df.drop(*temp), kinds)
 
 
-def _apply_exists(
-    kg: KnowledgeGraph, df: DataFrame, ex: ExistsE, graph: str | None
-) -> DataFrame:
+def _exists(
+    kg: KnowledgeGraph, sols: _Sols, ex: ExistsE, graph: str | None, marker: str | None = None
+) -> _Sols:
     """FILTER (NOT) EXISTS { group } → left_semi / left_anti join on
     the shared variables (spareval gives the reference the same
-    semantics via src/sparql.rs:520)."""
+    semantics via src/sparql.rs:520).  An EXISTS nested inside a
+    general expression (``?a = 1 || EXISTS {…}``) is instead the
+    boolean column ``marker`` (kind ``bool``, dropped with its FILTER
+    scope), via a left join against the same distinct shared-variable
+    rows, so it composes under ``||``/``IF``/negation like any other
+    boolean."""
     inner = _compile(kg, ex.group, graph)
     if inner is None:
         raise ValueError("EXISTS over an empty group")
-    l, r, shared = _coerce_shared(kg, df, inner)
+    l, r, shared = _unify(kg, sols, inner)
     if not shared:
         # uncorrelated EXISTS: constant truth — bounded emptiness probe
-        nonempty = not inner.limit(1).isEmpty()
-        keep = (not nonempty) if ex.neg else nonempty
-        return df if keep else df.where(F.lit(False))
-    how = "left_anti" if ex.neg else "left_semi"
-    return l.join(r.select(*shared).dropDuplicates(), shared, how)
+        truth = inner.df.limit(1).isEmpty() == ex.neg
+        if marker is not None:
+            return _Sols(sols.df.withColumn(marker, F.lit(truth)), {**sols.kinds, marker: "bool"})
+        return sols if truth else _Sols(sols.df.where(F.lit(False)), sols.kinds)
+    keys = _Sols(r.df.select(*shared).dropDuplicates(), {v: r.kinds[v] for v in shared})
+    if marker is None:
+        return _join(l, keys, "left_anti" if ex.neg else "left_semi")
+    out = _join(l, _Sols(keys.df.withColumn(marker, F.lit(True)), keys.kinds), "left")
+    flag = F.coalesce(F.col(marker), F.lit(False))
+    df = out.df.withColumn(marker, ~flag if ex.neg else flag)
+    return _Sols(df, {**out.kinds, marker: "bool"})
 
 
 def _exists_constraint(e) -> ExistsE | None:
@@ -856,9 +874,9 @@ def _exists_constraint(e) -> ExistsE | None:
     return None
 
 
-def _apply_filters(kg: KnowledgeGraph, df: DataFrame, exprs, graph: str | None) -> DataFrame:
+def _apply_filters(kg: KnowledgeGraph, sols: _Sols, exprs, graph: str | None) -> _Sols:
     """A scope's FILTER constraints.  A constraint that is an EXISTS
-    is the direct semi / anti join (_apply_exists).  The others apply
+    is the direct semi / anti join (_exists).  The others apply
     as ONE conjunctive where over one decode of the variables they
     read (_with_term_strs); an EXISTS nested deeper in one of them is
     a boolean marker column.  SQL's AND keeps exactly the rows where
@@ -877,34 +895,33 @@ def _apply_filters(kg: KnowledgeGraph, df: DataFrame, exprs, graph: str | None) 
 
         conds = [_expr_map(e, _mark) for e in conds]
         for name, ex in markers:
-            df = _attach_exists_marker(kg, df, name, ex, graph)
-        df, env, temp = _with_term_strs(kg, df, sorted(set().union(*map(expr_vars, conds))))
+            sols = _exists(kg, sols, ex, graph, name)
+        df, env, temp = _with_term_strs(kg, sols, sorted(set().union(*map(expr_vars, conds))))
         where = " AND ".join(f"({_as_bool(*_ex(e, env))})" for e in conds)
-        df = df.where(F.expr(where)).drop(*temp, *[n for n, _ in markers])
+        names = [n for n, _ in markers]
+        kinds = {v: k for v, k in sols.kinds.items() if v not in names}
+        sols = _Sols(df.where(F.expr(where)).drop(*temp, *names), kinds)
     for ex in exists:
-        df = _apply_exists(kg, df, ex, graph)
-    return df
+        sols = _exists(kg, sols, ex, graph)
+    return sols
 
 
 def _has_undef(node: ValuesNode) -> bool:
     return any(any(v is None for v in r) for r in node.rows)
 
 
-def _values_df(kg: KnowledgeGraph, vars_: list[str], rows) -> DataFrame:
+def _values_sols(kg: KnowledgeGraph, vars_: list[str], rows) -> _Sols:
     """Distinct VALUES rows as a local relation of uids from the
     request's term map.  A row holding a term absent from the
     dictionary matches nothing, like any constant bind, so it is
     dropped."""
     uids = {tuple(kg.uids[t] for t in r) for r in rows}
     schema = pa.schema([(v, pa.int64()) for v in vars_])
-    return _local_relation(
-        kg.triples.sparkSession, schema, [r for r in uids if None not in r]
-    )
+    df = _local_relation(kg.triples.sparkSession, schema, [r for r in uids if None not in r])
+    return _Sols(df, dict.fromkeys(vars_, "uid"))
 
 
-def _join_values_undef(
-    kg: KnowledgeGraph, sols: DataFrame, node: ValuesNode
-) -> DataFrame:
+def _join_values_undef(kg: KnowledgeGraph, sols: _Sols, node: ValuesNode) -> _Sols:
     """VALUES with UNDEF: each row constrains only the variables it
     binds (SPARQL compatibility), so rows group by their bound-variable
     mask and each mask inner-joins the solutions on its subset; a
@@ -917,26 +934,22 @@ def _join_values_undef(
         mask = tuple(v for v, val in zip(node.vars, row) if val is not None)
         groups[mask].append([val for val in row if val is not None])
 
-    missing = [v for v in node.vars if v not in sols.columns]
+    missing = [v for v in node.vars if v not in sols.kinds]
     if missing:
         raise ValueError(f"VALUES variables not bound by the group: {missing}")
 
-    parts: list[DataFrame] = []
+    parts: list[_Sols] = []
     for mask, rows in groups.items():
         if not mask:
-            for _ in rows:
-                parts.append(sols)
+            parts += [sols] * len(rows)
             continue
-        l, r, shared = _coerce_shared(kg, sols, _values_df(kg, list(mask), rows))
-        parts.append(l.join(r, shared, "inner"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        l, r, _ = _unify(kg, sols, _values_sols(kg, list(mask), rows))
+        parts.append(_join(l, r))
+    return _union(kg, parts)
 
 
-def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
-    """Algebra node → DataFrame (None = the empty/unit pattern)."""
+def _compile(kg: KnowledgeGraph, node, graph: str | None) -> _Sols | None:
+    """Algebra node → _Sols (None = the empty/unit pattern)."""
     if node is None:
         return None
 
@@ -945,7 +958,7 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
             TriplePattern(p.s, p.p, p.o, graph) if p.graph is None else p
             for p in node.patterns
         ]
-        return compile_bgp(kg, pats)
+        return _compile_bgp(kg, pats)
 
     if isinstance(node, JoinNode):
         # VALUES with UNDEF joins per bound-variable mask against the
@@ -965,10 +978,8 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
             return r
         if r is None:
             return l
-        l, r, shared = _coerce_shared(kg, l, r)
-        if shared:
-            return l.join(r, shared, "inner")
-        return l.crossJoin(r)
+        l, r, _ = _unify(kg, l, r)
+        return _join(l, r)
 
     if isinstance(node, LeftJoinNode):
         l = _compile(kg, node.left, graph)
@@ -984,86 +995,54 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
         # referencing OUTER variables are the SPARQL LeftJoin
         # *condition* form (§18.5 LeftJoin(Ω1, Ω2, expr)) and evaluate
         # over the joined solution
-        inner_f = [f for f in node.filters if expr_vars(f) <= set(r.columns)]
-        mixed_f = [f for f in node.filters if not expr_vars(f) <= set(r.columns)]
+        inner_f = [f for f in node.filters if expr_vars(f) <= set(r.kinds)]
+        mixed_f = [f for f in node.filters if not expr_vars(f) <= set(r.kinds)]
         r = _apply_filters(kg, r, inner_f, graph)
-        l, r, shared = _coerce_shared(kg, l, r)
+        l, r, _ = _unify(kg, l, r)
         if not mixed_f:
-            if shared:
-                return l.join(r, shared, "left")
-            return l.join(r, F.lit(True), "left")
+            return _join(l, r, "left")
         # LeftJoin with condition: matched = Filter(expr, Join(l, r));
         # left rows with NO surviving match re-enter null-padded (one
-        # inner join + one null-safe anti join — no driver loops)
-        j = l.join(r, shared, "inner") if shared else l.crossJoin(r)
-        j = _apply_filters(kg, j, mixed_f, graph)
-        keys = j.select(*l.columns).dropDuplicates()
-        la, ka = l.alias("__L"), keys.alias("__K")
+        # inner join + one null-safe anti join — no driver loops).  An
+        # EXISTS in the condition may have made some of l's variables
+        # terms in j; the unmatched rows follow.
+        j = _apply_filters(kg, _join(l, r), mixed_f, graph)
+        l = _as_terms(kg, l, [v for v, k in l.kinds.items() if j.kinds[v] != k])
+        keys = j.df.select(*l.kinds).dropDuplicates()
+        la, ka = l.df.alias("__L"), keys.alias("__K")
         cond = F.lit(True)
-        for c in l.columns:
+        for c in l.kinds:
             # null-safe: an l row carrying nulls (nested OPTIONAL) must
             # still match its own key row
             cond = cond & F.col(f"__L.{c}").eqNullSafe(F.col(f"__K.{c}"))
+        pad = [_unbound(c, k) for c, k in j.kinds.items() if c not in l.kinds]
         unmatched = la.join(ka, cond, "left_anti").select(
-            *[F.col(f"__L.{c}").alias(c) for c in l.columns]
+            *[F.col(f"__L.{c}").alias(c) for c in l.kinds], *pad
         )
-        rtypes = dict(r.dtypes)
-        pad = [
-            F.lit(None).cast(rtypes[c]).alias(c)
-            for c in r.columns
-            if c not in l.columns
-        ]
-        return j.unionByName(unmatched.select("*", *pad))
+        return _Sols(j.df.unionByName(unmatched), j.kinds)
 
     if isinstance(node, MinusNode):
         l = _compile(kg, node.left, graph)
         r = _compile(kg, node.right, graph)
         if l is None or r is None:
             return l
-        l, r, shared = _coerce_shared(kg, l, r)
+        l, r, shared = _unify(kg, l, r)
         if not shared:
             # disjoint domains remove nothing (SPARQL 1.1 §8.3)
             return l
-        return l.join(r.select(*shared).dropDuplicates(), shared, "left_anti")
+        return _join(l, _Sols(r.df.select(*shared).dropDuplicates(), r.kinds), "left_anti")
 
     if isinstance(node, UnionNode):
-        dfs = [_compile(kg, b, graph) for b in node.branches]
-        if any(d is None for d in dfs):
+        branches = [_compile(kg, b, graph) for b in node.branches]
+        if any(b is None for b in branches):
             raise ValueError("UNION branch is an empty group")
-        # resolve per-column dtypes across branches: a var that is a
-        # uid in one branch and a string in another decodes everywhere
-        all_cols = sorted({c for d in dfs for c in d.columns})
-        col_types: dict[str, set] = {c: set() for c in all_cols}
-        for d in dfs:
-            for c, t in d.dtypes:
-                col_types[c].add(t)
-        for i, d in enumerate(dfs):
-            fix = [
-                c for c, t in d.dtypes
-                if t == "bigint" and "string" in col_types[c]
-            ]
-            if fix:
-                dfs[i] = kg.decode_vars(d, fix)
-        padded = []
-        for d in dfs:
-            cols = []
-            for c in all_cols:
-                if c in d.columns:
-                    cols.append(F.col(c))
-                else:
-                    target = "string" if "string" in col_types[c] else "long"
-                    cols.append(F.lit(None).cast(target).alias(c))
-            padded.append(d.select(*cols))
-        out = padded[0]
-        for d in padded[1:]:
-            out = out.unionByName(d)
-        return out
+        return _union(kg, branches, sort=True)
 
     if isinstance(node, FilterNode):
-        df = _compile(kg, node.child, graph)
-        if df is None:
+        sols = _compile(kg, node.child, graph)
+        if sols is None:
             raise ValueError("FILTER over an empty group")
-        return _apply_filters(kg, df, node.exprs, graph)
+        return _apply_filters(kg, sols, node.exprs, graph)
 
     if isinstance(node, ExtendNode):
         # BIND . BIND . BIND parses as nested ExtendNodes: one chain
@@ -1079,25 +1058,13 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> DataFrame | None:
     if isinstance(node, ValuesNode):
         if _has_undef(node):
             raise ValueError("VALUES with UNDEF requires preceding patterns")
-        return _values_df(kg, node.vars, node.rows)
+        return _values_sols(kg, node.vars, node.rows)
 
     if isinstance(node, SubQueryNode):
         # subqueries evaluate bottom-up with their own projection and
         # modifiers (SPARQL 1.1 §12), inheriting an enclosing GRAPH
-        # scope; the result carries decoded term strings (and numeric
-        # aggregate aliases), so a shared variable joining an outer
-        # uid column decodes the outer side via _coerce_shared
-        df = execute(kg, node.query, graph=graph)
-        # tag numeric result columns (aggregate aliases) so the outer
-        # decode pass does not mistake them for term uids
-        return df.select(
-            *[
-                F.col(c).alias(c, metadata={"de_spark_value": True})
-                if t == "bigint"
-                else F.col(c)
-                for c, t in df.dtypes
-            ]
-        )
+        # scope; their result holds terms and COUNT values
+        return _execute(kg, node.query, graph)
 
     raise ValueError(f"unsupported algebra node: {type(node).__name__}")
 
@@ -1122,23 +1089,7 @@ def _rewrite_having(e, hidden: list):
     return _expr_map(e, _hide)
 
 
-def _env_for(df: DataFrame) -> dict:
-    """Expression env over a decoded solutions DataFrame: string
-    columns are term strings; numeric columns (aggregate results)
-    compare as numbers — bigint (COUNT) as xsd:integer so arithmetic
-    over them promotes per XPath, others as xsd:double."""
-    env = {}
-    for c, t in df.dtypes:
-        if t == "string":
-            env[c] = (_q(c), "term")
-        elif t == "bigint":
-            env[c] = (_int_num(_q(c)), "numk")
-        else:
-            env[c] = (_N(f"CAST({_q(c)} AS DOUBLE)", "3"), "numk")
-    return env
-
-
-def _apply_order(df: DataFrame, order_keys: list) -> DataFrame:
+def _apply_order(df: DataFrame, kinds: dict[str, str], order_keys: list) -> DataFrame:
     """ORDER BY with SPARQL value semantics; keys are var names or
     expressions (aggregate-bearing expressions were already rewritten
     to hidden columns).  An expression key is first projected into a
@@ -1152,16 +1103,15 @@ def _apply_order(df: DataFrame, order_keys: list) -> DataFrame:
     hidden columns are dropped after the sort."""
     if not order_keys:
         return df
-    dtypes = dict(df.dtypes)
     exprs: list[str] = []
     keys: list[tuple[str, bool, bool]] = []  # (column, is a term, desc)
     for key, desc in order_keys:
         if isinstance(key, str):
-            if key not in dtypes:
+            if key not in kinds:
                 raise ValueError(f"ORDER BY variable ?{key} is not in scope")
-            keys.append((key, dtypes[key] == "string", desc))
+            keys.append((key, kinds[key] == "term", desc))
             continue
-        sql, tag = _ex(key, _env_for(df))
+        sql, tag = _ex(key, _env(kinds))
         name = f"__oe{len(exprs)}"
         exprs.append(f"{_sql(sql)} AS {name}")
         keys.append((name, tag == "term", desc))
@@ -1274,10 +1224,15 @@ def _aggregate(a: Aggregate, env: dict, columns: list[str]) -> str:
 
 def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> DataFrame:
     """Run a parsed query; returns solutions with *string* term columns
-    (aggregate aliases stay numeric).  ``graph`` carries an enclosing
+    (COUNT aliases stay numbers).  ``graph`` carries an enclosing
     GRAPH scope into a subquery's pattern compilation.  The query's
     constants are resolved first, in one lookup, unless ``kg`` is
     already a request view holding them."""
+    return _execute(kg, q, graph).df
+
+
+def _execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None) -> _Sols:
+    """execute, with the kinds of the result's columns."""
     if q.algebra is None:
         raise ValueError("query has no WHERE clause")
     kg = kg.with_terms(_query_terms(q))
@@ -1285,7 +1240,7 @@ def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> Dat
     if sols is None:
         raise ValueError("empty WHERE group")
 
-    var_cols = list(sols.columns)
+    var_cols = list(sols.kinds)
     # decode PRUNING: only columns the query's output surface touches
     # (projection, select/aggregate/having/order/group expressions)
     # join through term_uids — a var that exists only to connect
@@ -1312,7 +1267,9 @@ def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> Dat
             needed.add(key)
         else:
             needed |= expr_vars(key)
-    decoded = kg.decode_vars(sols, [c for c in var_cols if c in needed])
+    uids = [c for c in var_cols if c in needed and sols.kinds[c] == "uid"]
+    df = kg.decode_uids(sols.df, var_cols, uids)
+    kinds = {**sols.kinds, **dict.fromkeys(uids, "term")}
 
     hidden: list = []
     having_rw = [_rewrite_having(h, hidden) for h in q.having]
@@ -1337,29 +1294,32 @@ def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> Dat
             else:
                 alias, ge = g
                 name = alias or f"__grp{i}"
-                col, tag = _ex(ge, _env_for(decoded))
-                decoded = _render_staged(decoded, col, tag, name)
+                col, tag = _ex(ge, _env(kinds))
+                df = _render_staged(df, col, tag, name)
+                kinds = {**kinds, name: "term"}
                 group_cols.append(name)
-        agg_env = _env_for(decoded)
-        aggs = [
-            F.expr(_aggregate(a, agg_env, decoded.columns)).alias(a.alias)
-            for a in list(q.aggregates) + hidden
-        ]
-        if not aggs:
+        agg_env = _env(kinds)
+        aggs = list(q.aggregates) + hidden
+        agg_cols = [F.expr(_aggregate(a, agg_env, list(kinds))).alias(a.alias) for a in aggs]
+        if not agg_cols:
             # GROUP BY with no aggregates = distinct group keys
-            aggs.append(F.count(F.lit(1)).alias("__dummy"))
-        grouped = decoded.groupBy(*group_cols) if group_cols else decoded.groupBy()
-        decoded = grouped.agg(*aggs)
+            agg_cols.append(F.count(F.lit(1)).alias("__dummy"))
+        grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
+        df = grouped.agg(*agg_cols)
+        kinds = {c: kinds[c] for c in group_cols} | {
+            a.alias: "value" if a.func == "count" else "term" for a in aggs
+        }
         for h in having_rw:
-            cond, tag = _ex(h, _env_for(decoded))
-            decoded = decoded.where(F.expr(_as_bool(cond, tag)))
+            cond, tag = _ex(h, _env(kinds))
+            df = df.where(F.expr(_as_bool(cond, tag)))
         # SELECT (expr AS ?alias) under grouping evaluates over the
         # grouped result — group keys and aggregate aliases in scope
         # (SPARQL §18.2.4 Extend after Group; was silently dropped,
         # ADVICE r3)
         for alias, e in q.select_exprs:
-            col, tag = _ex(e, _env_for(decoded))
-            decoded = _render_staged(decoded, col, tag, alias)
+            col, tag = _ex(e, _env(kinds))
+            df = _render_staged(df, col, tag, alias)
+            kinds = {**kinds, alias: "term"}
         proj = (
             (q.variables or [c for c in group_cols if not c.startswith("__grp")])
             + [a.alias for a in q.aggregates]
@@ -1368,8 +1328,9 @@ def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> Dat
     else:
         # SELECT (expr AS ?alias) — non-aggregate computed projections
         for alias, e in q.select_exprs:
-            col, tag = _ex(e, _env_for(decoded))
-            decoded = _render_staged(decoded, col, tag, alias)
+            col, tag = _ex(e, _env(kinds))
+            df = _render_staged(df, col, tag, alias)
+            kinds = {**kinds, alias: "term"}
         if q.variables or q.select_exprs:
             proj = q.variables + [alias for alias, _ in q.select_exprs]
         else:
@@ -1381,21 +1342,15 @@ def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> Dat
         # DISTINCT applies to the projection; ORDER BY then runs over
         # the projected columns (SPARQL requires order keys to be
         # projected under DISTINCT)
-        decoded = decoded.select(*proj).dropDuplicates()
-        decoded = _apply_order(decoded, order_keys)
-        if q.offset:
-            decoded = decoded.offset(q.offset)
-        if q.limit is not None:
-            decoded = decoded.limit(q.limit)
-        return decoded
-    # ordering may reference hidden aggregate columns or non-projected
-    # vars, so it runs before the final projection
-    decoded = _apply_order(decoded, order_keys)
+        df, kinds = df.select(*proj).dropDuplicates(), {v: kinds[v] for v in proj}
+    # without DISTINCT, ordering may reference hidden aggregate columns
+    # or non-projected vars, so it runs before the final projection
+    df = _apply_order(df, kinds, order_keys)
     if q.offset:
-        decoded = decoded.offset(q.offset)
+        df = df.offset(q.offset)
     if q.limit is not None:
-        decoded = decoded.limit(q.limit)
-    return decoded.select(*proj)
+        df = df.limit(q.limit)
+    return _Sols(df.select(*proj), {v: kinds[v] for v in proj})
 
 
 def _parsed(query: str | ParsedQuery) -> ParsedQuery:

@@ -239,6 +239,34 @@ def test_star_query_builds_in_few_py4j_calls(fruit_kg, monkeypatch):
     assert len(calls) <= 500, len(calls)
 
 
+
+def test_mixed_query_asks_spark_for_no_schema(fruit_kg, monkeypatch):
+    """The algebra compiler knows every variable's kind statically, so
+    building a query with OPTIONAL, BIND, a COUNT subquery, MINUS and
+    ORDER BY asks the JVM for no DataFrame schema."""
+    from py4j.java_gateway import JavaMember
+
+    _warm(fruit_kg)
+    calls = []
+    real = JavaMember.__call__
+
+    def counting(self, *args):
+        calls.append(self.name)
+        return real(self, *args)
+
+    q = EX + """
+    SELECT ?f ?n ?l WHERE {
+      ?f a ex:Fruit
+      OPTIONAL { ?f ex:hasColor ?c BIND(STR(?c) AS ?l) }
+      { SELECT ?f (COUNT(?p) AS ?n) WHERE { ?f ?p ?o } GROUP BY ?f }
+      MINUS { ?f ex:hasTaste ex:Nope }
+    } ORDER BY ?f
+    """
+    monkeypatch.setattr(JavaMember, "__call__", counting)
+    sparql_select(fruit_kg, q)
+    monkeypatch.undo()
+    assert calls.count("schema") == 0, calls
+
 def test_order_keys_are_computed_once_per_row(fruit_kg):
     """Each term key's lexical form and datatype are projected before
     the sort, so no regexp_extract over a term runs inside the sort's

@@ -183,6 +183,17 @@ def test_bind_arithmetic_render(num_kg):
     ]
 
 
+
+def test_integer_constant_beyond_double_range_is_no_number(num_kg):
+    """An integer constant too long for a double has no value, as a
+    stored term of that lexical form has none: the BIND leaves ?x
+    unbound and an equality against it matches nothing, without error."""
+    big = "1" + "0" * 400
+    q = "SELECT ?s ?x WHERE { ?s <http://x/val> ?v BIND(%s AS ?x) }" % big
+    assert [r["x"] for r in sparql_select(num_kg, q).collect()] == [None] * 3
+    q = "SELECT ?s WHERE { ?s <http://x/val> ?v FILTER(?v = %s) }" % big
+    assert sparql_select(num_kg, q).collect() == []
+
 def test_string_builtin_library(fruit_kg):
     base = EX + 'SELECT ?f WHERE {{ ?f ex:hasWeight ?w . FILTER({f}) }} ORDER BY ?f'
 
@@ -249,8 +260,8 @@ def test_subquery_aggregate_join(fruit_kg):
     assert rows == [("Banana", 10), ("Pineapple", 10)]
 
     # an outer FILTER over the subquery's aggregate alias treats it as
-    # a plain number (not a term uid — pinned by the de_spark_value
-    # column-metadata tag)
+    # a plain number, not a term uid: the compiler knows a COUNT alias
+    # is a value
     q2 = EX + """
     SELECT ?f ?n WHERE {
       ?f a ex:Fruit .
@@ -262,6 +273,54 @@ def test_subquery_aggregate_join(fruit_kg):
     q3 = q2.replace("?n > 5", "?n > 99")
     assert names(sparql_select(fruit_kg, q3)) == []
 
+
+
+# tests/test_sparql_aggregates.py's store with s1's value made 3, the
+# count of C3, so uid 6 is the term "5"^^xsd:integer
+MIX_NT = "".join(
+    f"<http://x/{s}> <http://x/kind> <http://x/{k}> .\n"
+    f'<http://x/{s}> <http://x/val> "{v}"^^<{XSD}integer> .\n'
+    for s, k, v in [("s1", "A", 3), ("s2", "A", 30), ("s3", "B", 5)]
+)
+C3 = "{ SELECT (COUNT(*) AS ?n) WHERE { ?a x:kind ?k } }"
+
+
+def _int(v: int) -> str:
+    return f'"{v}"^^<{XSD}integer>'
+
+
+_VALS = [("http://x/s1", _int(3)), ("http://x/s2", _int(30)), ("http://x/s3", _int(5))]
+
+
+@pytest.fixture(scope="module")
+def mix_kg(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("mix_kg"))
+    kg, _ = build(triples_from_nt_text(spark, MIX_NT, "file:///agg.nt"), out)
+    return kg
+
+
+@pytest.mark.parametrize(
+    "body, expected",
+    [
+        (f"?s x:val ?n . {C3}", [("http://x/s1", _int(3))]),
+        # the count 6 is no uid: it never matches the term of uid 6
+        ("?s ?p ?n . { SELECT (COUNT(*) AS ?n) WHERE { ?a ?b ?c } }", []),
+        (f"{{ {C3} }} UNION {{ ?s x:val ?n }}", [(None, _int(3))] + _VALS),
+        (f"{{ ?s x:val ?n }} UNION {{ {C3} }}", [(None, _int(3))] + _VALS),
+        (f"?s x:val ?n MINUS {{ {C3} }}", _VALS[1:]),
+        (f"{C3} VALUES ?n {{ 3 }}", [(None, _int(3))]),
+        (f"?s x:val ?n FILTER EXISTS {{ {C3} }}", _VALS[:1]),
+    ],
+    ids=["join", "join_count_vs_uid", "union_count_first", "union_count_last",
+         "minus", "values", "exists"],
+)
+def test_count_meets_stored_term(mix_kg, body, expected):
+    """Where a subquery's COUNT (a number) meets the same variable bound
+    to a stored term (a uid), both sides compare as RDF terms: the count
+    as an xsd:integer, never as a raw uid."""
+    q = "PREFIX x: <http://x/>\nSELECT * WHERE { %s }" % body
+    rows = [(r.asDict().get("s"), r["n"]) for r in sparql_select(mix_kg, q).collect()]
+    assert sorted(rows, key=str) == sorted(expected, key=str)
 
 def test_subquery_limit_scopes_inside(fruit_kg):
     """A LIMIT inside the subquery applies before the outer join."""

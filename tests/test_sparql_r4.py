@@ -287,9 +287,9 @@ def test_bound_path_seeded_no_global_closure(kg, monkeypatch):
     starts = []
     real = bgp_mod._fixpoint
 
-    def spy(start, expand):
+    def spy(start, expand, *rest):
         starts.append(start.count())
-        return real(start, expand)
+        return real(start, expand, *rest)
 
     monkeypatch.setattr(bgp_mod, "_fixpoint", spy)
     q = PX + "SELECT ?y WHERE { x:e1 x:next+ ?y } ORDER BY ?y"
@@ -393,12 +393,12 @@ def test_deep_chain_closure(kg, spark, monkeypatch):
     expansions = []
     real = bgp_mod._fixpoint
 
-    def counting(start, expand):
+    def counting(start, expand, *rest):
         def step(nodes):
             expansions.append(len(nodes))
             return expand(nodes)
 
-        return real(start, step)
+        return real(start, step, *rest)
 
     monkeypatch.setattr(bgp_mod, "_fixpoint", counting)
     q = PX + "SELECT ?x WHERE { x:c0 x:link+ ?x }"
@@ -596,7 +596,7 @@ def test_value_ordering_property(spark):
         return (rank, num is not None, num or 0.0, dtv is not None, dtv or 0.0, t)
 
     df = spark.createDataFrame([(t,) for t in terms_pop], ["v"])
-    got = [r["v"] for r in _apply_order(df, [("v", False)]).collect()]
+    got = [r["v"] for r in _apply_order(df, {"v": "term"}, [("v", False)]).collect()]
     want = sorted(terms_pop, key=model_key)
     assert got == want
 
