@@ -40,7 +40,14 @@ pattern without a scan.
 
 The compiler knows each variable's kind statically (a uid, a term
 string or a COUNT value; see the algebra compiler below), so it asks
-Spark for no schema.  A uid stays a uid until the final decode; where
+Spark for no schema.  A uid stays a uid until an operator reads its
+term string, and that operator decodes only the uid variables it
+reads: a FILTER scope, a BIND chain, a GROUP BY or SELECT
+expression, an aggregate other than COUNT, HAVING and an ORDER BY
+key.  Uids are one-to-one with terms, so joins, DISTINCT, grouping on
+a plain variable, COUNT, OFFSET and LIMIT run on them, a subquery
+hands the outer query its uids, and ``execute`` decodes the projected
+uid columns that remain last (before the sort under ORDER BY); where
 two operands meet one variable with two kinds, both make it a term.
 ORDER BY uses SPARQL value ordering over decoded terms (§15.1: blank
 < IRI < literal, numeric literals by value — spareval semantics);
@@ -55,6 +62,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import fields, is_dataclass
+from functools import reduce
 from typing import NamedTuple
 
 import pyarrow as pa
@@ -654,9 +662,9 @@ def _render_term(c, tag: str) -> str:
 # Algebra compiler: Node → _Sols, the solution frame and the static kind of
 # each variable column (bgp._Sols), so no frame's schema is read.  A BGP,
 # path or VALUES variable is a uid; a GRAPH ?g name or a BIND target is a
-# term; a subquery's COUNT alias is a value and its other projected
-# variables are terms.  Where two operands meet one variable with two
-# kinds, both make it a term (_unify, _union).
+# term; a subquery's COUNT alias is a value, and its other projected
+# variables keep their kinds.  Where two operands meet one variable with
+# two kinds, both make it a term (_unify, _union).
 # ---------------------------------------------------------------------------
 
 
@@ -1063,7 +1071,8 @@ def _compile(kg: KnowledgeGraph, node, graph: str | None) -> _Sols | None:
     if isinstance(node, SubQueryNode):
         # subqueries evaluate bottom-up with their own projection and
         # modifiers (SPARQL 1.1 §12), inheriting an enclosing GRAPH
-        # scope; their result holds terms and COUNT values
+        # scope; each projected variable keeps its kind, so the outer
+        # query joins a uid on the uid
         return _execute(kg, node.query, graph)
 
     raise ValueError(f"unsupported algebra node: {type(node).__name__}")
@@ -1158,22 +1167,30 @@ def _query_terms(node) -> set[str]:
     return out
 
 
-def _aggregate(a: Aggregate, env: dict, columns: list[str]) -> str:
-    """One aggregate as SQL text.  Its source is a plain variable (a
-    term string) or an expression evaluated over the decoded solutions
-    (SUM(?a * ?b))."""
+def _agg_reads(a: Aggregate) -> set[str]:
+    """The variables whose terms an aggregate reads: its expression's,
+    or its variable unless it only counts bindings."""
     if a.expr is not None:
-        src, tag = _ex(a.expr, env)
-    else:
-        src, tag = _term(_q(a.var)), "term"
-    s = _sql(src)
+        return expr_vars(a.expr)
+    return set() if a.func == "count" else {a.var}
+
+
+def _aggregate(a: Aggregate, env: dict, columns: list[str]) -> str:
+    """One aggregate as SQL text.  Its source is a plain variable or an
+    expression evaluated over the solutions (SUM(?a * ?b)).  COUNT of a
+    variable counts its bindings, so it reads uids as they are; COUNT
+    (DISTINCT …) is exact on them, uids being one-to-one with terms."""
     distinct = "DISTINCT " if a.distinct else ""
-    if a.func == "count":
+    if a.func == "count" and a.expr is None:
         if a.var != "*":
-            return f"count({distinct}{s})"
+            return f"count({distinct}{_q(a.var)})"
         # COUNT(DISTINCT *): distinct solutions — all in-scope columns
         # as one struct key
         return f"count(DISTINCT struct({', '.join(map(_q, columns))}))" if a.distinct else "count(1)"
+    src, tag = _ex(a.expr if a.expr is not None else VarE(a.var), env)
+    s = _sql(src)
+    if a.func == "count":
+        return f"count({distinct}{s})"
     if a.func == "sample":
         # a number is picked as its struct and rendered as a term
         return _render_term(_num_col(f"first({s})"), tag) if tag == "numk" else f"first({s})"
@@ -1224,64 +1241,50 @@ def _aggregate(a: Aggregate, env: dict, columns: list[str]) -> str:
 
 def execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None = None) -> DataFrame:
     """Run a parsed query; returns solutions with *string* term columns
-    (COUNT aliases stay numbers).  ``graph`` carries an enclosing
-    GRAPH scope into a subquery's pattern compilation.  The query's
-    constants are resolved first, in one lookup, unless ``kg`` is
-    already a request view holding them."""
-    return _execute(kg, q, graph).df
+    (COUNT aliases stay numbers): the projected columns ``_execute``
+    leaves as uids decode last, in one ``decode_uids``.  ``graph``
+    carries an enclosing GRAPH scope into pattern compilation.  The
+    query's constants are resolved first, in one lookup, unless ``kg``
+    is already a request view holding them."""
+    sols = _execute(kg, q, graph, ordered=True)
+    uids = [v for v, k in sols.kinds.items() if k == "uid"]
+    return kg.decode_uids(sols.df, list(sols.kinds), uids)
 
 
-def _execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None) -> _Sols:
-    """execute, with the kinds of the result's columns."""
+def _read(kg: KnowledgeGraph, sols: _Sols, vars_) -> _Sols:
+    """``sols`` with the uid variables among ``vars_`` decoded: the
+    decode of a solution modifier that reads their terms."""
+    return _as_terms(kg, sols, [v for v, k in sols.kinds.items() if k == "uid" and v in vars_])
+
+
+def _extend(kg: KnowledgeGraph, sols: _Sols, e, name: str) -> _Sols:
+    """``sols`` with ``name`` bound to the term of expression ``e``."""
+    sols = _read(kg, sols, expr_vars(e))
+    col, tag = _ex(e, _env(sols.kinds))
+    return _Sols(_render_staged(sols.df, col, tag, name), {**sols.kinds, name: "term"})
+
+
+def _execute(
+    kg: KnowledgeGraph, q: ParsedQuery, graph: str | None, ordered: bool = False
+) -> _Sols:
+    """execute, with the kinds of the result's columns; each modifier
+    decodes the uid variables it reads (see the module docstring).
+    ``ordered``: the caller reads the rows in ORDER BY order, so the
+    projection decodes before the sort (Spark keeps no row order
+    through a later join).  An ASK projects nothing."""
     if q.algebra is None:
         raise ValueError("query has no WHERE clause")
     kg = kg.with_terms(_query_terms(q))
     sols = _compile(kg, q.algebra, graph)
     if sols is None:
         raise ValueError("empty WHERE group")
-
-    var_cols = list(sols.kinds)
-    # decode PRUNING: only columns the query's output surface touches
-    # (projection, select/aggregate/having/order/group expressions)
-    # join through term_uids — a var that exists only to connect
-    # patterns never pays a decode join (at 100 TB each decode is a
-    # fact-sized shuffle/broadcast join, so this is column pruning for
-    # the emission stage, mirroring ReadSchema pruning at the scan).
-    # An ASK emits no variable: only its modifiers' variables decode.
-    needed: set[str] = set(q.variables) if q.variables or q.ask else set(var_cols)
-    for _, e in q.select_exprs:
-        needed |= expr_vars(e)
-    for a in q.aggregates:
-        needed |= expr_vars(a.expr) if a.expr is not None else set()
-        if a.var not in ("*", ""):
-            needed.add(a.var)
-    for h in q.having:
-        needed |= expr_vars(h)
-    for g in q.group_by:
-        if isinstance(g, str):
-            needed.add(g)
-        else:
-            needed |= expr_vars(g[1])
-    for key, _ in q.order_by:
-        if isinstance(key, str):
-            needed.add(key)
-        else:
-            needed |= expr_vars(key)
-    uids = [c for c in var_cols if c in needed and sols.kinds[c] == "uid"]
-    df = kg.decode_uids(sols.df, var_cols, uids)
-    kinds = {**sols.kinds, **dict.fromkeys(uids, "term")}
+    where = list(sols.kinds)
 
     hidden: list = []
     having_rw = [_rewrite_having(h, hidden) for h in q.having]
     # ORDER BY keys containing aggregates (ORDER BY DESC(COUNT(?x)))
     # share the HAVING hidden-aggregate rewrite
-    order_keys: list = []
-    for key, desc in q.order_by:
-        if not isinstance(key, str) and expr_has(
-            key, lambda x: isinstance(x, AggE)
-        ):
-            key = _rewrite_having(key, hidden)
-        order_keys.append((key, desc))
+    order_keys = [(k if isinstance(k, str) else _rewrite_having(k, hidden), d) for k, d in q.order_by]
 
     if q.aggregates or q.group_by or hidden:
         # GROUP BY conditions: plain vars group as-is; expressions
@@ -1293,64 +1296,59 @@ def _execute(kg: KnowledgeGraph, q: ParsedQuery, graph: str | None) -> _Sols:
                 group_cols.append(g)
             else:
                 alias, ge = g
-                name = alias or f"__grp{i}"
-                col, tag = _ex(ge, _env(kinds))
-                df = _render_staged(df, col, tag, name)
-                kinds = {**kinds, name: "term"}
-                group_cols.append(name)
-        agg_env = _env(kinds)
+                group_cols.append(alias or f"__grp{i}")
+                sols = _extend(kg, sols, ge, group_cols[-1])
         aggs = list(q.aggregates) + hidden
-        agg_cols = [F.expr(_aggregate(a, agg_env, list(kinds))).alias(a.alias) for a in aggs]
+        sols = _read(kg, sols, set().union(*map(_agg_reads, aggs)))
+        agg_env = _env(sols.kinds)
+        agg_cols = [F.expr(_aggregate(a, agg_env, list(sols.kinds))).alias(a.alias) for a in aggs]
         if not agg_cols:
             # GROUP BY with no aggregates = distinct group keys
             agg_cols.append(F.count(F.lit(1)).alias("__dummy"))
-        grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
-        df = grouped.agg(*agg_cols)
-        kinds = {c: kinds[c] for c in group_cols} | {
+        grouped = sols.df.groupBy(*group_cols) if group_cols else sols.df.groupBy()
+        sols = _Sols(grouped.agg(*agg_cols), {c: sols.kinds[c] for c in group_cols} | {
             a.alias: "value" if a.func == "count" else "term" for a in aggs
-        }
+        })
+        sols = _read(kg, sols, set().union(*map(expr_vars, having_rw)))
         for h in having_rw:
-            cond, tag = _ex(h, _env(kinds))
-            df = df.where(F.expr(_as_bool(cond, tag)))
-        # SELECT (expr AS ?alias) under grouping evaluates over the
-        # grouped result — group keys and aggregate aliases in scope
-        # (SPARQL §18.2.4 Extend after Group; was silently dropped,
-        # ADVICE r3)
-        for alias, e in q.select_exprs:
-            col, tag = _ex(e, _env(kinds))
-            df = _render_staged(df, col, tag, alias)
-            kinds = {**kinds, alias: "term"}
-        proj = (
-            (q.variables or [c for c in group_cols if not c.startswith("__grp")])
-            + [a.alias for a in q.aggregates]
-            + [alias for alias, _ in q.select_exprs]
-        )
+            cond, tag = _ex(h, _env(sols.kinds))
+            sols = _Sols(sols.df.where(F.expr(_as_bool(cond, tag))), sols.kinds)
+        proj = (q.variables or [c for c in group_cols if not c.startswith("__grp")]) + [
+            a.alias for a in q.aggregates
+        ]
+    elif q.variables or q.select_exprs or q.ask:
+        proj = q.variables
     else:
-        # SELECT (expr AS ?alias) — non-aggregate computed projections
-        for alias, e in q.select_exprs:
-            col, tag = _ex(e, _env(kinds))
-            df = _render_staged(df, col, tag, alias)
-            kinds = {**kinds, alias: "term"}
-        if q.variables or q.select_exprs:
-            proj = q.variables + [alias for alias, _ in q.select_exprs]
-        else:
-            # SELECT *: blank-node property lists compile to internal
-            # __bnpl variables — not in-scope names, never projected
-            proj = [c for c in var_cols if not c.startswith("__bnpl")] or var_cols
+        # SELECT *: blank-node property lists compile to internal
+        # __bnpl variables — not in-scope names, never projected
+        proj = [c for c in where if not c.startswith("__bnpl")] or where
+    # SELECT (expr AS ?alias); under grouping it evaluates over the
+    # grouped result, group keys and aggregate aliases in scope (SPARQL
+    # §18.2.4 Extend after Group)
+    for alias, e in q.select_exprs:
+        sols = _extend(kg, sols, e, alias)
+    proj = proj + [alias for alias, _ in q.select_exprs]
 
+    # a projected variable the WHERE clause never binds is unbound in
+    # every solution (SPARQL 1.1 §18.2.1)
+    pad = [v for v in proj if v not in sols.kinds and v not in where]
+    df = sols.df.select("*", *[_unbound(v, "term") for v in pad])
+    sols = _Sols(df, {**sols.kinds, **dict.fromkeys(pad, "term")})
     if q.distinct:
         # DISTINCT applies to the projection; ORDER BY then runs over
         # the projected columns (SPARQL requires order keys to be
         # projected under DISTINCT)
-        df, kinds = df.select(*proj).dropDuplicates(), {v: kinds[v] for v in proj}
+        sols = _Sols(sols.df.select(*proj).dropDuplicates(), {v: sols.kinds[v] for v in proj})
     # without DISTINCT, ordering may reference hidden aggregate columns
     # or non-projected vars, so it runs before the final projection
-    df = _apply_order(df, kinds, order_keys)
+    keys = {v for k, _ in order_keys for v in ({k} if isinstance(k, str) else expr_vars(k))}
+    sols = _read(kg, sols, keys | set(proj) if ordered and order_keys else keys)
+    df = _apply_order(sols.df, sols.kinds, order_keys)
     if q.offset:
         df = df.offset(q.offset)
     if q.limit is not None:
         df = df.limit(q.limit)
-    return _Sols(df.select(*proj), {v: kinds[v] for v in proj})
+    return _Sols(df.select(*proj), {v: sols.kinds[v] for v in proj})
 
 
 def _parsed(query: str | ParsedQuery) -> ParsedQuery:
@@ -1382,31 +1380,19 @@ def sparql_construct(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
     q = _parsed(query)
     if q.form != "construct":
         raise ValueError("not a CONSTRUCT query")
-    sols = execute(
-        kg,
-        ParsedQuery(
-            form="select",
-            algebra=q.algebra,
-            order_by=q.order_by,
-            limit=q.limit,
-            offset=q.offset,
-        ),
-    )
-    parts = []
-    for t in q.construct_template:
-        cols = []
-        for pos_name, term in (("s", t.s), ("p", t.p), ("o", t.o)):
-            if term.startswith("?"):
-                cols.append(F.col(term[1:]).alias(pos_name))
-            else:
-                cols.append(F.lit(term).alias(pos_name))
-        parts.append(sols.select(*cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    tvars = {x[1:] for t in q.construct_template for x in (t.s, t.p, t.o) if x.startswith("?")}
+    sols = execute(kg, ParsedQuery(
+        form="select", variables=sorted(tvars), algebra=q.algebra,
+        order_by=q.order_by, limit=q.limit, offset=q.offset,
+    ))
+
+    def col(x: str, pos: str) -> Column:
+        return (F.col(x[1:]) if x.startswith("?") else F.lit(x)).alias(pos)
+
+    parts = [sols.select(col(t.s, "s"), col(t.p, "p"), col(t.o, "o")) for t in q.construct_template]
     # an instantiation with an unbound variable is not in the graph
     # (SPARQL 1.1 §16.2)
-    return out.dropna().dropDuplicates()
+    return reduce(DataFrame.unionByName, parts).dropna().dropDuplicates()
 
 
 def sparql_describe(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
@@ -1424,15 +1410,18 @@ def sparql_describe(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
 
     The described set is resolved in uid space, as the start of
     ``bgp._fixpoint``: the constants' uids come from the request's
-    term map (a local relation), and solution bindings join the term
-    dictionary.  Its rounds follow bnode objects of the frontier only,
-    semi-joined against one pushed-down ``_:`` prefix scan of the
-    dictionary; the driver-held dictionary
+    term map (a local relation), a solution variable holding uids is
+    used as it is, one holding terms (a BIND target, a GRAPH ?g name)
+    joins the term dictionary, and one holding a COUNT value (a
+    literal) describes nothing.  Its rounds follow bnode objects of
+    the frontier only, semi-joined against one pushed-down ``_:``
+    prefix scan of the dictionary; the driver-held dictionary
     (``KnowledgeGraph.term_table``) only tells whether the store has
     any blank node, and a store without one runs no round at all.
     The driver-side seen set makes bnode cycles terminate.  The
     described set is then semi-joined against the triples' s_id, and
-    only the matching triples decode to strings."""
+    only the matching triples decode to strings, through one
+    ``decode_uids``."""
     q = _parsed(query)
     if q.form != "describe":
         raise ValueError("not a DESCRIBE query")
@@ -1451,17 +1440,19 @@ def sparql_describe(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
     if variables:
         if q.algebra is None:
             raise ValueError("DESCRIBE with variables requires a WHERE clause")
-        sols = execute(
-            kg, ParsedQuery(form="select", variables=variables, algebra=q.algebra)
+        sols = _execute(
+            kg, ParsedQuery(form="select", variables=variables, algebra=q.algebra), None
         )
-        for v in variables:
-            bound = sols.select(F.col(v).alias("term"))
-            start = start.unionByName(
-                kg.term_uids.join(bound, "term", "left_semi").select(
-                    F.lit(0).cast("long").alias("a"), F.col("uid").alias("b")
-                )
-            )
-    from de_spark.encode import decode_triples
+        for v, kind in sols.kinds.items():
+            if kind == "uid":
+                uids = sols.df.select(F.col(v).alias("uid")).dropna()
+            elif kind == "term":
+                bound = sols.df.select(F.col(v).alias("term"))
+                uids = kg.term_uids.join(bound, "term", "left_semi")
+            else:
+                continue
+            origin = F.lit(0).cast("long").alias("a")
+            start = start.unionByName(uids.select(origin, F.col("uid").alias("b")))
 
     if pc.any(pc.starts_with(kg.term_table().column("term"), "_:")).as_py():
         bnode_uids = kg.term_uids.where(F.col("term").startswith("_:")).select(
@@ -1474,4 +1465,6 @@ def sparql_describe(kg: KnowledgeGraph, query: str | ParsedQuery) -> DataFrame:
         )
     seen = start.select(F.col("b").alias("s_id"))
     trip = kg.triples.join(F.broadcast(seen), "s_id", "left_semi")
-    return decode_triples(trip, kg.term_uids).select("s", "p", "o").dropDuplicates()
+    spo = {"s": "s_id", "p": "p_id", "o": "o_id"}
+    out = kg.decode_uids(trip, list(spo.values()), list(spo.values()))
+    return out.select(*[F.col(c).alias(t) for t, c in spo.items()]).dropDuplicates()

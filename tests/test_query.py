@@ -392,6 +392,26 @@ def test_describe_const_and_var(fruit_kg):
     assert g2.count() == 20
 
 
+def test_constant_describe_decodes_through_one_broadcast(fruit_kg, in_job_group):
+    """A constant DESCRIBE decodes its matched triples through one
+    term_uids broadcast, which the s, p and o decodes share: through
+    emit it runs 4 jobs once the dictionary is held (5 when each
+    position joined the dictionary on its own)."""
+    from de_spark.query import sparql_describe
+
+    _warm(fruit_kg)
+    q = EX + "DESCRIBE ex:Banana"
+    nt, jobs = in_job_group("describe_emit", lambda: emit(fruit_kg, q, "nt"))
+    assert len(nt.splitlines()) == 10
+    assert all(line.startswith("<http://example.org/Banana> ") for line in nt.splitlines())
+    assert jobs <= 4
+    df = sparql_describe(fruit_kg, q)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("/term_uids]") == 1
+    assert plan.count("ReusedExchange") == 2
+
+
 def test_describe_cbd_bnode_closure(spark, tmp_path_factory):
     """DESCRIBE is a Concise Bounded Description: bnode objects pull in
     the bnode's own description transitively; bnode CYCLES terminate;

@@ -1,9 +1,11 @@
 """SPARQL-level aggregates (A2): GROUP BY + COUNT/SUM/AVG/MIN/MAX."""
 
+import re
+
 import pytest
 
 from de_spark.pipeline import build
-from de_spark.query import sparql_select, to_csv
+from de_spark.query import sparql_describe, sparql_select, to_csv
 from de_spark.sources.nt import triples_from_nt_text
 
 NT = """\
@@ -191,3 +193,73 @@ def test_count_distinct_star(kg):
     """
     # A-pairs: (s1,s1),(s1,s2),(s2,s1),(s2,s2); B: (s3,s3) → 5 distinct
     assert sparql_select(kg, q).collect()[0]["n"] == 5
+
+
+def test_projected_variable_the_where_clause_never_binds(kg):
+    """A projected variable no pattern binds is unbound in every
+    solution (SPARQL 1.1 §18.2.1): an empty CSV cell, not an error."""
+    q = "PREFIX x: <http://x/>\nSELECT ?s ?zz WHERE { ?s x:val ?n }"
+    df = sparql_select(kg, q)
+    assert sorted((r["s"], r["zz"]) for r in df.collect()) == [
+        ("http://x/s1", None), ("http://x/s2", None), ("http://x/s3", None)
+    ]
+    lines = to_csv(df).split("\r\n")
+    assert lines[0] == "s,zz"
+    assert sorted(lines[1:]) == ["http://x/s1,", "http://x/s2,", "http://x/s3,"]
+
+
+def test_describe_of_a_count_describes_nothing(kg):
+    """A COUNT is a literal, which has no description: DESCRIBE of a
+    COUNT-bound variable describes nothing, and beside a uid variable it
+    leaves that variable's description as it is."""
+    count = "{ SELECT (COUNT(*) AS ?n) WHERE { ?a x:kind ?k } }"
+    q = "PREFIX x: <http://x/>\nDESCRIBE ?n WHERE { %s }" % count
+    assert sparql_describe(kg, q).collect() == []
+    q = "PREFIX x: <http://x/>\nDESCRIBE ?s ?n WHERE { ?s x:kind ?k %s }" % count
+    rows = {(r["s"], r["p"]) for r in sparql_describe(kg, q).collect()}
+    described = {(f"http://x/s{i}", f"http://x/{p}") for i in (1, 2, 3) for p in ("kind", "val")}
+    assert rows == described
+
+
+DECODES = {
+    # shape: (query, term_uids reads, rows)
+    "count_only": ("SELECT (COUNT(?s) AS ?n) WHERE { ?s x:kind ?k }", 0, [(3,)]),
+    "group_by": (
+        "SELECT ?k (COUNT(?s) AS ?n) WHERE { ?s x:kind ?k } GROUP BY ?k ORDER BY ?k",
+        1,
+        [("http://x/A", 2), ("http://x/B", 1)],
+    ),
+    "subquery_join": (
+        "SELECT ?s ?n WHERE { ?s x:kind ?k"
+        " { SELECT ?k (COUNT(?s2) AS ?n) WHERE { ?s2 x:kind ?k } GROUP BY ?k } }",
+        1,
+        [("http://x/s1", 2), ("http://x/s2", 2), ("http://x/s3", 1)],
+    ),
+    "distinct": ("SELECT DISTINCT ?k WHERE { ?s x:kind ?k }", 1, [("http://x/A",), ("http://x/B",)]),
+    "order_limit": ("SELECT ?k WHERE { ?s x:kind ?k } ORDER BY ?k LIMIT 1", 1, [("http://x/A",)]),
+    "limit": ("SELECT ?s WHERE { ?s x:kind ?k } LIMIT 2", 1, None),
+}
+
+
+@pytest.mark.parametrize("shape", list(DECODES))
+def test_decode_sits_where_a_term_is_read(kg, shape):
+    """Solutions stay uids until an operator reads a term string: COUNT,
+    GROUP BY on a plain variable, DISTINCT, a subquery's projection and
+    its join run on uids, and each variable that is read or emitted
+    decodes once, through one term_uids join."""
+    q, reads, expected = DECODES[shape]
+    df = sparql_select(kg, "PREFIX x: <http://x/>\n" + q)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation [term#") == reads, plan
+    rows = [tuple(r) for r in df.collect()]
+    if expected is None:
+        assert len(rows) == 2
+        assert set(rows) <= {("http://x/s1",), ("http://x/s2",), ("http://x/s3",)}
+    else:
+        assert (rows if "ORDER BY" in q else sorted(rows)) == expected
+    if shape in ("group_by", "distinct"):
+        # the decode join above the Aggregate: groups and dedups on uids
+        assert plan.index("Join LeftOuter") < plan.index("Aggregate"), plan
+    if shape == "subquery_join":
+        keys = re.findall(r"Join Inner, \(k#\d+(L?) = k#\d+(L?)\)", plan)
+        assert keys == [("L", "L")], plan
